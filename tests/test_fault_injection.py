@@ -11,6 +11,7 @@ instead of being half-deleted (TestSparkDataFlow.scala failure modes)."""
 import os
 import threading
 import time
+from datetime import datetime
 
 import pytest
 
@@ -22,8 +23,13 @@ from waimak_spark.dataflow import (
     SimpleAction,
 )
 from waimak_spark.operators.commit import ParquetDataCommitter
+from waimak_spark.storage import AuditTableInfo, FileStorageOps
+from waimak_spark.storage.audit import create_table, open_tables
 
 SF = "/root/testdata/sf0.001"
+T0 = datetime(2018, 1, 1, 10, 0, 0)
+T1 = datetime(2018, 1, 2, 10, 0, 0)
+T2 = datetime(2018, 1, 3, 10, 0, 0)
 
 
 class TestParallelDrainThenFail:
@@ -243,3 +249,83 @@ class TestCommitCrashQuarantine:
         assert spark.read.parquet(f"{out}/region/v1").count() == 5
         assert spark.read.parquet(f"{out}/nation/v1").count() == 25
         assert not os.path.exists(tmp)
+
+
+class TestAuditStorageCrashRecovery:
+    """Audit-table mutations interrupted mid-way leave a table that
+    reopens and keeps working: the region cache (regions + schema) is
+    rewritten only after the data is in place, and compaction clears it
+    before the write, so a reopen never trusts a cache that lies."""
+
+    INFO = AuditTableInfo("persons", ["id"], {}, True)
+
+    @staticmethod
+    def _batch(spark, rows):
+        return spark.createDataFrame(
+            rows, "id int, name string, updated timestamp")
+
+    def _two_appends(self, spark, ops):
+        t = create_table(ops, self.INFO)
+        t, _ = t.append(self._batch(spark, [(1, "alice", T0),
+                                            (2, "bob", T0)]), "updated", T0)
+        t, _ = t.append(self._batch(spark, [(2, "bobby", T1),
+                                            (3, "carol", T1)]), "updated", T1)
+        return t
+
+    @staticmethod
+    def _fail_moves(monkeypatch, ops):
+        def boom(src, dest):
+            raise IOError(f"injected failure moving [{src}] -> [{dest}]")
+
+        monkeypatch.setattr(ops.fops, "move_overwrite_folder", boom)
+
+    def test_failed_append_keeps_old_cache_and_reopens(self, spark,
+                                                       tmp_path,
+                                                       monkeypatch):
+        base = str(tmp_path / "storage")
+        ops = FileStorageOps(spark, base)
+        t = self._two_appends(spark, ops)
+        before = ops.read_region_cache("persons")
+        assert before[1] is not None
+        self._fail_moves(monkeypatch, ops)
+        with pytest.raises(IOError, match="injected"):
+            t.append(self._batch(spark, [(4, "dave", T2)]), "updated", T2)
+
+        fresh = FileStorageOps(spark, base)
+        assert fresh.read_region_cache("persons") == before
+        t = open_tables(fresh, ["persons"])[0]["persons"]
+        assert [r.count for r in t.regions] == [2, 2]
+        assert t.schema == before[1]
+        t, count = t.append(self._batch(spark, [(4, "dave", T2)]),
+                            "updated", T2)
+        assert count == 1
+        assert t.schema == before[1]
+        reopened = open_tables(fresh, ["persons"])[0]["persons"]
+        assert [r.count for r in reopened.regions] == [2, 2, 1]
+        assert reopened.all_between(None, None).count() == 5
+        assert {r["id"]: r["name"] for r in reopened.snapshot(None)
+                .collect()} == {1: "alice", 2: "bobby", 3: "carol",
+                                4: "dave"}
+
+    def test_failed_compaction_reopens_through_fallback_scan(
+            self, spark, tmp_path, monkeypatch):
+        base = str(tmp_path / "storage")
+        ops = FileStorageOps(spark, base)
+        t = self._two_appends(spark, ops)
+        self._fail_moves(monkeypatch, ops)
+        with pytest.raises(IOError, match="injected"):
+            t.compact(T2, small_region_row_threshold=10)
+
+        fresh = FileStorageOps(spark, base)
+        assert fresh.read_region_cache("persons") is None
+        t = open_tables(fresh, ["persons"])[0]["persons"]
+        assert t.schema is None
+        assert sorted(r.count for r in t.regions) == [2, 2]
+        assert t.get_latest_timestamp() == T1
+        assert t.all_between(None, None).count() == 4
+        # the recovered table compacts cleanly and knows its schema again
+        t = t.compact(T2, small_region_row_threshold=10)
+        assert [r.count for r in t.regions] == [4]
+        assert t.schema is not None
+        assert open_tables(fresh, ["persons"])[0]["persons"] \
+            .all_between(None, None).count() == 4

@@ -1,10 +1,25 @@
 """Audit storage layer round-trips on a tmpdir — scenarios ported from the
 reference's TestAuditTableFile.scala / TestStorageActions.scala."""
 
+import json
 from datetime import datetime
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DecimalType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from waimak_spark.storage import (
     AuditTableFile,
@@ -18,7 +33,10 @@ from waimak_spark.storage import (
 )
 from waimak_spark.storage.audit import (
     COLD_PARTITION,
+    DE_LAST_UPDATED_COLUMN,
     HOT_PARTITION,
+    STORE_REGION_COLUMN,
+    STORE_TYPE_COLUMN,
     create_table,
     get_or_create_tables,
     open_tables,
@@ -200,6 +218,41 @@ class TestCompaction:
         t = t.compact(T2)
         assert t.regions[0].count == 3
 
+    def test_calls_launch_only_the_jobs_their_data_needs(self, ops, spark):
+        """Region stats are observed during the write and the schema comes
+        from the region cache, so: an append is its write job alone, a
+        snapshot plan is built without any job (no footer inference), and
+        a default compaction is its write job alone."""
+        t = create_table(ops, INFO)
+        (t, _), jobs = _jobs(spark, lambda: t.append(_b1(spark), "updated", T0))
+        assert jobs == 1
+        (t, _), jobs = _jobs(spark, lambda: t.append(_b2(spark), "updated", T1))
+        assert jobs == 1
+        t = open_tables(ops, ["persons"])[0]["persons"]
+        snap, jobs = _jobs(spark, lambda: t.snapshot(T2))
+        assert jobs == 0
+        assert snap.count() == 3
+        t, jobs = _jobs(spark, lambda: t.compact(T2))
+        assert jobs == 1
+        assert [r.count for r in t.regions] == [4]
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched) — counted through a job
+    group once the listener bus has delivered every job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
 
 class TestRegionInference:
     def test_reopen_uses_cache(self, ops, spark):
@@ -217,15 +270,19 @@ class TestRegionInference:
         t, _ = t.append(_b1(spark), "updated", T0)
         t, _ = t.append(_b2(spark), "updated", T1)
         # corrupt the cache: claim a region that does not exist on disk
-        regions = ops.read_region_cache("persons")
+        regions, schema = ops.read_region_cache("persons")
+        assert schema is not None
         regions.append(AuditTableRegionInfo("persons", HOT_PARTITION,
                                             "r" + "9" * 20, T0, False, 99, T0))
-        ops.write_region_cache("persons", regions)
+        ops.write_region_cache("persons", regions, schema)
         tables, _ = open_tables(ops, ["persons"])
         inferred = tables["persons"].regions
         assert len(inferred) == 2  # ghost region ignored, stats re-inferred
         assert sorted(r.count for r in inferred) == [2, 2]
         assert tables["persons"].get_latest_timestamp() == T1
+        # the schema came from the same invalid sidecar: discarded too
+        assert tables["persons"].schema is None
+        assert tables["persons"].all_between(None, None).count() == 4
 
     def test_skip_cache_scan(self, ops, spark):
         t = create_table(ops, INFO)
@@ -262,6 +319,165 @@ class TestRegionInference:
         # the hot region's data is untouched
         full, _ = open_tables(ops, ["persons"])
         assert full["persons"].all_between(None, None).count() == 4
+
+
+class TestObservedRegionStats:
+    """Region count / max ``_de_last_updated`` come from an Observation on
+    the written frame; they must equal a re-read of the region, counting
+    non-null ``_de_last_updated`` only."""
+
+    @staticmethod
+    def _reread(ops, t):
+        return [tuple(ops.spark.read.parquet(t._region_path(r))
+                      .select(F.count(DE_LAST_UPDATED_COLUMN),
+                              F.max(DE_LAST_UPDATED_COLUMN)).first())
+                for r in t.regions]
+
+    @staticmethod
+    def _stats(t):
+        return [(r.count, r.max_last_updated) for r in t.regions]
+
+    @pytest.mark.parametrize("lu_type, lo, hi", [
+        ("timestamp", T0, T1),
+        ("long", 1_514_800_800, 1_514_887_200),
+    ])
+    def test_append_stats_match_reread_with_nulls(self, ops, spark,
+                                                  lu_type, lo, hi):
+        df = spark.createDataFrame(
+            [(1, "a", lo), (2, "b", hi), (3, "c", None)],
+            f"id int, name string, updated {lu_type}")
+        t = create_table(ops, INFO)
+        t, count = t.append(df, "updated", T0)
+        assert count == 2  # the null last_updated row is not counted
+        assert self._stats(t) == self._reread(ops, t) == [(2, hi)]
+
+    @pytest.mark.parametrize("rows", [[], [(1, "a", None)]],
+                             ids=["empty", "all_null"])
+    def test_batch_without_last_updated(self, ops, spark, rows):
+        """Observation.get returns (0, None) instead of blocking when no
+        row reaches the metrics."""
+        t = create_table(ops, INFO)
+        t, count = t.append(_batch(spark, rows), "updated", T0)
+        assert count == 0
+        assert self._stats(t) == self._reread(ops, t) == [(0, None)]
+
+    def test_compaction_without_history(self, ops, spark):
+        info = AuditTableInfo("persons", ["id"], {}, retain_history=False)
+        t = create_table(ops, info)
+        t, _ = t.append(_b1(spark), "updated", T0)
+        t, _ = t.append(_b2(spark), "updated", T1)
+        t = t.compact(T2)
+        assert self._stats(t) == self._reread(ops, t) == [(3, T1)]
+
+    def test_layout_compaction(self, ops, spark):
+        """The z-order quantile pass is an action on the merge input that
+        runs before the write; the stats still describe the written
+        region."""
+        t = create_table(ops, INFO)
+        t, _ = t.append(_b1(spark), "updated", T0)
+        t, _ = t.append(_b2(spark), "updated", T1)
+        t = t.compact(T2, recompact_all=True, layout_cols=["id"],
+                      compaction_partitioner=lambda d, r, b: 2)
+        assert self._stats(t) == self._reread(ops, t) == [(4, T1)]
+
+
+class TestSchemaCache:
+    """The region cache carries the table's data schema whenever it is
+    known to equal the mergeSchema inference over the table root."""
+
+    MATRIX = StructType([
+        StructField("id", IntegerType(), False),
+        StructField("amount", DecimalType(12, 3), False),
+        StructField("ts", TimestampType(), True),
+        StructField("ts_ntz", TimestampNTZType(), True),
+        StructField("nested", StructType([
+            StructField("a", LongType(), False),
+            StructField("b", StructType([
+                StructField("c", StringType(), False)]), True)]), False),
+        StructField("tags", ArrayType(StringType(), False), True),
+        StructField("attrs", MapType(StringType(), DoubleType(), False), True),
+        StructField("updated", TimestampType(), False),
+    ])
+
+    def _matrix_rows(self, first_id):
+        return [(i, Decimal("12.345") * i, T0, T1,
+                 (i * 10, ("x" * i,)), ["t", str(i)], {"k": i / 2}, T0)
+                for i in range(first_id, first_id + 3)]
+
+    @staticmethod
+    def _inferred(ops, table):
+        df = (ops.spark.read.option("mergeSchema", "true")
+              .parquet(f"{ops.base_path}/{table}"))
+        return StructType([f for f in df.schema.fields
+                           if f.name not in (STORE_TYPE_COLUMN,
+                                             STORE_REGION_COLUMN)])
+
+    def test_stored_schema_equals_inference_over_type_matrix(self, ops,
+                                                             spark):
+        info = AuditTableInfo("matrix", ["id"], {}, True)
+        t = create_table(ops, info)
+        t, _ = t.append(spark.createDataFrame(self._matrix_rows(1),
+                                              self.MATRIX), "updated", T0)
+        assert t.schema == self._inferred(ops, "matrix")
+        t, _ = t.append(spark.createDataFrame(self._matrix_rows(4),
+                                              self.MATRIX), "updated", T1)
+        assert t.schema == self._inferred(ops, "matrix")
+        t = t.compact(T2, small_region_row_threshold=10)
+        assert t.schema == self._inferred(ops, "matrix")
+        reopened = open_tables(ops, ["matrix"])[0]["matrix"]
+        assert reopened.schema == t.schema
+        got = sorted(tuple(r) for r in reopened.snapshot(T2)
+                     .select(*self.MATRIX.fieldNames()).collect())
+        want = sorted(tuple(r) for r in
+                      spark.createDataFrame(self._matrix_rows(1)
+                                            + self._matrix_rows(4),
+                                            self.MATRIX).collect())
+        assert got == want
+
+    def test_added_column_drops_schema_and_reads_union(self, ops, spark):
+        t = create_table(ops, INFO)
+        t, _ = t.append(_b1(spark), "updated", T0)
+        wider = spark.createDataFrame(
+            [(3, "carol", T1, "nz")],
+            "id int, name string, updated timestamp, country string")
+        t, _ = t.append(wider, "updated", T1)
+        assert t.schema is None
+        assert open_tables(ops, ["persons"])[0]["persons"].schema is None
+        rows = {r["id"]: r["country"]
+                for r in t.all_between(None, None).collect()}
+        assert rows == {1: None, 2: None, 3: "nz"}
+        # a compaction that leaves no other region knows the schema again
+        t = t.compact(T2, small_region_row_threshold=10)
+        assert t.schema == self._inferred(ops, "persons")
+        assert "country" in t.schema.fieldNames()
+
+    def test_include_hot_false_ignores_stored_schema(self, ops, spark):
+        t = create_table(ops, INFO)
+        t, _ = t.append(_b1(spark), "updated", T0)
+        t = t.compact(T1, small_region_row_threshold=10)
+        t, _ = t.append(_b2(spark), "updated", T1)
+        assert open_tables(ops, ["persons"])[0]["persons"].schema is not None
+        cold_only = open_tables(ops, ["persons"], include_hot=False)[0]
+        assert cold_only["persons"].schema is None
+        assert {r["id"] for r in cold_only["persons"].snapshot(T2)
+                .collect()} == {1, 2}
+
+    def test_bare_list_sidecar_opens_and_is_rewritten(self, ops, spark):
+        t = create_table(ops, INFO)
+        t, _ = t.append(_b1(spark), "updated", T0)
+        path = f"{ops.base_path}/.regioninfo/persons.json"
+        doc = json.loads(ops.fops.read_string(path))
+        ops.fops.write_string(path, json.dumps(doc["regions"]))
+        t = open_tables(ops, ["persons"])[0]["persons"]
+        assert [r.count for r in t.regions] == [2]
+        assert t.schema is None
+        assert t.all_between(None, None).count() == 2
+        t, _ = t.append(_b2(spark), "updated", T1)
+        doc = json.loads(ops.fops.read_string(path))
+        assert set(doc) == {"schema", "regions"}
+        assert len(doc["regions"]) == 2
+        assert open_tables(ops, ["persons"])[0]["persons"] \
+            .all_between(None, None).count() == 4
 
 
 class TestCompactionWindow:

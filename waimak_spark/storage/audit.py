@@ -8,7 +8,10 @@ Re-expresses the reference's ``AuditTableFile``
   — Hive-style partition directories, so ``allBetween``'s ``.isin``
   filters prune whole regions at the Parquet scan (no custom reader);
 * ``append`` stamps ``_de_last_updated`` and writes one new hot region
-  (AuditTableFile.scala:56-70);
+  (AuditTableFile.scala:56-70); the region's count and max
+  ``_de_last_updated`` are observed on the written frame
+  (``DataFrame.observe``) instead of re-reading the region, so an append
+  is one Spark job;
 * ``snapshot`` = partition-pruned scan → latest-per-PK window
   (AuditTableFile.scala:72-82);
 * ``compact`` merges all hot + small cold regions into one new cold
@@ -16,7 +19,12 @@ Re-expresses the reference's ``AuditTableFile``
   region folders moved to a trash bin (AuditTableFile.scala:99-210);
 * region metadata is cached under ``.regioninfo`` and validated against
   the partition-directory glob on open, falling back to a groupBy scan
-  (AuditTableFile.scala:262-446).
+  (AuditTableFile.scala:262-446).  The cache also carries the table's
+  data schema whenever it is known to equal the ``mergeSchema`` inference
+  over the table root (first append, a same-schema append, a compaction
+  that keeps the schema or leaves no other region); reads then pass it to
+  the reader and launch no schema-inference job.  Otherwise it holds none
+  and reads infer as usual.
 
 Timestamps: ``_de_last_updated`` takes whatever type the caller's
 last-updated column has (timestamp or epoch-long) — all kernels only
@@ -29,8 +37,10 @@ from dataclasses import dataclass, field
 from datetime import datetime
 from typing import Any, Callable, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Observation, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, DataType, MapType, StructField,
+                               StructType)
 
 from .file_ops import REGION_INFO_DIRECTORY, FileStorageOps
 
@@ -74,6 +84,38 @@ class AuditTableRegionInfo:
 CompactionPartitioner = Callable[[DataFrame, int, int], int]
 
 
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, array element and map value nullable — the
+    form a Parquet read reports (Spark's ``asNullable``)."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True,
+                                       f.metadata) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _observe_region_stats(df: DataFrame
+                          ) -> tuple[DataFrame, Callable[[], tuple[int, Any]]]:
+    """``df`` with count(``_de_last_updated``) and max(``_de_last_updated``)
+    observed while it is written, plus a getter for the two values — the
+    stats the reference re-reads the region for (AuditTableFile.scala:
+    212-216), at no extra Spark job.  Call the getter after the write."""
+    obs = Observation()
+    # SQL strings: one py4j round-trip per metric instead of a Column tree
+    observed = df.observe(
+        obs, F.expr(f"count({DE_LAST_UPDATED_COLUMN}) AS count"),
+        F.expr(f"max({DE_LAST_UPDATED_COLUMN}) AS max"))
+
+    def stats() -> tuple[int, Any]:
+        m = obs.get
+        return int(m["count"]), m["max"]
+
+    return observed, stats
+
+
 class AuditTableFile:
     """One audit table instance. Mutators (``append``/``compact``) may be
     called at most ONCE per instance (AuditTableFile.scala:36-38) and
@@ -81,13 +123,18 @@ class AuditTableFile:
 
     def __init__(self, table_info: AuditTableInfo,
                  regions: list[AuditTableRegionInfo],
-                 ops: FileStorageOps, full_region_view: bool = True):
+                 ops: FileStorageOps, full_region_view: bool = True,
+                 schema: Optional[StructType] = None):
         self.table_info = table_info
         self.regions = list(regions)
         self.ops = ops
         #: False when opened with include_hot=False — the in-memory region
         #: list is then a PARTIAL view and must never drive mutation
         self.full_region_view = full_region_view
+        #: data schema of the whole table (partition columns excluded) when
+        #: known to equal the mergeSchema inference over the table root;
+        #: a cold-only view may be narrower, so it never uses one
+        self.schema = schema if full_region_view else None
         self._was_modified = False
         self.table_path = f"{ops.base_path}/{table_info.table_name}"
         self.hot_path = f"{self.table_path}/{STORE_TYPE_COLUMN}={HOT_PARTITION}"
@@ -155,16 +202,17 @@ class AuditTableFile:
     def update_table_info(self, info: AuditTableInfo) -> "AuditTableFile":
         self.ops.write_table_info(info)
         return AuditTableFile(info, self.regions, self.ops,
-                              self.full_region_view)
+                              self.full_region_view, self.schema)
 
-    def _set_regions(self, regions: list[AuditTableRegionInfo]) -> "AuditTableFile":
-        """Persist the region cache and return the new table state
-        (AuditTableFile.setRegions, :262-274). The JSON cache is tiny, so
-        unlike the reference's append-mode Parquet we always rewrite it
-        whole — same semantics, no Spark job."""
-        self.ops.write_region_cache(self.table_name, regions)
+    def _set_regions(self, regions: list[AuditTableRegionInfo],
+                     schema: Optional[StructType] = None) -> "AuditTableFile":
+        """Persist the region cache and table schema and return the new
+        table state (AuditTableFile.setRegions, :262-274). The JSON cache
+        is tiny, so unlike the reference's append-mode Parquet we always
+        rewrite it whole — same semantics, no Spark job."""
+        self.ops.write_region_cache(self.table_name, regions, schema)
         return AuditTableFile(self.table_info, regions, self.ops,
-                              self.full_region_view)
+                              self.full_region_view, schema)
 
     # -- kernels ----------------------------------------------------------------
     def append(self, df: DataFrame, last_updated: Column | str,
@@ -179,20 +227,15 @@ class AuditTableFile:
         region_path = f"{self.hot_path}/{STORE_REGION_COLUMN}={region_id}"
         lu = F.col(last_updated) if isinstance(last_updated, str) else last_updated
         with_lu = df.withColumn(DE_LAST_UPDATED_COLUMN, lu)
-        self.ops.write_parquet(self.table_name, region_path, with_lu)
-        count, max_lu = self._calc_region_stats(region_path)
+        observed, stats = _observe_region_stats(with_lu)
+        self.ops.write_parquet(self.table_name, region_path, observed)
+        count, max_lu = stats()
         region = AuditTableRegionInfo(self.table_name, HOT_PARTITION,
                                       region_id, append_ts, False, count, max_lu)
-        return self._set_regions(self.regions + [region]), count
-
-    def _calc_region_stats(self, region_path: str) -> tuple[int, Optional[Any]]:
-        """count + max of ``_de_last_updated`` from a re-read of the
-        just-written region (AuditTableFile.scala:212-216)."""
-        df = self.ops.open_parquet(region_path)
-        row = df.select(
-            F.count(DE_LAST_UPDATED_COLUMN), F.max(DE_LAST_UPDATED_COLUMN)
-        ).collect()[0]
-        return int(row[0]), row[1]
+        # the table's schema stays known only while every region has it
+        written = _nullable(with_lu.schema)
+        schema = written if not self.regions or written == self.schema else None
+        return self._set_regions(self.regions + [region], schema), count
 
     def all_between(self, from_ts: Optional[Any] = None,
                     to_ts: Optional[Any] = None) -> Optional[DataFrame]:
@@ -205,7 +248,7 @@ class AuditTableFile:
         ids = self.active_region_ids()
         if not ids:
             return None
-        df = self.ops.open_parquet(self.table_path)
+        df = self.ops.open_parquet(self.table_path, schema=self.schema)
         if df is None:
             return None
         df = df.where(
@@ -337,7 +380,7 @@ class AuditTableFile:
                          ) -> "AuditTableFile":
         if not to_compact:
             return AuditTableFile(self.table_info, self.regions, self.ops,
-                                  self.full_region_view)
+                                  self.full_region_view, self.schema)
         ids = {r.store_region for r in to_compact}
         region_id = self._next_region_id()
         new_path = f"{self.cold_path}/{STORE_REGION_COLUMN}={region_id}"
@@ -346,7 +389,7 @@ class AuditTableFile:
                 f"Can not compact table [{self.table_name}], as path "
                 f"[{new_path}] already exists")
         paths = [self._region_path(r) for r in to_compact]
-        data = self.ops.open_parquet(*paths)
+        data = self.ops.open_parquet(*paths, schema=self.schema)
         if data is not None:
             data = data.drop(STORE_TYPE_COLUMN, STORE_REGION_COLUMN)
             if not self.table_info.retain_history:
@@ -374,17 +417,23 @@ class AuditTableFile:
             else:
                 data = (data.repartition(target) if target > current
                         else data.coalesce(target))
+            # observed on the final frame: the z-order quantile pass above
+            # is an action on the unobserved input and must not fire it
+            observed, stats = _observe_region_stats(data)
             self.ops.atomic_write_and_cleanup(
-                self.table_name, data, new_path, paths,
+                self.table_name, observed, new_path, paths,
                 int(compact_ts.timestamp() * 1000))
-            count, max_lu = self._calc_region_stats(new_path)
+            count, max_lu = stats()
             remaining = [r for r in self.regions if r.store_region not in ids]
             new_region = AuditTableRegionInfo(
                 self.table_name, COLD_PARTITION, region_id, compact_ts,
                 False, count, max_lu)
-            return self._set_regions(remaining + [new_region])
+            merged = _nullable(data.schema)
+            schema = (merged if not remaining or merged == self.schema
+                      else None)
+            return self._set_regions(remaining + [new_region], schema)
         return AuditTableFile(self.table_info, self.regions, self.ops,
-                              self.full_region_view)
+                              self.full_region_view, self.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -434,8 +483,8 @@ def open_tables(ops: FileStorageOps, table_names: Sequence[str],
     existing = set(ops.list_tables())
     exist = [t for t in table_names if t in existing]
     missing = [t for t in table_names if t not in existing]
-    regions = infer_regions_with_stats(ops, exist, include_hot,
-                                       skip_region_info_cache)
+    regions, schemas = infer_regions_with_stats(ops, exist, include_hot,
+                                                skip_region_info_cache)
     by_table: dict[str, list[AuditTableRegionInfo]] = {}
     for r in regions:
         by_table.setdefault(r.table_name, []).append(r)
@@ -443,7 +492,8 @@ def open_tables(ops: FileStorageOps, table_names: Sequence[str],
     for t in exist:
         info = ops.read_table_info(t)
         out[t] = AuditTableFile(info, by_table.get(t, []), ops,
-                                full_region_view=include_hot)
+                                full_region_view=include_hot,
+                                schema=schemas.get(t))
     return out, missing
 
 
@@ -477,19 +527,25 @@ def get_or_create_tables(ops: FileStorageOps, table_names: Sequence[str],
 def infer_regions_with_stats(ops: FileStorageOps, table_names: Sequence[str],
                              include_hot: bool = True,
                              skip_region_info_cache: bool = False
-                             ) -> list[AuditTableRegionInfo]:
+                             ) -> tuple[list[AuditTableRegionInfo],
+                                        dict[str, StructType]]:
     """Cache-validated region inference (AuditTableFile.scala:295-317):
     use the cached region info for tables whose cache exactly matches the
     partition-directory glob; for the rest, fall back to a Parquet groupBy
-    scan merged with zero-count path-only entries."""
+    scan merged with zero-count path-only entries.  Also returns the
+    cached schema of each table whose cache validated and holds one."""
     cache_info: list[AuditTableRegionInfo] = []
+    cache_schemas: dict[str, StructType] = {}
     if not skip_region_info_cache:
         for t in table_names:
             cached = ops.read_region_cache(t)
             if cached is not None:
+                regions, schema = cached
                 cache_info.extend(
-                    r for r in cached
+                    r for r in regions
                     if include_hot or r.store_type != HOT_PARTITION)
+                if schema is not None:
+                    cache_schemas[t] = schema
     path_info = _infer_regions_from_paths(ops, table_names, include_hot)
     cache_keys_by_table: dict[str, set] = {}
     for r in cache_info:
@@ -515,7 +571,8 @@ def infer_regions_with_stats(ops: FileStorageOps, table_names: Sequence[str],
     }
     merged = [from_parquet.get(k, v) for k, v in from_paths.items()]
     merged += [v for k, v in from_parquet.items() if k not in from_paths]
-    return merged + valid_cache
+    schemas = {t: s for t, s in cache_schemas.items() if t in valid_tables}
+    return merged + valid_cache, schemas
 
 
 def _infer_regions_from_paths(ops: FileStorageOps,

@@ -10,7 +10,12 @@ design:
 * the region-info cache is a JSON sidecar under ``.regioninfo/<table>.json``
   instead of a one-row-group Parquet file — it is driver-side metadata of a
   few dozen rows, and a JSON write avoids launching a Spark job per append
-  (the validation + fallback semantics are identical);
+  (the validation + fallback semantics are identical).  Its format is
+  ``{"schema": <StructType JSON or null>, "regions": [<region>, ...]}``:
+  ``schema`` is the table's data schema (partition columns excluded) when
+  it is known to equal what ``mergeSchema`` inference over the table root
+  would give, so reads can skip the footer-reading inference job.  A bare
+  JSON list of regions (the earlier format) still reads, with no schema;
 * every Parquet write stages under ``.tmp/<table>/…`` and atomically
   renames into place (FileStorageOps.scala:221-232) — on object stores the
   rename is the hook where a manifest committer would slot in.
@@ -23,6 +28,7 @@ from dataclasses import asdict
 from typing import TYPE_CHECKING, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..filesystem import FileOps
 
@@ -47,24 +53,27 @@ class FileStorageOps:
 
     # -- reads -----------------------------------------------------------------
     def open_parquet(self, *paths: str,
-                     merge_schema: bool = True) -> Optional[DataFrame]:
+                     schema: Optional[StructType] = None
+                     ) -> Optional[DataFrame]:
         """Read one or more Parquet paths; None if any is missing or empty.
 
         ``mergeSchema=true`` tolerates schema evolution across regions
-        (FileStorageOps.scala:208); disable per table at very large region
-        counts where footer merging gets expensive.
+        (FileStorageOps.scala:208).  A given ``schema`` (data columns only)
+        replaces the footer-reading inference job; it must equal what that
+        inference would return.
         """
         if not paths or not all(self.fops.exists(p) for p in paths):
             return None
+        reader = self.spark.read.option("mergeSchema", "true")
+        if schema is not None:
+            reader = reader.schema(schema)
         try:
             # no basePath: a table-root read discovers the
             # de_store_type/de_store_region partition columns from the
-            # directory layout, while a direct region-directory read (region
-            # stats, compaction merge) sees only the data columns — exactly
-            # the reference's openParquet behaviour
-            return self.spark.read.option(
-                "mergeSchema", "true" if merge_schema else "false"
-            ).parquet(*paths)
+            # directory layout, while a direct region-directory read
+            # (compaction merge) sees only the data columns — exactly the
+            # reference's openParquet behaviour
+            return reader.parquet(*paths)
         except Exception as e:  # AnalysisException: no footers to infer from
             if "infer schema" in str(e).lower() or "PATH_NOT_FOUND" in str(e):
                 return None
@@ -175,29 +184,40 @@ class FileStorageOps:
         return v
 
     def write_region_cache(self, table_name: str,
-                           regions: list["AuditTableRegionInfo"]) -> None:
+                           regions: list["AuditTableRegionInfo"],
+                           schema: Optional[StructType] = None) -> None:
         rows = [
             {k: self._encode_val(v) for k, v in asdict(r).items()}
             for r in regions
         ]
+        doc = {"schema": schema.jsonValue() if schema is not None else None,
+               "regions": rows}
         self.fops.write_string(self._region_cache_path(table_name),
-                               json.dumps(rows, indent=0))
+                               json.dumps(doc, indent=0))
 
     def read_region_cache(
-            self, table_name: str) -> Optional[list["AuditTableRegionInfo"]]:
+            self, table_name: str
+    ) -> Optional[tuple[list["AuditTableRegionInfo"], Optional[StructType]]]:
+        """(regions, table schema or None); None when the sidecar is
+        missing or unreadable."""
         from .audit import AuditTableRegionInfo
 
         path = self._region_cache_path(table_name)
         if not self.fops.exists(path):
             return None
         try:
-            rows = json.loads(self.fops.read_string(path))
-            return [
+            doc = json.loads(self.fops.read_string(path))
+            if isinstance(doc, list):  # earlier format: regions only
+                doc = {"schema": None, "regions": doc}
+            schema = doc["schema"]
+            regions = [
                 AuditTableRegionInfo(
                     **{k: self._decode_val(v) for k, v in r.items()})
-                for r in rows
+                for r in doc["regions"]
             ]
-        except (ValueError, TypeError):
+            return regions, (StructType.fromJson(schema)
+                             if schema is not None else None)
+        except (ValueError, TypeError, KeyError):
             return None
 
     def clear_region_cache(self, table_name: str) -> None:
