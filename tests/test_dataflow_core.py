@@ -231,6 +231,21 @@ class TestInterceptors:
         _, final = flow.execute()
         assert final.inputs.get("a") == 22  # (10+1)*2
 
+    def test_rewrap_keeps_cache_marks_and_checks_see_final_value(self):
+        """A re-wrap copies the interceptor, so cache marks survive it; a
+        check sees the value after every post-action, whenever attached."""
+        seen = []
+        flow = DataFlow().add_action(action([], ["a"], produce(10)))
+        flow = PostActionInterceptor.attach(
+            flow, "a", lambda l, v, c: seen.append(v), check=True)
+        flow = PostActionInterceptor.attach(flow, "a", lambda l, v, c: v + 1)
+        flow.actions[0].parquet_cached_labels = frozenset({"a"})
+        flow = PostActionInterceptor.attach(flow, "a", lambda l, v, c: v * 2)
+        assert flow.actions[0].parquet_cached_labels == {"a"}
+        _, final = flow.execute()
+        assert final.inputs.get("a") == 22
+        assert seen == [22]
+
     def test_intercept_missing_label_raises(self):
         with pytest.raises(FlowValidationException, match="No action produces"):
             PostActionInterceptor.attach(DataFlow(), "zzz", lambda l, v, c: v)

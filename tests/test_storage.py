@@ -397,11 +397,18 @@ class TestSchemaCache:
         StructField("tags", ArrayType(StringType(), False), True),
         StructField("attrs", MapType(StringType(), DoubleType(), False), True),
         StructField("updated", TimestampType(), False),
+        # char/varchar columns: a string with Spark's char/varchar metadata
+        StructField("code", StringType(), False,
+                    {"__CHAR_VARCHAR_TYPE_STRING": "char(3)"}),
+        StructField("note", StringType(), True,
+                    {"__CHAR_VARCHAR_TYPE_STRING": "varchar(8)"}),
     ])
 
-    def _matrix_rows(self, first_id):
+    @staticmethod
+    def _matrix_rows(first_id):
         return [(i, Decimal("12.345") * i, T0, T1,
-                 (i * 10, ("x" * i,)), ["t", str(i)], {"k": i / 2}, T0)
+                 (i * 10, ("x" * i,)), ["t", str(i)], {"k": i / 2}, T0,
+                 f"c{i:02d}", f"note {i}")
                 for i in range(first_id, first_id + 3)]
 
     @staticmethod
@@ -433,6 +440,49 @@ class TestSchemaCache:
                                             + self._matrix_rows(4),
                                             self.MATRIX).collect())
         assert got == want
+
+    @pytest.mark.parametrize("route", ["cache", "staged"])
+    def test_flow_reread_schema_equals_inference(self, spark, tmp_path,
+                                                 route):
+        """A flow's unpartitioned re-read of a folder it just wrote is given
+        the written schema instead of inferring it; over the type matrix
+        that schema equals the inference over the folder, both for a
+        ``cache_as_parquet`` re-read and for a committed checked label
+        staged by its producer."""
+        from waimak_spark.dataflow.spark_flow import Waimak
+        from waimak_spark.dataquality import (CollectingAlertHandler,
+                                              DataQualityCheck)
+        from waimak_spark.operators import ParquetDataCommitter
+
+        temp = str(tmp_path / "flowtmp")
+        seen = []
+
+        def probe(df):
+            folder = df.inputFiles()[0].rsplit("/", 1)[0]
+            seen.append((folder, df.schema, spark.read.parquet(folder).schema))
+
+        class Probe(DataQualityCheck):
+            def get_alerts(self, label, df):
+                probe(df)
+                return []
+
+        frame = spark.createDataFrame(self._matrix_rows(1), self.MATRIX)
+        flow = Waimak.spark_flow(spark, temp).open("m", lambda c: frame)
+        if route == "cache":
+            flow = (flow.cache_as_parquet("m")
+                    .unit_transform("m", fn=probe, name="probe")
+                    .unit_transform("m", fn=lambda df: None, name="other"))
+        else:
+            flow = (flow.add_data_quality_check("m", Probe(),
+                                                CollectingAlertHandler())
+                    .commit("c", "m")
+                    .push("c", ParquetDataCommitter(str(tmp_path / "out"))))
+        flow.execute()
+        [(folder, passed, inferred)] = seen
+        assert folder.startswith(f"file://{temp}/")
+        assert passed == inferred
+        assert [f.metadata for f in passed.fields][-2:] == [
+            f.metadata for f in self.MATRIX.fields][-2:]
 
     def test_added_column_drops_schema_and_reads_union(self, ops, spark):
         t = create_table(ops, INFO)

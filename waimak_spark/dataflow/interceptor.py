@@ -8,6 +8,7 @@ PostActionInterceptor.scala:7-59).
 
 from __future__ import annotations
 
+import copy
 from typing import Any, Callable, Optional
 
 from pyspark.sql import DataFrame
@@ -56,24 +57,39 @@ class InterceptorAction(DataFlowAction):
 
 
 class PostActionInterceptor(InterceptorAction):
-    """Applies per-label post-actions to the intercepted action's outputs."""
+    """Applies per-label post-actions to the intercepted action's outputs,
+    then runs the label's checks on the final value.
+
+    Checks (data-quality evaluations) see the value every post-action has
+    produced, whatever order they were attached in, and their results are
+    discarded.  ``parquet_cached_labels`` / ``spark_cached_labels`` record
+    the labels a cache post-action already materializes."""
+
+    parquet_cached_labels: frozenset[str] = frozenset()
+    spark_cached_labels: frozenset[str] = frozenset()
 
     def __init__(self, intercepted: DataFlowAction,
                  post_actions: dict[str, PostAction]):
         super().__init__(intercepted)
         self.post_actions = dict(post_actions)
+        self.checks: dict[str, tuple[PostAction, ...]] = {}
 
     def instead(self, inputs, outputs, context):
         out = list(outputs)
         for i, label in enumerate(self.output_labels):
             if label in self.post_actions:
                 out[i] = self.post_actions[label](label, out[i], context)
+            for check in self.checks.get(label, ()):
+                check(label, out[i], context)
         return out
 
     @staticmethod
-    def attach(flow: DataFlow, label: str, post: PostAction) -> DataFlow:
-        """Wrap the producer of ``label`` with a post-action; stacks if the
-        producer is already intercepted (PostActionInterceptor.scala:30-59)."""
+    def attach(flow: DataFlow, label: str, post: PostAction,
+               check: bool = False) -> DataFlow:
+        """Wrap the producer of ``label`` with a post-action (or, with
+        ``check``, a check); stacks if the producer is already intercepted
+        (PostActionInterceptor.scala:30-59).  A re-wrap is a copy of the
+        interceptor, so its guid, tags and cache marks carry over."""
         producers = [a for a in flow.actions if label in a.output_labels]
         if not producers:
             raise FlowValidationException(
@@ -81,13 +97,17 @@ class PostActionInterceptor(InterceptorAction):
             )
         target = producers[0]
         if isinstance(target, PostActionInterceptor):
-            posts = dict(target.post_actions)
-            prev = posts.get(label)
-            posts[label] = (
+            new = copy.copy(target)
+            new.post_actions = dict(target.post_actions)
+            new.checks = dict(target.checks)
+        else:
+            new = PostActionInterceptor(target, {})
+        if check:
+            new.checks[label] = new.checks.get(label, ()) + (post,)
+        else:
+            prev = new.post_actions.get(label)
+            new.post_actions[label] = (
                 (lambda l, v, c, p=prev, n=post: n(l, p(l, v, c), c))
                 if prev else post
             )
-            new = PostActionInterceptor(target.intercepted, posts)
-        else:
-            new = PostActionInterceptor(target, {label: post})
         return flow.add_interceptor(new, target.guid)

@@ -15,7 +15,8 @@ Key semantics kept from the reference:
 * ``writeCSV`` repartitions to ``num_files`` (default 1, package.scala:618);
 * ``cacheAsParquet`` cuts the plan by write+re-read under the temp folder
   (SparkInterceptors.scala:48-65), scheduled lazily by a metadata extension
-  that skips labels used by <2 actions (CacheMetadataExtension.scala:13-48);
+  that skips labels read fewer than twice (CacheMetadataExtension.scala:13-48;
+  readers are consumer actions, data-quality checks and pending commits);
 * temp folder is wiped/created in ``prepare_for_execution`` and deleted in
   ``finalise_execution`` unless configured otherwise
   (SparkDataFlow.scala:88-122).
@@ -276,10 +277,10 @@ class SparkDataFlow(DataFlow):
     def alias(self, label: str, alias: str):
         """Expose an entity under a second label (same DataFrame)."""
         _validate_label(alias)
-        return self.add_action(
-            SimpleAction([label], [alias], lambda i, _c: [i.get(label)],
-                         name=f"alias:{label}->{alias}")
-        )
+        action = SimpleAction([label], [alias], lambda i, _c: [i.get(label)],
+                              name=f"alias:{label}->{alias}")
+        action.is_alias = True  # reads nothing: its label's readers do
+        return self.add_action(action)
 
     def partition_sort(self, input_label: str, output: str,
                        partition_cols: Sequence[str],
@@ -330,7 +331,7 @@ class SparkDataFlow(DataFlow):
                          partition_cols: Sequence[str] | None = None,
                          repartition: bool = True):
         """Plan-cut cache: write to temp as Parquet, re-open. Scheduled via the
-        cache metadata extension (skips labels consumed by <2 actions when
+        cache metadata extension (skips labels read fewer than twice when
         ``spark.waimak.dataflow.cacheOnlyReusedLabels`` is true)."""
         from ..operators.cache import CacheAsParquetExtension
 
@@ -618,9 +619,9 @@ class SparkDataFlow(DataFlow):
     # ==================== data quality (§2.8) =================================
     def add_data_quality_check(self, label: str, check, *handlers):
         """Attach a data-quality check + alert handlers to a label
-        (dataquality/package.scala:16-29). Evaluated at prepare time via
-        the DQ metadata extension: the label is cached, checks run as an
-        in-place transform, alerts route by importance."""
+        (dataquality/package.scala:16-29). Expanded at prepare time by
+        the DQ metadata extension: the label is materialized once, the
+        checks read the written files, alerts route by importance."""
         from ..dataquality import add_data_quality_check as _add
 
         return _add(self, label, check, *handlers)

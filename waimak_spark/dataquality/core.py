@@ -6,6 +6,15 @@ handler contract, failure-after-all-alerts semantics), DatasetCheck.scala
 :15-46 (merge checks per (label, handlers), cache the label, evaluate as
 an in-place transform), dataquality/package.scala:16-29
 (addDataQualityCheck builder).
+
+The check reads data the flow already materializes.  It counts as a reader
+of its label (``operators.cache.readers``), so a checked label with one
+other reader is cached as Parquet, and a committed checked label with no
+other consumer action is written by its producer into the commit's
+staging folder (``operators.commit``).  The check runs after the label's
+post-actions, so ``get_alerts`` receives a DataFrame that scans those
+written files.  A flow without a temp folder materializes nothing; its
+checks read the label's plan.
 """
 
 from __future__ import annotations
@@ -18,6 +27,7 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import DataFrame
 
 from ..dataflow.flow import MetadataExtension
+from ..dataflow.interceptor import PostActionInterceptor
 
 logger = logging.getLogger("waimak_spark.dataquality")
 
@@ -160,11 +170,11 @@ class DataQualityMeta:
 
 
 class DataQualityMetadataExtension(MetadataExtension):
-    """At prepare time: merge checks per (label, handlers), cache each
-    checked label (the check reads data the flow already materializes),
-    and attach an in-place transform that evaluates the checks and routes
-    alerts; handler-returned exceptions are raised after every alert was
-    delivered."""
+    """At prepare time: merge checks per (label, handlers), request a cache
+    of each checked label (the check reads data the flow already
+    materializes), and attach a check to the label's producer that
+    evaluates the checks and routes alerts; handler-returned exceptions are
+    raised after every alert was delivered."""
 
     def __init__(self, meta: Sequence[DataQualityMeta] = ()):
         self.meta = list(meta)
@@ -183,9 +193,12 @@ class DataQualityMetadataExtension(MetadataExtension):
             by_label.setdefault(label, []).append(
                 DataQualityMeta(label, handlers, check))
         for label, metas in by_label.items():
-            flow = flow.cache_as_parquet(label)
+            if getattr(flow.context, "temp_folder", None) is not None:
+                flow = flow.cache_as_parquet(label)
 
-            def evaluate(df: DataFrame, metas=metas, label=label) -> DataFrame:
+            def evaluate(label: str, df, _context, metas=metas) -> None:
+                if df is None:
+                    return
                 failures: list[Exception] = []
                 for m in metas:
                     for alert in m.check.get_alerts(label, df):
@@ -196,9 +209,9 @@ class DataQualityMetadataExtension(MetadataExtension):
                                     failures.append(err)
                 if failures:
                     raise failures[0]
-                return df
 
-            flow = flow.in_place_transform(label, evaluate)
+            flow = PostActionInterceptor.attach(flow, label, evaluate,
+                                                check=True)
         return flow
 
 

@@ -9,6 +9,9 @@ folder moves, merge-moves of part files, trash with aged purge, globs.
 At 100 TB note: directory rename is atomic on HDFS but O(n)-copy on S3;
 ``atomic_write`` is the hook where a manifest-based committer would slot in
 for object stores.
+
+``nullable`` is the schema a Parquet read of a folder reports for the frame
+that wrote it, so a re-read can pass it instead of inferring it.
 """
 
 from __future__ import annotations
@@ -17,6 +20,21 @@ import time
 from typing import Iterable
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import (ArrayType, DataType, MapType, StructField,
+                               StructType)
+
+
+def nullable(t: DataType) -> DataType:
+    """``t`` with every field, array element and map value nullable — the
+    form a Parquet read reports (Spark's ``asNullable``)."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, nullable(f.dataType), True,
+                                       f.metadata) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(nullable(t.keyType), nullable(t.valueType), True)
+    return t
 
 
 class FileOps:

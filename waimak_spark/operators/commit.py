@@ -18,6 +18,15 @@ CommitAction in SparkDataFlow.scala:154-204):
 Ordering is enforced purely with tags (stage tag ← move dependency; move
 tag ← finish dependency), exactly like the reference wires it
 (CommitMetadataExtension.scala:27-43).
+
+A committed label with a data-quality check whose commit stage is its only
+consumer action is staged by its producer: the producer's interceptor
+writes it straight into ``temp_folder/commit-<uuid>/<label>`` with the
+stage's own write (:func:`~.cache.write_parquet`) and re-reads it, the check reads
+those files, and the stage action launches no Spark job.  A label with any
+other reader than its check and this commit keeps the ``temp/<label>``
+cache and is staged from it, because the move must never rename files a
+later action still reads.
 """
 
 from __future__ import annotations
@@ -26,11 +35,13 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Callable, Optional, Sequence
 
-from pyspark.sql import DataFrame
 
 from ..dataflow.action import SimpleAction
 from ..dataflow.exceptions import DataFlowException, FlowValidationException
 from ..dataflow.flow import DataFlow, MetadataExtension
+from ..dataflow.interceptor import PostActionInterceptor
+from .cache import (_mark_cached, checked, materialize, parquet_cached,
+                    readers, write_parquet)
 
 CONF_CACHE_COMMITTED = "spark.waimak.dataflow.cacheReusedCommittedLabels"
 
@@ -42,6 +53,11 @@ class CommitEntry:
     num_partitions: Optional[int] = None
     repartition: bool = True
     cache: bool = True
+
+    @property
+    def layout(self) -> tuple:
+        """``write_parquet``'s layout arguments for this label."""
+        return self.num_partitions, list(self.partitions or []), self.repartition
 
 
 class DataCommitter:
@@ -139,21 +155,19 @@ class CommitMetadataExtension(MetadataExtension):
             raise FlowValidationException(
                 "Commit definitions with labels that are not produced by "
                 f"any action: [{detail}]")
+        cache_committed = flow.context.get_boolean(CONF_CACHE_COMMITTED, True)
+        # the commits not expanded yet stay declared, so that their stages
+        # count as readers of their labels while each commit is expanded
+        pending = dict(self.commits)
         for name, entries in self.commits.items():
+            declared = CommitMetadataExtension(pending)
+            flow = flow.with_extension(declared)
             committer = self.pushes[name]
             committer.validate(flow, name, entries)
             commit_uuid = uuid.uuid4().hex
-            cache_committed = flow.context.get_boolean(CONF_CACHE_COMMITTED, True)
-            if cache_committed:
-                reused = [
-                    e.label for e in entries
-                    if e.cache and sum(
-                        1 for a in flow.actions for l in a.input_labels
-                        if l == e.label
-                    ) >= 1
-                ]
-                if reused:
-                    flow = flow.cache_as_parquet(*reused)
+            reused = [e.label for e in entries
+                      if cache_committed and e.cache
+                      and readers(flow, e.label) > 1]
             stage_tag = f"commit_{name}_stage"
             move_tag = f"commit_{name}_move"
             flow = flow.tagged(stage_tag)(
@@ -167,7 +181,23 @@ class CommitMetadataExtension(MetadataExtension):
             flow = flow.tag_dependency(move_tag)(
                 lambda f: committer.finish(f, name, commit_uuid, entries)
             )
+            del pending[name]
+            flow = flow.without_extension(declared)
+            # a label its producer stages is already materialized; a flow
+            # without a temp folder materializes nothing
+            reused = [l for l in reused if not parquet_cached(flow, l)]
+            if reused and getattr(flow.context, "temp_folder", None):
+                flow = flow.cache_as_parquet(*reused)
         return flow
+
+
+def staged_by_producer(flow: DataFlow, label: str) -> bool:
+    """True when the commit being expanded and the label's data-quality
+    check are its only readers, so its producer can write it straight into
+    the commit's staging folder.  A label some other action reads keeps
+    its own cache: the move renames the staging folder away."""
+    return (checked(flow, label) and readers(flow, label) == 2
+            and not parquet_cached(flow, label))
 
 
 # ---------------------------------------------------------------------------
@@ -230,17 +260,22 @@ class ParquetDataCommitter(DataCommitter):
     def stage(self, flow, commit_name, commit_uuid, entries):
         staging = self._staging(flow, commit_uuid)
         for e in entries:
-            def body(i, _c, e=e):
-                df: DataFrame = i.get(e.label)
-                if e.num_partitions is not None:
-                    df = df.repartition(e.num_partitions)
-                elif e.partitions and e.repartition:
-                    df = df.repartition(*[df[c] for c in e.partitions])
-                w = df.write
-                if e.partitions:
-                    w = w.partitionBy(*list(e.partitions))
-                w.mode("overwrite").parquet(f"{staging}/{e.label}")
-                return []
+            path = f"{staging}/{e.label}"
+            if staged_by_producer(flow, e.label):
+                def post(_l, value, context, e=e, path=path):
+                    if value is None:
+                        return None
+                    return materialize(context, value, path, *e.layout)
+
+                flow = PostActionInterceptor.attach(flow, e.label, post)
+                flow = _mark_cached(flow, e.label, "parquet_cached_labels")
+
+                def body(_i, _c):
+                    return []
+            else:
+                def body(i, _c, e=e, path=path):
+                    write_parquet(i.get(e.label), path, *e.layout)
+                    return []
 
             flow = flow.add_action(
                 SimpleAction([e.label], [], body, name=f"commitStage:{e.label}")

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..dataflow.action import SimpleAction
 from ..dataflow.exceptions import DataFlowException, FlowValidationException
+from .cache import write_parquet
 from .commit import CommitEntry, DataCommitter
 
 _MANIFEST_RE = re.compile(r"^manifest-(\d{10})\.json$")
@@ -144,16 +145,8 @@ class ManifestParquetDataCommitter(DataCommitter):
     def stage(self, flow, commit_name, commit_uuid, entries):
         for e in entries:
             def body(i, _c, e=e):
-                df: DataFrame = i.get(e.label)
-                if e.num_partitions is not None:
-                    df = df.repartition(e.num_partitions)
-                elif e.partitions and e.repartition:
-                    df = df.repartition(*[df[c] for c in e.partitions])
-                w = df.write
-                if e.partitions:
-                    w = w.partitionBy(*list(e.partitions))
-                w.mode("overwrite").parquet(
-                    self._data_path(e.label, commit_uuid))
+                write_parquet(i.get(e.label),
+                              self._data_path(e.label, commit_uuid), *e.layout)
                 return []
 
             flow = flow.add_action(SimpleAction(

@@ -39,9 +39,9 @@ from typing import Any, Callable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DataType, MapType, StructField,
-                               StructType)
+from pyspark.sql.types import StructType
 
+from ..filesystem import nullable
 from .file_ops import REGION_INFO_DIRECTORY, FileStorageOps
 
 STORE_TYPE_COLUMN = "de_store_type"
@@ -82,19 +82,6 @@ class AuditTableRegionInfo:
 
 # partitioner: (region DataFrame, total row count, total input bytes) -> n
 CompactionPartitioner = Callable[[DataFrame, int, int], int]
-
-
-def _nullable(t: DataType) -> DataType:
-    """``t`` with every field, array element and map value nullable — the
-    form a Parquet read reports (Spark's ``asNullable``)."""
-    if isinstance(t, StructType):
-        return StructType([StructField(f.name, _nullable(f.dataType), True,
-                                       f.metadata) for f in t.fields])
-    if isinstance(t, ArrayType):
-        return ArrayType(_nullable(t.elementType), True)
-    if isinstance(t, MapType):
-        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
-    return t
 
 
 def _observe_region_stats(df: DataFrame
@@ -233,7 +220,7 @@ class AuditTableFile:
         region = AuditTableRegionInfo(self.table_name, HOT_PARTITION,
                                       region_id, append_ts, False, count, max_lu)
         # the table's schema stays known only while every region has it
-        written = _nullable(with_lu.schema)
+        written = nullable(with_lu.schema)
         schema = written if not self.regions or written == self.schema else None
         return self._set_regions(self.regions + [region], schema), count
 
@@ -428,7 +415,7 @@ class AuditTableFile:
             new_region = AuditTableRegionInfo(
                 self.table_name, COLD_PARTITION, region_id, compact_ts,
                 False, count, max_lu)
-            merged = _nullable(data.schema)
+            merged = nullable(data.schema)
             schema = (merged if not remaining or merged == self.schema
                       else None)
             return self._set_regions(remaining + [new_region], schema)
