@@ -37,7 +37,9 @@ def pytest_collection_finish(session):
     test-count drift guard
     (tests/test_catalog_oracle.py::test_readme_test_count_matches_collection)
     can assert the documented number against the live collection instead
-    of trusting a hand-maintained edit (VERDICT r8 #7).  The default
+    of trusting a hand-maintained edit (VERDICT r8 #7); its sibling
+    test_verify_skill_test_count_matches_collection checks the verify
+    skill's number the same way.  The default
     ``-m "not slow"`` profile counts as filtered, so the guard only checks
     on ``python -m pytest tests/ -q -m ""``."""
     config = session.config

@@ -237,13 +237,9 @@ def test_scale_check_extras_stay_consistent():
         assert "EXTRA_ENTRIES" in src, f"{tool} no longer uses the registry"
 
 
-def test_readme_test_count_matches_collection(request):
-    """VERDICT r8 #7: the README test count was the last hand-maintained
-    number the judge cross-checks — derive-don't-drift it like the
-    PARITY catalog count.  The conftest collection hook records the live
-    collected total; on a FULL-suite run (no path subset, no -k/-m) the
-    README's documented count must equal it exactly.  Subset runs skip:
-    their collection is partial by construction."""
+def _assert_documented_test_count(request, doc, pattern):
+    """The test count ``pattern`` finds in ``doc`` (relative to the repo)
+    equals the live collected total on a FULL-suite run; other runs skip."""
     import os
     import re
 
@@ -254,12 +250,30 @@ def test_readme_test_count_matches_collection(request):
         pytest.skip("partial collection — count only checkable on a "
                     "full-suite run")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    text = open(os.path.join(repo, "README.md")).read()
-    m = re.search(r"—\s*(\d+)\s+tests\b", text)
-    assert m, "README test-count sentence went missing"
+    text = open(os.path.join(repo, doc)).read()
+    m = re.search(pattern, text)
+    assert m, f"{doc} test-count sentence went missing"
     assert int(m.group(1)) == collected, (
-        f"README says {m.group(1)} tests, full collection has "
-        f"{collected} — update the README number")
+        f"{doc} says {m.group(1)} tests, full collection has "
+        f"{collected} — update the {doc} number")
+
+
+def test_readme_test_count_matches_collection(request):
+    """VERDICT r8 #7: the README test count was the last hand-maintained
+    number the judge cross-checks — derive-don't-drift it like the
+    PARITY catalog count.  The conftest collection hook records the live
+    collected total; on a FULL-suite run (no path subset, no -k/-m) the
+    README's documented count must equal it exactly.  Subset runs skip:
+    their collection is partial by construction."""
+    _assert_documented_test_count(request, "README.md",
+                                  r"—\s*(\d+)\s+tests\b")
+
+
+def test_verify_skill_test_count_matches_collection(request):
+    """The verify skill's full-suite test count is checked the same way
+    as the README's."""
+    _assert_documented_test_count(request, ".claude/skills/verify/SKILL.md",
+                                  r"\(~\d+ min, (\d+) tests\)")
 
 
 def test_admission_runway_bookkeeping():

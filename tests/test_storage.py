@@ -441,14 +441,15 @@ class TestSchemaCache:
                                             self.MATRIX).collect())
         assert got == want
 
-    @pytest.mark.parametrize("route", ["cache", "staged"])
+    @pytest.mark.parametrize("route", ["cache", "partitioned", "staged"])
     def test_flow_reread_schema_equals_inference(self, spark, tmp_path,
                                                  route):
-        """A flow's unpartitioned re-read of a folder it just wrote is given
-        the written schema instead of inferring it; over the type matrix
-        that schema equals the inference over the folder, both for a
-        ``cache_as_parquet`` re-read and for a committed checked label
-        staged by its producer."""
+        """A flow's re-read of a folder it just wrote is given the written
+        schema instead of inferring it; over the type matrix that schema
+        equals the inference over the folder, for a ``cache_as_parquet``
+        re-read, for one partitioned by int, string and date columns
+        (whose types are still inferred from the directory names), and for
+        a committed checked label staged by its producer."""
         from waimak_spark.dataflow.spark_flow import Waimak
         from waimak_spark.dataquality import (CollectingAlertHandler,
                                               DataQualityCheck)
@@ -459,6 +460,8 @@ class TestSchemaCache:
 
         def probe(df):
             folder = df.inputFiles()[0].rsplit("/", 1)[0]
+            while "=" in folder.rsplit("/", 1)[1]:
+                folder = folder.rsplit("/", 1)[0]
             seen.append((folder, df.schema, spark.read.parquet(folder).schema))
 
         class Probe(DataQualityCheck):
@@ -467,9 +470,19 @@ class TestSchemaCache:
                 return []
 
         frame = spark.createDataFrame(self._matrix_rows(1), self.MATRIX)
+        keys = ["p_int", "p_str", "p_date"]
+        if route == "partitioned":
+            # p_int is written as bigint and inferred as int, as a plain
+            # read of the directory names infers it
+            frame = frame.selectExpr(
+                "*", "cast(id % 2 as bigint) as p_int",
+                "concat('v', id) as p_str",
+                "date_add(date'2024-02-28', id) as p_date")
         flow = Waimak.spark_flow(spark, temp).open("m", lambda c: frame)
-        if route == "cache":
-            flow = (flow.cache_as_parquet("m")
+        if route != "staged":
+            flow = (flow.cache_as_parquet(
+                        "m", partition_cols=keys if route == "partitioned"
+                        else None)
                     .unit_transform("m", fn=probe, name="probe")
                     .unit_transform("m", fn=lambda df: None, name="other"))
         else:
@@ -481,8 +494,11 @@ class TestSchemaCache:
         [(folder, passed, inferred)] = seen
         assert folder.startswith(f"file://{temp}/")
         assert passed == inferred
-        assert [f.metadata for f in passed.fields][-2:] == [
-            f.metadata for f in self.MATRIX.fields][-2:]
+        assert [passed[f.name].metadata for f in self.MATRIX.fields] == [
+            f.metadata for f in self.MATRIX.fields]
+        if route == "partitioned":
+            assert [passed[k].dataType.simpleString() for k in keys] == [
+                "int", "string", "date"]
 
     def test_added_column_drops_schema_and_reads_union(self, ops, spark):
         t = create_table(ops, INFO)

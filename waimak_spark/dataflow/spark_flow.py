@@ -12,6 +12,10 @@ Key semantics kept from the reference:
 * labels referenced by ``sql`` actions are registered as temp views on the
   thread that completes the producing action (SparkDataFlow.scala:76-86);
 * ``openCSV`` defaults header=true, inferSchema=true (package.scala:510);
+* ``openParquet`` with no reader options reads the schema from one footer
+  on the driver and passes it to the reader
+  (:func:`~waimak_spark.filesystem.read_parquet`), so an open launches no
+  schema-inference Spark job; options keep Spark's inference;
 * ``writeCSV`` repartitions to ``num_files`` (default 1, package.scala:618);
 * ``cacheAsParquet`` cuts the plan by write+re-read under the temp folder
   (SparkInterceptors.scala:48-65), scheduled lazily by a metadata extension
@@ -29,7 +33,7 @@ from typing import Any, Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..filesystem import FileOps
+from ..filesystem import FileOps, read_parquet
 from .action import DataFlowAction, SimpleAction
 from .entities import DataFlowEntities
 from .exceptions import DataFlowException, FlowValidationException
@@ -143,12 +147,14 @@ class SparkDataFlow(DataFlow):
 
     def open_file_parquet(self, path: str, label: str,
                           options: dict[str, str] | None = None):
-        """Single complete path (glob allowed)."""
+        """Single complete path (glob allowed).  With no ``options`` the
+        schema is read from one footer on the driver
+        (:func:`~waimak_spark.filesystem.read_parquet`), so the open
+        launches no schema-inference job."""
         _validate_label(label)
-        opts = options or {}
 
         def body(_i: DataFlowEntities, c: SparkFlowContext):
-            return [c.spark.read.options(**opts).parquet(path)]
+            return [read_parquet(c.spark, path, options)]
 
         return self.add_action(SimpleAction([], [label], body, name=f"openParquet:{label}"))
 

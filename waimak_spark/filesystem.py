@@ -12,16 +12,48 @@ for object stores.
 
 ``nullable`` is the schema a Parquet read of a folder reports for the frame
 that wrote it, so a re-read can pass it instead of inferring it.
+
+``parquet_schema`` is the schema a plain ``spark.read.parquet(path)`` would
+infer, computed on the driver with no Spark job (Spark's inference runs a
+one-task job to read a single footer).  It lists the path with Spark's own
+``InMemoryFileIndex`` (globs expanded, ``_``/``.``-prefixed and
+``._COPYING_`` names hidden, partition folders listed recursively), picks
+the file Spark's inference picks (``_common_metadata``, else ``_metadata``,
+else the first data file by path), converts that footer with Spark's
+``ParquetFileFormat.readSchemaFromFooter`` and a converter built from the
+session's conf, so ``binaryAsString``, ``int96AsTimestamp``,
+``inferTimestampNTZ`` and nanos handling follow the session, and makes it
+nullable with Spark's ``asNullable``, as a read reports it.  For a
+partitioned folder it returns the data schema; partition columns are still
+discovered from the directory names.  It declines (None, so the read
+infers as before) when reader options are set,
+``spark.sql.parquet.mergeSchema`` is on, the path matches no data file,
+the footer cannot be read (Spark's own error or skip behaviour then
+applies), or a footer field shares its name with a partition key.  The
+listing costs a fixed number of py4j round trips whatever the file count;
+a listing over more paths than
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` runs Spark's
+parallel-listing job, as the read's own listing does.  ``read_parquet`` is
+the engine's Parquet read, given that schema whenever there is one.
 """
 
 from __future__ import annotations
 
+import functools
+import json
 import time
+import weakref
+from types import SimpleNamespace
 from typing import Iterable
+from urllib.parse import unquote
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (ArrayType, DataType, MapType, StructField,
                                StructType)
+
+_SUMMARY_FILES = ("_common_metadata", "_metadata")  # in Spark's preference
 
 
 def nullable(t: DataType) -> DataType:
@@ -35,6 +67,135 @@ def nullable(t: DataType) -> DataType:
     if isinstance(t, MapType):
         return MapType(nullable(t.keyType), nullable(t.valueType), True)
     return t
+
+
+@functools.lru_cache(maxsize=None)
+def _jvm_refs(jvm) -> SimpleNamespace:
+    """The JVM classes, objects and static methods :func:`parquet_schema`
+    calls, looked up once per gateway: each package step of ``jvm.a.b.C``
+    and each static-method lookup is a round trip."""
+    def module(pkg, name):
+        return getattr(getattr(pkg, f"{name}$"), "MODULE$")
+
+    sources = jvm.org.apache.spark.sql.execution.datasources
+    parquet = sources.parquet
+    data_source = module(sources, "DataSource")
+    return SimpleNamespace(
+        glob=data_source.checkAndGlobPathIfNecessary,
+        glob_threads=getattr(data_source,
+                             "checkAndGlobPathIfNecessary$default$5")(),
+        one_path=getattr(module(jvm.scala.collection.immutable, "Nil"),
+                         "$colon$colon"),
+        no_options=module(jvm.scala.collection.immutable, "Map").empty(),
+        none=module(jvm.scala, "None"),
+        no_cache=module(sources, "NoopCache"),
+        file_index=sources.InMemoryFileIndex,
+        wrap_array=jvm.scala.Predef.genericWrapArray,
+        path=jvm.org.apache.hadoop.fs.Path,
+        input_file=jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath,
+        footer=jvm.org.apache.parquet.hadoop.Footer,
+        skip_row_groups=(jvm.org.apache.parquet.format.converter
+                         .ParquetMetadataConverter.SKIP_ROW_GROUPS),
+        read_footer=parquet.ParquetFooterReader.readFooter,
+        schema_from_footer=parquet.ParquetFileFormat.readSchemaFromFooter,
+        converter=parquet.ParquetToSparkSchemaConverter,
+    )
+
+
+_SESSION_STATES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _session_state(spark: SparkSession):
+    """The session's ``SessionState`` and its ``SQLConf``, both fixed for
+    the session's life (the conf object sees every later ``conf.set``), so
+    they are fetched once per session rather than once per open."""
+    found = _SESSION_STATES.get(spark)
+    if found is None:
+        state = spark._jsparkSession.sessionState()
+        found = _SESSION_STATES[spark] = (state, state.conf())
+    return found
+
+
+def _file_name(uri: str) -> str:
+    return unquote(uri).rsplit("/", 1)[-1]
+
+
+def _schema_file(files: list[str]) -> str | None:
+    """The file Spark's Parquet inference reads when it does not merge
+    schemas (``ParquetUtils.inferSchema``/``splitFiles``): the first
+    ``_common_metadata``, else ``_metadata``, else data file, by path."""
+    files = sorted(files, key=unquote)  # Spark sorts Path strings, unescaped
+    for summary in _SUMMARY_FILES:
+        found = [f for f in files if _file_name(f) == summary]
+        if found:
+            return found[0]
+    data = [f for f in files if _file_name(f) not in _SUMMARY_FILES]
+    return data[0] if data else None
+
+
+def _footer_schema(spark: SparkSession, paths):
+    """The JVM ``StructType`` behind :func:`parquet_schema` for ``paths``,
+    a JVM ``Seq`` holding the one path, or None."""
+    refs = _jvm_refs(spark._jvm)
+    try:
+        state, conf = _session_state(spark)
+        if conf.isParquetSchemaMergingEnabled():
+            return None
+        hadoop_conf = state.newHadoopConf()
+        roots = refs.glob(paths, hadoop_conf, True, True, refs.glob_threads,
+                          True)
+        index = refs.file_index(spark._jsparkSession, roots, refs.no_options,
+                                refs.none, refs.no_cache, refs.none,
+                                refs.none)
+        # URI strings escape newlines, so one string carries the listing
+        listing = refs.wrap_array(index.inputFiles()).mkString("\n")
+        chosen = _schema_file(listing.split("\n") if listing else [])
+        if chosen is None:
+            return None
+        file = refs.path(unquote(chosen))  # a Path string is unescaped
+        footer = refs.footer(file, refs.read_footer(
+            refs.input_file(file, hadoop_conf), refs.skip_row_groups))
+        schema = refs.schema_from_footer(
+            footer, refs.converter(conf)).asNullable()
+        if "=" in listing:  # only a k=v folder makes a partition key
+            keys = {f["name"].lower() for f in
+                    json.loads(index.partitionSchema().json())["fields"]}
+            if any(f["name"].lower() in keys
+                   for f in json.loads(schema.json())["fields"]):
+                return None
+        return schema
+    except (Py4JJavaError, CapturedException):
+        return None
+
+
+def parquet_schema(spark: SparkSession, path: str,
+                   options: dict[str, str] | None = None
+                   ) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer, read from one
+    footer on the driver with no Spark job; None where it declines (see
+    the module docstring) and the read must infer."""
+    if options:
+        return None
+    found = _footer_schema(spark, _jvm_refs(spark._jvm).one_path(path))
+    return None if found is None else StructType.fromJson(
+        json.loads(found.json()))
+
+
+def read_parquet(spark: SparkSession, path: str,
+                 options: dict[str, str] | None = None) -> DataFrame:
+    """``spark.read.options(**options).parquet(path)``, given the schema
+    :func:`parquet_schema` reads when it has one, so the read infers
+    nothing.  The schema goes to the reader as the JVM object: PySpark's
+    ``DataFrameReader.schema`` looks up (or builds) the thread's active
+    session first, a dozen round trips on a flow's worker thread."""
+    if options:
+        return spark.read.options(**options).parquet(path)
+    paths = _jvm_refs(spark._jvm).one_path(path)
+    schema = _footer_schema(spark, paths)
+    if schema is None:
+        return spark.read.parquet(path)
+    return DataFrame(spark._jsparkSession.read().schema(schema).parquet(paths),
+                     spark)
 
 
 class FileOps:

@@ -14,10 +14,10 @@ data-quality checks and the commits that declare it and have not been
 expanded yet (each will add a stage action reading it); an alias counts
 the readers of the label it publishes.  A check runs
 after every post-action of its label, so a cached checked label is checked
-on the cached value.  An unpartitioned re-read passes the schema of the
-frame it wrote (:func:`materialize`), so it launches no schema-inference
-job; a partitioned one infers, because partition value types are inferred
-from the directory names.
+on the cached value.  A re-read passes the schema of the frame it wrote
+minus its partition columns (:func:`materialize`), so it launches no
+schema-inference job; partition value types are still inferred from the
+directory names, as a plain read infers them.
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ from typing import Sequence
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from ..dataflow.flow import (
     CONF_EXTENSIONS,
@@ -112,15 +113,17 @@ def materialize(context, df: DataFrame, path: str,
                 num_partitions: int | None = None,
                 partition_cols: Sequence[str] = (),
                 repartition: bool = True) -> DataFrame:
-    """Write ``df`` to ``path`` (:func:`write_parquet`) and re-read it.  An
-    unpartitioned re-read is given the written schema — what inference
-    over the files would return — so it launches no Spark job."""
+    """Write ``df`` to ``path`` (:func:`write_parquet`) and re-read it,
+    given the written schema — what inference over the files would return
+    — so the re-read launches no Spark job.  Partition columns are left
+    out of it, as the writer leaves them out of the files: their types are
+    inferred from the directory names, as a plain read infers them."""
     written = write_parquet(df, path, num_partitions, partition_cols,
                             repartition)
-    reader = context.spark.read
-    if not partition_cols:
-        reader = reader.schema(nullable(written.schema))
-    return reader.parquet(path)
+    keys = {c.lower() for c in partition_cols}
+    schema = StructType([f for f in nullable(written.schema).fields
+                         if f.name.lower() not in keys])
+    return context.spark.read.schema(schema).parquet(path)
 
 
 class CacheAsParquetExtension(MetadataExtension):

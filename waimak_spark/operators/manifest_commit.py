@@ -102,7 +102,7 @@ def current_version(ops, output_base: str) -> Optional[int]:
 def read_manifest_table(spark: SparkSession, output_base: str, label: str,
                         version: int | None = None) -> DataFrame:
     """Load one label as of the newest (or a specific) manifest version."""
-    from ..filesystem import FileOps
+    from ..filesystem import FileOps, read_parquet
 
     ops = FileOps(spark)
     if version is not None:
@@ -118,7 +118,7 @@ def read_manifest_table(spark: SparkSession, output_base: str, label: str,
         raise DataFlowException(
             f"Label [{label}] is not part of manifest version "
             f"{manifest['version']} under [{output_base}]")
-    return spark.read.parquet(entry["data_path"])
+    return read_parquet(spark, entry["data_path"])
 
 
 class ManifestParquetDataCommitter(DataCommitter):

@@ -4,8 +4,9 @@ Re-expresses the reference's HadoopDBConnector / HiveDBConnector /
 ImpalaDBConnector (waimak-core/.../metastore/MetastoreUtils.scala:137-199,
 waimak-hive/.../HiveDBConnector.scala:16-112,
 waimak-impala/.../ImpalaDBConnector.scala:17-104): on commit-finish, each
-committed label's table is created (schema inferred from a Parquet
-footer) or repointed at the new snapshot location. The natural PySpark
+committed label's table is created (schema read from one Parquet footer
+on the driver, :func:`~waimak_spark.filesystem.read_parquet`, so building
+the DDL launches no Spark job) or repointed at the new snapshot location. The natural PySpark
 path is ``spark.sql`` against the session's built-in Hive metastore
 (``HiveSparkSQLConnector``, HiveDBConnector.scala:94-112); the dummy
 connectors collect DDL strings for tests or manual submission.
@@ -24,6 +25,7 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 from ..dataflow.exceptions import DataFlowException
+from ..filesystem import read_parquet
 
 FORCE_RECREATE_TABLES = "spark.waimak.metastore.forceRecreateTables"
 FORCE_RECREATE_TABLES_DEFAULT = False
@@ -66,7 +68,7 @@ class HadoopDBConnector:
         return files[0]
 
     def _schema_string(self, parquet_file: str) -> str:
-        schema = self.context.spark.read.parquet(parquet_file).schema
+        schema = read_parquet(self.context.spark, parquet_file).schema
         cols = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                          for f in schema.fields)
         return f"({cols})"
