@@ -1,9 +1,8 @@
 """Bloom-filter membership dedup vs a corpus (Bloom 1970, CACM 13(7)) —
 the bounded-memory approximate sibling of the exact anti-join.  The
 reference (waimak) has no approximate-membership surface; this is the
-training-data-pipeline extension family (round-11 catalog candidate per
-PARITY's rotation ledger), so the oracle lockstep lives here until a
-slot opens."""
+training-data-pipeline extension family, with its oracle lockstep
+here."""
 
 import hashlib
 

@@ -1,8 +1,7 @@
 """BM25 ranked retrieval (Robertson & Zaragoza 2009) — query-targeted
 corpus curation.  The reference (waimak) has no retrieval surface;
-this is the training-data-pipeline extension family (round-16 catalog
-admission candidate per PARITY's rotation ledger), so the oracle
-lockstep lives here until a slot opens."""
+this is the training-data-pipeline extension family, with its oracle
+lockstep here."""
 
 import math
 

@@ -5,7 +5,6 @@ against each other (rank-priority merging vs sequential application of
 the merges in rank order), the Spark kernel is locked bit-for-bit to the
 pure-Python reference through the per-doc subwords_md5 witness, and the
 plan is map-only (no shuffle, Arrow-batched, never row-at-a-time).
-Round-17 admission candidate per the rotation ledger.
 """
 
 import hashlib

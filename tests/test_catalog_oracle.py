@@ -110,59 +110,65 @@ def test_entry_module_exports_repo_on_worker_pythonpath():
 
 
 def test_driver_window_covers_all_unchecked_entries():
-    """The driver's correctness gate records only the FIRST 50 entries of
-    ALL_ENTRIES in insertion order (observed: CORRECTNESS_r03 ==
-    names[:50]; r04 likewise).  Rotation invariant: every entry WITHOUT a
-    green row in the union of the last TWO CORRECTNESS_r*.json files must
-    sit inside the current window, so no entry can stay officially
-    unchecked two rounds running.  (Union of two: the moment round N's
-    file lands, the round N-1 window rotates out — comparing against only
-    the newest file would flag the committed state red until the NEXT
-    driver run, punishing exactly the correct rotation.)  When a new entry
-    lands in the back half of the catalog, this test says so before the
-    driver does."""
-    import glob
-    import json
-    import os
-    import re
+    """The driver's correctness gate checks only the first 50 entries of
+    ALL_ENTRIES.  Rotation invariant: every entry WITHOUT a green row in
+    the union of the last TWO CORRECTNESS_r*.json files sits inside the
+    window, so no entry goes officially unchecked two rounds running.
+    (Union of two: the moment round N's file lands, the round N-1 window
+    rotates out.)"""
+    from waimak_spark.catalog import correctness_rounds
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    files = sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")),
-                   key=lambda p: int(re.search(r"r(\d+)", p).group(1)))
-    if not files:
+    rounds = correctness_rounds()
+    if not rounds:
         pytest.skip("no driver correctness file yet")
-    green: set[str] = set()
-    for path in files[-2:]:
-        with open(path) as fh:
-            rows = json.load(fh)
-        green |= {k for k, v in rows.items()
-                  if isinstance(v, dict) and v.get("hash_match")}
+    green = {k for r in sorted(rounds)[-2:] for k, v in rounds[r].items()
+             if isinstance(v, dict) and v.get("hash_match")}
     names = list(ALL_ENTRIES)
     window = set(names[:50])
-    # Staged entries (catalog.STAGED_NEXT_ROUND): genuinely NEW entries
-    # the current window cannot hold — legal outside the window for ONE
-    # round, and only while absent from every official file (an entry
-    # with any official history cannot be "staged"; that would be
-    # parking).  They must be fronted next round, which this test then
-    # enforces automatically: the moment a round's file lands without
-    # them, staying outside the window keeps them in `unchecked`.
-    from waimak_spark.catalog import STAGED_NEXT_ROUND
-
-    ever: set[str] = set()
-    for path in files:
-        with open(path) as fh:
-            ever |= set(json.load(fh))
-    staged_ok = {n for n in STAGED_NEXT_ROUND if n not in ever}
-    parked = [n for n in STAGED_NEXT_ROUND if n in ever]
-    assert not parked, (
-        f"STAGED_NEXT_ROUND entries with official history (parking, not "
-        f"staging): {parked}")
-    unchecked = [n for n in names
-                 if n not in green and n not in window
-                 and n not in staged_ok]
+    unchecked = [n for n in names if n not in green and n not in window]
     assert not unchecked, (
-        f"entries never driver-checked AND outside the 50-entry window: "
-        f"{unchecked} — reorder catalog/__init__.py")
+        f"entries without a green row in the last two rounds AND outside "
+        f"the 50-entry window: {unchecked}")
+
+
+_GREEN = {"hash_match": True}
+_RED = {"hash_match": False, "err": None}
+_NO_ORACLE = {"hash_match": False, "err": "no_oracle"}
+
+
+@pytest.mark.parametrize("rows, want", [
+    # no green row leads, whether never checked, red or without an oracle
+    ({1: {"a": _GREEN, "b": _RED, "c": _NO_ORACLE}}, ["b", "c", "d", "a"]),
+    # an older newest-green row sorts before a newer one
+    ({1: {"a": _GREEN, "b": _GREEN}, 2: {"a": _GREEN, "c": _GREEN},
+      3: {"d": _GREEN}}, ["b", "a", "c", "d"]),
+    # a later red row does not hide an earlier green one
+    ({1: {"b": _GREEN}, 2: {"a": _GREEN, "c": _GREEN, "d": _GREEN},
+      3: {"b": _RED}}, ["b", "a", "c", "d"]),
+    # ties keep the merge order
+    ({4: {"d": _GREEN, "c": _GREEN, "b": _GREEN, "a": _GREEN}},
+     ["a", "b", "c", "d"]),
+    # no files: the merge order
+    ({}, ["a", "b", "c", "d"]),
+])
+def test_driver_order(rows, want):
+    from waimak_spark.catalog import driver_order
+
+    assert driver_order(["a", "b", "c", "d"], rows) == want
+
+
+def test_driver_order_reads_round_numbers(tmp_path):
+    """Round numbers come from the file names, compared as numbers."""
+    import json
+
+    from waimak_spark.catalog import correctness_rounds, driver_order
+
+    (tmp_path / "CORRECTNESS_r9.json").write_text(json.dumps({"a": _GREEN}))
+    (tmp_path / "CORRECTNESS_r10.json").write_text(json.dumps({"b": _GREEN}))
+    (tmp_path / "CORRECTNESS_r10_c8.json").write_text(json.dumps({}))
+    rounds = correctness_rounds(str(tmp_path))
+    assert set(rounds) == {9, 10}
+    assert driver_order(["b", "a"], rounds) == ["a", "b"]
 
 
 def test_bench_short_names_unique_and_fit():
@@ -214,27 +220,30 @@ def test_bench_load_sentinel_shape_pinned(spark):
 
 
 def test_scale_check_extras_stay_consistent():
-    """catalog.EXTRA_ENTRIES is the single registry of rotation-ledger
-    admission candidates measured BEFORE a catalog slot opens (both
-    tools/scale_check.py and tools/measure_entry.py resolve through it):
-    each must be a callable and must NOT (yet) be a catalog entry — when
-    an admission lands, the name must leave the extras the same round
-    (the catalog package also raises on overlap at import)."""
-    from waimak_spark.catalog import ALL_ENTRIES, EXTRA_ENTRIES
-
-    assert EXTRA_ENTRIES, "admission-candidate registry went missing"
-    overlap = set(EXTRA_ENTRIES) & set(ALL_ENTRIES)
-    assert not overlap, (
-        f"admitted entries still listed as extras: {sorted(overlap)}")
-    for name, fn in EXTRA_ENTRIES.items():
-        assert callable(fn), name
-    # both tools resolve through the registry, not hand-kept copies
+    """catalog.EXTRA_ENTRIES maps non-catalog operators to callables and
+    shares no name with the catalog (the package also raises on overlap
+    at import); the tools resolve every name through catalog.entry_fn
+    rather than hand-kept lookups."""
     import os
 
+    from waimak_spark.catalog import (EXTRA_ENTRIES, RETIRED_ENTRIES,
+                                      entry_fn)
+
+    assert EXTRA_ENTRIES, "extras registry went missing"
+    overlap = set(EXTRA_ENTRIES) & (set(ALL_ENTRIES) | set(RETIRED_ENTRIES))
+    assert not overlap, f"extras also in the catalog: {sorted(overlap)}"
+    for name, fn in EXTRA_ENTRIES.items():
+        assert callable(fn) and entry_fn(name) is fn, name
+    for registry in (ALL_ENTRIES, RETIRED_ENTRIES):
+        for name, entry in registry.items():
+            assert entry_fn(name) is entry["fn"], name
+    with pytest.raises(KeyError):
+        entry_fn("no_such_entry")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for tool in ("scale_check.py", "measure_entry.py"):
+    for tool in ("scale_check.py", "measure_entry.py", "rt_sweep.py"):
         src = open(os.path.join(repo, "tools", tool)).read()
-        assert "EXTRA_ENTRIES" in src, f"{tool} no longer uses the registry"
+        assert "entry_fn" in src, f"{tool} no longer uses catalog.entry_fn"
+        assert "EXTRA_ENTRIES[" not in src, f"{tool} hand-resolves extras"
 
 
 def _assert_documented_test_count(request, doc, pattern):
@@ -274,126 +283,3 @@ def test_verify_skill_test_count_matches_collection(request):
     as the README's."""
     _assert_documented_test_count(request, ".claude/skills/verify/SKILL.md",
                                   r"\(~\d+ min, (\d+) tests\)")
-
-
-def test_admission_runway_bookkeeping():
-    """VERDICT r10 #2: the backlog-fix ledger (PARITY round-11 section)
-    lands every remaining verified family by round 15 — each future
-    admission is locked here so admission day stays a one-line move: the
-    candidate must still be measurable through EXTRA_ENTRIES, its decided
-    retirement target must still hold a catalog slot (it retires in the
-    admission round, not before), and the machinery witness that keeps
-    the retired operator's family officially covered must stay in the
-    catalog.  The permanent extras are family-covered siblings whose
-    output/bit-identity to an admitted catalog entry is asserted every
-    pytest run (test_kmv/test_cms/test_hll streaming==batch,
-    test_prefix_join raw==collapsed, test_bm25_stored stored==inline)
-    — they never need their own row."""
-    from waimak_spark.catalog import ALL_ENTRIES, EXTRA_ENTRIES
-
-    decided = [
-        # (candidate in extras, retirement target, machinery witness)
-        # -- front r13 rows EXECUTED during round 12: the five staged
-        #    admissions joined the catalog and their decided retirement
-        #    targets moved to RETIRED_ENTRIES (witnesses verified at
-        #    import time + test_retirement_bookkeeping).
-        # -- front r14, staged + retired during r13:
-        ("bm25_search", "corpus_vocabulary", "tfidf_top_terms"),
-        ("dedup_lsh_probe_stored", "ann_brute_force_topk",
-         "ann_ivf_recall"),
-        ("sample_priority_topk", "sample_weighted", "dsir_select"),
-        ("dedup_jaccard_prefix_collapsed", "doc_fingerprint",
-         "doc_winnow_fingerprints"),
-        ("streaming_sliding_counts", "sample_quota_per_stratum",
-         "sample_stratified"),
-        # -- front r15, staged + retired during r14:
-        ("events_value_winsorized", "q6_revenue_delta",
-         "q19_disjunctive_revenue"),
-        ("ann_ivf_pq_refined", "q8_market_share", "q9_profit_by_nation"),
-        ("vocab_jaccard_kmv", "unigram_logprob", "bigram_logprob"),
-        # -- front r16, staged + retired during r15 (the round-11
-        #    snapshot_diff CDC surface, added after the r15 ledger; the
-        #    retirement comes from the set fronting r16, and exact-match
-        #    decontamination machinery stays covered by decontaminate_near
-        #    + contamination_overlap + the Bloom membership entry):
-        ("storage_snapshot_diff", "decontaminate_against_benchmark",
-         "decontaminate_near"),
-        # -- front r17, staged + retired during r16 (the round-11 BPE
-        #    encode surface; q16's count-distribution machinery stays
-        #    covered by q13 + skew_count_distinct):
-        ("bpe_encode_stats", "q16_supplier_count",
-         "q13_order_distribution"),
-        # -- front r18, staged + retired during r17 (the round-11 hybrid
-        #    RRF surface; the fused entry itself exercises the BM25 and
-        #    brute-cosine machinery, and IVF coverage stays official via
-        #    the recall gate + the stored PQ probe):
-        ("hybrid_search_rrf", "ann_ivf_topk", "ann_ivf_recall"),
-        # -- front r19, staged + retired during r18 (the round-11 NB
-        #    quality classifier; the heuristic it distills keeps running
-        #    INSIDE the entry's label derivation, and the quality-metrics
-        #    family stays officially covered by repetition_metrics):
-        ("quality_classifier_scores", "text_quality",
-         "repetition_metrics"),
-        # -- front r20, staged + retired during r19 (the round-11 entity
-        #    resolution surface; q10's single-join-agg shape stays
-        #    officially covered by q3 — the subsumption class VERDICT
-        #    r10 #2 licensed):
-        ("er_link_customers", "q10_returned_revenue",
-         "q3_top_revenue_orders"),
-    ]
-    for cand, retires, witness in decided:
-        assert cand in EXTRA_ENTRIES, f"{cand} left the extras early"
-        assert retires in ALL_ENTRIES, (
-            f"{retires} retired before its admission round")
-        assert witness in ALL_ENTRIES, (
-            f"{witness} (coverage witness for {retires}) missing")
-    permanent = ["streaming_value_quantiles_kmv",
-                 "streaming_heavy_hitters_cms", "streaming_distinct_hll",
-                 "dedup_jaccard_prefix",
-                 # round 11: stored BM25 postings probe — bit-identical
-                 # to bm25_search (tests/test_bm25_stored.py)
-                 "bm25_probe_stored",
-                 # round 11: stateless streaming NB scoring —
-                 # output-identical to quality_classifier_scores
-                 # (tests/test_quality_classifier.py)
-                 "streaming_quality_scores"]
-    for cand in permanent:
-        assert cand in EXTRA_ENTRIES, f"{cand} left the extras early"
-    assert len(decided) + len(permanent) == len(EXTRA_ENTRIES), (
-        "an extras entry is neither scheduled nor family-covered — "
-        "extend the ledger")
-
-
-def test_parity_round13_front_draft_stays_valid():
-    """PARITY.md precomputes round 13's _FRONT (the five staged round-12
-    admissions fronting first + the 45 r11-latest survivors — the
-    set-A/set-B alternation at the 100-entry cap, minus the five
-    r12 retirements the round-12 rotation executed).  Lock the draft
-    against drift: every name must exist in the catalog, no duplicates,
-    it must fill exactly one window, and together with the CURRENT
-    window it must cover the whole catalog — the every-other-round
-    guarantee the rotation exists to provide."""
-    import os
-    import re
-
-    from waimak_spark.catalog import ALL_ENTRIES, STAGED_NEXT_ROUND
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    text = open(os.path.join(repo, "PARITY.md")).read()
-    m = re.search(r"45\s+surviving r11-latest entries `([^`]+)`", text,
-                  re.S)
-    assert m, "PARITY.md round-13 _FRONT draft went missing"
-    draft = [n.strip() for n in m.group(1).replace("\n", " ").split(",")
-             if n.strip()]
-    front = list(STAGED_NEXT_ROUND) + draft
-    assert len(front) == len(set(front)), "duplicate names in the draft"
-    missing = [n for n in front if n not in ALL_ENTRIES]
-    assert not missing, f"draft names not in catalog: {missing}"
-    assert len(front) == 50, (
-        f"staged + draft = {len(front)}, window holds exactly 50")
-    window_now = set(list(ALL_ENTRIES)[:50])
-    uncovered = [n for n in ALL_ENTRIES
-                 if n not in window_now and n not in set(front)]
-    assert not uncovered, (
-        f"entries in neither the current window nor the round-13 draft "
-        f"(would go >2 rounds unchecked): {uncovered}")

@@ -1,9 +1,8 @@
 """Count-min sketch heavy hitters (Cormode & Muthukrishnan 2005) — the
 bounded-memory approximate counting sibling of the Bloom membership
 filter.  The reference (waimak) has no sketch surface; this is the
-training-data-pipeline extension family (round-14 catalog admission
-candidate per PARITY's rotation ledger), so the oracle lockstep lives
-here until a slot opens."""
+training-data-pipeline extension family, with its oracle lockstep
+here."""
 
 import hashlib
 
@@ -160,7 +159,7 @@ class TestCmsPlan:
 
 
 class TestStreamingCms:
-    """Post-runway streaming-triad member (catalog/streaming.py): the
+    """Streaming-triad member (catalog/streaming.py): the
     CMS cells as bounded Structured-Streaming state — final state must
     equal the batch sketch EXACTLY (keyed count is associative/
     commutative, so micro-batch splits are invisible), which is why the

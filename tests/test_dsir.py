@@ -1,9 +1,8 @@
 """DSIR-style importance weighting (Xie et al. 2023, arXiv:2302.03169) —
 hashed-n-gram target-vs-raw log-likelihood-ratio weights plus Gumbel
 top-k resampling. The reference (waimak) has no data-selection surface;
-this is the training-data-pipeline extension family (round-9 catalog
-candidate per PARITY's rotation ledger), so the oracle lockstep lives
-here until a catalog slot opens."""
+this is the training-data-pipeline extension family, with its oracle
+lockstep here."""
 
 import math
 
@@ -203,9 +202,8 @@ def test_subset_predicate_path_equals_two_frame_path(spark, sf_dir):
 
 
 def test_catalog_wrapper_matches_its_admission_oracle(spark, sf_dir):
-    """The round-9 admission shape (catalog.curation.dsir_select +
-    _dsir_select_oracle) must already be lockstep BEFORE the slot opens —
-    admission day is then a one-line move from EXTRA_ENTRIES to ENTRIES."""
+    """The catalog entry dsir_select matches its oracle
+    (_dsir_select_oracle)."""
     import duckdb
 
     from waimak_spark.catalog.curation import (

@@ -1,9 +1,7 @@
 """HyperLogLog distinct counting (Flajolet et al. 2007) — the
 distinct-counting sibling of the count-min sketch.  The reference
 (waimak) has no sketch surface; this is the training-data-pipeline
-extension family (round-15 catalog admission candidate per PARITY's
-rotation ledger), so the oracle lockstep lives here until a slot
-opens."""
+extension family, with its oracle lockstep here."""
 
 import hashlib
 import math
@@ -199,7 +197,7 @@ class TestHllPlan:
 
 
 class TestStreamingHll:
-    """Round-18 admission candidate (catalog/streaming.py): the HLL
+    """Streaming HLL entry (catalog/streaming.py): the HLL
     registers as bounded Structured-Streaming state — final state must
     equal the batch sketch EXACTLY (register max is associative/
     commutative/idempotent, so micro-batch splits are invisible),

@@ -2,9 +2,8 @@
 Clarke & Buettcher 2009) — the standard calibration-free combination of
 a lexical ranker (BM25) and an embedding ranker (cosine top-k).  The
 reference (waimak) has no retrieval surface; this is the
-training-data-pipeline extension family (round-18 catalog admission
-candidate per PARITY's rotation ledger), so the oracle lockstep lives
-here until a slot opens."""
+training-data-pipeline extension family, with its oracle lockstep
+here."""
 
 import duckdb
 from pyspark.sql import Row
@@ -128,8 +127,8 @@ class TestHybridPlan:
         two whitelisted tiny-side broadcasts the composed rankers carry
         (BM25's 1-row corpus-stats cross + brute-force's <=|queries|-row
         query cross); fusion itself is hash aggregation over the bounded
-        candidate rows.  On admission day (r18 per the ledger) the entry
-        joins CROSS_OK in tests/test_plans.py with the same rationale."""
+        candidate rows.  A catalog entry built on it joins CROSS_OK in
+        tests/test_plans.py with the same rationale."""
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         plan = (hybrid_topk(docs, emb)

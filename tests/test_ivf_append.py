@@ -4,8 +4,7 @@ stored bucketed index WITHOUT touching resident data.  Cell assignment
 is row-local against fixed seeded centroids, so index(A) ∪ index(B) ==
 index(A ∪ B) exactly and an appended index probes bit-identically to a
 full build — which is what licenses reusing the static full-corpus
-oracle.  Round-13 catalog admission candidate per PARITY's rotation
-ledger; the reference (waimak) has no ANN surface (see PARITY.md)."""
+oracle.  The reference (waimak) has no ANN surface (see PARITY.md)."""
 
 import duckdb
 import pytest
@@ -46,9 +45,8 @@ class TestIvfAppend:
 
     def test_catalog_wrapper_matches_its_admission_oracle(
             self, appended, spark):
-        """The round-13 admission shape must already be lockstep BEFORE
-        the slot opens (the DSIR/PQ pattern): appended-index probe vs
-        the STATIC full-corpus SQL oracle."""
+        """The catalog entry ivf_probe_appended matches its oracle:
+        appended-index probe vs the STATIC full-corpus SQL oracle."""
         from waimak_spark.catalog.similarity import (
             _ivf_probe_appended_oracle,
         )

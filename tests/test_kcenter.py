@@ -2,8 +2,7 @@
 arXiv:1708.00489) — farthest-point traversal with the rounded-distance /
 id-tie-break determinism recipe.  The reference (waimak) has no sampling
 surface of this kind; this is the training-data-pipeline extension
-family (round-12 catalog candidate per PARITY's rotation ledger), so the
-oracle lockstep lives here until a slot opens."""
+family, with its oracle lockstep here."""
 
 import math
 

@@ -2,9 +2,8 @@
 quantile member of the sketch triad (CMS = frequencies, HLL = distinct
 counts).  The reference (waimak) has no sketch surface; this is the
 training-data-pipeline extension family, measured through the catalog
-EXTRA_ENTRIES registry (post-runway extension — the rotation ledger's
-admission runway is fully booked through round 20), so the oracle
-lockstep lives here and runs every pytest pass."""
+EXTRA_ENTRIES registry, so the oracle lockstep lives here and runs every
+pytest pass."""
 
 import hashlib
 import math

@@ -2,8 +2,7 @@
 per Christen 2012) — dual-offset blocking, normalized-Levenshtein +
 balance scoring, ground-truth evaluation.  The reference (waimak) has
 no linkage surface; this is the training-data-pipeline extension
-family (round-20 catalog admission candidate per PARITY's rotation
-ledger), so the oracle lockstep lives here until a slot opens."""
+family, with its oracle lockstep here."""
 
 import hashlib
 import math

@@ -3,8 +3,7 @@ text-dedup sibling of the stored/appended IVF indexes: the corpus's
 banded minhash keys persist as a band_key-bucketed table, accepted
 batches APPEND their own rows (row-local keys ⇒ index(A) ∪ index(B) ==
 index(A ∪ B) exactly), and a probe scans the narrow key table instead
-of re-running the corpus signature pipeline.  Round-17 catalog
-admission candidate per PARITY's rotation ledger; cites the reference's
+of re-running the corpus signature pipeline.  Cites the reference's
 incremental-refresh posture (storage/deduplicate) — the reference has
 no near-dup surface (see PARITY.md)."""
 
@@ -69,10 +68,9 @@ def _py_band_keys(text: str, seeds=DEFAULT_SEEDS, band_size=BAND_SIZE,
 
 class TestLshIndex:
     def test_catalog_fn_matches_duckdb(self, stored, spark):
-        """The round-17 admission shape must already be lockstep BEFORE
-        the slot opens (the DSIR/PQ/IVF-append pattern): stored-index
-        probe vs the STATIC full-recompute SQL oracle, cold (build +
-        append + probe) and warm (stored)."""
+        """The catalog-style surface is lockstep: stored-index probe vs
+        the STATIC full-recompute SQL oracle, cold (build + append +
+        probe) and warm (stored)."""
         sf = stored
         got = [tuple(r) for r in
                dedup_lsh_probe_stored(spark, sf).collect()]

@@ -3,8 +3,7 @@
 family (k-center is the pure-coverage member; same determinism recipe:
 4dp rounding before every compare, id tie-break).  The reference
 (waimak) has no retrieval surface; this is the training-data-pipeline
-extension family, so the oracle lockstep lives here until a catalog
-slot opens."""
+extension family, with its oracle lockstep here."""
 
 import math
 

@@ -6,6 +6,7 @@ py4j round trips whatever the file count."""
 
 import gc
 import os
+import threading
 import time
 from datetime import date, datetime, timezone
 from decimal import Decimal
@@ -15,6 +16,7 @@ import pyarrow.parquet as pq
 import pytest
 import py4j.clientserver
 import py4j.java_gateway
+from pyspark import SparkContext
 from pyspark.errors import AnalysisException
 
 import test_dq_materialize as dqm
@@ -297,8 +299,14 @@ class TestJobCounts:
 
 def _settle():
     """Free unreachable proxies and give py4j's finalizer thread, which
-    sends their releases to the JVM, time to send them."""
+    sends their releases to the JVM, time to send them.  The thread
+    sleeps a second whenever its queue is empty, so wait for the queue
+    to drain rather than for a fixed time."""
     gc.collect()
+    queue = getattr(SparkContext._gateway._gateway_client,
+                    "finalizer_deque", ())
+    while queue:
+        time.sleep(0.05)
     time.sleep(0.2)
 
 
@@ -333,3 +341,30 @@ def test_listing_round_trips_do_not_grow_with_file_count(spark, tmp_path):
     rts_one = _round_trips(spark, lambda: parquet_schema(spark, one))
     rts_forty = _round_trips(spark, lambda: parquet_schema(spark, forty))
     assert abs(rts_forty - rts_one) <= 2, (rts_one, rts_forty)
+
+
+def test_materialize_reread_costs_the_same_on_a_fresh_thread(spark,
+                                                             tmp_path):
+    """A re-read given its schema goes straight to the JVM reader.
+    PySpark's ``DataFrameReader.schema`` first gets or creates the
+    thread's active session, which costs a flow worker thread (a thread
+    with no active session) more round trips than the main thread.  A
+    fresh thread also opens its own py4j connection: one round trip."""
+    ctx = SparkFlowContext(spark, str(tmp_path / "tmp"))
+    df = spark.range(6).selectExpr("id", "concat('v', id) as s")
+    path = str(tmp_path / "cached")
+    kept = []  # both sides keep what they read, so neither releases it
+
+    def reread():
+        kept.append(materialize(ctx, df, path))
+
+    def on_fresh_thread():
+        t = threading.Thread(target=reread)
+        t.start()
+        t.join()
+
+    want = materialize(ctx, df, path).schema  # looks up the JVM handles once
+    rts_main = _round_trips(spark, reread)
+    rts_fresh = _round_trips(spark, on_fresh_thread)
+    assert [d.schema for d in kept] == [want] * 6
+    assert abs(rts_fresh - rts_main) <= 2, (rts_main, rts_fresh)

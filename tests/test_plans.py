@@ -9,7 +9,7 @@ from waimak_spark.catalog import ALL_ENTRIES, RETIRED_ENTRIES
 
 
 def build_entry(name, spark, sf_dir):
-    # retired entries (rotation ledger) keep their plan locks alongside
+    # retired entries keep their plan locks alongside
     # their DuckDB lockstep — retirement frees a driver-window slot, it
     # never drops verification
     entry = ALL_ENTRIES.get(name) or RETIRED_ENTRIES[name]
@@ -165,9 +165,8 @@ class TestCurationPlans:
         assert "Exchange" not in plan, f"{name}: unexpected shuffle"
 
     def test_corpus_dedup_is_hash_anti_join(self, spark, sf_dir):
-        # retired from the driver rotation in r11 (witnesses: the Bloom
-        # admission + dedup_near_against_corpus) but the anti-join shape
-        # lock stays — the kernel is still the exact 100 TB product path
+        # a retired entry, but the anti-join shape lock stays — the
+        # kernel is still the exact 100 TB product path
         from waimak_spark.catalog import RETIRED_ENTRIES
 
         df = RETIRED_ENTRIES["dedup_against_corpus"]["fn"](spark, sf_dir)

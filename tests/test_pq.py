@@ -2,8 +2,7 @@
 Lloyd codebooks, map-only encode, ADC top-k with Arrow-built per-query
 LUTs and JVM scoring.
 The reference (waimak) has no ANN surface; this is the training-data-
-pipeline extension family (round-10 catalog candidate per PARITY's
-rotation ledger), so the oracle lockstep lives here until a slot opens."""
+pipeline extension family, with its oracle lockstep here."""
 
 import math
 
@@ -283,13 +282,11 @@ class TestIvfPqStoredIndex:
 
 
 def test_catalog_wrapper_matches_its_admission_oracle(spark, sf_dir):
-    """The round-10 admission shape (catalog.similarity.
-    ann_ivf_pq_probe_stored + _pq_probe_stored_oracle) must already be
-    lockstep BEFORE the slot opens — admission day is then a one-line
-    move from EXTRA_ENTRIES to ENTRIES (the round-9 DSIR pattern,
-    VERDICT r8 #4).  The oracle is STATIC because the stored index uses
-    seeded data-independent codebooks; this test is the proof that the
-    static string and the stored tables can never drift apart."""
+    """The catalog entry ann_ivf_pq_probe_stored matches its oracle
+    (_pq_probe_stored_oracle).  The oracle is STATIC because the stored
+    index uses seeded data-independent codebooks; this test is the proof
+    that the static string and the stored tables can never drift
+    apart."""
     import duckdb
 
     from waimak_spark.catalog.similarity import (
@@ -314,102 +311,6 @@ def test_catalog_wrapper_matches_its_admission_oracle(spark, sf_dir):
         assert g[:2] == w[:2]                      # (query_id, neighbor)
         for gv, wv in zip(g[2:], w[2:]):
             assert gv == pytest.approx(wv, abs=1e-9)
-
-
-def test_round12_rotation_executed():
-    """Test-lock the round-12 rotation as EXECUTED (VERDICT r11 #5: the
-    rotation follows the committed PARITY ledger exactly): the five
-    round-11 staged admissions front the window for their first official
-    rows, the five r12 retirements left the catalog for RETIRED_ENTRIES
-    (still DuckDB-lockstep-tested every run), their freed slots admitted
-    the next five ledger stagings (new entries, staged to front round
-    13), and every admitted entry left EXTRA_ENTRIES.  Window
-    arithmetic: 5 fronted stagings + 45 surviving r10-latest entries =
-    50, zero free slots, five fresh admissions staged."""
-    from waimak_spark.catalog import (
-        ALL_ENTRIES,
-        EXTRA_ENTRIES,
-        RETIRED_ENTRIES,
-        STAGED_NEXT_ROUND,
-    )
-
-    names = list(ALL_ENTRIES)
-    assert len(names) == 100
-    window = set(names[:50])
-    assert names[:5] == [
-        "copurchase_pagerank", "corpus_heavy_hitters", "bpe_merges",
-        "sample_mmr_diverse", "doc_winnow_fingerprints"], \
-        "the round-11 staged admissions front first in round 12"
-    assert STAGED_NEXT_ROUND == (
-        "ivf_probe_appended", "embedding_kmeanspar_init",
-        "dedup_repeated_segments", "corpus_distinct_hll",
-        "streaming_running_totals_stateful")
-    for s in STAGED_NEXT_ROUND:
-        assert s in ALL_ENTRIES and s not in window, s
-    # an admitted entry leaves EXTRA_ENTRIES the round it is admitted
-    for gone in ("copurchase_pagerank", "corpus_heavy_hitters",
-                 "bpe_merges", "sample_mmr_diverse",
-                 "doc_winnow_fingerprints", "ivf_probe_appended",
-                 "embedding_kmeanspar_init", "dedup_repeated_segments",
-                 "corpus_distinct_hll",
-                 "streaming_running_totals_stateful"):
-        assert gone not in EXTRA_ENTRIES, gone
-    assert "ann_int8_recall" not in ALL_ENTRIES
-    assert "embedding_quantize_int8" in ALL_ENTRIES
-    # retirement ledger: r11 freed the three fronted slots + the five
-    # r12-staged slots; the r12 retirements freed the five r13 slots
-    r11_freed = {"q12_late_priority", "q17_small_quantity",
-                 "tumbling_window_counts", "dedup_simhash_near_dups",
-                 "dedup_minhash_verified", "dedup_ngram_jaccard",
-                 "dedup_against_corpus", "dedup_embedding_cosine"}
-    r12_freed = {"q15_top_supplier", "q4_priority_exists",
-                 "running_value_per_user", "sample_lang_balanced",
-                 "embedding_centroids"}
-    assert r11_freed | r12_freed == set(RETIRED_ENTRIES)
-    assert not (r11_freed | r12_freed) & set(ALL_ENTRIES)
-
-
-def test_round11_bloom_retirement_bookkeeping():
-    """Round-11 Bloom admission EXECUTED (VERDICT r9 #5 prep → r10 #1):
-    the entry is in the catalog window under its catalog name, out of the
-    extras, its admission-shape lockstep still runs every pytest
-    (tests/test_bloom_dedup.py::test_catalog_fn_matches_duckdb), the
-    decided retirement target `dedup_simhash_near_dups` left the catalog
-    WITH official green history, and the simhash machinery keeps official
-    coverage through `dedup_simhash` and `dedup_simhash_resolve`."""
-    import glob
-    import json
-    import os
-
-    from waimak_spark.catalog import (
-        ALL_ENTRIES,
-        EXTRA_ENTRIES,
-        RETIRED_ENTRIES,
-    )
-
-    assert "bloom_dedup_against_corpus" not in EXTRA_ENTRIES
-    names = list(ALL_ENTRIES)
-    # round 12: its first official row landed in CORRECTNESS_r11, so the
-    # entry rotates out of the r12 window like any other r11-latest row —
-    # catalog membership (full lockstep every pytest) is the invariant
-    assert "dedup_bloom_against_corpus" in names
-    retired = RETIRED_ENTRIES["dedup_simhash_near_dups"]
-    assert retired["retired"] == "r11"
-    for w in retired["witnesses"]:
-        assert w in ALL_ENTRIES, w
-    # every retired entry left with official green history — retirement
-    # is a coverage decision, never a way to park a failing entry
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    green: set[str] = set()
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        with open(path) as fh:
-            rows = json.load(fh)
-        green |= {k for k, v in rows.items()
-                  if isinstance(v, dict) and v.get("hash_match")}
-    if green:  # driver files present
-        never_green = [n for n in RETIRED_ENTRIES if n not in green]
-        assert not never_green, (
-            f"retired without any official green row: {never_green}")
 
 
 class TestIvfPqStoredTable:

@@ -2,8 +2,7 @@
 Ma & Srikant 2007, WWW) — the provably-complete counterpart to the
 heuristic LSH/df-cap candidate generators.  The reference (waimak) has
 no similarity surface; this is the training-data-pipeline extension
-family (round-19 catalog admission candidate per PARITY's rotation
-ledger), so the oracle lockstep lives here until a slot opens."""
+family, with its oracle lockstep here."""
 
 import duckdb
 import pytest

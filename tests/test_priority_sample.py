@@ -2,9 +2,8 @@
 Spiliotis 2006, IPL 97(5): priority / A-ES sampling) — the
 fixed-budget counterpart to weighted_sample_keep's Bernoulli thinning.
 The reference (waimak) has no sampling surface; this is the
-training-data-pipeline extension family (round-20 catalog admission
-candidate per PARITY's rotation ledger), so the oracle lockstep lives
-here until a slot opens."""
+training-data-pipeline extension family, with its oracle lockstep
+here."""
 
 import hashlib
 import math

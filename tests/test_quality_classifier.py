@@ -2,8 +2,7 @@
 model-filter pattern, Wenzek et al. 2020) — weak-labeled train split,
 held-out evaluation, rounded llr scores.  The reference (waimak) has
 no classifier surface; this is the training-data-pipeline extension
-family (round-19 catalog admission candidate per PARITY's rotation
-ledger), so the oracle lockstep lives here until a slot opens."""
+family, with its oracle lockstep here."""
 
 import math
 

@@ -1,13 +1,10 @@
 """Retired catalog entries stay verified.
 
-Retirement (PARITY rotation ledger) removes an entry from the driver's
-50-entry official window to free a slot for a new operator family — it is
-a COVERAGE decision, not a deletion.  Every retired (fn, oracle) pair
-keeps running the exact same DuckDB lockstep the live catalog runs
+Retirement removes an entry from the driver's catalog — it is a coverage
+decision, not a deletion.  Every retired (fn, oracle) pair keeps running
+the exact same DuckDB lockstep the live catalog runs
 (tests/test_catalog_oracle.py), so e.g. "all 22 TPC-H queries verified"
-stays true every pytest run even though q12/q17 no longer burn official
-window slots.  Bookkeeping: each retirement names machinery witnesses
-that keep the operator family officially covered in the rotation.
+stays true every pytest run even though q12/q17 hold no driver slot.
 """
 
 import duckdb
@@ -51,13 +48,8 @@ def test_retired_entry_still_matches_oracle(name, spark, sf_dir, duck):
 
 
 def test_retirement_bookkeeping():
-    """Every retired entry is OUT of the driver catalog, carries a round
-    tag and at least one machinery witness still holding a catalog slot,
-    and has its oracle preserved (lockstep above stays meaningful)."""
+    """Every retired entry is OUT of the driver catalog and has its oracle
+    preserved (lockstep above stays meaningful)."""
     for name, entry in RETIRED_ENTRIES.items():
         assert name not in ALL_ENTRIES, name
-        assert entry["retired"].startswith("r"), name
-        assert entry["witnesses"], f"{name} retired without a witness"
-        for w in entry["witnesses"]:
-            assert w in ALL_ENTRIES, f"{name}: witness {w} not in catalog"
         assert entry.get("oracle"), f"{name} lost its oracle at retirement"

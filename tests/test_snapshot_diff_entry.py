@@ -1,9 +1,7 @@
 """Oracle-checked catalog surface for `AuditTableFile.snapshot_diff`
 (VERDICT r10 #7): a dedicated CDC audit table whose batch 2 carries both
 updates and genuinely new keys, diffed snapshot(CUTOFF) → latest, locked
-against a DuckDB full-outer-join oracle every pytest run.  Scheduled to
-front round 16 per the rotation ledger; until then this lockstep is the
-admission-shape guarantee (the DSIR/Bloom staging pattern).
+against a DuckDB full-outer-join oracle every pytest run.
 """
 
 import duckdb

@@ -519,7 +519,7 @@ class TestStatePartitionSizing:
 
 class TestStatefulCatalogEntry:
     """The custom applyInPandasWithState operator as an oracle-checked
-    catalog surface (post-runway EXTRA_ENTRIES candidate): the
+    catalog surface (the streaming_running_totals_stateful entry): the
     max-n_events extraction must be deterministic under ANY micro-batch
     split (n strictly increases per emission), and the final totals
     must equal the batch groupBy."""

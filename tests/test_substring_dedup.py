@@ -1,8 +1,6 @@
 """Cross-document substring dedup (ExactSubstr, Lee et al. 2022,
-arXiv:2107.06499) — implemented in round 7, admitted to the catalog in
-round 8 per PARITY's rotation ledger, so the oracle lockstep lives here
-until then. The reference (waimak) has no substring dedup; this is the
-training-data-pipeline extension surface."""
+arXiv:2107.06499). The reference (waimak) has no substring dedup; this
+is the training-data-pipeline extension surface."""
 
 import duckdb
 import pytest

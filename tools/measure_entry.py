@@ -43,17 +43,9 @@ def main() -> None:
     from waimak_spark import catalog
     from waimak_spark.functions.cache_registry import release_tracked
 
-    if name in catalog.ALL_ENTRIES:
-        fn = catalog.ALL_ENTRIES[name]["fn"]
-    elif name in catalog.EXTRA_ENTRIES:
-        # rotation-ledger admission candidates measured before a catalog
-        # slot opens (single registry shared with tools/scale_check.py)
-        fn = catalog.EXTRA_ENTRIES[name]
-    elif name in catalog.RETIRED_ENTRIES:
-        # retired rotation entries stay measurable (retirement is a
-        # driver-window coverage decision, not a deletion)
-        fn = catalog.RETIRED_ENTRIES[name]["fn"]
-    else:
+    try:
+        fn = catalog.entry_fn(name)
+    except KeyError:
         raise SystemExit(f"unknown entry: {name}")
     times = []
     for i in range(laps + 1):  # lap 0 is the untimed warmup

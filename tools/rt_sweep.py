@@ -63,13 +63,9 @@ def main() -> None:
     spark.read.parquet(f"{sf}/region.parquet").count()
     out = {}
     for name in names:
-        if name in catalog.ALL_ENTRIES:
-            fn = catalog.ALL_ENTRIES[name]["fn"]
-        elif name in catalog.RETIRED_ENTRIES:
-            fn = catalog.RETIRED_ENTRIES[name]["fn"]
-        elif name in catalog.EXTRA_ENTRIES:
-            fn = catalog.EXTRA_ENTRIES[name]
-        else:
+        try:
+            fn = catalog.entry_fn(name)
+        except KeyError:
             raise SystemExit(f"unknown entry: {name}")
         before = _COUNT["n"]
         fn(spark, sf)

@@ -47,16 +47,13 @@ DOC_QUERIES = [
     "pack_sequences", "sample_weighted", "decontaminate_near",
     # round-5 entries
     "embedding_kmeans", "unigram_logprob", "lang_mixture_weights",
-    # ann_int8_recall retired round 10 (rotation ledger; int8 machinery
-    # stays covered via embedding_quantize_int8); its slot admitted the
-    # stored IVF-PQ probe, measured below via the build/probe split
+    # the stored IVF-PQ probe is measured below via the build/probe split
     "embedding_quantize_int8", "ann_ivf_pq_probe_stored",
     "embedding_cluster_exemplars", "sample_lang_balanced",
     # round-6 entries
     "ann_ivf_probe_stored", "bigram_logprob", "contamination_overlap",
     "chunk_overlapping_windows", "dedup_semantic_kmeans",
-    # round-9 admission (ann_lsh_pairs retired per the rotation ledger —
-    # its LSH pair machinery keeps a row via dedup_embedding_cosine)
+    # round-9 entries
     "dsir_select",
 ]
 EVENT_QUERIES = [
@@ -89,11 +86,9 @@ RELATIONAL_QUERIES = [
     "asof_quote_per_trade", "range_join_shipments",
     "grouping_sets_quantity",
 ]
-# Non-catalog operators measured here anyway (rotation-ledger admission
-# candidates whose scale story must exist BEFORE a window slot opens):
-# the single name->fn registry lives in waimak_spark.catalog
-# (EXTRA_ENTRIES) so admitting a candidate edits ONE place; resolved
-# lazily in main() to keep module import light.
+# Non-catalog operators (waimak_spark.catalog.EXTRA_ENTRIES) are measured
+# too; every name resolves through catalog.entry_fn, lazily in main() to
+# keep module import light.
 # Rows whose one-shot 10x timing has swung 2-4x between laps on this
 # co-tenanted host (VERDICT r7 #6): the table carries a second [warm]
 # min-of-3 row so the headline number is not the scariest outlier.
@@ -195,20 +190,20 @@ def build_replica() -> None:
 def main() -> None:
     from pyspark.sql import SparkSession
 
-    from waimak_spark.catalog import ALL_ENTRIES
+    from waimak_spark.catalog import EXTRA_ENTRIES, entry_fn
     from waimak_spark.functions.cache_registry import release_tracked
 
     # validate the subset BEFORE the expensive replica build + JVM start
     subset = os.environ.get("SPARK_GRAFT_QUERIES")
-    from waimak_spark.catalog import EXTRA_ENTRIES, RETIRED_ENTRIES
-
     names = ([n.strip() for n in subset.split(",") if n.strip()] if subset
              else (DOC_QUERIES + EVENT_QUERIES + STREAMING_QUERIES
                    + RELATIONAL_QUERIES + list(EXTRA_ENTRIES)))
-    # retired rotation entries stay measurable (retirement is a driver-
-    # window coverage decision, not a deletion — catalog.RETIRED_ENTRIES)
-    unknown = (set(names) - set(ALL_ENTRIES) - set(EXTRA_ENTRIES)
-               - set(RETIRED_ENTRIES))
+    unknown = []
+    for name in names:
+        try:
+            entry_fn(name)
+        except KeyError:
+            unknown.append(name)
     if unknown:
         raise SystemExit(f"unknown queries: {sorted(unknown)}")
 
@@ -228,12 +223,7 @@ def main() -> None:
         # same GC hygiene as bench.py: collect OUTSIDE the timed window so
         # pauses from the replicated corpus's churn don't land in a timing
         spark._jvm.System.gc()
-        if name in ALL_ENTRIES:
-            fn = ALL_ENTRIES[name]["fn"]
-        elif name in EXTRA_ENTRIES:
-            fn = EXTRA_ENTRIES[name]
-        else:
-            fn = RETIRED_ENTRIES[name]["fn"]
+        fn = entry_fn(name)
         t0 = time.time()
         df = fn(spark, sf_dir)
         # noop-force like bench.py, NOT count(): count() lets Catalyst

@@ -192,11 +192,9 @@ def dedup_bloom_against_corpus(spark: SparkSession,
     """Bloom-filter membership dedup vs the corpus — the BOUNDED-MEMORY
     approximate sibling of ``dedup_against_corpus`` (no false negatives;
     deterministic seeded hashing makes even the false positives
-    engine-reproducible, so the DuckDB oracle is exact).  ADMITTED round
-    11 per the PARITY rotation ledger (fronting the round-11 window in
-    the slot freed by the `dedup_against_corpus` retirement); verified
-    by tests/test_bloom_dedup.py's lockstep + property suite every
-    pytest run."""
+    engine-reproducible, so the DuckDB oracle is exact); verified by
+    tests/test_bloom_dedup.py's lockstep + property suite every pytest
+    run."""
     from ..functions import dedup as D
 
     docs = _docs(spark, sf_dir)
@@ -213,8 +211,7 @@ def _bloom_corpus_oracle() -> str:
         new_where=f"source not in ({_corpus_list})")
 
 
-# the shape the round-9 DSIR admission fronts (PARITY rotation ledger):
-# English documents as the target distribution, Gumbel-top-k over the
+# the dsir_select entry's shape: English documents as the target distribution, Gumbel-top-k over the
 # whole corpus — the same (target_where, k, seed) the lockstep tests pin
 DSIR_TARGET_WHERE = "lang = 'en'"
 DSIR_K = 100
@@ -222,14 +219,8 @@ DSIR_SEED = 7
 
 
 def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance-weighted Gumbel-top-k selection (Xie et al. 2023)
-    — ADMITTED round 9 per the PARITY rotation ledger in the retired
-    `ann_lsh_pairs` slot (the `lsh_ann_pairs` operator keeps its unit
-    tests; `dedup_embedding_cosine` keeps the LSH pair machinery's
-    official row).  The round-9 window is fully forced (set-A), so the
-    entry takes the sanctioned STAGED_NEXT_ROUND path and fronts in
-    round 10; lockstep-verified every pytest run since round 7
-    (tests/test_dsir.py)."""
+    """DSIR importance-weighted Gumbel-top-k selection (Xie et al. 2023);
+    lockstep-verified every pytest run (tests/test_dsir.py)."""
     docs = _docs(spark, sf_dir)
     # subset-target fast path (round 9): the target IS a raw-corpus
     # subset, so the corpus tokenizes once and the target model filters
@@ -249,10 +240,9 @@ def quality_classifier_scores(spark: SparkSession,
     Wenzek et al. 2020, via multinomial Naive Bayes, McCallum & Nigam
     1998): fit on a weak-labeled seeded train split, score every
     document with a rounded log-likelihood-ratio, report the held-out
-    verdicts alongside — round-19 catalog admission candidate per the
-    PARITY rotation ledger; until then verified by
-    tests/test_quality_classifier.py every pytest run and measured
-    through the catalog EXTRA_ENTRIES registry."""
+    verdicts alongside; verified by tests/test_quality_classifier.py
+    every pytest run and measured through the catalog EXTRA_ENTRIES
+    registry."""
     from ..functions import classifier as QC
 
     return QC.quality_classifier_scores(_docs(spark, sf_dir))
@@ -276,11 +266,9 @@ def sample_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spiliotis 2006): exactly k docs, inclusion probability
     approximately proportional to document length (A-ES priority keys
     — exact probability-proportional-to-size inclusion for k > 1 is
-    the Chao/A-PS variant), one map-only pass + TakeOrderedAndProject
-    — round-20
-    catalog admission candidate per the PARITY rotation ledger; until
-    then verified by tests/test_priority_sample.py every pytest run
-    and measured through the catalog EXTRA_ENTRIES registry."""
+    the Chao/A-PS variant), one map-only pass + TakeOrderedAndProject;
+    verified by tests/test_priority_sample.py every pytest run and
+    measured through the catalog EXTRA_ENTRIES registry."""
     docs = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
     return C.priority_sample_k(docs, F.col("n_chars"), k=PRIORITY_K,
                                seed=PRIORITY_SEED)
@@ -328,8 +316,7 @@ def _near_corpus_oracle() -> str:
 
 
 # ---------------------------------------------------------------------------
-# stored LSH dedup index with incremental APPEND (round 9; round-17
-# admission candidate per the PARITY rotation ledger) — the text-dedup
+# stored LSH dedup index with incremental APPEND — the text-dedup
 # sibling of catalog/similarity's stored/appended IVF indexes:
 # dedup_near_against_corpus above recomputes the corpus signature pipeline
 # on EVERY refresh; here the corpus's (doc_id, band, band_key) rows
@@ -433,8 +420,7 @@ def dedup_lsh_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     resident files untouched), and the probe — which must equal the
     inline :func:`waimak_spark.functions.dedup.lsh_pairs_against_corpus`
     aggregate bit-for-bit (row-local keys) — scans the narrow bucketed
-    key table, never the corpus text.  Round-17 admission candidate per
-    the PARITY rotation ledger; until then verified by
+    key table, never the corpus text.  Verified by
     tests/test_lsh_index.py every pytest run and measured through the
     catalog EXTRA_ENTRIES registry."""
     from ..functions import dedup as D
@@ -677,7 +663,7 @@ DECONTAMINATE_ORACLE = f"""
 
 
 def contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GRADED contamination (round 6, staged for the r7 window): per
+    """GRADED contamination: per
     non-benchmark doc, the fraction of its distinct shingles that occur
     in the held-out benchmark — the score a pipeline thresholds instead
     of the boolean drop `decontaminate_against_benchmark` applies.  Docs
@@ -726,7 +712,7 @@ CONTAMINATION_ORACLE = f"""
 
 
 def chunk_overlapping_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window chunking (round 6, staged for the r7 window): the
+    """Sliding-window chunking: the
     RAG / context-window stage — overlapping 64-token windows every 48
     tokens, emitted as metadata + window-text hash."""
     return C.chunk_sliding_windows(_docs(spark, sf_dir))
@@ -988,13 +974,7 @@ ENTRIES = {
     "sample_weighted": {"fn": sample_weighted, "oracle": _weighted_oracle()},
     "decontaminate_near": {"fn": decontaminate_near_benchmark,
                            "oracle": _near_decontaminate_oracle()},
-    # round-9 admission (PARITY rotation ledger): staged this round,
-    # fronts round 10 — see catalog.STAGED_NEXT_ROUND
     "dsir_select": {"fn": dsir_select, "oracle": _dsir_select_oracle()},
-    # round-11 admission (PARITY rotation ledger): fronts round 11 in the
-    # slot freed by the same-round `dedup_against_corpus` retirement (the
-    # exact anti-join sibling it approximates; `dedup_near_against_corpus`
-    # keeps the corpus-membership machinery's exact path covered)
     "dedup_bloom_against_corpus": {"fn": dedup_bloom_against_corpus,
                                    "oracle": _bloom_corpus_oracle()},
 }

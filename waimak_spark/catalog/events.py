@@ -248,10 +248,8 @@ def events_value_quantiles_kmv(spark: SparkSession,
     exact p50/p95/p99 of `value` (run-once certification), the sketch
     estimate from a 256-row seeded bottom-k sample (bounded state
     regardless of corpus size, exactly mergeable across batches), and
-    the exactly-computed rank error with a 2/sqrt(k) tolerance bit.
-    ADMITTED round 11 per the PARITY rotation ledger (fronting the
-    round-11 window in the slot freed by the `tumbling_window_counts`
-    retirement); verified by tests/test_kmv.py every pytest run."""
+    the exactly-computed rank error with a 2/sqrt(k) tolerance bit;
+    verified by tests/test_kmv.py every pytest run."""
     from ..functions import sketch as SK
 
     return SK.kmv_quantiles(_events_raw(spark, sf_dir))
@@ -276,8 +274,8 @@ def events_value_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     the outlier-diagnosis counts a DQ check consumes.  One percentile
     aggregation (5 rows, broadcast back) + one pass; at 100 TB swap the
     exact percentile for the KMV sketch's estimates, same shape.
-    Post-runway extension measured through the catalog EXTRA_ENTRIES
-    registry; verified by tests/test_winsorize.py every pytest run."""
+    Measured through the catalog EXTRA_ENTRIES registry; verified by
+    tests/test_winsorize.py every pytest run."""
     df = _events(spark, sf_dir)
     pct = df.groupBy("event_type").agg(
         F.expr("percentile(value, 0.01)").alias("_lo"),
@@ -328,10 +326,6 @@ ENTRIES = {
                                "oracle": RUNNING_ORACLE},
     "approx_event_stats": {"fn": approx_event_stats,
                            "oracle": APPROX_STATS_ORACLE},
-    # round-11 admission (PARITY rotation ledger): fronts round 11 in the
-    # slot freed by the same-round `tumbling_window_counts` retirement
-    # (`streaming_tumbling_counts` keeps the tumbling semantics officially
-    # covered through the Structured-Streaming machinery)
     "events_value_quantiles_kmv": {"fn": events_value_quantiles_kmv,
                                    "oracle": _kmv_quantiles_oracle()},
 }

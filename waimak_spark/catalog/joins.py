@@ -112,8 +112,7 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Page et al. 1999) — the iterative-distributed class: each power
     iteration is one join + one keyed aggregation (sparse matvec), rank
     frame plan-cut every j iterations, per-iteration rounding keeps the
-    trajectory bit-identical to the unrolled-CTE DuckDB oracle.
-    Staged round 11 → fronts round 12 per the rotation ledger;
+    trajectory bit-identical to the unrolled-CTE DuckDB oracle;
     verified by tests/test_pagerank.py every pytest run."""
     from ..functions.graph import copurchase_edges, pagerank
 
@@ -137,10 +136,8 @@ def er_link_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     perturbed copy via dual-offset balance-bucket blocking and
     normalized-Levenshtein + balance scoring; every emitted pair
     carries an exact ground-truth bit, so the entry is self-certifying
-    like ann_ivf_recall — round-20 catalog admission candidate per the
-    PARITY rotation ledger; until then verified by
-    tests/test_linkage.py every pytest run and measured through the
-    catalog EXTRA_ENTRIES registry."""
+    like ann_ivf_recall; verified by tests/test_linkage.py every pytest
+    run and measured through the catalog EXTRA_ENTRIES registry."""
     from ..functions.linkage import link_customers
 
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
@@ -156,7 +153,6 @@ def _er_link_oracle() -> str:
 ENTRIES = {
     "asof_quote_per_trade": {"fn": asof_quote_per_trade,
                              "oracle": ASOF_ORACLE},
-    # round-11 STAGED admission (fronts round 12 per the rotation ledger)
     "copurchase_pagerank": {"fn": copurchase_pagerank,
                             "oracle": _pagerank_oracle()},
     "range_join_shipments": {"fn": range_join_shipments,

@@ -15,11 +15,9 @@ def ann_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.brute_force_topk(emb, QUERY_IDS, k=5)
 
 
-# The `ann_lsh_pairs` catalog entry RETIRED in round 9 (PARITY rotation
-# ledger): subsumed by `dedup_embedding_cosine`, which exercises the same
-# `S.lsh_ann_pairs` machinery on the same embeddings; the operator itself
-# stays in functions/similarity.py with its unit tests
-# (tests/test_similarity_resolution.py).  Its slot admitted `dsir_select`.
+# `S.lsh_ann_pairs` has no catalog entry of its own: `dedup_embedding_cosine`
+# exercises it on the same embeddings, and its unit tests live in
+# tests/test_similarity_resolution.py.
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -337,8 +335,7 @@ def ann_ivf_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# incremental IVF index APPEND (round 9; round-13 admission candidate per
-# the PARITY rotation ledger) — the maintenance path a 100 TB vector store
+# incremental IVF index APPEND — the maintenance path a 100 TB vector store
 # needs between rebuilds: new batches land in the stored bucketed index
 # WITHOUT touching the resident data.  Cell assignment is row-local (fixed
 # seeded centroids), so index(A) ∪ index(B) == index(A ∪ B) exactly, and
@@ -431,10 +428,8 @@ def ann_ivf_probe_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`ivf_index_append` (batch-only scan, resident files untouched,
     bucket pruning preserved), and the probe must equal a full-corpus
     build bit-for-bit — certified by reusing ``ann_ivf_topk``'s static
-    full-corpus oracle.  Round-13 admission candidate per the PARITY
-    rotation ledger; until then verified by tests/test_ivf_append.py
-    every pytest run and measured through the catalog EXTRA_ENTRIES
-    registry."""
+    full-corpus oracle; verified by tests/test_ivf_append.py every
+    pytest run."""
     tbl = _ivf_appended_index_table(spark, sf_dir)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return S.ivf_topk_from_index(spark.table(tbl), emb, QUERY_IDS, k=5)
@@ -451,12 +446,12 @@ def _ivf_probe_appended_oracle() -> str:
 # composed probe's 10x cost was dominated by the per-call re-featurize —
 # the stored (id, cell, codes) frame plus the persisted codebooks make the
 # probe a bucket-pruned scan of 32 single-byte codes per vector with zero
-# corpus-side Python; round-10 catalog admission candidate per the ledger)
+# corpus-side Python)
 # ---------------------------------------------------------------------------
 
 # v2 (round 9): the stored catalog index switched from FITTED Lloyd
 # codebooks to the SEEDED data-independent init (pq_fit n_iters=0) so the
-# round-10 admission can carry a STATIC SQL oracle — fitted books are
+# catalog entry can carry a STATIC SQL oracle — fitted books are
 # data-dependent, and a static oracle string embedding them would be
 # silently invalidated by a driver-side testdata regeneration (the
 # decision PARITY's "Oracle design for the PQ entry" records).  Fitted
@@ -579,11 +574,9 @@ def ann_ivf_pq_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan-locked in test_pq.py), broadcasts the per-query LUTs, and scores
     candidates fully JVM-side.  Output is identical to the inline
     :func:`waimak_spark.functions.similarity.ivf_pq_topk` over the same
-    corpus with the same (seeded) codebooks (round-trip-locked).
-    Round-10 catalog admission per the PARITY rotation ledger (retires
-    `ann_int8_recall`, staged then fronted round 11); its static oracle
-    is :func:`_pq_probe_stored_oracle`, lockstep-tested every pytest run
-    (tests/test_pq.py) the way the round-9 DSIR admission was."""
+    corpus with the same (seeded) codebooks (round-trip-locked).  Its
+    static oracle is :func:`_pq_probe_stored_oracle`, lockstep-tested
+    every pytest run (tests/test_pq.py)."""
     cells_name, books_name = _ivf_pq_index_tables(spark, sf_dir)
     books = _load_pq_books(spark, books_name)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -610,9 +603,8 @@ def sample_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     #5), so each of the k argmax iterations scans a BOUNDED frame: 10×
     ratio 6.7 → 3.8, 1× unchanged.  The pool cut is deterministic and
     embedded in the SQL oracle, so the trace stays exactly
-    oracle-checkable at any scale.  Staged round-11 → fronts round 12
-    per the rotation ledger; verified by tests/test_mmr.py every pytest
-    run."""
+    oracle-checkable at any scale; verified by tests/test_mmr.py every
+    pytest run."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return S.mmr_select(emb)
 
@@ -628,9 +620,9 @@ def ann_ivf_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-recovery step quantization error makes necessary; the exact
     stage touches |queries|*k*rf raw vectors, never the corpus.  Uses
     the same static seeded codebooks as the stored-index entry so the
-    oracle's literals are computable with no data in hand.  Post-runway
-    extension measured through the catalog EXTRA_ENTRIES registry;
-    verified by tests/test_pq_refine.py every pytest run."""
+    oracle's literals are computable with no data in hand.  Measured
+    through the catalog EXTRA_ENTRIES registry; verified by
+    tests/test_pq_refine.py every pytest run."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     books = S._pq_init(S.PQ_M, S.PQ_K, 64 // S.PQ_M)
     return S.ivf_pq_refined_topk(emb, books, QUERY_IDS, k=5)
@@ -646,9 +638,7 @@ def embedding_kmeanspar_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     initialization the kmeans family needs at 100 TB: a constant number
     of rounds, each one map (running d2 vs the round's new centers) +
     one bounded top-l, then a weighting pass; the corpus never
-    shuffles.  Post-runway extension measured through the catalog
-    EXTRA_ENTRIES registry; verified by tests/test_kmeanspar.py every
-    pytest run."""
+    shuffles; verified by tests/test_kmeanspar.py every pytest run."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return S.kmeanspar_oversample(emb)
 
@@ -658,12 +648,9 @@ def _kmeanspar_oracle() -> str:
 
 
 def sample_kcenter_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy k-center diverse sampling trace (Sener & Savarese 2018) —
-    ADMITTED round 11 per the PARITY rotation ledger (pulled forward
-    from its round-12 runway slot by the backlog fix, fronting in the
-    slot freed by the `dedup_embedding_cosine` retirement); verified by
-    tests/test_kcenter.py's lockstep + reference suite every pytest
-    run."""
+    """Greedy k-center diverse sampling trace (Sener & Savarese 2018);
+    verified by tests/test_kcenter.py's lockstep + reference suite every
+    pytest run."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return S.kcenter_select(emb)
 
@@ -716,10 +703,6 @@ ENTRIES = {
         "fn": embedding_quantize_int8,
         "oracle": S.quantize_int8_sql(),
     },
-    # `ann_int8_recall` RETIRED round 10 per the PARITY rotation ledger
-    # (subsumed by ann_ivf_pq_probe_stored's stronger compressed-scoring
-    # recall story; the int8 operators keep their unit tests and
-    # `embedding_quantize_int8` keeps the machinery officially covered)
     "ann_ivf_pq_probe_stored": {
         "fn": ann_ivf_pq_probe_stored,
         "oracle": _pq_probe_stored_oracle(),
@@ -736,20 +719,14 @@ ENTRIES = {
         "fn": dedup_semantic_kmeans,
         "oracle": S.semantic_dedup_sql(),
     },
-    # round-11 admission (PARITY rotation ledger): fronts round 11 in the
-    # slot freed by the same-round `dedup_embedding_cosine` retirement
-    # (`dedup_embedding_cosine_fixpoint` keeps the cosine-dedup machinery
-    # officially covered — it composes the retired entry's kernel)
     "sample_kcenter_diverse": {
         "fn": sample_kcenter_diverse,
         "oracle": S.kcenter_select_sql(),
     },
-    # round-11 STAGED admission (fronts round 12 per the rotation ledger)
     "sample_mmr_diverse": {
         "fn": sample_mmr_diverse,
         "oracle": _mmr_oracle(),
     },
-    # round-12 STAGED admissions (front round 13 per the rotation ledger)
     "ivf_probe_appended": {
         "fn": ann_ivf_probe_appended,
         # index(A) ∪ index(B) == index(A ∪ B) exactly (union-commutes

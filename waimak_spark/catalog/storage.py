@@ -210,8 +210,8 @@ def storage_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``AuditTableFile.snapshot_diff``): one full-outer PK join between
     snapshot(CUTOFF) and the latest snapshot — 'added' rows are the
     batch-2-only keys, 'changed' rows the updated ones, with TO-side
-    values.  Round-11 catalog admission candidate measured through
-    EXTRA_ENTRIES; lockstep-verified every pytest run."""
+    values.  Measured through the catalog EXTRA_ENTRIES registry;
+    lockstep-verified every pytest run."""
     from datetime import datetime
 
     t = _audit_orders_cdc(spark, sf_dir)

@@ -334,8 +334,8 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (watermarked window agg, complete-mode backfill); the oracle
     materializes each event's two candidate window starts and filters
     by containment — the definition Spark's F.window implements.
-    Post-runway extension measured through the catalog EXTRA_ENTRIES
-    registry; verified by tests/test_streaming.py every pytest run."""
+    Measured through the catalog EXTRA_ENTRIES registry; verified by
+    tests/test_streaming.py every pytest run."""
     run = _run_session(spark)
     src = _events_stream(run, sf_dir)
     with_ts = src.withColumn("ts_ev", _ts_ev(src))
@@ -541,8 +541,7 @@ STREAMING_SSJ_ORACLE = f"""
 
 
 # ---------------------------------------------------------------------------
-# streaming HLL distinct counting (round 9; round-18 admission candidate
-# per the PARITY rotation ledger) — the sketch-as-streaming-state demo:
+# streaming HLL distinct counting — the sketch-as-streaming-state demo:
 # the register frame is a bounded streaming aggregation (≤ m rows per
 # group REGARDLESS of stream length — the state an exact streaming
 # count-distinct could never bound), and because register max is
@@ -562,9 +561,8 @@ def streaming_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     count-distinct certification runs batch-side (at 100 TB the exact
     side is the run-once path; the stream keeps only the sketch).
     Output and oracle are identical to the batch ``corpus_distinct_hll``
-    entry.  Round-18 admission candidate per the PARITY rotation
-    ledger; until then verified by tests/test_hll.py every pytest run
-    and measured through the catalog EXTRA_ENTRIES registry."""
+    entry.  Verified by tests/test_hll.py every pytest run and measured
+    through the catalog EXTRA_ENTRIES registry."""
     from ..functions.sketch import (
         HLL_M,
         hll_estimate,
@@ -626,8 +624,8 @@ def streaming_value_quantiles_kmv(spark: SparkSession,
     licenses sharing the batch oracle verbatim.  The estimate and the
     exact certification run caller-side on the drained <= B-row state
     (the run-once path), mirroring ``streaming_distinct_hll``.
-    Post-runway extension measured through the catalog EXTRA_ENTRIES
-    registry; verified by tests/test_kmv.py every pytest run."""
+    Measured through the catalog EXTRA_ENTRIES registry; verified by
+    tests/test_kmv.py every pytest run."""
     from ..functions.sketch import (
         KMV_BUCKETS,
         KMV_QS,
@@ -670,9 +668,9 @@ def streaming_heavy_hitters_cms(spark: SparkSession,
     verbatim.  The exact top-k certification runs batch-side on the
     caller (the run-once path at 100 TB; the stream keeps only the
     sketch).  Output and oracle are identical to the batch
-    ``corpus_heavy_hitters`` entry.  Post-runway extension measured
-    through the catalog EXTRA_ENTRIES registry; verified by
-    tests/test_cms.py every pytest run."""
+    ``corpus_heavy_hitters`` entry.  Measured through the catalog
+    EXTRA_ENTRIES registry; verified by tests/test_cms.py every pytest
+    run."""
     from ..functions.cache_registry import tracked_persist
     from ..functions.sketch import (
         cms_gram_stream,
@@ -717,9 +715,8 @@ def streaming_running_totals_stateful(spark: SparkSession,
     deterministic extraction under ANY micro-batch split.  The final
     totals equal the batch groupBy exactly (count) / to 4dp (float sum
     order differs per engine), which is what licenses the plain
-    batch-SQL oracle.  Post-runway extension measured through the
-    catalog EXTRA_ENTRIES registry; verified with the oracle every
-    pytest run (tests/test_streaming.py)."""
+    batch-SQL oracle; verified with the oracle every pytest run
+    (tests/test_streaming.py)."""
     from ..streaming.ops import stateful_running_totals
 
     run = _run_session(spark)
@@ -834,7 +831,6 @@ ENTRIES = {
         "fn": streaming_trade_quote_join,
         "oracle": STREAMING_SSJ_ORACLE,
     },
-    # round-12 STAGED admission (fronts round 13 per the rotation ledger)
     "streaming_running_totals_stateful": {
         "fn": streaming_running_totals_stateful,
         "oracle": STREAMING_STATEFUL_TOTALS_ORACLE,

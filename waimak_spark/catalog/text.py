@@ -86,11 +86,8 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_substring_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document substring dedup (ExactSubstr-style, Lee et al. 2022):
-    admitted round 8 per the PARITY rotation ledger, retiring the
-    ``dedup_minhash_signature`` catalog entry (the ``minhash_signature``
-    operator itself stays — ``dedup_lsh_candidates`` below consumes the
-    same signatures, so the machinery keeps an official driver row)."""
+    """Cross-document substring dedup (ExactSubstr-style, Lee et al.
+    2022)."""
     return D.substring_ngram_dedup(_docs(spark, sf_dir))
 
 
@@ -150,10 +147,8 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min-sketch heavy hitters: the k most frequent word trigrams
     with their exact counts, sketch estimates, and the per-row
-    no-undercount bit — staged round 11 → fronts round 12 per the
-    PARITY rotation ledger (pulled forward from its round-14 runway
-    slot by the backlog fix); verified by tests/test_cms.py every
-    pytest run."""
+    no-undercount bit; verified by tests/test_cms.py every pytest
+    run."""
     from ..functions import sketch as SK
 
     return SK.cms_heavy_hitters(_docs(spark, sf_dir))
@@ -168,10 +163,8 @@ def _heavy_hitters_oracle() -> str:
 def corpus_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog distinct-trigram counts per language: the exact
     count-distinct (the run-once certification path) next to the
-    seeded-register HLL estimate and a 5%-relative-error bit —
-    round-15 catalog admission candidate per the PARITY rotation
-    ledger; until then verified by tests/test_hll.py every pytest run
-    and measured through the catalog EXTRA_ENTRIES registry."""
+    seeded-register HLL estimate and a 5%-relative-error bit; verified
+    by tests/test_hll.py every pytest run."""
     from ..functions import sketch as SK
 
     return SK.hll_distinct_grams(_docs(spark, sf_dir))
@@ -189,9 +182,8 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the bounded driver-side greedy merge loop — the HF-tokenizers
     shape.  No SQL oracle (the merge loop is an iterative algorithm,
     the brief's rows-only class); cross-checked against a pure-Python
-    reference in tests/test_bpe_learn.py every pytest run.  Staged
-    round 11 → fronts round 12 per the rotation ledger; the APPLY side
-    is `bpe_encode_stats` (r17 slot)."""
+    reference in tests/test_bpe_learn.py every pytest run.  The APPLY
+    side is `bpe_encode_stats`."""
     from ..functions import text as TT
 
     return TT.bpe_learn(_docs(spark, sf_dir))
@@ -206,8 +198,8 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     No SQL oracle (the encode loop is iterative, the brief's rows-only
     class); the subwords_md5 column is a per-doc determinism witness a
     pure-Python reference reproduces bit-for-bit every pytest run
-    (tests/test_bpe_encode.py).  Round-17 admission candidate per the
-    rotation ledger; measured through EXTRA_ENTRIES."""
+    (tests/test_bpe_encode.py).  Measured through the catalog
+    EXTRA_ENTRIES registry."""
     from ..functions import text as TT
 
     docs = _docs(spark, sf_dir)
@@ -220,8 +212,8 @@ def vocab_jaccard_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     & Kaplan 2007 / Broder 1997): the k-row-per-group element sketch
     makes the pairwise Jaccard estimate constant-cost regardless of set
     size; the exact Jaccard runs as the run-once certification side.
-    Post-runway extension measured through the catalog EXTRA_ENTRIES
-    registry; verified by tests/test_kmv_jaccard.py every pytest run."""
+    Measured through the catalog EXTRA_ENTRIES registry; verified by
+    tests/test_kmv_jaccard.py every pytest run."""
     from ..functions import sketch as SK
 
     return SK.kmv_group_jaccard(_docs(spark, sf_dir))
@@ -238,9 +230,8 @@ def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     2003 — MOSS): per-window rightmost-minimum gram hashes with the
     shared-run detection guarantee the single-global-min
     ``doc_fingerprint`` cannot give.  One map pass, shuffle only for
-    the final distinct.  Staged round 11 → fronts round 12 per the
-    rotation ledger; verified by tests/test_winnowing.py every pytest
-    run."""
+    the final distinct; verified by tests/test_winnowing.py every
+    pytest run."""
     return T.winnow_fingerprints(D.spread_for_compute(_docs(spark, sf_dir)))
 
 
@@ -253,10 +244,8 @@ def dedup_repeated_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     document rewritten with its corpus-frequent k-token windows dropped
     (Raffel et al. 2020 §2.2 / Wenzek et al. 2020 — the rewrite sibling
     of the flag-only ``dedup_substring_ngram``).  One DF-count shuffle +
-    one anti-join + one per-doc rebuild; output linear in corpus size.
-    Post-runway extension measured through the catalog EXTRA_ENTRIES
-    registry; verified by tests/test_segment_dedup.py every pytest
-    run."""
+    one anti-join + one per-doc rebuild; output linear in corpus size;
+    verified by tests/test_segment_dedup.py every pytest run."""
     return D.repeated_segment_removal(_docs(spark, sf_dir))
 
 
@@ -270,10 +259,9 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     >= PPJOIN_TAU (0.75 — the measured default in functions/dedup.py;
     the threshold is exact at any tau, tested down to 0.3), with the
     provably-complete candidate pruning the heuristic
-    LSH/df-cap paths trade away — round-19 catalog admission candidate
-    per the PARITY rotation ledger; until then verified by
-    tests/test_prefix_join.py every pytest run and measured through the
-    catalog EXTRA_ENTRIES registry."""
+    LSH/df-cap paths trade away; verified by tests/test_prefix_join.py
+    every pytest run and measured through the catalog EXTRA_ENTRIES
+    registry."""
     return D.jaccard_prefix_join(_docs(spark, sf_dir))
 
 
@@ -314,10 +302,9 @@ def _jaccard_prefix_collapsed_oracle() -> str:
 
 def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval: the top-k documents per fixed query with
-    rounded scores and per-query ranks — round-16 catalog admission
-    candidate per the PARITY rotation ledger; until then verified by
-    tests/test_bm25.py every pytest run and measured through the
-    catalog EXTRA_ENTRIES registry."""
+    rounded scores and per-query ranks; verified by tests/test_bm25.py
+    every pytest run and measured through the catalog EXTRA_ENTRIES
+    registry."""
     from ..functions import retrieval as R
 
     return R.bm25_topk(_docs(spark, sf_dir))
@@ -403,8 +390,7 @@ def bm25_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the inline :func:`~waimak_spark.functions.retrieval.bm25_topk`
     (asserted every pytest run — tests/test_bm25_stored.py — which is
     why this entry sits in the extras registry's permanent
-    output-identity-sibling class: `bm25_search` holds the family's
-    official driver row, r14 per the ledger)."""
+    output-identity-sibling class beside `bm25_search`)."""
     from ..functions import retrieval as R
 
     tbl = _bm25_index_table(spark, sf_dir)
@@ -426,10 +412,8 @@ def _bm25_probe_stored_oracle() -> str:
 def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid sparse+dense retrieval: BM25 and embedding-cosine ranked
     lists per fixed query, fused with Reciprocal Rank Fusion (Cormack
-    et al. 2009) — round-18 catalog admission candidate per the PARITY
-    rotation ledger; until then verified by tests/test_hybrid_rrf.py
-    every pytest run and measured through the catalog EXTRA_ENTRIES
-    registry."""
+    et al. 2009); verified by tests/test_hybrid_rrf.py every pytest run
+    and measured through the catalog EXTRA_ENTRIES registry."""
     from ..functions import retrieval as R
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -470,7 +454,6 @@ ENTRIES = {
     "dedup_minhash_verified_resolve": {
         "fn": dedup_minhash_verified_resolve,
         "oracle": D.minhash_verified_resolve_sql()},
-    # round-11 STAGED admissions (front round 12 per the rotation ledger)
     "corpus_heavy_hitters": {"fn": corpus_heavy_hitters,
                              "oracle": _heavy_hitters_oracle()},
     # rows-only by design: the greedy merge loop is iterative (the
@@ -479,7 +462,6 @@ ENTRIES = {
     "bpe_merges": {"fn": bpe_merges, "oracle": None},
     "doc_winnow_fingerprints": {"fn": doc_winnow_fingerprints,
                                 "oracle": _winnow_oracle()},
-    # round-12 STAGED admissions (front round 13 per the rotation ledger)
     "corpus_distinct_hll": {"fn": corpus_distinct_hll,
                             "oracle": _distinct_hll_oracle()},
     "dedup_repeated_segments": {"fn": dedup_repeated_segments,

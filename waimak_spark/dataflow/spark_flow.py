@@ -154,7 +154,7 @@ class SparkDataFlow(DataFlow):
         _validate_label(label)
 
         def body(_i: DataFlowEntities, c: SparkFlowContext):
-            return [read_parquet(c.spark, path, options)]
+            return [read_parquet(c.spark, path, options=options)]
 
         return self.add_action(SimpleAction([], [label], body, name=f"openParquet:{label}"))
 

@@ -34,7 +34,8 @@ listing costs a fixed number of py4j round trips whatever the file count;
 a listing over more paths than
 ``spark.sql.sources.parallelPartitionDiscovery.threshold`` runs Spark's
 parallel-listing job, as the read's own listing does.  ``read_parquet`` is
-the engine's Parquet read, given that schema whenever there is one.
+the engine's one Parquet read: it passes the caller's schema when given
+one, else the schema ``parquet_schema`` reads whenever there is one.
 """
 
 from __future__ import annotations
@@ -52,6 +53,7 @@ from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (ArrayType, DataType, MapType, StructField,
                                StructType)
+from pyspark.sql.utils import to_str
 
 _SUMMARY_FILES = ("_common_metadata", "_metadata")  # in Spark's preference
 
@@ -181,21 +183,31 @@ def parquet_schema(spark: SparkSession, path: str,
         json.loads(found.json()))
 
 
-def read_parquet(spark: SparkSession, path: str,
-                 options: dict[str, str] | None = None) -> DataFrame:
-    """``spark.read.options(**options).parquet(path)``, given the schema
+def read_parquet(spark: SparkSession, *paths: str,
+                 options: dict[str, str] | None = None,
+                 schema: StructType | None = None) -> DataFrame:
+    """``spark.read.options(**options).schema(schema).parquet(*paths)``.
+    With no ``schema``, one path and no options, the schema is the one
     :func:`parquet_schema` reads when it has one, so the read infers
-    nothing.  The schema goes to the reader as the JVM object: PySpark's
+    nothing.  The read is built on the JVM reader: PySpark's
     ``DataFrameReader.schema`` looks up (or builds) the thread's active
     session first, a dozen round trips on a flow's worker thread."""
-    if options:
-        return spark.read.options(**options).parquet(path)
-    paths = _jvm_refs(spark._jvm).one_path(path)
-    schema = _footer_schema(spark, paths)
-    if schema is None:
-        return spark.read.parquet(path)
-    return DataFrame(spark._jsparkSession.read().schema(schema).parquet(paths),
-                     spark)
+    seq = _jvm_refs(spark._jvm).one_path(paths[-1])
+    for p in reversed(paths[:-1]):
+        seq = getattr(seq, "$colon$colon")(p)
+    jsession = spark._jsparkSession
+    if schema is not None:
+        jschema = jsession.parseDataType(schema.json())
+    elif options or len(paths) > 1:
+        jschema = None
+    else:
+        jschema = _footer_schema(spark, seq)
+    reader = jsession.read()
+    for key, value in (options or {}).items():
+        reader = reader.option(key, to_str(value))
+    if jschema is not None:
+        reader = reader.schema(jschema)
+    return DataFrame(reader.parquet(seq), spark)
 
 
 class FileOps:

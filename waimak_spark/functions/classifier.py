@@ -7,8 +7,7 @@ training-data pipelines (the role fastText plays in CCNet, Wenzek et
 al. 2020: label a small "looks high-quality" slice, fit a fast linear
 text classifier, score the whole corpus).  The reference (waimak) has
 no classifier surface; this is the training-data-pipeline extension
-family (round-19 catalog admission candidate per PARITY's rotation
-ledger).
+family.
 
 Shape of the model: features are token-hash buckets (md5 % B — the
 DSIR hashing), the class-conditional token model is add-alpha

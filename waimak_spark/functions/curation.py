@@ -471,8 +471,7 @@ def lang_mixture_weights_sql(table: str = "documents",
 # score raw documents by how target-like they are under two hashed
 # bag-of-n-grams language models, then resample with Gumbel top-k.
 # The reference (waimak) has no data-selection surface; this is the
-# training-data-pipeline extension family (round-9 catalog candidate —
-# see PARITY.md's rotation ledger).
+# training-data-pipeline extension family.
 #
 # log w(x) = sum over x's grams g of  llr[bucket(g)]
 #   llr[b] = ln((ct_b + a) / (T + aB)) - ln((cr_b + a) / (R + aB))

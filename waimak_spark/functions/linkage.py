@@ -2,8 +2,7 @@
 Fellegi-Sunter-style scoring + ground-truth evaluation (Fellegi &
 Sunter 1969, JASA 64(328); blocking taxonomy per Christen 2012,
 "Data Matching", Springer ch. 4).  The reference (waimak) has no
-linkage surface; this is the training-data-pipeline extension family
-(round-20 catalog admission candidate per PARITY's rotation ledger) —
+linkage surface; this is the training-data-pipeline extension family —
 the structured-records sibling of the text dedup family: the same
 "bucket then compare" shape, applied to typed columns instead of
 shingles.

@@ -3,8 +3,7 @@ Zaragoza 2009, Foundations and Trends in IR 3(4); idf in the
 always-positive Lucene form ``ln(1 + (N - df + 0.5)/(df + 0.5))``).
 
 The reference (waimak) has no retrieval surface; this is the
-training-data-pipeline extension family (round-16 catalog admission
-candidate per PARITY's rotation ledger) — the standard tool for
+training-data-pipeline extension family — the standard tool for
 query-targeted corpus curation (pulling the documents most relevant to
 a benchmark/topic before a finer importance weighting like DSIR).
 
@@ -209,8 +208,7 @@ def bm25_topk_sql(queries=BM25_QUERIES, k: int = BM25_TOPK,
 # lists of 1/(K + rank_list(d)), K=60 — the standard fusion for
 # combining a lexical ranker with an embedding ranker without score
 # calibration).  The reference (waimak) has no retrieval surface; this
-# is the training-data-pipeline extension family (round-18 catalog
-# admission candidate per PARITY's rotation ledger) — the standard
+# is the training-data-pipeline extension family — the standard
 # query-targeted curation front-end when the corpus carries BOTH text
 # and embeddings (the testdata documents/embeddings tables share one
 # id space by construction).

@@ -1639,8 +1639,7 @@ def semantic_dedup_sql(min_cosine: float = SEMDEDUP_TAU,
 # family (brute force, LSH, IVF, int8, stored IVF) with the 100 TB memory
 # path: at PQ_M=32 codes a 64-dim float64 corpus compresses 16x (32
 # single-byte codes vs 512 bytes), so the scan the probe pays is
-# code-bandwidth, not vector-bandwidth.  Round-10 catalog candidate per PARITY's rotation
-# ledger.
+# code-bandwidth, not vector-bandwidth.
 #
 # Scale shape: the fit is n_iters Arrow-kernel assignment passes over the
 # materialized base plus one BOUNDED collect per round (m*k*sub_dims =

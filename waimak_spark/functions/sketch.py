@@ -4,8 +4,7 @@ the counting sibling of the Bloom membership filter in
 :mod:`waimak_spark.functions.dedup`.
 
 The reference (waimak) has no sketch surface; this is the
-training-data-pipeline extension family (round-14 catalog admission
-candidate per PARITY's rotation ledger).  The 100 TB story: a full gram
+training-data-pipeline extension family.  The 100 TB story: a full gram
 ``groupBy`` keyed on the gram string shuffles one row per DISTINCT gram
 — unbounded state that grows with the corpus; the sketch's state is
 ``CMS_DEPTH × CMS_WIDTH`` cells REGARDLESS of corpus size (65 536 longs

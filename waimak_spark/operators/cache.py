@@ -38,7 +38,7 @@ from ..dataflow.flow import (
 )
 from ..dataflow.interceptor import PostActionInterceptor
 from ..dataflow.spark_flow import CONF_CACHE_ONLY_REUSED
-from ..filesystem import nullable
+from ..filesystem import nullable, read_parquet
 
 
 def _producer(flow: DataFlow, label: str):
@@ -123,7 +123,7 @@ def materialize(context, df: DataFrame, path: str,
     keys = {c.lower() for c in partition_cols}
     schema = StructType([f for f in nullable(written.schema).fields
                          if f.name.lower() not in keys])
-    return context.spark.read.schema(schema).parquet(path)
+    return read_parquet(context.spark, path, schema=schema)
 
 
 class CacheAsParquetExtension(MetadataExtension):

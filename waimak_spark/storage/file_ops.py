@@ -30,7 +30,7 @@ from typing import TYPE_CHECKING, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from ..filesystem import FileOps
+from ..filesystem import FileOps, read_parquet
 
 if TYPE_CHECKING:  # pragma: no cover
     from .audit import AuditTableInfo, AuditTableRegionInfo
@@ -64,16 +64,15 @@ class FileStorageOps:
         """
         if not paths or not all(self.fops.exists(p) for p in paths):
             return None
-        reader = self.spark.read.option("mergeSchema", "true")
-        if schema is not None:
-            reader = reader.schema(schema)
         try:
             # no basePath: a table-root read discovers the
             # de_store_type/de_store_region partition columns from the
             # directory layout, while a direct region-directory read
             # (compaction merge) sees only the data columns — exactly the
             # reference's openParquet behaviour
-            return reader.parquet(*paths)
+            return read_parquet(self.spark, *paths,
+                                options={"mergeSchema": "true"},
+                                schema=schema)
         except Exception as e:  # AnalysisException: no footers to infer from
             if "infer schema" in str(e).lower() or "PATH_NOT_FOUND" in str(e):
                 return None
