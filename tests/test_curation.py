@@ -101,8 +101,8 @@ class TestDupFraction:
              (1, ["a", "b", "c"]),          # none
              (2, [])],                      # empty -> 0.0
             "id bigint, arr array<string>")
-        out = {r.id: r.f for r in df.select(
-            "id", C.dup_fraction(F.col("arr")).alias("f")).collect()}
+        out = {r.id: r.f for r in df.selectExpr(
+            "id", f"{C.dup_fraction_sexpr('arr')} as f").collect()}
         assert out[0] == pytest.approx(0.75)
         assert out[1] == pytest.approx(0.0)
         assert out[2] == pytest.approx(0.0)
@@ -163,9 +163,9 @@ class TestDecontamination:
         from waimak_spark.functions import text as T
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        sh = docs.select(
-            "doc_id",
-            F.explode(T.shingles(T.tokens(F.col("text")), 3)).alias("s"))
+        sh = (docs.selectExpr("doc_id", f"{T.tokens_sexpr('text')} as t")
+              .selectExpr("doc_id",
+                          f"explode({T.shingles_sexpr('t', 3)}) as s"))
         bench = {r.s for r in
                  sh.where(F.col("doc_id") <= BENCHMARK_DOC_MAX).collect()}
         surv = decontaminate_against_benchmark(spark, sf_dir)
@@ -184,8 +184,8 @@ class TestDupFractionNulls:
         df = spark.createDataFrame(
             [(0, ["a", "a", None, "b"]), (1, [None, None])],
             "id bigint, arr array<string>")
-        got = {r.id: r.f for r in df.select(
-            "id", C.dup_fraction(F.col("arr")).alias("f")).collect()}
+        got = {r.id: r.f for r in df.selectExpr(
+            "id", f"{C.dup_fraction_sexpr('arr')} as f").collect()}
         for i, arr in [(0, "['a','a',NULL,'b']"), (1, "[NULL,NULL]")]:
             want = duckdb.sql(
                 "select round(case when len(x) > 0 then "

@@ -75,7 +75,8 @@ def test_redaction_idempotent_and_complete(spark, texts):
 def test_dup_fraction_bounds(spark, arrays):
     df = spark.createDataFrame([(i, a) for i, a in enumerate(arrays)],
                                "id bigint, arr array<string>")
-    rows = df.select("id", C.dup_fraction(F.col("arr")).alias("f")).collect()
+    rows = df.selectExpr(
+        "id", f"{C.dup_fraction_sexpr('arr')} as f").collect()
     for r in rows:
         arr = arrays[r.id]
         assert 0.0 <= r.f <= 1.0

@@ -1,8 +1,8 @@
-"""dvec_lit / dmat_lit: the single-parse double-array literal must be
-plan- and bit-identical to the Column-by-Column ``F.lit`` form it
-replaces (round-11 F6: the element-by-element form pays ~5 py4j driver
-round-trips per element — a 16x64 centroid matrix was ~5k round-trips
-of single-threaded driver time per query construction)."""
+"""dvec_sexpr / dmat_sexpr: the single-parse double-array literal must
+be plan- and bit-identical to the Column-by-Column ``F.lit`` form (which
+pays ~5 py4j driver round-trips per element — a 16x64 centroid matrix is
+~5k round-trips of single-threaded driver time per query
+construction)."""
 
 import re
 import struct
@@ -10,7 +10,7 @@ import struct
 import pyspark.sql.functions as F
 import pytest
 
-from waimak_spark.functions.util import dmat_lit, dvec_lit, dvec_sexpr
+from waimak_spark.functions.util import dmat_sexpr, dvec_lit, dvec_sexpr
 
 EDGE_VALUES = [6.103515625e-05, -0.0, 0.0, 1.0, -1.0,
                1e300, -1.7976931348623157e308, 5e-324,
@@ -19,10 +19,17 @@ EDGE_VALUES = [6.103515625e-05, -0.0, 0.0, 1.0, -1.0,
 
 def _norm_plan(df) -> str:
     """Analyzed plan string modulo expression IDs and lambda-variable
-    fresh names (both are construction-order counters, not semantics)."""
+    names (construction-order counters and spellings, not semantics)."""
     s = df._jdf.queryExecution().analyzed().toString()
     s = re.sub(r"#\d+", "#", s)
-    return re.sub(r"(lambda '?[a-z]+)_\d+", r"\1_", s)
+    return re.sub(r"lambda '?\w+#", "lambda _#", s)
+
+
+def _col_dot(a, b):
+    """Column-built sequential dot: the independent reference the
+    ``dot_sexpr`` fragment is compared against."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                       F.lit(0.0).cast("double"), lambda acc, v: acc + v)
 
 
 class TestDvecLit:
@@ -37,7 +44,7 @@ class TestDvecLit:
 
     def test_matrix_bit_identity(self, spark):
         m = [[1.5, -2.5e-10], [0.0, -0.0], [5e-324, 1e300]]
-        df = spark.range(1).select(dmat_lit(m).alias("a"),
+        df = spark.range(1).select(F.expr(dmat_sexpr(m)).alias("a"),
                                    F.lit(m).alias("b"))
         row = df.collect()[0]
         assert [[struct.pack("d", x) for x in r] for r in row["a"]] == \
@@ -45,22 +52,19 @@ class TestDvecLit:
         assert df.schema["a"].dataType == df.schema["b"].dataType
 
     def test_analyzed_plan_identical_in_consumer(self, spark):
-        """The _ivf_scores shape (zip_with over the two literals) — the
-        hottest consumer — analyzed-plan-identical to the F.lit form."""
+        """The _ivf_scores fragment (zip_with over the two literals) —
+        the hottest consumer — analyzed-plan-identical to the same shape
+        built from Columns over ``F.lit`` literals."""
         from waimak_spark.functions import similarity as S
 
         M = S._centroid_matrix(4, 8)
         N = S._centroid_norms(4, 8)
         base = spark.range(1).select(F.array(F.lit(1.0)).alias("v"))
-
-        def scores(cents, norms):
-            return F.zip_with(
-                cents, norms,
-                lambda w, n2: n2 - 2.0 * S.dot(F.col("v"), w))
-
-        old = _norm_plan(base.select(scores(F.lit(M), F.lit(N)).alias("s")))
+        old = _norm_plan(base.select(F.zip_with(
+            F.lit(M), F.lit(N),
+            lambda w, n2: n2 - 2.0 * _col_dot(F.col("v"), w)).alias("s")))
         new = _norm_plan(base.select(
-            scores(dmat_lit(M), dvec_lit(N)).alias("s")))
+            F.expr(S._ivf_scores("v", 4, 8)).alias("s")))
         assert old == new
 
     def test_sexpr_is_one_parse(self):
@@ -68,11 +72,11 @@ class TestDvecLit:
         assert s == "array(1.0D,-2.0D)"
 
     def test_unit_base_sexpr_matches_column_form(self, spark, sf_dir):
-        """round-11 F6 follow-up: _pq_unit_base and valid_embeddings as
-        parsed SQL strings (439 -> 22 round-trips) must keep the
-        OPTIMIZED plan identical to the Column form modulo expression
-        IDs and lambda variable names (SQL can't reproduce pyspark's
-        positional x/y renaming without shadowing), and the output
+        """_pq_unit_base and valid_embeddings as parsed SQL strings
+        must keep the OPTIMIZED plan identical to the Column form
+        modulo expression IDs and lambda variable names (SQL can't
+        reproduce pyspark's positional x/y renaming without shadowing),
+        and the output
         bit-identical — the value check is what makes the
         alpha-blind plan comparison sound."""
         import pyspark.sql.functions as F
@@ -93,7 +97,7 @@ class TestDvecLit:
             base = (old_valid(emb, dims, vec_col)
                     .select(F.col(id_col),
                             S.as_double(F.col(vec_col)).alias("raw")))
-            nrm = F.sqrt(S.dot(F.col("raw"), F.col("raw")))
+            nrm = F.sqrt(_col_dot(F.col("raw"), F.col("raw")))
             unit = F.element_at(
                 F.transform(F.array(nrm),
                             lambda n: F.transform(F.col("raw"),

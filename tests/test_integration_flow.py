@@ -149,13 +149,12 @@ def test_curation_pipeline_through_flow(spark, tmp_path):
     out = str(tmp_path / "curated_dataset")
 
     def gate(df):
-        return df.where(
-            (F.col("lang") == "en")
-            & (F.size(T.tokens(F.col("text"))) >= PIPE_MIN_TOKENS))
+        return df.where(f"lang = 'en' and size({T.tokens_sexpr('text')}) "
+                        f">= {PIPE_MIN_TOKENS}")
 
     def dedup(df):
-        hashed = df.select("doc_id", "source",
-                           T.md5_hash32(F.col("text")).alias("_h"))
+        hashed = df.selectExpr("doc_id", "source",
+                               f"{T.md5_hash32_sexpr('text')} as _h")
         keep = hashed.groupBy("_h").agg(F.min("doc_id").alias("doc_id"))
         return hashed.join(keep, ["_h", "doc_id"]).select("doc_id", "source")
 

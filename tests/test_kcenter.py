@@ -176,14 +176,15 @@ class TestKCenterSemantics:
 
         from waimak_spark.functions.similarity import (
             _pq_unit_base,
-            dot,
+            dot_sexpr,
         )
+        from waimak_spark.functions.util import dvec_sexpr
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         base = _pq_unit_base(emb, 64, "vec_id", "embedding")
-        lit_vec = F.array(*[F.lit(1.0 / 8.0)] * 64)
+        lit_vec = dvec_sexpr([1.0 / 8.0] * 64)
         probe = (base.withColumn(
-            "_md", F.round(F.lit(1.0) - dot(F.col("v"), lit_vec), 4))
+            "_md", F.expr(f"round(1.0D - {dot_sexpr('v', lit_vec)}, 4)"))
             .orderBy(F.desc("_md"), F.asc("vec_id")).limit(1))
         plan = probe._jdf.queryExecution().executedPlan().toString()
         assert "TakeOrderedAndProject" in plan

@@ -13,9 +13,10 @@ from pyspark.sql import functions as F
 from waimak_spark.functions import similarity as S
 from waimak_spark.functions.text import (
     distinct_shingle_kernel,
-    shingles,
-    tokens,
+    shingles_sexpr,
+    tokens_sexpr,
 )
+from waimak_spark.functions.util import dvec_sexpr
 
 finite = st.floats(allow_nan=False, allow_infinity=False,
                    min_value=-1e6, max_value=1e6, width=64)
@@ -31,7 +32,7 @@ def test_lsh_bucket_kernel_matches_expression(spark, vecs):
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vecs)],
                                "id int, v array<double>")
     expr = {r["id"]: r["b"] for r in df.select(
-        "id", S.lsh_bucket(F.col("v"), 4, DIMS).alias("b")).collect()}
+        "id", S.lsh_bucket("v", 4, DIMS).alias("b")).collect()}
     feat = S._lsh_features(4, DIMS)
     kern = {r["id"]: (r["f"]["bucket"], r["f"]["nrm"]) for r in df.select(
         "id", feat(F.col("v")).alias("f")).collect()}
@@ -52,10 +53,10 @@ def test_ivf_cell_kernel_matches_expression(spark, vecs):
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vecs)],
                                "id int, v array<double>")
     expr = {r["id"]: r["c"] for r in df.select(
-        "id", S.ivf_cell(F.col("v"), 4, DIMS).alias("c")).collect()}
+        "id", S.ivf_cell("v", 4, DIMS).alias("c")).collect()}
     probes_expr = {r["id"]: r["p"] for r in df.select(
         "id",
-        S.ivf_probe_cells(F.col("v"), 4, DIMS, nprobe=2).alias("p"))
+        S.ivf_probe_cells("v", 4, DIMS, nprobe=2).alias("p"))
         .collect()}
     ckern = S._ivf_corpus_features(4, DIMS)
     qkern = S._ivf_query_features(4, DIMS, nprobe=2)
@@ -77,7 +78,7 @@ def test_pair_dot_matches_expression_dot(spark, vecs):
     df = spark.createDataFrame(
         rows, "id int, a array<double>, b array<double>")
     expr = {r["id"]: r["d"] for r in df.select(
-        "id", S.dot(F.col("a"), F.col("b")).alias("d")).collect()}
+        "id", F.expr(S.dot_sexpr("a", "b")).alias("d")).collect()}
     kern = {r["id"]: r["d"] for r in df.select(
         "id", S._pair_dot(F.col("a"), F.col("b")).alias("d")).collect()}
     for i in expr:
@@ -99,10 +100,9 @@ _texts = st.lists(
 def test_shingle_kernel_matches_expression(spark, docs):
     df = spark.createDataFrame([(i, t) for i, t in enumerate(docs)],
                                "id int, text string")
-    expr = {r["id"]: list(r["sh"]) for r in df.select(
-        "id",
-        F.array_distinct(shingles(tokens(F.col("text")), 2)).alias("sh"))
-        .collect()}
+    sh = shingles_sexpr(tokens_sexpr("text"), 2)
+    expr = {r["id"]: list(r["sh"]) for r in df.selectExpr(
+        "id", f"array_distinct({sh}) as sh").collect()}
     kern = {r["id"]: list(r["sh"]) for r in df.select(
         "id", distinct_shingle_kernel(2)(F.col("text")).alias("sh"))
         .collect()}
@@ -128,10 +128,10 @@ def test_kmeans_assign_kernel_matches_expression(spark, vecs):
         "id", S._kmeans_assign_kernel(W)(F.col("v")).alias("c")).collect()}
     n2 = S._seq_norms(W)
     scores = [
-        F.lit(n2[c]) - 2.0 * S.dot(F.col("v"), F.lit(W[c]))
+        f"{n2[c]!r}D - 2.0D * {S.dot_sexpr('v', dvec_sexpr(W[c]))}"
         for c in range(k)
     ]
-    arr = F.array(*scores)
+    arr = F.expr(f"array({', '.join(scores)})")
     expr_c = F.expr(
         "array_position(arr, array_min(arr))")
     expr = {r["id"]: r["c"] for r in df.select(

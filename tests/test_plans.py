@@ -40,22 +40,18 @@ NEVER_ACCEPTABLE = ("CartesianProduct", "BroadcastNestedLoopJoin")
 #   (corpus doc count + sum of sqrt weights — the mixture normalizer)
 # - q11_important_parts crosses with the ONE-row global-value aggregate
 #   (the HAVING-vs-global threshold; the > residual can't hash-join)
-# - sample_lang_balanced composes lang_mixture_weights, inheriting its
-#   1-row totals broadcast cross
-# (ann_int8_recall's waiver left with its round-10 catalog retirement;
-# dedup_ngram_jaccard's 1-row-count waiver left with its round-11
-# retirement — the entry stays locked via tests/test_retired_entries.py
-# but no longer runs in this sweep)
+# Only catalog entries are swept here: retired entries keep their DuckDB
+# lockstep (tests/test_retired_entries.py), and the hybrid_search_rrf
+# extra locks its BNLJ count in tests/test_hybrid_rrf.py.
 CROSS_OK = {"ann_brute_force_topk",
             "tfidf_top_terms", "q22_wealthy_inactive", "ann_ivf_recall",
             "unigram_logprob", "bigram_logprob", "lang_mixture_weights",
-            "q11_important_parts", "sample_lang_balanced",
-            # pre-wired for its r18 admission (extras until then):
-            # hybrid_search_rrf composes BM25's 1-row corpus-stats cross
-            # + brute-force's <=|queries|-row query cross — both
-            # whitelisted tiny-side broadcasts, <=2 BNLJ locked in
-            # tests/test_hybrid_rrf.py meanwhile
-            "hybrid_search_rrf"}
+            "q11_important_parts"}
+
+
+def test_cross_waivers_name_catalog_entries():
+    # a waiver for a name the sweep never builds is dead weight
+    assert CROSS_OK <= set(ALL_ENTRIES), CROSS_OK - set(ALL_ENTRIES)
 
 
 @pytest.mark.parametrize("name", sorted(ALL_ENTRIES))

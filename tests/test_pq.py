@@ -250,7 +250,7 @@ class TestIvfPq:
                 F.col("v")).alias("f")).collect()}
         probes = {r.vec_id: list(r.p) for r in base.where(
             F.col("vec_id").isin([1, 7])).select(
-            "vec_id", ivf_probe_cells(F.col("v")).alias("p")).collect()}
+            "vec_id", ivf_probe_cells("v").alias("p")).collect()}
         for r in ivf_pq_topk(emb, books, [1, 7], k=10).collect():
             assert cells[r.neighbor_id] in probes[r.query_id]
 

@@ -8,7 +8,6 @@ import math
 
 import duckdb
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from waimak_spark.functions.classifier import (
     QC_ALPHA,
@@ -237,7 +236,7 @@ class TestStreamingQualityScores:
         df = spark.createDataFrame(
             [Row(doc_id=i, text=t) for i, t in texts.items()])
         _l, _g, llr_rows, lp = nb_fit(df)
-        cols = nb_score_columns(F.col("text"), llr_rows, lp)
+        cols = nb_score_columns("text", llr_rows, lp)
         per_row = {r.doc_id: (r.y, r.score) for r in df.select(
             "doc_id", cols["y"].alias("y"),
             cols["score"].alias("score")).collect()}

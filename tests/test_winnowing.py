@@ -70,11 +70,11 @@ class TestWinnowOracle:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         from pyspark.sql import functions as F
 
-        from waimak_spark.functions.text import shingles, tokens
+        from waimak_spark.functions.text import shingles_sexpr, tokens_sexpr
 
         n_grams = (docs.where("text is not null")
-                   .select(F.size(shingles(tokens(F.col("text")),
-                                           WINNOW_K)).alias("n"))
+                   .selectExpr(f"{tokens_sexpr('text')} as t")
+                   .selectExpr(f"size({shingles_sexpr('t', WINNOW_K)}) as n")
                    .agg(F.sum(F.greatest(F.col("n"), F.lit(0))))
                    .collect()[0][0])
         density = n_fps / n_grams

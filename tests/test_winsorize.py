@@ -40,7 +40,6 @@ class TestWinsorized:
         """100 values 1..99 + one huge outlier: p99 clips the outlier,
         p01 clips the minimum, counts land exactly where the quantile
         definition says."""
-        from waimak_spark.functions.text import md5_hash32  # noqa: F401
         from waimak_spark.catalog.events import events_value_winsorized
 
         rows = ([Row(event_id=i, user_id=1, event_type="t",

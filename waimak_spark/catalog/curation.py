@@ -127,9 +127,8 @@ PII_ORACLE = f"""
 def repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staged projections: interpreted higher-order expressions get no CSE,
     # so tokens and shingles are materialised as column refs before the
-    # dup-fraction expressions reference them repeatedly
-    # round 12: every stage parses as ONE SQL string (the F6 recipe —
-    # the Column/lambda forms paid ~790 py4j round-trips; same trees)
+    # dup-fraction expressions reference them repeatedly; every stage
+    # parses as ONE SQL string
     df = _docs(spark, sf_dir)
     tk = df.selectExpr("doc_id", f"{T.tokens_sexpr('`text`')} as _t")
     sh = tk.selectExpr(
@@ -176,10 +175,9 @@ def dedup_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = _docs(spark, sf_dir)
     is_corpus = F.col("source").isin(CORPUS_SOURCES)
-    corpus_h = docs.where(is_corpus).select(
-        T.md5_hash32(F.col("text")).alias("_h"))
-    new = docs.where(~is_corpus).select(
-        "doc_id", "source", T.md5_hash32(F.col("text")).alias("_h"))
+    h = f"{T.md5_hash32_sexpr('text')} as _h"
+    corpus_h = docs.where(is_corpus).selectExpr(h)
+    new = docs.where(~is_corpus).selectExpr("doc_id", "source", h)
     return (new.join(corpus_h, "_h", "left_anti")
             .select("doc_id", "source"))
 
@@ -480,9 +478,8 @@ EMB_DIM = 64
 
 def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # one parsed string per aggregate, not ~7 py4j Column calls each
-    # (round-11 F6 construction-tax recipe); `embedding[i]` subscripts
-    # are 0-based GetArrayItem on both forms — same expression tree
+    # one parsed string per aggregate; `embedding[i]` subscripts are
+    # 0-based GetArrayItem
     avgs = [
         F.expr(f"round(avg(cast(embedding[{i}] as double)), 4) "
                f"as c{i:02d}")
@@ -562,10 +559,9 @@ PIPE_SEED = 11
 def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _docs(spark, sf_dir)
     gated = df.where(
-        (F.col("lang") == "en")
-        & (F.size(T.tokens(F.col("text"))) >= PIPE_MIN_TOKENS))
-    hashed = gated.select(
-        "doc_id", "source", T.md5_hash32(F.col("text")).alias("_h"))
+        f"lang = 'en' and size({T.tokens_sexpr('text')}) >= {PIPE_MIN_TOKENS}")
+    hashed = gated.selectExpr(
+        "doc_id", "source", f"{T.md5_hash32_sexpr('text')} as _h")
     keep = (hashed.groupBy("_h").agg(F.min("doc_id").alias("doc_id")))
     deduped = hashed.join(keep, ["_h", "doc_id"]).select("doc_id", "source")
     sampled = deduped.where(
@@ -613,13 +609,14 @@ BENCHMARK_DOC_MAX = 9  # doc_id <= 9 plays the held-out benchmark
 def _shingle_hashes(df: DataFrame) -> DataFrame:
     # routed through shingle_base: the shared spread+persist pipeline is
     # the collapse barrier — plain staged projections get merged back by
-    # CollapseProject, re-running tokens() per element_at (O(tokens²));
+    # CollapseProject, re-running the tokenizer per element_at
+    # (O(tokens²));
     # distinct-per-doc shingles don't change membership semantics
     from ..functions.dedup import shingle_base
 
     base = shingle_base(df)
     return (base.select("doc_id", F.explode("_sh").alias("_e"))
-            .select("doc_id", T.md5_hash32(F.col("_e")).alias("_h")))
+            .selectExpr("doc_id", f"{T.md5_hash32_sexpr('_e')} as _h"))
 
 
 def decontaminate_against_benchmark(spark: SparkSession,
@@ -732,8 +729,8 @@ VOCAB_TOP_K = 100
 
 def corpus_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    tok = docs.select(
-        "doc_id", F.explode(T.tokens(F.col("text"))).alias("token"))
+    tok = docs.selectExpr(
+        "doc_id", f"explode({T.tokens_sexpr('text')}) as token")
     freq = tok.groupBy("token").agg(
         F.count("*").alias("tf"),
         F.countDistinct("doc_id").alias("df"))
@@ -772,8 +769,8 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     n_docs = docs.select(F.count("*").alias("_n"))
-    tok = docs.select(
-        "doc_id", F.explode(T.tokens(F.col("text"))).alias("token"))
+    tok = docs.selectExpr(
+        "doc_id", f"explode({T.tokens_sexpr('text')}) as token")
     tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
     scored = (tf.join(dfreq, "token")

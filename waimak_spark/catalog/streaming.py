@@ -788,7 +788,7 @@ def streaming_quality_scores(spark: SparkSession,
     src = (run.readStream.schema(schema)
            .option("pathGlobFilter", "documents.parquet")
            .parquet(sf_dir))
-    cols = QC.nb_score_columns(F.col("text"), llr_rows, lp)
+    cols = QC.nb_score_columns("text", llr_rows, lp)
     scored = src.select(
         F.col("doc_id"),
         cols["y"].alias("y"),

@@ -15,13 +15,13 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _docs(spark, sf_dir)
-    cols = T.quality_columns(F.col("text"))
+    cols = T.quality_columns("text")
     return df.select("doc_id", *[c.alias(n) for n, c in cols.items()])
 
 
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _docs(spark, sf_dir)
-    cols = T.lang_id_columns(F.col("text"))
+    cols = T.lang_id_columns("text")
     return df.select("doc_id", *[c.alias(n) for n, c in cols.items()])
 
 
@@ -30,7 +30,8 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select(
         "doc_id",
         T.bpe_token_count(F.col("text")).cast("bigint").alias("n_bpe_tokens"),
-        F.size(T.tokens(F.col("text"))).cast("bigint").alias("n_ws_tokens"),
+        F.expr(f"cast(size({T.tokens_sexpr('text')}) as bigint)")
+        .alias("n_ws_tokens"),
     )
 
 
@@ -49,9 +50,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-order expressions get no CSE: inlined, the tokenize pipeline
     would re-run per element_at reference and the md5 transform would run
     twice (once under array_min, once under array_max).  Each stage
-    parses as ONE SQL string (round-12 construction-tax pass — the
-    Column/lambda forms paid ~650 py4j round-trips per construction;
-    identical trees, oracle-locked)."""
+    parses as ONE SQL string."""
     df = _docs(spark, sf_dir)
     tk = df.selectExpr("doc_id", f"{T.tokens_sexpr('`text`')} as _t")
     shd = tk.selectExpr(
@@ -276,7 +275,7 @@ PREFIX_DUP_OFFSET = 1_000_000_000
 
 def dedup_jaccard_prefix_collapsed(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
-    """The composed exact-dedup → prefix-join form (VERDICT r9 #4) on a
+    """The composed exact-dedup → prefix-join form on a
     corpus WITH exact-duplicate multiplicity: the documents table
     doubled (copy ids offset into a disjoint range), so every text has
     multiplicity >= 2 — the regime the composition exists for.  The

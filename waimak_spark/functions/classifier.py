@@ -58,7 +58,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .curation import split_bucket, split_bucket_sql
-from .text import TOKENS_SQL, md5_hash32, md5_hash32_sql, tokens
+from .text import TOKENS_SQL, md5_hash32_sexpr, md5_hash32_sql, tokens_sexpr
 from .util import local_rows_df
 
 #: hashed feature buckets (collisions trade accuracy for a bounded
@@ -74,10 +74,11 @@ QC_TRAIN_PCT = 80
 QC_ROUND = 4
 
 
-def _weak_label(text_col: Column) -> Column:
-    """1 iff the 4dp-rounded stopword ratio clears QC_THRESHOLD — the
-    same rounded expression :func:`~waimak_spark.functions.text.
-    quality_columns` publishes, so the comparison is engine-stable."""
+def _weak_label(text_col: str) -> Column:
+    """1 iff the 4dp-rounded stopword ratio of the column named
+    ``text_col`` clears QC_THRESHOLD — the same rounded expression
+    :func:`~waimak_spark.functions.text.quality_columns` publishes, so
+    the comparison is engine-stable."""
     from .text import quality_columns
 
     ratio = quality_columns(text_col)["stopword_ratio"]
@@ -113,16 +114,15 @@ def nb_fit(docs: DataFrame, text_col: str = "text",
     # the measured local price of not caching the token arrays.
     labeled = tracked_persist(
         docs.select(F.col(id_col).alias("doc_id"),
-                    _weak_label(F.col(text_col)).alias("y"))
+                    _weak_label(text_col).alias("y"))
         .withColumn(
             "is_train",
             (split_bucket(F.col("doc_id"), seed)
              < F.lit(train_pct)).cast("int")))
     grams = tracked_persist(
-        docs.select(F.col(id_col).alias("doc_id"),
-                    F.explode(tokens(F.col(text_col))).alias("term"))
-        .select("doc_id",
-                (md5_hash32(F.col("term")) % buckets).alias("b"))
+        docs.selectExpr(f"`{id_col}` as doc_id",
+                        f"explode({tokens_sexpr(f'`{text_col}`')}) as term")
+        .selectExpr("doc_id", f"{md5_hash32_sexpr('term')} % {buckets} as b")
         .groupBy("doc_id", "b")
         .agg(F.count("*").alias("cnt")))
     # class-conditional bucket counts: bounded at 2*buckets rows BY
@@ -196,9 +196,10 @@ def quality_classifier_scores(docs: DataFrame, text_col: str = "text",
         "pred", (F.col("score") >= F.lit(0.0)).cast("int"))
 
 
-def nb_score_columns(text_col: Column, llr_rows, lp: float,
+def nb_score_columns(text_col: str, llr_rows, lp: float,
                      buckets: int = QC_BUCKETS) -> dict[str, Column]:
-    """Map-only per-row scoring columns from a COLLECTED model — the
+    """Map-only per-row scoring columns of the column named ``text_col``
+    from a COLLECTED model — the
     streaming/serving form: the ``buckets``-entry llr map and the prior
     ride the plan as a folded literal, each row's score is one
     ``aggregate`` over its own token array (same 4dp round as the batch
@@ -207,16 +208,13 @@ def nb_score_columns(text_col: Column, llr_rows, lp: float,
     the family).  ZERO state and ZERO shuffle: the proof is that the
     streaming entry runs in append mode, which Spark refuses for any
     stateful plan."""
-    m = F.create_map(*[x for b, w in llr_rows
-                       for x in (F.lit(int(b)), F.lit(float(w)))])
-    toks = F.coalesce(tokens(text_col), F.array())
-    score = F.round(
-        F.aggregate(
-            toks, F.lit(float(lp)).cast("double"),
-            lambda acc, t: acc + F.element_at(
-                m, md5_hash32(t) % buckets)),
-        QC_ROUND)
-    return {"y": _weak_label(text_col), "score": score}
+    m = "map(" + ", ".join(f"{int(b)}, {float(w)!r}D"
+                           for b, w in llr_rows) + ")"
+    toks = f"coalesce({tokens_sexpr(f'`{text_col}`')}, array())"
+    score = (f"round(aggregate({toks}, cast({float(lp)!r}D as double), "
+             f"(acc, t) -> acc + element_at({m}, "
+             f"{md5_hash32_sexpr('t')} % {buckets})), {QC_ROUND})")
+    return {"y": _weak_label(text_col), "score": F.expr(score)}
 
 
 def quality_classifier_scores_sql(table: str = "documents",

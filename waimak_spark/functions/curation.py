@@ -191,27 +191,15 @@ def pii_counts_sql(expr: str) -> dict[str, str]:
 # ---------------------------------------------------------------------------
 
 
-def dup_fraction(arr: Column) -> Column:
-    """Fraction of array elements that are repeats of an earlier element.
+def dup_fraction_sexpr(arr: str) -> str:
+    """Fraction of the elements of array ``arr`` that are repeats of an
+    earlier element.
 
     NULL elements are excluded from the distinct count (every NULL beyond
     the first counts as a repeat): DuckDB's ``list_distinct`` drops NULLs
     while Spark's ``array_distinct`` keeps one, so the Spark side filters
     NULLs before distinct to keep the paired SQL fragment bit-identical.
     """
-    n = F.size(arr)
-    distinct_non_null = F.size(
-        F.array_distinct(F.filter(arr, lambda x: x.isNotNull())))
-    return F.when(
-        n > 0,
-        F.round(1.0 - distinct_non_null / n, 4),
-    ).otherwise(F.lit(0.0))
-
-
-def dup_fraction_sexpr(arr: str) -> str:
-    """Spark-SQL fragment matching :func:`dup_fraction` — one parsed
-    expression instead of ~60 py4j Column builds (round-11 F6 recipe;
-    identical tree, oracle-locked)."""
     return (f"case when size({arr}) > 0 then "
             f"round(1.0D - size(array_distinct(filter({arr}, "
             f"x -> x is not null))) / size({arr}), 4) "
@@ -249,14 +237,15 @@ def chunk_and_pack(df: DataFrame, chunk_size: int = CHUNK_SIZE,
     ``seq_id`` is the running-sum bucket within the partition's
     deterministic (doc, chunk) order: a chunk starts a new sequence when
     the tokens packed before it already fill the budget. Whitespace
-    tokenization (``functions.text.tokens``) keeps both engines identical.
+    tokenization (``functions.text.tokens_sexpr``) keeps both engines
+    identical.
     """
     from pyspark.sql import Window as W
 
-    from .text import tokens
+    from .text import tokens_sexpr
 
-    nt = df.select(F.col(part_col), F.col(id_col),
-                   F.size(tokens(F.col(text_col))).alias("_n"))
+    nt = df.selectExpr(f"`{part_col}`", f"`{id_col}`",
+                       f"size({tokens_sexpr(f'`{text_col}`')}) as _n")
     nz = nt.where(F.col("_n") > 0)
     chunks = nz.select(
         part_col, id_col, "_n",
@@ -325,13 +314,13 @@ def chunk_sliding_windows(df: DataFrame,
     the token array is a bound reference for the explode and slices, not
     a re-run of the tokenizer), one Generate over the in-row window
     structs, no shuffle.  Empty docs produce no rows on both engines."""
-    from .text import md5_hash32, tokens
+    from .text import md5_hash32_sexpr, tokens_sexpr
 
     if overlap >= window_tokens:
         raise ValueError("overlap must be smaller than window_tokens")
     stride = window_tokens - overlap
-    base = df.select(F.col(id_col).alias("doc_id"),
-                     tokens(F.col(text_col)).alias("_t"))
+    base = df.selectExpr(f"`{id_col}` as doc_id",
+                         f"{tokens_sexpr(f'`{text_col}`')} as _t")
     n = F.size("_t")
     starts = F.sequence(F.lit(1), F.greatest(n - overlap, F.lit(1)),
                         F.lit(stride))
@@ -347,7 +336,8 @@ def chunk_sliding_windows(df: DataFrame,
         (F.col("_i") + 1).cast("int").alias("chunk_index"),
         F.col("w.start").cast("int").alias("start_token"),
         F.size("w.toks").alias("n_chunk_tokens"),
-        md5_hash32(F.concat_ws(" ", F.col("w.toks"))).alias("chunk_hash"))
+        F.expr(md5_hash32_sexpr("concat_ws(' ', w.toks)"))
+        .alias("chunk_hash"))
 
 
 def chunk_sliding_windows_sql(window_tokens: int = WINDOW_TOKENS,
@@ -513,7 +503,7 @@ def _dsir_gram_stream(df: DataFrame, text_col: str, id_col: str,
     The token array is projected in its OWN select step before the gram
     expressions (the shingle_base recipe): interpreted higher-order
     expressions get no common-subexpression elimination, so inlining
-    ``tokens(text)`` re-ran the whole split+filter once per reference —
+    the tokenizer re-ran the whole split+filter once per reference —
     five references here (size + two slices + concat) — and
     CollapseProject keeps the boundary because the projected column is
     non-cheap and multiply-referenced.  Plan-verified: the executed
@@ -523,10 +513,10 @@ def _dsir_gram_stream(df: DataFrame, text_col: str, id_col: str,
     scoring join dominate there), but four redundant tokenize passes
     over 100 TB of text is exactly the class of waste the shingle_base
     recipe exists to remove."""
-    from .text import tokens
+    from .text import tokens_sexpr
 
     pre = [F.col(id_col).alias("doc_id"),
-           tokens(F.col(text_col)).alias("_tk")]
+           F.expr(tokens_sexpr(f"`{text_col}`")).alias("_tk")]
     if flag is not None:
         pre.append(F.coalesce(flag, F.lit(False)).alias("_t"))
     tk = df.select(*pre)
@@ -573,12 +563,12 @@ def dsir_importance(raw_df: DataFrame, target_df: DataFrame | None,
     """
     from .cache_registry import tracked_persist
     from .dedup import spread_for_compute
-    from .text import md5_hash32
+    from .text import md5_hash32_sexpr
 
     if (target_df is None) == (target_predicate is None):
         raise ValueError(
             "pass exactly one of target_df / target_predicate")
-    bucket = (md5_hash32(F.col("gram")) % buckets).alias("b")
+    bucket = F.expr(f"{md5_hash32_sexpr('gram')} % {buckets}").alias("b")
     # spread: a single small parquet file arrives as ONE scan partition,
     # serializing the tokenize/explode pass that builds the persisted
     # gram stream (no-op at cluster scale — see spread_for_compute)
@@ -613,9 +603,9 @@ def dsir_importance(raw_df: DataFrame, target_df: DataFrame | None,
     # cr/ct are bucket-count rows bounded at `buckets` BY CONSTRUCTION
     # (B=4096 default) — collected once (the bounded-collect pattern the
     # fixpoint/probe operators already use; the subset-target path
-    # collects both columns in ONE aggregation job since round 11) and
-    # the llr INPUT rebuilt as a local frame.  This replaced the old
-    # shape (two keyless 1-row total joins) for two measured reasons:
+    # collects both columns in ONE aggregation job) and the llr INPUT
+    # rebuilt as a local frame, rather than two keyless 1-row total
+    # joins, for two measured reasons:
     # (a) the totals' only physical form was the BroadcastNestedLoopJoin
     # the catalog-wide plan sweep (rightly) refuses to whitelist, and
     # (b) the lazy plan computed the UN-persisted target gram stream
@@ -662,12 +652,13 @@ def dsir_select(raw_df: DataFrame, target_df: DataFrame | None, k: int,
     selects the same k documents.  Returns (doc_id, n_grams, log_weight,
     gumbel_key) for the k selected docs.  ``target_predicate`` is the
     tokenize-once subset-target path (see :func:`dsir_importance`)."""
-    from .text import seeded_hash
+    from .text import seeded_hash_sexpr
 
     w = dsir_importance(raw_df, target_df, text_col, id_col, buckets,
                         alpha, target_predicate=target_predicate)
-    u = ((seeded_hash(F.col("doc_id").cast("string"), seed) + 1)
-         / F.lit(4294967297.0))  # (0,1) strictly: hash is 0..2^32-1
+    # (0,1) strictly: hash is 0..2^32-1
+    u = F.expr(f"({seeded_hash_sexpr('cast(doc_id as string)', seed)} + 1)"
+               f" / 4294967297.0D")
     key = F.round(F.col("log_weight") - F.log(-F.log(u)), 4)
     return (w.withColumn("gumbel_key", key)
             .orderBy(F.desc("gumbel_key"), "doc_id").limit(k))
@@ -779,10 +770,10 @@ def priority_sample_k(df: DataFrame, weight: Column, k: int,
     null or non-positive weight are excluded (their inclusion
     probability is 0; both engines agree).  Returns the input columns
     plus ``priority_key``."""
-    from .text import seeded_hash
+    from .text import seeded_hash_sexpr
 
-    u = ((seeded_hash(F.col(id_col).cast("string"),
-                      seed) + 1) / F.lit(4294967297.0))
+    u = F.expr(f"({seeded_hash_sexpr(f'cast(`{id_col}` as string)', seed)}"
+               f" + 1) / 4294967297.0D")
     key = F.round(F.log(u) / weight, 6) + F.lit(0.0)
     return (df.where(weight.isNotNull() & (weight > 0))
             .withColumn("priority_key", key)

@@ -30,14 +30,11 @@ from pyspark.sql import functions as F
 from .cache_registry import tracked_persist
 from .text import (
     TOKENS_SQL,
-    md5_hash32,
     md5_hash32_sexpr,
     md5_hash32_sql,
     seeded_hash_sexpr,
-    shingles,
     shingles_sexpr,
     shingles_sql,
-    tokens,
     tokens_sexpr,
 )
 
@@ -73,27 +70,12 @@ def spread_for_compute(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def pairs_of(sorted_arr: Column) -> Column:
-    """All ordered (a < b) element pairs of a pre-sorted array, as
-    ``array<struct<a,b>>`` — the per-bucket pair expansion that lets LSH /
-    Jaccard / SimHash candidate generation run as ``groupBy + explode``
-    instead of a self-join, so each upstream pipeline is evaluated once."""
-    return F.flatten(
-        F.transform(
-            sorted_arr,
-            lambda x, i: F.transform(
-                F.slice(sorted_arr, i + F.lit(2), F.size(sorted_arr)),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-
-
 def pairs_of_sexpr(arr: str) -> str:
-    """Spark-SQL fragment matching :func:`pairs_of` — the nested-lambda
-    Column form paid ~100 py4j round-trips per construction (round-11 F6
-    recipe); one parsed string, identical tree modulo lambda-variable
-    names."""
+    """All ordered (a < b) element pairs of the pre-sorted array ``arr``,
+    as ``array<struct<a,b>>`` — the per-bucket pair expansion that lets
+    LSH / Jaccard / SimHash candidate generation run as
+    ``groupBy + explode`` instead of a self-join, so each upstream
+    pipeline is evaluated once."""
     return (f"flatten(transform({arr}, (x, i) -> "
             f"transform(slice({arr}, i + 2, size({arr})), "
             f"y -> named_struct('a', x, 'b', y))))")
@@ -134,11 +116,11 @@ SHINGLE_N = 3
 # Universal-hash mixing for the signature family: each shingle is md5-hashed
 # ONCE (the expensive part), then the k signature functions are cheap
 # arithmetic mixes h -> (a_i * h + b_i) mod P over that base hash — the
-# textbook minhash construction. The round-3 form ran k FULL md5 passes
-# (seed-prefixed strings), which made the signature ~k x the md5 cost;
-# measured ~3x faster end-to-end at sf0.1 after the change, identical on
-# both engines. P is the smallest prime > 2^32; a_i < 2^20 keeps
-# a*h + b < 2^52, exact in signed int64 on Spark AND DuckDB.
+# textbook minhash construction. k FULL md5 passes (seed-prefixed strings)
+# would make the signature ~k x the md5 cost (measured ~3x slower
+# end-to-end at sf0.1), with identical values on both engines. P is the
+# smallest prime > 2^32; a_i < 2^20 keeps a*h + b < 2^52, exact in signed
+# int64 on Spark AND DuckDB.
 MINHASH_PRIME = 4294967311
 
 
@@ -165,10 +147,11 @@ def shingle_base(df: DataFrame, text_col: str = "text",
 
     The token array is projected in its OWN select step before shingling:
     interpreted higher-order expressions get no common-subexpression
-    elimination, so inlining ``tokens(text)`` into ``shingles`` re-runs the
-    whole split+filter once per ``element_at`` reference — i.e. 3× per
-    shingle, O(tokens²) per row. The two-step projection turns those into
-    bound-reference lookups (measured 10× faster at sf0.1).
+    elimination, so inlining the tokenizer into the shingle fragment
+    re-runs the whole split+filter once per ``element_at`` reference —
+    i.e. 3× per shingle, O(tokens²) per row. The two-step projection
+    turns those into bound-reference lookups (measured 10× faster at
+    sf0.1).
 
     ``use_kernel=True`` swaps in the Arrow-batched Python kernel
     (functions/text.py:distinct_shingle_kernel, bit-identical —
@@ -185,10 +168,8 @@ def shingle_base(df: DataFrame, text_col: str = "text",
             F.col(id_col),
             distinct_shingle_kernel(n)(F.col(text_col)).alias("_sh"),
         ))
-    # _sexpr strings via selectExpr: each projection is ONE py4j call
-    # parsing all its expressions JVM-side, instead of ~200 round-trips
-    # of Column construction (the round-11 construction-tax pass;
-    # analyzed plan identical — see text.py:md5_hash32_sexpr)
+    # selectExpr: each projection is ONE py4j call parsing all its
+    # expressions JVM-side
     tk = df.selectExpr(f"`{id_col}`",
                        f"{tokens_sexpr(f'`{text_col}`')} as _t")
     return tracked_persist(tk.selectExpr(
@@ -212,11 +193,8 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     seed columns would re-run tokenize→shingle→distinct→md5 — measured 8×
     the cost at k=8 pre-barrier, and ~3× the cost with per-seed md5."""
     base = shingle_base(df, text_col, id_col, n)
-    # _sexpr strings via selectExpr: the md5 pass and the k mixed mins
-    # parse JVM-side in ONE py4j call per projection instead of ~20
-    # higher-order-function Column builds (~0.7 s of py4j driver time
-    # per construction; analyzed plan identical — measured 251 → 99
-    # round-trips for the whole signature construction)
+    # selectExpr: the md5 pass and the k mixed mins parse JVM-side in
+    # ONE py4j call per projection
     hashed = base.selectExpr(
         f"`{id_col}`",
         f"transform(_sh, s -> {md5_hash32_sexpr('s')}) as _h")
@@ -617,26 +595,21 @@ def simhash(df: DataFrame, text_col: str = "text",
             id_col: str = "doc_id") -> DataFrame:
     """64-bit simhash over the distinct-token set in ONE pass: each token
     is md5-hashed ONCE and the digest's first 16 hex chars split into two
-    independent 32-bit halves (round 4 — the seeded two-md5-pass form paid
-    the md5 twice per token), then a single ``aggregate`` with an
+    independent 32-bit halves (a seeded two-md5-pass form would pay the
+    md5 twice per token), then a single ``aggregate`` with an
     array-of-64-counters accumulator tallies the per-bit ±1 votes (instead
     of 64 separate passes over the token array); the sign of each vote
     packs into the result. Per-row narrow compute, no shuffle."""
     df = spread_for_compute(df)
-    # The whole packed-simhash expression is built as ONE SQL string and
-    # parsed in a single F.expr call (round-11 optimization pass): the
-    # previous Column-by-Column construction of the 64-element signs
-    # array cost ~400 py4j round-trips ≈ 0.85 s of pure DRIVER time per
-    # query construction — an O(bits) Python-side tax paid before any
-    # job runs.  The parsed tree is semantically identical: same
-    # two-step transform (each token's md5 computed ONCE — interpreted
-    # HOFs get no CSE), same literal shift amounts per element (the
-    # round-5 lesson: a dynamic-bit-index transform paid a division and
-    # a branch per token per bit), same ±1 = 2*bit−1 vote arithmetic,
-    # same bit-value packing with shiftleft(1L, i) constant-folded by
-    # Catalyst into the identical literal array (bit 63 folds to
-    # Long.MIN_VALUE = the two's-complement -(1<<63)).  Locked by the
-    # DuckDB lockstep oracles and the catalog hash gate.
+    # The whole packed-simhash expression is ONE SQL string, parsed in a
+    # single F.expr call.  Two-step transform: each token's md5 is
+    # computed ONCE (interpreted HOFs get no CSE).  Each element uses a
+    # literal shift amount (a dynamic bit index would pay a division and
+    # a branch per token per bit); the vote is ±1 = 2*bit−1; the
+    # bit-value packing's shiftleft(1L, i) constant-folds into a literal
+    # array (bit 63 folds to Long.MIN_VALUE = the two's-complement
+    # -(1<<63)).  Locked by the DuckDB lockstep oracles and the catalog
+    # hash gate.
     signs = ", ".join(
         f"(shiftright(h.{'lo' if i < 32 else 'hi'}, {i % 32}) & 1) * 2 - 1"
         for i in range(SIMHASH_BITS))
@@ -731,9 +704,7 @@ def simhash_near_dups(sig: DataFrame, max_hamming: int = DEFAULT_MAX_HAMMING,
     # materialize the (tiny: id + one long) signature before fanning it out
     # into 4 segment references — same no-CSE reasoning as in LSH banding
     sig = tracked_persist(sig)
-    # one parsed SQL string per projection (round-11 F6 recipe): the
-    # Column forms — 4 shiftright/bitwiseAND structs + the nested-lambda
-    # pairs_of — paid ~700 py4j round-trips per construction
+    # one parsed SQL string per projection
     segs_s = "array(" + ", ".join(
         f"named_struct('seg', {s}, 'segv', "
         f"shiftright(simhash, {shift}) & {(1 << width) - 1})"
@@ -981,7 +952,7 @@ def jaccard_prefix_join(df: DataFrame, text_col: str = "text",
     1.0 (no exact dups to collapse, 4.1 vs 2.7 s isolated) and the 10×
     replica perturbs each copy's text so copies are NEAR-dups that
     cannot collapse either.  On a genuinely duplication-heavy corpus
-    use :func:`jaccard_prefix_join_collapsed` (VERDICT r9 #4) — the
+    use :func:`jaccard_prefix_join_collapsed` — the
     exact_dedup → prefix-join-on-representatives → fan-back
     composition, OUTPUT-IDENTICAL to this operator (locked in
     tests/test_prefix_join.py) with the expensive machinery scaling in
@@ -1095,7 +1066,7 @@ def jaccard_prefix_join_collapsed(df: DataFrame, text_col: str = "text",
     """:func:`jaccard_prefix_join` composed AFTER an exact-duplicate
     collapse — OUTPUT-IDENTICAL to the raw form (locked in
     tests/test_prefix_join.py on corpora with real multiplicity), built
-    for duplication-heavy corpora (VERDICT r9 #4).
+    for duplication-heavy corpora.
 
     At 100 TB, exact-duplicate multiplicity is precisely the amplifier
     that makes the raw pair-lister quadratic (PARITY's 10× text replica
@@ -1117,8 +1088,8 @@ def jaccard_prefix_join_collapsed(df: DataFrame, text_col: str = "text",
     tokenize/shingle/df/prefix-join cost scales with distinct texts,
     and the fan-out is two hash joins against a narrow (class, id)
     frame.  On a corpus with no exact dups this adds one md5-groupBy
-    pass over the raw form (the measured round-9 rejection of an
-    in-operator collapse); the steer: raw for audit sweeps on curated
+    pass over the raw form (why the collapse is not built into
+    :func:`jaccard_prefix_join`); the steer: raw for audit sweeps on curated
     corpora, composed wherever exact multiplicity is expected."""
     mem = tracked_persist(
         df.where(F.col(text_col).isNotNull())
@@ -1393,7 +1364,7 @@ def substring_ngram_dedup(df: DataFrame, text_col: str = "text",
     — the hash NEVER leaves the plan, only per-gram frequency counts
     feed the verdict, so Spark and the DuckDB oracle may hash
     differently and still agree exactly, barring a within-engine
-    collision.  ``key_bits`` picks the key (ADVICE r8: the error
+    collision.  ``key_bits`` picks the key (the error
     direction of a collision is SILENT over-flagging — distinct grams
     merge and extra data gets dropped):
 
@@ -1401,7 +1372,7 @@ def substring_ngram_dedup(df: DataFrame, text_col: str = "text",
       ``xxhash64`` longs — collisions birthday-bounded at ~n²/2¹²⁹,
       <1e-16 expected even at the operator's stated 100 TB posture
       (~1e11 grams).  16 bytes/gram on the wire, still 2x smaller than
-      the 32-hex-char md5 STRING it replaced in round 8.
+      a 32-hex-char md5 STRING.
     * ``64``: ONE ``xxhash64`` long — 4x smaller than md5 but
       birthday-bounded at ~n²/2⁶⁵ (hundreds of expected collisions at
       1e11 grams); acceptable for bounded corpora only, kept for the
@@ -1420,12 +1391,10 @@ def substring_ngram_dedup(df: DataFrame, text_col: str = "text",
     all linear in token count; no UDFs, no driver collects.
     """
     # spread + two-step projection: same recipe as shingle_base — a small
-    # parquet arrives as ONE partition, and inlining tokens() into
-    # shingles() would re-run the whole split pipeline once per
+    # parquet arrives as ONE partition, and inlining the tokenizer into
+    # the shingle fragment would re-run the whole split pipeline once per
     # element_at reference (window× per gram position; measured 40 s for
-    # 196k grams at sf0.1 before the split, ~1 s after)
-    # _sexpr strings: one parsed expression per projection (the F6
-    # construction-tax recipe; identical tree — see text.py)
+    # 196k grams at sf0.1 inlined, ~1 s split)
     tk = (spread_for_compute(df)
           .select(F.col(id_col).alias("doc_id"),
                   F.expr(tokens_sexpr(f"`{text_col}`")).alias("_t")))
@@ -1522,16 +1491,13 @@ def bloom_positions(col_sql: str, k: int = BLOOM_HASHES,
     """The k seeded positions a text sets/probes (duplicates possible
     when two seeds collide mod m — callers distinct/dedup as needed).
     ``col_sql`` is a SQL column reference/expression string — the array
-    parses as ONE expression instead of k×10 py4j Column builds (the
-    round-11 construction-tax pass; identical tree).  A ``Column``
-    argument (the pre-round-11 signature) fails loudly here instead of
-    silently interpolating ``Column<...>`` repr into broken SQL
-    (ADVICE r11)."""
+    parses as ONE expression.  A ``Column`` argument fails loudly here
+    instead of silently interpolating ``Column<...>`` repr into broken
+    SQL."""
     if isinstance(col_sql, Column):
         raise TypeError(
-            "bloom_positions takes a SQL expression STRING since the "
-            "round-11 construction-tax pass (e.g. '`text`'); pass "
-            "the column's SQL form, not a Column")
+            "bloom_positions takes a SQL expression STRING (e.g. "
+            "'`text`'); pass the column's SQL form, not a Column")
     return F.expr("array(" + ", ".join(
         f"cast({seeded_hash_sexpr(col_sql, _BLOOM_SEED_BASE + i)} % {m} "
         f"as int)" for i in range(k)) + ")")
@@ -1545,7 +1511,7 @@ def bloom_corpus_positions(corpus: DataFrame, text_col: str = "text",
     (persist or write; bounded by m rows, it only ever SHRINKS relative
     to the corpus)."""
     # null-text rows carry no content to member — dropped on BOTH
-    # engines (seeded_hash(NULL) would yield NULL positions, and Spark's
+    # engines (a seeded hash of NULL is a NULL position, and Spark's
     # array_distinct KEEPS a null while DuckDB's list_distinct drops it,
     # so nulls anywhere in this pipeline break oracle lockstep — the
     # same engine difference functions/curation.py handles)
@@ -1573,7 +1539,7 @@ def bloom_dedup_against_corpus(new: DataFrame, corpus: DataFrame,
     on both sides (no content to probe; see bloom_corpus_positions).
     The rollup key is ``(doc_id, probe-set)`` — NOT ``(doc_id,
     n_probes)`` — so duplicate ``doc_id`` rows in ``new`` cannot merge
-    probe groups (ADVICE r8: with two same-id copies in one ``(doc_id,
+    probe groups (with two same-id copies in one ``(doc_id,
     n_probes)`` group, n_hits could reach 2×n_probes and an exact
     corpus member would report ``maybe_dup = 0``, silently breaking the
     no-false-negative guarantee).  Identical (id, text) copies collapse
@@ -1668,7 +1634,7 @@ def segment_stream(df: DataFrame, text_col: str = "text",
     contribute nothing."""
     base = (spread_for_compute(df)
             .where(F.col(text_col).isNotNull())
-            .select("doc_id", tokens(F.col(text_col)).alias("_t")))
+            .selectExpr("doc_id", f"{tokens_sexpr(f'`{text_col}`')} as _t"))
     nseg = F.ceil(F.size("_t") / F.lit(float(k))).cast("int")
     mk = lambda i: F.struct(  # noqa: E731
         i.cast("int").alias("pos"),
@@ -1691,15 +1657,14 @@ def repeated_segment_removal(df: DataFrame, text_col: str = "text",
     The segment stream is persisted: the frequency count and the rebuild
     pass share ONE tokenize pass.
 
-    Round 12 (guide §2.4): the rebuild is ONE conditional aggregation —
-    the old shape anti-joined the frequent set, grouped the survivors by
-    doc_id, grouped the FULL stream by doc_id again for totals, and
-    joined the two back; marking frequency with a left join and
-    aggregating once computes clean_text / n_kept / n_seg in a single
-    doc_id pass (collect_list skips the CASE's nulls, so the kept set,
-    its pos order, and the counts are value-identical — oracle-locked).
-    Plan: 5 Exchange -> 3, one groupBy(doc_id) instead of two + a
-    join."""
+    The rebuild is ONE conditional aggregation (guide §2.4): marking
+    frequency with a left join and aggregating once computes
+    clean_text / n_kept / n_seg in a single doc_id pass (collect_list
+    skips the CASE's nulls, so the kept set, its pos order, and the
+    counts are value-identical — oracle-locked).  Anti-joining the
+    frequent set and grouping survivors and totals separately would
+    take 5 Exchanges and two groupBy(doc_id) plus a join; this takes
+    3 and one."""
     segs = tracked_persist(segment_stream(df, text_col, k))
     frequent = (segs.groupBy("seg")
                 .agg(F.countDistinct("doc_id").alias("df"))

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import md5_hash32, md5_hash32_sql
+from .text import md5_hash32_sexpr, md5_hash32_sql
 
 #: seeded stream for the perturbation (disjoint from the other families)
 ER_SEED = 9100
@@ -59,10 +59,6 @@ ER_W_BAL = 0.3
 ER_THRESHOLD = 0.9
 
 
-def _er_hash(key, seed: int):
-    return md5_hash32(F.concat(F.lit(f"er:{seed}:"), key.cast("string")))
-
-
 def perturbed_customers(customers: DataFrame,
                         seed: int = ER_SEED) -> DataFrame:
     """The deterministic dirty copy: ``(b_key, b_name, b_nationkey,
@@ -70,7 +66,8 @@ def perturbed_customers(customers: DataFrame,
     0-2 name characters overwritten (positions 10-11 — inside the
     digit run of the TPC-H name pattern) and the balance shifted by
     0-6 cents, both selected by the seeded hash."""
-    h = _er_hash(F.col("c_custkey"), seed)
+    h = F.expr(md5_hash32_sexpr(
+        f"concat('er:{seed}:', cast(c_custkey as string))"))
     n = F.col("c_name")
     p1 = F.concat(F.substring(n, 1, 9), F.lit("X"),
                   F.substring(n, 11, 1000))

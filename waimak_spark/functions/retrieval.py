@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import spread_for_compute
-from .text import TOKENS_SQL, tokens
+from .text import TOKENS_SQL, tokens_sexpr
 from .util import local_rows_df
 
 #: BM25 shape parameters (the standard defaults)
@@ -94,8 +94,8 @@ def bm25_topk(docs: DataFrame, queries=BM25_QUERIES,
     # — parity, so the persist write is pure overhead at 1×)
     base = (spread_for_compute(docs)
             .where(F.col(text_col).isNotNull())
-            .select(F.col(id_col).alias("doc_id"),
-                    tokens(F.col(text_col)).alias("_t")))
+            .selectExpr(f"`{id_col}` as doc_id",
+                        f"{tokens_sexpr(f'`{text_col}`')} as _t"))
     # dl rides the explode so tf and length need one pass; the vocab
     # filter lands BEFORE the (doc_id, term) shuffle
     tf = (base.select("doc_id", F.size("_t").alias("dl"),
@@ -376,8 +376,8 @@ def bm25_postings_frame(docs: DataFrame, text_col: str = "text",
     distinct (term, document) pair; ``dl`` denormalized onto every
     posting so probe-side scoring needs no second table."""
     base = (docs.where(F.col(text_col).isNotNull())
-            .select(F.col(id_col).alias("doc_id"),
-                    tokens(F.col(text_col)).alias("_t")))
+            .selectExpr(f"`{id_col}` as doc_id",
+                        f"{tokens_sexpr(f'`{text_col}`')} as _t"))
     return (base.select("doc_id", F.size("_t").alias("dl"),
                         F.explode("_t").alias("term"))
             .groupBy("term", "doc_id")
@@ -389,8 +389,8 @@ def bm25_corpus_stats(docs: DataFrame, text_col: str = "text") -> tuple:
     computed with the exact expressions the inline path crosses in (one
     1-row aggregate; stored as table properties at build time)."""
     row = (docs.where(F.col(text_col).isNotNull())
-           .select(F.count("*").alias("_n"),
-                   F.avg(F.size(tokens(F.col(text_col)))).alias("_avgdl"))
+           .selectExpr("count(*) as _n",
+                       f"avg(size({tokens_sexpr(f'`{text_col}`')})) as _avgdl")
            ).collect()[0]
     return int(row["_n"]), float(row["_avgdl"])
 

@@ -5,8 +5,9 @@ for approximate top-k.
 
 Vector math runs in TWO lockstep forms:
 
-* ``Column`` expressions (``zip_with`` + ``aggregate``) — JVM-side,
-  used for tiny inputs and kept as the reference semantics; and
+* Spark-SQL expressions (``zip_with`` + ``aggregate``, built on
+  :func:`dot_sexpr`) — JVM-side, used for tiny inputs and kept as the
+  reference semantics; and
 * vectorized Arrow-batch kernels (``pandas_udf`` + NumPy) for the hot
   per-row scoring paths. The NumPy kernels accumulate **sequentially over
   dimensions** (one IEEE-754 rounding per multiply and per add, in the
@@ -33,25 +34,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from .util import dmat_lit, dvec_lit, dvec_sexpr
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-order dot product of two array<double> columns (matches
-    DuckDB ``list_dot_product`` ulp-for-ulp on the same doubles)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
+from .util import dmat_sexpr, dvec_sexpr
 
 
 def dot_sexpr(a: str, b: str) -> str:
-    """Spark-SQL fragment matching :func:`dot` — the whole sequential
-    dot parses as ONE expression instead of the ~60 py4j round-trips the
-    Column/lambda form pays per construction (round-11 F6 recipe; the
-    ``cast(0.0D as double)`` zero matches ``F.lit(0.0).cast("double")``
-    exactly, the same pairing `_pq_unit_base` plan-locks)."""
+    """Sequential-order dot product of two array<double> expressions
+    (matches DuckDB ``list_dot_product`` ulp-for-ulp on the same
+    doubles)."""
     return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
             f"cast(0.0D as double), (acc, v) -> acc + v)")
 
@@ -71,19 +60,14 @@ def valid_embeddings(emb: DataFrame, dims: int,
     a non-finite component has no engine-stable bucket/cell/rank and is
     treated as invalid input rather than propagated inconsistently.
 
-    The filter is ONE parsed SQL string (round-11 F6: the Column form
-    paid ~150 py4j round-trips per construction; ``double('Infinity')``
-    constant-folds to the same double literal the Column form embeds —
-    optimized-plan identity locked in tests/test_dvec_lit.py)."""
+    The filter is ONE parsed SQL string; ``double('Infinity')``
+    constant-folds to the infinity double literal (optimized plan
+    locked in tests/test_dvec_lit.py)."""
     return emb.where(F.expr(
         f"`{vec_col}` is not null and size(`{vec_col}`) = {int(dims)} "
         f"and forall(cast(`{vec_col}` as array<double>), "
         f"x -> x is not null and not isnan(x) "
         f"and abs(x) != double('Infinity'))"))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
 # ---------------------------------------------------------------------------
@@ -154,21 +138,21 @@ def _plane_matrix(n_planes: int, dims: int) -> list[list[float]]:
     return [[_plane_weight(p, d) for d in range(dims)] for p in range(n_planes)]
 
 
-def lsh_bucket(vec: Column, n_planes: int, dims: int) -> Column:
-    """Pack sign bits of ``n_planes`` hyperplane projections into a long.
+def lsh_bucket(vec: str, n_planes: int, dims: int) -> Column:
+    """Pack sign bits of ``n_planes`` hyperplane projections of the
+    array<double> expression ``vec`` into a long.
 
     Expression form (interpreted HOFs) — kept as the reference semantics
     and for composition inside pure-SQL plans; the bucketing operators use
     the bit-identical vectorized kernel ``_lsh_features`` instead."""
-    planes = F.lit(_plane_matrix(n_planes, dims))
-    bitvals = F.lit([1 << p for p in range(n_planes)]).cast("array<long>")
-    projs = F.transform(planes, lambda w: dot(vec, w))
-    return F.aggregate(
-        F.zip_with(projs, bitvals,
-                   lambda pr, bv: F.when(pr > 0, bv).otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
+    planes = dmat_sexpr(_plane_matrix(n_planes, dims))
+    bitvals = ("cast(array(" + ", ".join(str(1 << p) for p in range(n_planes))
+               + ") as array<bigint>)")
+    projs = f"transform({planes}, w -> {dot_sexpr(vec, 'w')})"
+    return F.expr(
+        f"aggregate(zip_with({projs}, {bitvals}, "
+        f"(pr, bv) -> case when pr > 0 then bv else cast(0 as bigint) end), "
+        f"cast(0 as bigint), (a, x) -> a + x)")
 
 
 def _lsh_features(n_planes: int, dims: int):
@@ -201,7 +185,7 @@ def brute_force_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     """Exact top-k cosine neighbours for the given query ids (broadcast the
     query side; corpus side is a single scan).
 
-    Candidate scoring stays a JVM ``Column`` expression here: the cross
+    Candidate scoring stays a JVM SQL expression here: the cross
     product is Q×N rows each carrying two 64-dim vectors, and shipping that
     through Arrow to a Python kernel costs more in serde than the
     interpreted dot saves (measured 10× slower at sf0.1) — the vectorized
@@ -217,8 +201,7 @@ def brute_force_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     # carry each vector's norm so the per-candidate expression does one dot
     # product instead of three (self-dots are interpreted HOFs with no CSE);
     # sqrt-then-multiply keeps the result IEEE-identical to the inline form.
-    # Projections parse as ONE SQL string each (round-11 F6: the
-    # Column/lambda dot paid ~112 py4j round-trips per construction)
+    # Projections parse as ONE SQL string each.
     base = base.selectExpr("*", f"sqrt({dot_sexpr('v', 'v')}) as nrm")
     queries = base.where(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col("v").alias("qv"),
@@ -391,21 +374,21 @@ def resolve_duplicates_fixpoint(ids: DataFrame, pairs: DataFrame,
     def _free_ckpt(df: DataFrame) -> None:
         # localCheckpoint blocks live in the RDD block manager — the
         # DataFrame cache manager (clearCache/unpersist) never frees
-        # them.  Round 12 (ADVICE r11): release the LogicalRDD's backing
-        # RDD — the old df.rdd.unpersist freed a derived javaToPython
-        # RDD (storage level NONE), i.e. nothing.
+        # them.  Release the LogicalRDD's backing RDD: df.rdd.unpersist
+        # would free a derived javaToPython RDD (storage level NONE),
+        # i.e. nothing.
         from .util import free_ckpt_blocks
 
         free_ckpt_blocks(df)
 
-    # ONE checkpoint of the symmetric expansion (round 6): the caller's
-    # ``pairs`` is usually the LAZY candidate pipeline (LSH/simhash), and
-    # union branches get no common-subexpression elimination — the
-    # previous self-loop construction union(raw, distinct(raw)) over the
-    # un-materialized raw re-ran that whole pipeline TWICE (measured:
-    # the sf0.1 simhash resolve paid its 1.7 s pair generation double).
+    # ONE checkpoint of the symmetric expansion: the caller's ``pairs``
+    # is usually the LAZY candidate pipeline (LSH/simhash), and union
+    # branches get no common-subexpression elimination — a self-loop
+    # construction union(raw, distinct(raw)) over the un-materialized
+    # raw would re-run that whole pipeline TWICE (measured: the sf0.1
+    # simhash resolve paid its 1.7 s pair generation double).
     #
-    # The self-loops themselves are GONE (round 6): with labels seeded
+    # No self-loop edges are needed: with labels seeded
     # as least(id, min(peers)) — the closed-neighborhood minimum — plain
     # min-over-peers can never lose a node's own label.  Lemma: labels
     # are monotone non-increasing, and if label(x)=a then either some
@@ -414,8 +397,7 @@ def resolve_duplicates_fixpoint(ids: DataFrame, pairs: DataFrame,
     # either way min-over-x's-peers ≤ a at the next hop.  So each hop is
     # still ONE join + ONE groupBy, without the self-loop union, its
     # distinct shuffle, or a second materialization pass.
-    # one parsed SQL string (round-11 F6 recipe: the struct/explode
-    # Column form paid ~50 py4j round-trips per construction)
+    # one parsed SQL string
     edges = (pairs.selectExpr(
         "explode(array(named_struct('id', id_a, 'peer', id_b), "
         "named_struct('id', id_b, 'peer', id_a))) as e")
@@ -427,14 +409,14 @@ def resolve_duplicates_fixpoint(ids: DataFrame, pairs: DataFrame,
         # directions are present), so union-find sees the whole subgraph
         return _fixpoint_local(ids, edges, _free_ckpt)
     # Size the loop's shuffles to the EDGE SUBGRAPH, not the session
-    # default (round 5): the subgraph is typically a tiny fraction of the
+    # default: the subgraph is typically a tiny fraction of the
     # corpus, and with it materialized the row count is known exactly —
     # at ~2M edge rows (~32 MB) per partition the per-round task count
     # collapses for small graphs (sf0.1 simhash: 32 → 4 partitions,
     # fixpoint wall time −25 %) while a 100 TB edge set keeps the session
     # default untouched (the sizing only ever LOWERS the count).
     #
-    # Round 6: the sizing is SCOPED to the loop's own frames via a
+    # The sizing is SCOPED to the loop's own frames via a
     # narrow coalesce + explicit repartition (see _fixpoint_loop)
     # instead of a session-global spark.sql.shuffle.partitions override:
     # the framework's parallel executor may plan CONCURRENT actions while
@@ -521,7 +503,7 @@ def _fixpoint_loop(ids: DataFrame, edges: DataFrame, max_iters: int,
     # Seed labels with the CLOSED-neighborhood minimum least(id,
     # min(peers)): the same groupBy shuffle a plain distinct would cost,
     # but the first propagation hop comes free — one fewer round on
-    # EVERY component — and (round 6) it is what licenses dropping the
+    # EVERY component — and it is what licenses dropping the
     # self-loop edges: see the lemma at the edge construction above.
     labels = (_sized(edges).groupBy("id")
               .agg(F.min("peer").alias("_mp"))
@@ -530,9 +512,9 @@ def _fixpoint_loop(ids: DataFrame, edges: DataFrame, max_iters: int,
     # Convergence check: labels only ever DECREASE (least of own label and
     # neighbor minimum), so for numeric ids "no label changed" is exactly
     # "sum(canonical) unchanged".  The sum rides the checkpoint
-    # materialization job itself via df.observe (round 5 — previously a
-    # separate agg job per iteration; at small scale per-job scheduler
-    # overhead was a large share of fixpoint wall time).  Non-numeric ids
+    # materialization job itself via df.observe (not a separate agg job
+    # per iteration: at small scale per-job scheduler overhead is a
+    # large share of fixpoint wall time).  Non-numeric ids
     # keep the join-based count.
     numeric_ids = dict(labels.dtypes).get("canonical") in (
         "tinyint", "smallint", "int", "bigint")
@@ -707,36 +689,41 @@ def _centroid_norms(n_centroids: int, dims: int) -> list[float]:
     return out
 
 
-def _ivf_scores(vec: Column, n_centroids: int, dims: int) -> Column:
-    """Per-centroid score |c|² − 2·(v·c) — argmin equals nearest centroid
-    by euclidean distance (the |v|² term is constant per vector).
-    Expression form; the operators use the vectorized kernels below."""
-    # dmat/dvec_lit: one parsed string per literal, not ~5 py4j calls
-    # per element — 16x64 centroids were ~5k round-trips (~3 s of
-    # driver time on a parse-cold JVM) per probe construction (F6)
-    cents = dmat_lit(_centroid_matrix(n_centroids, dims))
-    norms = dvec_lit(_centroid_norms(n_centroids, dims))
-    return F.zip_with(cents, norms, lambda w, n2: n2 - 2.0 * dot(vec, w))
+def _ivf_scores(vec: str, n_centroids: int, dims: int) -> str:
+    """Per-centroid score |c|² − 2·(v·c) of the array<double> expression
+    ``vec`` — argmin equals nearest centroid by euclidean distance (the
+    |v|² term is constant per vector).  Expression form; the operators
+    use the vectorized kernels below."""
+    cents = dmat_sexpr(_centroid_matrix(n_centroids, dims))
+    norms = dvec_sexpr(_centroid_norms(n_centroids, dims))
+    return (f"zip_with({cents}, {norms}, "
+            f"(w, n2) -> n2 - {dot_sexpr(vec, 'w')} * 2.0D)")
 
 
-def ivf_cell(vec: Column, n_centroids: int = IVF_CENTROIDS,
+def ivf_cell(vec: str, n_centroids: int = IVF_CENTROIDS,
              dims: int = 64) -> Column:
+    """1-based nearest-centroid cell of the array<double> expression
+    ``vec`` (ties to the lowest index)."""
     scores = _ivf_scores(vec, n_centroids, dims)
-    return F.array_position(scores, F.array_min(scores)).cast("int")
+    return F.expr(f"cast(array_position({scores}, array_min({scores})) "
+                  f"as int)")
 
 
-def ivf_probe_cells(vec: Column, n_centroids: int = IVF_CENTROIDS,
+def ivf_probe_cells(vec: str, n_centroids: int = IVF_CENTROIDS,
                     dims: int = 64, nprobe: int = IVF_NPROBE) -> Column:
+    """The ``nprobe`` nearest cells of the array<double> expression
+    ``vec``, nearest first (ties to the lower index)."""
     scores = _ivf_scores(vec, n_centroids, dims)
-    idx = F.sequence(F.lit(1), F.lit(n_centroids))
-    ranked = F.array_sort(F.zip_with(
-        scores, idx, lambda s, i: F.struct(s.alias("s"), i.alias("i"))))
-    return F.transform(F.slice(ranked, 1, nprobe), lambda x: x["i"])
+    return F.expr(
+        f"transform(slice(array_sort(zip_with({scores}, "
+        f"sequence(1, {n_centroids}), "
+        f"(s, i) -> struct(s as s, i as i))), 1, {nprobe}), "
+        f"x -> x['i'])")
 
 
 def _ivf_np_scores(X: np.ndarray, W: np.ndarray, N2: np.ndarray) -> np.ndarray:
     """(n, n_centroids) scores |c|² − 2·(v·c): the subtract/scale rounding
-    order matches ``n2 - 2.0 * dot`` in the expression form exactly."""
+    order matches ``n2 - dot * 2.0D`` in the expression form exactly."""
     return N2[None, :] - 2.0 * _seq_matmul(X, W)
 
 
@@ -839,8 +826,7 @@ def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     # each query vector ~N·nprobe/n_centroids times, so an Arrow kernel
     # would re-ship ~2 full vectors per candidate row (measured 150 MB of
     # serde at sf0.1 — 4× slower than the interpreted one-dot-per-pair).
-    # One parsed SQL string (round-11 F6: the Column/lambda dot paid
-    # ~112 py4j round-trips per construction)
+    # One parsed SQL string.
     cand = (base.join(F.broadcast(queries), "cell")
             .where(F.col(id_col) != F.col("query_id"))
             .selectExpr("query_id", f"`{id_col}` as neighbor_id",
@@ -1105,8 +1091,8 @@ def _kmeans_fit(emb: DataFrame, k: int = KMEANS_K,
         # (cluster, dim) instead of 64 per-dim avg columns: the wide agg
         # blew Spark's ~100-field codegen limit, so each Lloyd round ran
         # an INTERPRETED HashAggregate stacked on the Arrow-UDF stage
-        # (~0.7 s/round at sf0.1 vs 0.28 s exploded — measured, PARITY
-        # round-7 deltas).  Per-key accumulation classes are unchanged
+        # (~0.7 s/round at sf0.1 vs 0.28 s exploded — measured, see
+        # PARITY.md).  Per-key accumulation classes are unchanged
         # (per-partition row order, arbitrary partial merge — same as
         # each per-dim avg before) and the update is bit-identical on
         # all three test SFs; KMEANS_ROUND rounding remains the
@@ -1387,13 +1373,10 @@ def kmeans_exemplars(emb: DataFrame, k: int = KMEANS_K,
 
     base, Wc = _kmeans_fit(emb, k, n_iters, dims, id_col, vec_col,
                            materialize)
-    from .util import dmat_sexpr
-
     assigned = base.withColumn(
         "cluster", _kmeans_assign_kernel(Wc)(F.col("v")))
-    # one parsed SQL string (round-11 F6: two Column/lambda dots paid
-    # ~224 py4j round-trips per construction); 2.0D * x is bit-identical
-    # whichever operand order the tree takes — IEEE multiply commutes
+    # one parsed SQL string; 2.0D * x is bit-identical whichever
+    # operand order the tree takes — IEEE multiply commutes
     cent_s = f"element_at({dmat_sexpr(Wc)}, cluster)"
     n2_s = f"element_at({dvec_sexpr(_seq_norms(Wc))}, cluster)"
     d2_s = (f"round({dot_sexpr('v', 'v')} "
@@ -1510,9 +1493,9 @@ def semantic_dedup(emb: DataFrame, min_cosine: float = SEMDEDUP_TAU,
     ``max(KMEANS_K, ceil(n / target_cluster_size))`` — the invariant
     that keeps per-key work bounded at any corpus size.  ``n`` is the
     VALID-embedding count taken from the materialized base the fit
-    reuses (round 7, VERDICT r6: the old ``emb.count()`` was an extra
-    eager scan of the raw input in the operator hot path — counting the
-    base instead just triggers the materialization the first Lloyd round
+    reuses (``emb.count()`` would be an extra eager scan of the raw
+    input in the operator hot path — counting the base instead just
+    triggers the materialization the first Lloyd round
     would pay anyway, and invalid rows never reach the clustering, so
     they should not inflate ``k``).  Callers that already know the
     corpus size pass ``n_rows`` and skip even that.  Every oracle-checked
@@ -1552,7 +1535,7 @@ def semantic_dedup(emb: DataFrame, min_cosine: float = SEMDEDUP_TAU,
         order = np.lexsort((pdf["id"].to_numpy(), cs))
         X, nr = X[order], nr[order]
         # doc j is dropped when ANY better-ranked i (i < j) is within tau
-        # — the paper's upper-triangular keep rule.  Round 7: computed in
+        # — the paper's upper-triangular keep rule, computed in
         # rank-ordered ROW BLOCKS instead of one n_c x n_c matrix.  Each
         # S element is still the same ascending-dimension sequential dot
         # (blocking rows never reorders a single element's accumulation),
@@ -1565,7 +1548,7 @@ def semantic_dedup(emb: DataFrame, min_cosine: float = SEMDEDUP_TAU,
         # duplicate-heavy clusters (where big S mattered most) the alive
         # set collapses within a few blocks and the stage goes from
         # quadratic to near-linear; measured 37.3 -> 7.5 s on the 10x
-        # replica, scale ratio 10.0 -> 2.3 (PARITY round-7 deltas).
+        # replica, scale ratio 10.0 -> 2.3 (PARITY.md).
         keep = np.ones(n, dtype=bool)
         for a in range(0, n - 1, B):
             cols = np.nonzero(keep)[0]
@@ -1697,11 +1680,8 @@ def _pq_unit_base(emb: DataFrame, dims: int, id_col: str,
     # because the norm is single-referenced — a lambda binding is the form
     # the optimizer can never re-inline).  Values are bit-identical: same
     # sequential self-dot, same per-element division.  Emitted as parsed
-    # SQL strings (round-11 F6 — the Column form paid ~440 py4j
-    # round-trips per construction across its HOF lambdas; optimized-plan
-    # identity vs the Column form locked in tests/test_dvec_lit.py).
-    nrm_s = ("sqrt(aggregate(zip_with(raw, raw, (x, y) -> x * y), "
-             "cast(0.0D as double), (acc, v) -> acc + v))")
+    # SQL strings (optimized plan locked in tests/test_dvec_lit.py).
+    nrm_s = f"sqrt({dot_sexpr('raw', 'raw')})"
     base = (valid_embeddings(emb, dims, vec_col)
             .selectExpr(f"`{id_col}`",
                         f"cast(`{vec_col}` as array<double>) as raw"))
@@ -1825,7 +1805,7 @@ def pq_encode_sql(books: list[list[list[float]]], dims: int = 64) -> str:
     measured ~100x slower) and each (row, subspace) scores list is a
     plain column so argmin evaluates it once.  The base CTE mirrors the
     FULL :func:`valid_embeddings` contract incl. the all-finite guard
-    (ADVICE r7: a vector carrying +/-Inf passes the dot>0 test under
+    (a vector carrying +/-Inf passes the dot>0 test under
     IEEE but Spark drops it — without ``isfinite`` the engines diverge
     on such corpora); same guard in ``pq_topk_sql``/``ivf_pq_topk_sql``.
     DuckDB evaluates filter conjuncts AND projections totally (no
@@ -2055,7 +2035,7 @@ def ivf_pq_topk_from_index(index: DataFrame, query_src: DataFrame,
     queries = (query_base
                .where(F.col(id_col).isin(query_ids))
                .select(F.col(id_col).alias("query_id"),
-                       ivf_probe_cells(F.col("v"), n_centroids, dims,
+                       ivf_probe_cells("v", n_centroids, dims,
                                        nprobe).alias("probes"),
                        _pq_lut_kernel(books)(F.col("v")).alias("lut")))
     s_idx = F.sequence(F.lit(1), F.lit(m))
@@ -2270,7 +2250,7 @@ def ivf_pq_refined_topk_sql(books: list[list[list[float]]],
 # a TakeOrderedAndProject argmax — no shuffle of the corpus, no UDFs);
 # the only driver data is k one-row collects (the chosen centers).  The
 # running min-distance column accumulates as plan expressions, so every
-# KCENTER_CHECKPOINT_EVERY rounds the loop CUTS THE PLAN (VERDICT r8 #5):
+# KCENTER_CHECKPOINT_EVERY rounds the loop CUTS THE PLAN:
 # the survivors' (id, v, _md) frame is persisted and eagerly materialized,
 # already-chosen rows are dropped at the cut, and the previous cut's
 # cache is released — plan depth, the not-chosen literal, and cached
@@ -2304,7 +2284,7 @@ def kcenter_select(emb: DataFrame, k: int = KCENTER_K, dims: int = 64,
     persisted + eagerly materialized with the already-chosen rows
     dropped, and the previous cut's cache released — plan depth, the
     not-chosen ``isin`` literal, and live cached copies stay O(j)
-    however large ``k`` gets (VERDICT r8 #5; the trace is bit-identical
+    however large ``k`` gets (the trace is bit-identical
     to the uncheckpointed form, locked in tests/test_kcenter.py).  On a
     real cluster, pass ``materialize=`` to swap the persist for the
     framework's parquet plan-cut when executor memory is the scarcer
@@ -2330,9 +2310,8 @@ def kcenter_select(emb: DataFrame, k: int = KCENTER_K, dims: int = 64,
     cur = base
     recent_ids = [first[0][id_col]]  # chosen since the last plan cut
     prev_cut: DataFrame | None = None
-    # per-iteration expressions parse as ONE SQL string each (round-11
-    # F6 recipe — the Column/lambda dot paid ~60 py4j round-trips per
-    # iteration; identical trees, trace locked in tests/test_kcenter.py)
+    # per-iteration expressions parse as ONE SQL string each (trace
+    # locked in tests/test_kcenter.py)
     id_s = f"`{id_col}`"
     for rank in range(2, k + 1):
         d_new = (f"round(1.0D - {dot_sexpr('v', dvec_sexpr(chosen_vecs[-1]))}"
@@ -2445,7 +2424,7 @@ MMR_K = 8
 #: relevance/diversity trade-off (1.0 = pure relevance ranking)
 MMR_LAMBDA = 0.7
 MMR_ROUND = 4
-#: candidate-pool cap (VERDICT r10 #5): the standard MMR-at-scale move —
+#: candidate-pool cap: the standard MMR-at-scale move —
 #: the greedy loop runs over the top-``MMR_POOL`` candidates by relevance
 #: (one distributed TakeOrderedAndProject over the corpus), so each of
 #: the k argmax iterations scans a BOUNDED frame instead of the corpus.
@@ -2514,10 +2493,8 @@ def mmr_select(emb: DataFrame, k: int = MMR_K, lam: float = MMR_LAMBDA,
         base = base.where(F.col(id_col) != seed[0][id_col])
     else:
         qv = [float(x) for x in query_vec]
-    # per-construction expressions parse as ONE SQL string each
-    # (round-11 F6 recipe — the Column/lambda dot paid ~60 py4j
-    # round-trips per iteration; identical trees, trace locked in
-    # tests/test_mmr.py)
+    # per-construction expressions parse as ONE SQL string each (trace
+    # locked in tests/test_mmr.py)
     id_s = f"`{id_col}`"
     lam_s, one_minus_lam_s = (repr(float(lam)) + "D",
                               repr(1.0 - float(lam)) + "D")
@@ -2713,13 +2690,8 @@ def kmeanspar_oversample(emb: DataFrame, k: int = KMEANSPAR_K,
     new_vecs = [list(seed_row[0]["v"])]
     all_vecs = {seed_row[0][id_col]: new_vecs[0]}
     cur = base
-    # every per-round expression parses as ONE SQL string (round-11 F6
-    # recipe): the Column/lambda form paid ~60 py4j round-trips per dot
-    # construction x l new candidates x rounds, plus the O(rounds*l)
-    # struct literals of the weighting pass — ~9.7k round-trips of pure
-    # driver time per construction (tools/rt_sweep.py, round 12);
-    # identical expression trees, locked by the DuckDB lockstep oracle
-    # and the pure-python reference test
+    # every per-round expression parses as ONE SQL string, locked by the
+    # DuckDB lockstep oracle and the pure-python reference test
     id_s = f"`{id_col}`"
     for r in range(1, rounds + 1):
         d_terms = [

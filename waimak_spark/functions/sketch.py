@@ -27,13 +27,10 @@ from pyspark.sql import functions as F
 from .dedup import spread_for_compute
 from .text import (
     TOKENS_SQL,
-    seeded_hash,
     seeded_hash_sexpr,
     seeded_hash_sql,
-    shingles,
     shingles_sexpr,
     shingles_sql,
-    tokens,
     tokens_sexpr,
 )
 
@@ -62,9 +59,7 @@ def cms_gram_stream(df: DataFrame, text_col: str = "text",
     spreads with an explicit round-robin exchange instead — the
     :func:`hll_gram_stream` contract)."""
     base = spread_for_compute(df) if spread else df
-    # _sexpr strings via selectExpr: one py4j call per projection (the
-    # round-11 construction-tax pass; analyzed plan identical — see
-    # text.py)
+    # selectExpr: one py4j call per projection
     return (base
             .where(f"`{text_col}` is not null")
             .selectExpr(f"{tokens_sexpr(f'`{text_col}`')} as _t")
@@ -278,9 +273,8 @@ def hll_registers(df: DataFrame, col: str = "gram",
     (integer string length, no float log), identical in Spark and
     DuckDB."""
     m = 1 << p
-    # single-parse SQL fragments (round-11 F6 recipe; identical trees —
-    # the v subexpression repeats in both CASE branches exactly as the
-    # Column form's expression tree did)
+    # single-parse SQL fragments; the v subexpression repeats in both
+    # CASE branches
     item_s = f"`{col}`"
     j_s = f"cast(({seeded_hash_sexpr(item_s, HLL_SEED_REG)}) % {m} as int)"
     v_s = f"({seeded_hash_sexpr(item_s, HLL_SEED_RHO)}) % {1 << w}"
@@ -316,9 +310,8 @@ def hll_estimate(reg: DataFrame, group_cols: tuple[str, ...] = (),
     agg = reg.groupBy(*group_cols).agg(
         F.count("*").alias("_occ"),
         F.expr("sum(pow(2.0D, -r))").alias("_s"))
-    # one parsed string (round-11 F6 recipe): the raw-estimate
-    # subexpression repeats in both CASE branches exactly as the Column
-    # form's tree did; repr literals round-trip the doubles exactly
+    # one parsed string: the raw-estimate subexpression repeats in both
+    # CASE branches; repr literals round-trip the doubles exactly
     raw_s = f"{alpha!r}D * {float(m * m)!r}D / (_s + ({m} - _occ))"
     est_s = (f"case when ({raw_s}) <= {2.5 * m!r}D and ({m} - _occ) > 0 "
              f"then {float(m)!r}D * ln({float(m)!r}D "
@@ -338,9 +331,7 @@ def hll_gram_stream(df: DataFrame, text_col: str = "text",
     ``spread_for_compute`` reads driver-side file metadata a streaming
     plan doesn't have)."""
     base = spread_for_compute(df) if spread else df
-    # one parsed SQL string per projection (round-11 F6 recipe — the
-    # Column/lambda tokens+shingles forms paid ~350 py4j round-trips
-    # per construction; identical trees)
+    # one parsed SQL string per projection
     return (base
             .where(F.expr(f"`{text_col}` is not null "
                           f"and `{group_col}` is not null"))
@@ -380,8 +371,8 @@ def hll_distinct_grams(df: DataFrame, text_col: str = "text",
     1.3; the unpersisted 10× figure carried host load, but the 1× side
     alone reproduced 4.9 → 2.3 s).
 
-    ``certify=False`` is the production 100 TB path made explicit
-    (VERDICT r11 #9): ``(lang, n_est)`` from the registers alone — one
+    ``certify=False`` is the production 100 TB path made explicit:
+    ``(lang, n_est)`` from the registers alone — one
     tokenize pass into the keyed-max register aggregation, no persist
     (single consumer), no exact count-distinct.  The estimate is the
     SAME ``hll_estimate`` expression the certified report embeds, so
@@ -457,7 +448,7 @@ def hll_distinct_grams_sql(n: int = CMS_NGRAM, p: int = HLL_P,
 
 
 # ---------------------------------------------------------------------------
-# KMV bottom-k quantile sketch (round 10) — the QUANTILE member of the
+# KMV bottom-k quantile sketch — the QUANTILE member of the
 # sketch triad (CMS = frequencies, HLL = distinct counts, KMV = value
 # distribution), built on the k-minimum-values idea (Bar-Yossef et al.
 # 2002, RANDOM: the k smallest values of a uniform hash are a uniform
@@ -513,8 +504,8 @@ def kmv_bottomk(df: DataFrame, value_col: str = "value",
             .select(F.col(group_col).alias("g"),
                     F.col(id_col).alias("id"),
                     F.col(value_col).alias("v"))
-            .withColumn("_u", seeded_hash(F.col("id").cast("string"),
-                                          seed)))
+            .withColumn("_u", F.expr(
+                seeded_hash_sexpr("cast(id as string)", seed))))
     w1 = (W.partitionBy("g", F.pmod(F.col("id"), F.lit(salt)))
           .orderBy(F.asc("_u"), F.asc("id")))
     w2 = W.partitionBy("g").orderBy(F.asc("_u"), F.asc("id"))
@@ -584,8 +575,8 @@ def _kmv_full(df: DataFrame, value_col: str, group_col: str,
     the projection is narrow (no interpreted per-row pipeline), every
     consumer's window/aggregate re-shuffles anyway, and an interleaved
     same-JVM A/B at sf0.1 measured the round-robin exchange as pure
-    cost (min-of-5: 5.16 s with it, 2.95 s without — it also beat the
-    round-10 form, which spread inside the bottom-k sampler)."""
+    cost (min-of-5: 5.16 s with it, 2.95 s without; spreading inside
+    the bottom-k sampler instead was slower too)."""
     from .cache_registry import tracked_persist
 
     return tracked_persist(
@@ -601,19 +592,17 @@ def _kmv_sample_estimates(samp: DataFrame, qs: tuple) -> DataFrame:
     uses, over the sample's own rank.  Shared verbatim by the
     certification report and the ``certify=False`` sketch-only path so
     the estimates cannot drift between them (locked in
-    tests/test_kmv.py).  Per-q aggregates as _sexpr strings — one parse
-    each instead of ~10 py4j Column builds (the round-11
-    construction-tax pass; the 1L / ceil(double)->bigint typing matches
-    the Column form exactly)."""
+    tests/test_kmv.py).  Per-q aggregates are SQL strings, one parse
+    each (``1L`` and ``ceil(double)`` keep the rank arithmetic
+    bigint)."""
     from pyspark.sql import Window as W
 
     ws = W.partitionBy("g").orderBy(F.asc("v"), F.asc("id"))
     wn = W.partitionBy("g")
     # sample size as an unordered window over the SAME g-partition the
-    # rank establishes (guide §2.4: no second exchange, no join) — the
-    # round-11 form aggregated sn separately and broadcast-joined it
-    # back, which also made every unpersisted consumer recompute the
-    # sample subplan twice
+    # rank establishes (guide §2.4: no second exchange, no join);
+    # aggregating sn separately and broadcast-joining it back would
+    # make every unpersisted consumer recompute the sample subplan twice
     return (samp.withColumn("_sr", F.row_number().over(ws))
             .withColumn("sn", F.count("*").over(wn))
             .groupBy("g").agg(*[
@@ -648,15 +637,15 @@ def _kmv_report(full: DataFrame, samp: DataFrame, qs: tuple,
     streaming form)."""
     from pyspark.sql import Window as W
 
-    # ONE windowed pass over the full projection (round-11 optimization
-    # pass, guide §2.4 "remove shuffles outright"): the per-group count
+    # ONE windowed pass over the full projection (guide §2.4 "remove
+    # shuffles outright"): the per-group count
     # rides the SAME hash-partition(g) exchange as the rank window (an
     # unordered window count adds a WindowExec but no exchange or extra
     # scan), and with the tiny per-group estimate frame broadcast in,
     # the rank-error conditional counts become extra aggregates of the
-    # SAME groupBy — the previous shape paid three separate full passes
-    # (count aggregate, rank window, error count) each with its own
-    # exchange over the persisted projection.  Values identical: same
+    # SAME groupBy, instead of three separate full passes (count
+    # aggregate, rank window, error count) each with its own exchange
+    # over the persisted projection.  Values identical: same
     # picks, same counts, same rounding.
     wv = W.partitionBy("g").orderBy(F.asc("v"), F.asc("id"))
     wn = W.partitionBy("g")
@@ -778,7 +767,7 @@ def kmv_quantiles_sql(qs: tuple = KMV_QS, k: int = KMV_K,
 
 
 # ---------------------------------------------------------------------------
-# bucketed-minima KMV (round 10) — the STREAMING-STATE form of the
+# bucketed-minima KMV — the STREAMING-STATE form of the
 # quantile sketch: global bottom-k is a rank, which Structured Streaming
 # cannot maintain incrementally, but a keyed MIN is associative,
 # commutative, and idempotent, so assigning each row to one of B buckets
@@ -816,11 +805,11 @@ def kmv_bucket_minima(df: DataFrame, value_col: str = "value",
             .select(F.col(group_col).alias("g"),
                     F.col(id_col).alias("id"),
                     F.col(value_col).alias("v"))
-            .withColumn("_u", seeded_hash(F.col("id").cast("string"),
-                                          seed_order))
-            .withColumn("bucket",
-                        F.pmod(seeded_hash(F.col("id").cast("string"),
-                                           seed_bucket), F.lit(b))))
+            .withColumn("_u", F.expr(
+                seeded_hash_sexpr("cast(id as string)", seed_order)))
+            .withColumn("bucket", F.expr(
+                f"pmod({seeded_hash_sexpr('cast(id as string)', seed_bucket)}"
+                f", {b})")))
     return (base.groupBy("g", "bucket")
             .agg(F.min(F.struct("_u", "id", "v")).alias("m"))
             .select("g", "bucket", F.col("m.id").alias("id"),
@@ -922,12 +911,13 @@ def kmv_group_jaccard(df: DataFrame, text_col: str = "text",
             .where(F.col(text_col).isNotNull()
                    & F.col(group_col).isNotNull())
             .select(F.col(group_col).alias("g"),
-                    F.explode(tokens(F.col(text_col))).alias("tok"))
+                    F.explode(F.expr(tokens_sexpr(f"`{text_col}`")))
+                    .alias("tok"))
             .distinct())
     dt = tracked_persist(base)
     # per-group bottom-k element sketch (two-phase: salt bucket prunes
     # to <= k rows per (g, bucket) before the per-group rank)
-    u = seeded_hash(F.col("tok"), seed)
+    u = F.expr(seeded_hash_sexpr("tok", seed))
     w1 = (W.partitionBy("g", F.pmod(F.col("_u"), F.lit(KMV_SALT)))
           .orderBy(F.asc("_u"), F.asc("tok")))
     w2 = W.partitionBy("g").orderBy(F.asc("_u"), F.asc("tok"))

@@ -20,22 +20,27 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
-# deterministic 32-bit-ish hash (md5-prefix) — identical in Spark and DuckDB
+# Kernel builders.  Each kernel has ONE Spark form, a Spark-SQL fragment
+# (``_sexpr``: takes and returns expression strings, parsed JVM-side in a
+# single py4j call by ``F.expr``/``selectExpr``), and one DuckDB oracle
+# fragment (``_sql``).  The DuckDB lockstep oracles on every consumer lock
+# the pair together.
 # ---------------------------------------------------------------------------
 
 
-def md5_hash32(col: Column) -> Column:
+def md5_hash32_sexpr(expr: str) -> str:
     """First 8 hex chars of md5 as a bigint (0 .. 2^32-1)."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+    return f"cast(conv(substring(md5({expr}), 1, 8), 16, 10) as bigint)"
 
 
 def md5_hash32_sql(expr: str) -> str:
-    """DuckDB fragment matching :func:`md5_hash32`."""
+    """DuckDB fragment matching :func:`md5_hash32_sexpr`."""
     return f"('0x' || substr(md5({expr}), 1, 8))::BIGINT"
 
 
-def seeded_hash(col: Column, seed: int) -> Column:
-    return md5_hash32(F.concat(F.lit(f"{seed}:"), col))
+def seeded_hash_sexpr(expr: str, seed: int) -> str:
+    """:func:`md5_hash32_sexpr` of ``'<seed>:' || expr``."""
+    return md5_hash32_sexpr(f"concat('{seed}:', {expr})")
 
 
 def seeded_hash_sql(expr: str, seed: int) -> str:
@@ -43,64 +48,30 @@ def seeded_hash_sql(expr: str, seed: int) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Spark-SQL fragment builders (the ``_sexpr`` family).  Each py4j call
-# costs ~0.6 ms of driver round-trip; Column-by-Column construction of
-# the hash/tokenize/shingle kernels summed to 0.5-1 s of PURE DRIVER
-# time per query construction (cProfile: 1.5k-3k socket round-trips on
-# the near-dedup/sketch entries — an O(expression-size) Python-side tax
-# paid before any job runs).  These builders emit the SAME expression as
-# their Column twins as ONE parsed SQL string (one py4j call); identity
-# is locked by the DuckDB lockstep oracles on every consumer.  The
-# DuckDB ``_sql`` builders above/below are the ORACLE twins — keep all
-# three in sync.
+# tokenisation: lowercased tokens split on runs of [ \t\n\x0B\f\r]
+# (Java's ``\s``), empties removed.  RE2's ``\s`` leaves out \x0B, so
+# the DuckDB pattern adds ``\v`` to the class.
 # ---------------------------------------------------------------------------
-
-
-def md5_hash32_sexpr(expr: str) -> str:
-    """Spark-SQL fragment matching :func:`md5_hash32`."""
-    return f"cast(conv(substring(md5({expr}), 1, 8), 16, 10) as bigint)"
-
-
-def seeded_hash_sexpr(expr: str, seed: int) -> str:
-    """Spark-SQL fragment matching :func:`seeded_hash`."""
-    return md5_hash32_sexpr(f"concat('{seed}:', {expr})")
-
-
-# ---------------------------------------------------------------------------
-# tokenisation
-# ---------------------------------------------------------------------------
-
-
-def tokens(col: Column) -> Column:
-    """Lowercased whitespace tokens, empties removed."""
-    return F.filter(F.split(F.lower(col), r"\s+"), lambda x: F.length(x) > 0)
-
-
-TOKENS_SQL = (
-    "list_filter(regexp_split_to_array(lower({col}), '\\s+'), x -> len(x) > 0)"
-)
-
-
-def shingles(tok: Column, n: int = 3) -> Column:
-    """n-word shingles as space-joined strings; empty when < n tokens."""
-    idx = F.sequence(F.lit(1), F.size(tok) - (n - 1))
-    make = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(tok, i + k) for k in range(n)]
-    )
-    return F.when(F.size(tok) >= n, F.transform(idx, make)).otherwise(
-        F.array().cast("array<string>")
-    )
 
 
 def tokens_sexpr(col: str) -> str:
-    """Spark-SQL fragment matching :func:`tokens` (``col`` is a column
-    reference / expression string, backtick-quote raw names)."""
+    """Lowercased whitespace tokens of ``col`` (a column reference /
+    expression string; backtick-quote raw names), empties removed."""
     return f"filter(split(lower({col}), '\\\\s+'), x -> length(x) > 0)"
 
 
+TOKENS_SQL = (
+    "list_filter(regexp_split_to_array(lower({col}), '[\\s\\v]+'), "
+    "x -> len(x) > 0)"
+)
+
+
 def shingles_sexpr(tok: str, n: int = 3) -> str:
-    """Spark-SQL fragment matching :func:`shingles`; ``tok`` must be a
-    column reference in scope (lambdas read outer row columns)."""
+    """n-word shingles of the token array ``tok`` as space-joined
+    strings, empty when it has fewer than n tokens.  ``tok`` is inlined
+    once per ``element_at``: pass a column reference in scope (lambdas
+    read outer row columns) so the tokenizer runs once per row, not
+    once per reference."""
     parts = ", ".join(
         (f"element_at({tok}, i + {k})" if k else f"element_at({tok}, i)")
         for k in range(n))
@@ -111,8 +82,8 @@ def shingles_sexpr(tok: str, n: int = 3) -> str:
 
 
 def shingles_sql(tok_col: str = "t", n: int = 3) -> str:
-    """DuckDB fragment matching :func:`shingles`; ``tok_col`` must be a
-    column name in scope (lambdas can reference outer row columns)."""
+    """DuckDB fragment matching :func:`shingles_sexpr`; ``tok_col`` must
+    be a column name in scope (lambdas can reference outer row columns)."""
     parts = " || ' ' || ".join(f"{tok_col}[i+{k}]" for k in range(n))
     return (
         f"case when len({tok_col}) >= {n} then "
@@ -124,16 +95,17 @@ def shingles_sql(tok_col: str = "t", n: int = 3) -> str:
 
 def distinct_shingle_kernel(n: int = 3):
     """Arrow-batched kernel computing the DISTINCT n-word shingle set per
-    document — the vectorized replacement for
-    ``array_distinct(shingles(tokens(text), n))`` in the dedup hot path
+    document — the vectorized replacement for ``array_distinct`` over
+    :func:`shingles_sexpr` of :func:`tokens_sexpr` in the dedup hot path
     (interpreted higher-order expressions re-evaluate the token pipeline
     per shingle reference; measured ~5× slower at sf0.1).
 
     Engine-lockstep notes (string ops are exact, unlike floats, so a
     Python reimplementation is safe as long as SEMANTICS match):
-    * ``re.ASCII`` makes Python's ``\\s`` the same set as Java regex and
-      RE2 ``\\s`` ([ \\t\\n\\v\\f\\r]) — without it Python would also
-      split on Unicode whitespace and diverge from Spark/DuckDB;
+    * ``re.ASCII`` makes Python's ``\\s`` the same set as Java regex's
+      ``\\s`` ([ \\t\\n\\v\\f\\r]) and :data:`TOKENS_SQL`'s
+      ``[\\s\\v]`` — without it Python would also split on Unicode
+      whitespace and diverge from Spark/DuckDB;
     * ``str.lower()`` is the same simple case mapping as Spark/DuckDB
       ``lower`` for ASCII and the BMP one-to-one mappings;
     * first-occurrence order matches ``array_distinct``.
@@ -185,26 +157,29 @@ def bpe_token_count_sql(expr: str) -> str:
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
 
 
-def quality_columns(text_col: Column) -> dict[str, Column]:
-    """Length / punctuation / stopword ratio metrics (rounded for parity)."""
-    tok = tokens(text_col)
-    n_tok = F.size(tok)
-    n_chars = F.length(text_col)
-    punct = n_chars - F.length(F.regexp_replace(text_col, r"[^\w\s]", ""))
-    stop = F.size(F.filter(tok, lambda t: t.isin(STOPWORDS)))
-    return {
-        "n_tokens": n_tok.cast("bigint"),
-        "n_chars": n_chars.cast("bigint"),
-        "avg_token_len": F.round(
-            F.when(n_tok > 0,
-                   F.aggregate(tok, F.lit(0).cast("bigint"),
-                               lambda acc, t: acc + F.length(t)) / n_tok)
-            .otherwise(F.lit(0.0)), 4),
-        "punct_ratio": F.round(
-            F.when(n_chars > 0, punct / n_chars).otherwise(0.0), 4),
-        "stopword_ratio": F.round(
-            F.when(n_tok > 0, stop / n_tok).otherwise(0.0), 4),
-    }
+def quality_columns(text_col: str) -> dict[str, Column]:
+    """Length / punctuation / stopword ratio metrics of the column named
+    ``text_col`` (rounded for parity)."""
+    text = f"`{text_col}`"
+    tok = tokens_sexpr(text)
+    n_tok = f"size({tok})"
+    n_chars = f"length({text})"
+    punct = (f"({n_chars} - length("
+             f"regexp_replace({text}, '[^\\\\w\\\\s]', '')))")
+    stop = (f"size(filter({tok}, t -> t in ("
+            + ", ".join(f"'{w}'" for w in STOPWORDS) + ")))")
+    avg_len = (f"aggregate({tok}, cast(0 as bigint), "
+               f"(acc, t) -> acc + length(t)) / {n_tok}")
+    return {name: F.expr(e) for name, e in {
+        "n_tokens": f"cast({n_tok} as bigint)",
+        "n_chars": f"cast({n_chars} as bigint)",
+        "avg_token_len": (f"round(case when {n_tok} > 0 then {avg_len} "
+                          f"else 0.0D end, 4)"),
+        "punct_ratio": (f"round(case when {n_chars} > 0 "
+                        f"then {punct} / {n_chars} else 0.0D end, 4)"),
+        "stopword_ratio": (f"round(case when {n_tok} > 0 "
+                           f"then {stop} / {n_tok} else 0.0D end, 4)"),
+    }.items()}
 
 
 STOPWORDS_SQL = "['" + "','".join(STOPWORDS) + "']"
@@ -221,7 +196,7 @@ QUALITY_SQL = f"""
                  then list_sum(list_transform(t, x -> length(x)))::DOUBLE / len(t)
                  else 0.0 end, 4) as avg_token_len,
            round(case when length(text) > 0
-                 then (length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')))::DOUBLE
+                 then (length(text) - length(regexp_replace(text, '[^\\w\\s\\v]', '', 'g')))::DOUBLE
                       / length(text)
                  else 0.0 end, 4) as punct_ratio,
            round(case when len(t) > 0
@@ -243,27 +218,25 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def lang_id_columns(text_col: Column) -> dict[str, Column]:
-    tok = tokens(text_col)
-
-    def marker_filter(markers: list[str]):
-        # NB: single-arg lambda only — PySpark treats 2-arg lambdas in
-        # higher-order functions as (element, index)
-        return lambda t: t.isin(markers)
-
+def lang_id_columns(text_col: str) -> dict[str, Column]:
+    """Per-language marker-word counts of the column named ``text_col``
+    and the argmax language (ties to the name that sorts first)."""
+    tok = tokens_sexpr(f"`{text_col}`")
     scores = {
-        lang: F.size(F.filter(tok, marker_filter(markers)))
+        lang: (f"size(filter({tok}, t -> t in ("
+               + ", ".join(f"'{m}'" for m in markers) + ")))")
         for lang, markers in LANG_MARKERS.items()
     }
     # deterministic argmax: highest score wins, ties broken by lang name asc
-    pred = F.lit("und")
-    best = F.lit(0)
+    pred = "'und'"
+    best = "0"
     for lang in sorted(LANG_MARKERS, reverse=True):
         s = scores[lang]
-        pred = F.when(s >= best, F.lit(lang)).otherwise(pred)
-        best = F.greatest(s, best)
-    out = {f"score_{l}": scores[l].cast("bigint") for l in sorted(LANG_MARKERS)}
-    out["lang_pred"] = pred
+        pred = f"case when {s} >= {best} then '{lang}' else {pred} end"
+        best = f"greatest({s}, {best})"
+    out = {f"score_{l}": F.expr(f"cast({scores[l]} as bigint)")
+           for l in sorted(LANG_MARKERS)}
+    out["lang_pred"] = F.expr(pred)
     return out
 
 
@@ -324,13 +297,12 @@ def unigram_logprob(df: DataFrame, text_col: str = "text",
     tokens drop out (no rows to average — same on both engines)."""
     from .cache_registry import tracked_persist
 
-    tok = df.select(F.col(id_col).alias("doc_id"),
-                    F.explode(tokens(F.col(text_col))).alias("tok"))
+    tok = df.selectExpr(f"`{id_col}` as doc_id",
+                        f"explode({tokens_sexpr(f'`{text_col}`')}) as tok")
     # read twice (frequency build + scoring join) — materialize once.
-    # (round-11 optimization pass: a spread_for_compute before the
-    # tokenize was tried and REVERTED on measurement — interleaved
-    # same-JVM A/B at sf0.1: 1.31 s spread vs 0.99 s without; the
-    # round-robin exchange costs more than the parallel tokenize saves)
+    # No spread_for_compute before the tokenize: measured interleaved
+    # same-JVM A/B at sf0.1, 1.31 s spread vs 0.99 s without; the
+    # round-robin exchange costs more than the parallel tokenize saves.
     tok = tracked_persist(tok)
     freq = tok.groupBy("tok").agg(F.count("*").alias("c"))
     totals = freq.agg(F.sum("c").alias("t_total"),
@@ -370,15 +342,10 @@ def bigram_logprob(df: DataFrame, text_col: str = "text",
     from .cache_registry import tracked_persist
 
     # ONE tokenize pass: the token ARRAYS persist, and both the
-    # bigram-pair and unigram streams derive from the cached arrays
-    # (previously the unigram side re-tokenized the whole corpus — a
-    # second full interpreted pass).  Interleaved same-JVM A/B at sf0.1:
-    # 1.56 vs 1.67 s min-of-6; a spread_for_compute before the tokenize
-    # was ALSO tried and rejected (the round-robin exchange cost more
-    # than the parallel tokenize saved at this corpus size: 1.98 s).
-    # single-parse SQL projections (round-12 construction-tax pass —
-    # the Column/lambda forms paid ~990 py4j round-trips per
-    # construction; identical trees, oracle-locked)
+    # bigram-pair and unigram streams derive from the cached arrays, so
+    # the corpus is tokenized once.  No spread_for_compute before the
+    # tokenize: the round-robin exchange cost more than the parallel
+    # tokenize saved at this corpus size (1.98 vs 1.56 s min-of-6).
     tk = tracked_persist(
         df.selectExpr(f"`{id_col}` as doc_id",
                       f"{tokens_sexpr(f'`{text_col}`')} as _tk"))
@@ -503,17 +470,16 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     no grams contribute nothing."""
     if k < 1 or w < 1:
         raise ValueError(f"k={k} and w={w} must be >= 1")
-    gh = F.transform(shingles(tokens(F.col(text_col)), k),
-                     lambda g: seeded_hash(g, seed))
+    sh = shingles_sexpr(tokens_sexpr(f"`{text_col}`"), k)
+    gh = f"transform({sh}, g -> {seeded_hash_sexpr('g', seed)})"
     base = (df.where(F.col(text_col).isNotNull())
-            .select(id_col, gh.alias("_gh")))
+            .selectExpr(f"`{id_col}`", f"{gh} as _gh"))
     n = F.size(F.col("_gh"))
     nwin = F.greatest(n - (w - 1), F.lit(1))
 
     def pick(i):
-        # NOTE (round-11 optimization pass): re-binding `win`/`m` as
-        # lambda variables (the _pq_unit_base recipe) was tried and
-        # REVERTED on measurement — at w=4 the O(w²)→O(w) savings inside
+        # Re-binding `win`/`m` as lambda variables (the _pq_unit_base
+        # recipe) measured slower: at w=4 the O(w²)→O(w) savings inside
         # the filter is ~12 trivial comparisons per window, while the two
         # extra nested transform/array allocations per window measured
         # 4× SLOWER (isolated min 2.3 → 7.8 s).  The recipe pays off for
@@ -597,7 +563,7 @@ def word_frequencies(df: DataFrame, text_col: str = "text",
     distributed half of BPE training; the collect is bounded by ``cap``
     BY CONSTRUCTION (TakeOrderedAndProject, never a global sort)."""
     rows = (df.where(F.col(text_col).isNotNull())
-            .select(F.explode(tokens(F.col(text_col))).alias("w"))
+            .selectExpr(f"explode({tokens_sexpr(f'`{text_col}`')}) as w")
             .groupBy("w").agg(F.count("*").alias("c"))
             .orderBy(F.desc("c"), F.asc("w"))
             .limit(cap).collect())
@@ -679,9 +645,10 @@ def bpe_learn(df: DataFrame, text_col: str = "text",
 
 
 def _bpe_tokenize_py(text: str) -> list[str]:
-    """Pure-Python mirror of :func:`tokens` (lowercased ASCII-\\s+ split,
-    empties removed) — re.ASCII matches the JVM regex's default \\s
-    class, so both engines see the identical word stream."""
+    """Pure-Python mirror of :func:`tokens_sexpr` (lowercased
+    ASCII-\\s+ split, empties removed) — re.ASCII matches the JVM
+    regex's default \\s class, so both engines see the identical word
+    stream."""
     import re
 
     return [w for w in re.split(r"\s+", text.lower(), flags=re.ASCII) if w]

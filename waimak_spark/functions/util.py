@@ -26,7 +26,7 @@ def local_rows_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     so ``array<double>``, ``decimal(10,2)`` and multi-field structs all
     parse correctly — and a row/field arity mismatch raises here with a
     clear message instead of as a confusing pandas/Arrow error
-    downstream (ADVICE r11).
+    downstream.
     """
     import pandas as pd
 
@@ -55,7 +55,7 @@ def local_rows_df(spark: SparkSession, rows, schema: str) -> DataFrame:
 def free_ckpt_blocks(df: DataFrame) -> None:
     """Unpersist the RDD blocks a ``localCheckpoint(eager=True)`` pinned.
 
-    ``df.rdd.unpersist()`` silently frees NOTHING here (ADVICE r11):
+    ``df.rdd.unpersist()`` silently frees NOTHING here:
     ``df.rdd`` derives a fresh javaToPython RDD at storage level NONE,
     while the checkpoint's blocks belong to the internal RDD the
     ``LogicalRDD`` leaf of the checkpointed frame wraps.  Measured: after
@@ -64,8 +64,7 @@ def free_ckpt_blocks(df: DataFrame) -> None:
     held zero.  Walks the analyzed plan (the frame is a checkpoint
     output or a narrow op directly over one, so every LogicalRDD leaf
     belongs to this checkpoint) and unpersists each leaf's backing RDD.
-    Best-effort: failures leave blocks to the JVM ContextCleaner, the
-    pre-round-12 behavior."""
+    Best-effort: failures leave blocks to the JVM ContextCleaner."""
     try:
         stack = [df._jdf.queryExecution().analyzed()]
         while stack:
@@ -86,13 +85,13 @@ def dvec_sexpr(vals) -> str:
     ``F.lit(list_of_floats)`` (or ``F.array(*[F.lit(x) ...])``) builds
     the literal Column-by-Column over py4j — ~5 driver round-trips PER
     ELEMENT, so a 16x64 centroid matrix costs ~5k round-trips of pure
-    single-threaded driver time before any job runs (round-11 F6
-    instrument).  Emitting the same values as ONE parsed SQL string is
-    a single round-trip.  ``repr`` round-trips every finite double
-    exactly and the ``D`` suffix forces DoubleType (a bare decimal
-    literal would parse as DECIMAL and change the expression tree);
-    the analyzed plan is identical to the ``F.lit`` form modulo
-    expression IDs (locked in tests/test_dvec_lit.py)."""
+    single-threaded driver time before any job runs.  Emitting the same
+    values as ONE parsed SQL string is a single round-trip.  ``repr``
+    round-trips every finite double exactly and the ``D`` suffix forces
+    DoubleType (a bare decimal literal would parse as DECIMAL and change
+    the expression tree); the analyzed plan is identical to the
+    ``F.lit`` form modulo expression IDs (locked in
+    tests/test_dvec_lit.py)."""
     return "array(" + ",".join(repr(float(x)) + "D" for x in vals) + ")"
 
 
@@ -108,11 +107,3 @@ def dmat_sexpr(rows) -> str:
     """Spark-SQL fragment for an ``array<array<double>>`` literal — see
     :func:`dvec_sexpr`."""
     return "array(" + ",".join(dvec_sexpr(r) for r in rows) + ")"
-
-
-def dmat_lit(rows):
-    """``F.lit(list_of_lists_of_floats)`` (array<array<double>>) as one
-    parsed expression — see :func:`dvec_sexpr`."""
-    from pyspark.sql import functions as F
-
-    return F.expr(dmat_sexpr(rows))
