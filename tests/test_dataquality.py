@@ -420,16 +420,13 @@ class TestOutlierRateCheck:
 
         df = spark.read.parquet(f"{sf_dir}/events.parquet")
         for group_col in (None, "event_type"):
-            exact = outlier_rate_check(
-                "value", group_col=group_col).checks[0]
-            kmv = outlier_rate_check(
+            [exact] = outlier_rate_check(
+                "value", group_col=group_col).checks[0].constraints
+            [kmv] = outlier_rate_check(
                 "value", group_col=group_col, method="kmv",
-                id_col="event_id").checks[0]
-            keys = [group_col] if group_col else []
-            e = {tuple(r[k] for k in keys): r["outlier_rate"]
-                 for r in exact.metric(df).collect()}
-            s = {tuple(r[k] for k in keys): r["outlier_rate"]
-                 for r in kmv.metric(df).collect()}
+                id_col="event_id").checks[0].constraints
+            e = exact.metric(df)  # the frame function: {group: rate}
+            s = kmv.metric(df)
             assert set(e) == set(s)
             for g in e:
                 assert abs(e[g] - s[g]) <= 0.05, (group_col, g, e[g], s[g])
@@ -465,15 +462,119 @@ class TestOutlierRateCheck:
         over the salt-bounded sample frames (rank <= k pushed as a
         window-group limit), and the full-data side contributes a scan +
         hash aggregates only."""
-        from waimak_spark.dataquality.prefab import outlier_rate_check
+        from waimak_spark.dataquality.prefab import _outlier_rates
 
         df = spark.read.parquet(f"{sf_dir}/events.parquet")
-        chk = outlier_rate_check("value", group_col="event_type",
-                                 method="kmv", id_col="event_id").checks[0]
-        plan = (chk.metric(df)._jdf.queryExecution().executedPlan()
-                .toString())
+        rates = _outlier_rates(df, "value", k=3.0, group_col="event_type",
+                               method="kmv", id_col="event_id", sketch_k=256)
+        plan = rates._jdf.queryExecution().executedPlan().toString()
         # percentile (the full-sort aggregate) must not appear anywhere
         assert "percentile(value" not in plan
         # the sample's windows are bounded: every window carries the
         # rank<=k group limit pushdown
         assert "WindowGroupLimit" in plan
+
+
+class TestOneCheckModel:
+    """Every prefab is a ``Check`` chain, so prefab, ``add_checks`` and
+    anomaly checks on one label merge into one evaluation."""
+
+    def test_prefab_and_add_checks_on_one_label(self, spark, tmp_path):
+        from waimak_spark.dataquality import Check, CheckLevel, add_checks
+
+        h = CollectingAlertHandler()
+        df = _df(spark, [(1, "a"), (1, None)])
+        flow = (Waimak.spark_flow(spark, str(tmp_path / "tmp"))
+                .open("people", lambda c: df)
+                .alias("people", "out")
+                .add_data_quality_check(
+                    "people", completeness_check(["name"], 0.9), h))
+        flow = add_checks(flow, "people",
+                          Check(CheckLevel.ERROR, "keys").is_unique("id"),
+                          handlers=[h])
+        flow.execute()
+        assert sorted(a.importance.value for a in h.alerts) == [
+            "Critical", "Warning"]
+        assert any("Less than 90.0% of name" in a.alert_message
+                   for a in h.alerts)
+        assert any("uniqueness(id)" in a.alert_message for a in h.alerts)
+
+    def test_prefabs_are_check_chains_one_per_threshold(self, spark):
+        from waimak_spark.dataquality import (CheckLevel, ComposableCheck,
+                                              outlier_rate_check)
+
+        built = [completeness_check(["a", "b"], 0.9, 0.5),
+                 uniqueness_check(["a"], 1.0, 0.9),
+                 generic_sql_check(["a > 0"], ["b > 0", "a < b"]),
+                 outlier_rate_check("a", 0.05, 0.2)]
+        for check in built:
+            assert isinstance(check, ComposableCheck)
+            assert [c.level for c in check.checks] == [CheckLevel.ERROR,
+                                                       CheckLevel.WARNING]
+        assert [len(c.constraints) for c in built[2].checks] == [2, 1]
+        assert completeness_check(["a"]).checks == []
+        assert [c.level for c in uniqueness_check(["a"]).checks] == [
+            CheckLevel.WARNING]
+        [recent] = recent_timestamp_check("ts", alert_level="critical").checks
+        assert recent.level == CheckLevel.ERROR
+
+    def test_outlier_alert_names_the_worst_group(self, spark, tmp_path):
+        """One group has 3 outliers in 9 (33.3%), the other 1 in 9
+        (11.1%): both exceed 5%, and the alert names the worse one, with
+        either group name in either role, although the better group's
+        rows come first."""
+        from waimak_spark.dataquality import outlier_rate_check
+
+        worse = [10, 11, 12, 10, 11, 12, 9000, 9001, 9002]
+        better = [5, 6, 5, 6, 5, 6, 5, 6, 900]
+        for worst, other in (("a", "b"), ("b", "a")):
+            rows = [(i, float(v), g) for i, (v, g) in enumerate(
+                zip(better + worse, [other] * 9 + [worst] * 9))]
+            h = CollectingAlertHandler()
+            _run(spark, tmp_path / worst,
+                 _df(spark, rows, "id int, x double, g string"),
+                 outlier_rate_check("x", warning_threshold=0.05,
+                                    group_col="g"), h, label="vals")
+            [alert] = h.alerts
+            assert f"(group {worst}) was 33.33%" in alert.alert_message
+
+    def test_recency_cutoff_ignores_driver_time_zone(self, spark, tmp_path,
+                                                     monkeypatch):
+        """A row 10 hours old is stale for a 6-hour window on a driver
+        whose local zone is UTC+9."""
+        import time
+
+        monkeypatch.setenv("TZ", "Asia/Tokyo")
+        time.tzset()
+        try:
+            df = spark.sql("select 1 as id, "
+                           "current_timestamp() - interval 10 hours as ts")
+            h = CollectingAlertHandler()
+            _run(spark, tmp_path, df, recent_timestamp_check("ts", 6), h)
+        finally:
+            monkeypatch.undo()
+            time.tzset()
+        [alert] = h.alerts
+        assert "No new data in the last 6 hours" in alert.alert_message
+
+    def test_empty_label_alerts_only_on_recency(self, spark, tmp_path):
+        """Zero rows pass every fraction constraint; the recency check is
+        the one that catches an empty label."""
+        from waimak_spark.dataquality import outlier_rate_check
+
+        empty = spark.createDataFrame([], "id int, x double, g string, "
+                                          "ts timestamp")
+        quiet = [completeness_check(["x"], 0.9, 0.5),
+                 uniqueness_check(["id"], 1.0, 1.0),
+                 generic_sql_check(["x > 0"], ["id > 0"]),
+                 outlier_rate_check("x", 0.05, 0.1),
+                 outlier_rate_check("x", 0.05, group_col="g")]
+        for i, check in enumerate(quiet):
+            h = CollectingAlertHandler()
+            _run(spark, tmp_path / f"q{i}", empty, check, h)
+            assert h.alerts == [], h.alerts
+        h = CollectingAlertHandler()
+        _run(spark, tmp_path / "recent", empty,
+             recent_timestamp_check("ts", 6), h)
+        [alert] = h.alerts
+        assert "No new data" in alert.alert_message

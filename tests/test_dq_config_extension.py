@@ -304,3 +304,47 @@ class TestConfigDrivenAnomalyChecks:
         self._run_sized(spark, tmp_path, conf, 50, "2024-03-04T00:00:00")
         alerts = [a for h in _COLLECTED for a in h.alerts]
         assert len(alerts) == 1 and "size" in alerts[0].alert_message
+
+
+class TestConfigDrivenMixedChecks:
+    def test_prefab_and_anomaly_checks_on_one_label(self, spark, tmp_path):
+        """A prefab and the anomaly check merge into one check on the
+        label; the prefab's metric persists next to ``size``."""
+        conf = dict(BASE_CONF)
+        pfx = "spark.waimak.dataquality.deequ.labels.items."
+        conf.update({
+            "spark.waimak.dataquality.deequ.metricsStoragePath":
+                str(tmp_path / "metrics"),
+            pfx + "checks": "completenessCheck,anomalyCheck",
+            pfx + "completenessCheck.columns": "name",
+            pfx + "completenessCheck.warningThreshold": "0.9",
+            pfx + "anomalyCheck.datasetTimestamp": "2024-04-01T00:00:00",
+        })
+        _COLLECTED.clear()
+        with dq_conf(spark, conf):
+            _run_flow(spark, tmp_path)
+        [alert] = [a for h in _COLLECTED for a in h.alerts]
+        assert "Less than 90.0% of name" in alert.alert_message
+        from waimak_spark.dataquality.metrics import (
+            StorageLayerMetricsRepository,
+        )
+
+        hist = StorageLayerMetricsRepository(
+            spark, str(tmp_path / "metrics")).load()
+        assert {r["metric_name"]: r["metric_value"] for r in
+                hist.collect()} == {"size": 5.0, "completeness(name)": 0.8}
+
+    def test_every_registered_builder_returns_a_composable_check(
+            self, spark, tmp_path):
+        from waimak_spark.dataquality import ComposableCheck
+        from waimak_spark.dataquality.extension import _PREFAB_CHECK_BUILDERS
+
+        pfx = "spark.waimak.dataquality.deequ.labels.items."
+        conf = {pfx + "completenessCheck.columns": "name",
+                pfx + "uniquenessCheck.columns": "id",
+                pfx + "recentTimestampCheck.column": "ts"}
+        context = Waimak.spark_flow(spark, str(tmp_path / "f")).context
+        with dq_conf(spark, conf):
+            for name, build in _PREFAB_CHECK_BUILDERS.items():
+                check = build(context, f"{pfx}{name}.")
+                assert isinstance(check, ComposableCheck), name

@@ -306,3 +306,54 @@ def test_explicit_cache_of_checked_label_writes_once(spark, tmp_path,
     flow.execute(ParallelDataFlowExecutor(max_jobs=4))
     assert writes.count(f"{temp}/t1") == 1
     assert handler.alerts == []
+
+
+def test_conf_checks_on_one_label_share_one_aggregate_job(spark, tmp_path):
+    """Conf-declared completeness, generic SQL, recency and uniqueness
+    (both thresholds) checks on one cached label launch the jobs of one
+    scalar-aggregate collect plus one uniqueness pass."""
+    from functools import reduce
+
+    from waimak_spark.dataquality import (DataQualityConfigExtension,
+                                          DataQualityMetadataExtension)
+
+    pfx = "spark.waimak.dataquality.deequ.labels.items."
+    conf = {
+        "spark.waimak.dataquality.alerters": "log",
+        "spark.waimak.dataquality.deequ.labelsToMonitor": "items",
+        pfx + "checks": "completenessCheck,genericSQLCheck,"
+                        "recentTimestampCheck,uniquenessCheck",
+        pfx + "completenessCheck.columns": "id,v",
+        pfx + "completenessCheck.warningThreshold": "0.9",
+        pfx + "genericSQLCheck.criticalChecks": "id > 0;id < 100",
+        pfx + "recentTimestampCheck.column": "ts",
+        pfx + "uniquenessCheck.columns": "id",
+        pfx + "uniquenessCheck.warningThreshold": "1.0",
+        pfx + "uniquenessCheck.criticalThreshold": "0.5",
+    }
+    path = str(tmp_path / "items")
+    (spark.sql("select id, cast(id as string) as v, "
+               "current_timestamp() as ts from range(1, 50)")
+     .write.parquet(path))
+    df = spark.read.parquet(path)
+    flow = Waimak.spark_flow(spark, str(tmp_path / "flowtmp")).open(
+        "items", lambda c: df)
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        flow = DataQualityConfigExtension().pre_execution_manipulation(flow)
+    finally:
+        for k in conf:
+            spark.conf.unset(k)
+    [ext] = flow.get_extensions_of_type(DataQualityMetadataExtension)
+    check = reduce(lambda a, b: a.concat(b), [m.check for m in ext.meta])
+
+    one_agg = _jobs(spark, lambda: df.agg(F.count(F.lit(1))).collect())
+    one_grouped = _jobs(spark, lambda: (
+        df.groupBy("id").count()
+        .agg(F.count(F.when(F.col("count") == 1, 1)), F.sum("count"))
+        .collect()))
+    alerts: list = []
+    assert _jobs(spark, lambda: alerts.extend(
+        check.get_alerts("items", df))) == one_agg + one_grouped
+    assert alerts == []

@@ -3,11 +3,12 @@
 Re-expresses the reference's waimak-dataquality + waimak-deequ modules
 (dataquality/package.scala:16-29, DataQualityMetadataExtension.scala:15-46,
 DatasetCheck.scala, DataQualityAlertHandler.scala, deequ/prefabchecks/*)
-WITHOUT the Deequ dependency: each prefab check is one native DataFrame
-aggregate — completeness = avg(col is not null), uniqueness =
-singleton-group fraction, recency = count past a cutoff, generic SQL =
-avg(case when cond …) — evaluated on the cached label so the check costs
-one small job over data Spark already materialized.
+WITHOUT the Deequ dependency, on one check model: Deequ-style ``Check``
+chains bundled in a ``ComposableCheck`` (``checks.py``).  The prefab
+checks (completeness, uniqueness, recency, generic SQL, outlier rate) and
+the conf-declared checks are such chains, so any checks on a label merge:
+their scalar metrics share one aggregate job over the cached label, and
+uniqueness/outlier metrics run one pass each.
 """
 
 from .core import (
@@ -18,10 +19,8 @@ from .core import (
     DataQualityAlertHandler,
     DataQualityCheck,
     DataQualityMetadataExtension,
-    DatasetChecks,
     ExceptionQualityAlert,
     LoggingQualityAlert,
-    SimpleDatasetCheck,
     add_data_quality_check,
 )
 from .alerts import (
@@ -60,8 +59,8 @@ from .prefab import (
 
 __all__ = [
     "AlertImportance", "DataQualityAlert", "DataQualityAlertException",
-    "DataQualityAlertHandler", "DataQualityCheck", "DatasetChecks",
-    "SimpleDatasetCheck", "DataQualityMetadataExtension",
+    "DataQualityAlertHandler", "DataQualityCheck",
+    "DataQualityMetadataExtension",
     "ExceptionQualityAlert", "LoggingQualityAlert", "CollectingAlertHandler",
     "SlackQualityAlert", "EmailQualityAlert", "SMTPEmailSettings",
     "Check", "CheckLevel", "ComposableCheck", "add_checks",

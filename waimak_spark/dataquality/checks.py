@@ -1,29 +1,40 @@
-"""Composable check builder — the reference's Deequ surface
+"""The data-quality check model: the reference's Deequ surface
 (waimak-deequ/.../deequ/package.scala:30-99, DeequCheck.scala:23-95)
-re-expressed natively, without the Deequ library.
+re-expressed natively, without the Deequ library.  The prefab checks
+(``prefab.py``) and the conf-declared checks (``extension.py``) are built
+from it too, so every built-in check merges with every other.
 
 A :class:`Check` is a chainable list of constraints at one severity
 level (``CheckLevel.ERROR`` → Critical alerts, ``CheckLevel.WARNING`` →
 Warning, mirroring DeequCheck.getAlertImportance); a
-:class:`ComposableCheck` bundles many Checks into a
+:class:`ComposableCheck` bundles many Checks and anomaly checks into a
 ``DataQualityCheck`` that plugs into ``add_data_quality_check`` /
-``DataQualityMetadataExtension`` like any other check.
+``DataQualityMetadataExtension``.
 
-Spark-first evaluation: every scalar constraint (size, completeness,
-min/max/mean/sum, satisfies-fraction, pattern-fraction, approx distinct)
-across ALL bundled checks is computed in ONE ``df.agg`` pass over the
-cached label; only uniqueness constraints need their own grouped pass
-(same two-phase shape Deequ uses). Constraint assertions run driver-side
-on the one collected metrics row.
+A constraint's metric is one of two kinds:
+
+* a scalar aggregate ``Column`` (size, completeness, min/max/mean/sum,
+  satisfies and pattern fractions, approx distinct, a recency count):
+  every one across ALL bundled checks is computed in ONE ``df.agg`` pass
+  over the cached label;
+* a frame function ``DataFrame -> value`` that runs its own pass (the
+  grouped uniqueness fraction, the outlier rate's bounds-then-rate
+  pass — the same two-phase shape Deequ uses).
+
+A metric is keyed by its description: each distinct one is computed once
+per evaluation, and the metrics repository stores it under that name.
+Constraint assertions run driver-side on the computed values.
 """
 
 from __future__ import annotations
 
 import enum
 from dataclasses import dataclass
-from typing import Callable, Sequence
+from datetime import datetime, timezone
+from functools import partial
+from typing import Callable, Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .core import (
@@ -31,6 +42,7 @@ from .core import (
     DataQualityAlert,
     DataQualityCheck,
     DataQualityAlertHandler,
+    add_data_quality_check,
 )
 
 
@@ -42,17 +54,35 @@ class CheckLevel(enum.Enum):
 @dataclass(frozen=True)
 class _Constraint:
     description: str
-    #: scalar aggregate expression, or None for grouped (uniqueness)
-    metric: object  # Column | None
+    #: scalar aggregate Column, or a frame function DataFrame -> value
+    metric: object
     assertion: Callable[[object], bool]
-    #: columns for the grouped uniqueness pass (when metric is None)
-    group_cols: tuple[str, ...] = ()
+    #: (label, value) -> alert text; None gives the generic text
+    message: Optional[Callable[[str, object], str]] = None
+
+
+def _fraction(indicator: Column) -> Column:
+    """Mean of a 0/1 indicator; 1.0 on zero rows."""
+    return F.coalesce(F.avg(indicator), F.lit(1.0))
+
+
+def _uniqueness(columns: tuple[str, ...], df: DataFrame) -> float:
+    """Fraction of rows whose (columns) combination occurs exactly once;
+    1.0 on zero rows."""
+    stats = (df.groupBy(*columns).count()
+             .agg(F.count(F.when(F.col("count") == 1, 1)).alias("unique"),
+                  F.sum("count").alias("rows")).collect()[0])
+    return stats["unique"] / stats["rows"] if stats["rows"] else 1.0
 
 
 class Check:
     """A chainable set of constraints evaluated at one severity level —
     the VerificationRunBuilder ``Check`` equivalent. All builders return
-    a NEW Check (immutabile chaining, like the reference's case class)."""
+    a NEW Check (immutable chaining, like the reference's case class).
+
+    Empty-label rule: zero rows pass every fraction constraint —
+    completeness, satisfies, pattern and uniqueness all read 1.0 on an
+    empty frame.  A size or recency constraint catches empty data."""
 
     def __init__(self, level: CheckLevel, description: str,
                  constraints: Sequence[_Constraint] = ()):
@@ -60,78 +90,77 @@ class Check:
         self.description = description
         self.constraints = list(constraints)
 
-    def _with(self, c: _Constraint) -> "Check":
-        return Check(self.level, self.description, self.constraints + [c])
+    def add_constraint(self, description: str, metric,
+                       assertion: Callable,
+                       message: Optional[Callable[[str, object], str]] = None
+                       ) -> "Check":
+        """Any constraint: ``metric`` is a scalar aggregate Column or a
+        frame function ``DataFrame -> value``; ``description`` names the
+        metric; ``message(label, value)`` replaces the generic alert
+        text."""
+        return Check(self.level, self.description, self.constraints + [
+            _Constraint(description, metric, assertion, message)])
 
     # -- constraint builders (Deequ Check.* equivalents) ----------------------
     def has_size(self, assertion: Callable[[int], bool]) -> "Check":
-        return self._with(_Constraint(
-            "size", F.count(F.lit(1)), assertion))
+        return self.add_constraint("size", F.count(F.lit(1)), assertion)
 
     def is_complete(self, column: str) -> "Check":
         return self.has_completeness(column, lambda v: v == 1.0)
 
     def has_completeness(self, column: str,
-                         assertion: Callable[[float], bool]) -> "Check":
-        return self._with(_Constraint(
+                         assertion: Callable[[float], bool],
+                         message=None) -> "Check":
+        return self.add_constraint(
             f"completeness({column})",
-            F.coalesce(F.avg(F.col(column).isNotNull().cast("double")),
-                       F.lit(1.0)),
-            assertion))
+            _fraction(F.col(column).isNotNull().cast("double")),
+            assertion, message)
 
     def has_min(self, column: str, assertion) -> "Check":
-        return self._with(_Constraint(
-            f"min({column})", F.min(column), assertion))
+        return self.add_constraint(f"min({column})", F.min(column), assertion)
 
     def has_max(self, column: str, assertion) -> "Check":
-        return self._with(_Constraint(
-            f"max({column})", F.max(column), assertion))
+        return self.add_constraint(f"max({column})", F.max(column), assertion)
 
     def has_mean(self, column: str, assertion) -> "Check":
-        return self._with(_Constraint(
-            f"mean({column})", F.avg(column), assertion))
+        return self.add_constraint(f"mean({column})", F.avg(column), assertion)
 
     def has_sum(self, column: str, assertion) -> "Check":
-        return self._with(_Constraint(
-            f"sum({column})", F.sum(column), assertion))
+        return self.add_constraint(f"sum({column})", F.sum(column), assertion)
 
     def has_approx_count_distinct(self, column: str, assertion) -> "Check":
-        return self._with(_Constraint(
-            f"approxCountDistinct({column})",
-            F.approx_count_distinct(column), assertion))
+        return self.add_constraint(f"approxCountDistinct({column})",
+                                   F.approx_count_distinct(column), assertion)
 
     def satisfies(self, predicate: str, name: str,
-                  assertion: Callable[[float], bool] = lambda v: v == 1.0
-                  ) -> "Check":
+                  assertion: Callable[[float], bool] = lambda v: v == 1.0,
+                  message=None) -> "Check":
         """Fraction of rows satisfying a SQL predicate (Deequ
         ``satisfies``); default assertion requires every row."""
-        return self._with(_Constraint(
+        return self.add_constraint(
             f"satisfies({name})",
-            F.coalesce(
-                F.avg(F.when(F.expr(predicate), 1.0).otherwise(0.0)),
-                F.lit(1.0)),
-            assertion))
+            _fraction(F.when(F.expr(predicate), 1.0).otherwise(0.0)),
+            assertion, message)
 
     def has_pattern(self, column: str, regex: str,
                     assertion: Callable[[float], bool] = lambda v: v == 1.0
                     ) -> "Check":
-        return self._with(_Constraint(
+        return self.add_constraint(
             f"pattern({column}, {regex})",
-            F.coalesce(
-                F.avg(F.when(F.col(column).rlike(regex), 1.0).otherwise(0.0)),
-                F.lit(1.0)),
-            assertion))
+            _fraction(F.when(F.col(column).rlike(regex), 1.0).otherwise(0.0)),
+            assertion)
 
     def is_unique(self, *columns: str) -> "Check":
         return self.has_uniqueness(columns, lambda v: v == 1.0)
 
     def has_uniqueness(self, columns: Sequence[str],
-                       assertion: Callable[[float], bool]) -> "Check":
+                       assertion: Callable[[float], bool],
+                       message=None) -> "Check":
         """Fraction of (columns)-combinations occurring exactly once —
-        needs its own grouped pass (two-phase, as in Deequ)."""
-        return self._with(_Constraint(
-            f"uniqueness({','.join(columns)})", None, assertion,
-            tuple(columns)))
+        a frame function: its own grouped pass (two-phase, as in Deequ)."""
+        return self.add_constraint(f"uniqueness({','.join(columns)})",
+                                   partial(_uniqueness, tuple(columns)),
+                                   assertion, message)
 
 
 @dataclass(frozen=True)
@@ -160,8 +189,9 @@ class ComposableCheck(DataQualityCheck):
     composes builder chains exactly like ``DeequCheck.++``.
 
     With a ``repository`` attached (Deequ ``useRepository`` +
-    ``saveOrAppendResult``): every evaluated scalar metric — constraint
-    metrics and anomaly metrics — is persisted after evaluation, and each
+    ``saveOrAppendResult``): every numeric metric — constraint metrics,
+    prefab metrics and anomaly metrics — is persisted after evaluation
+    under its description, and each
     :class:`AnomalyCheck` compares against the repository's latest prior
     value (no previous value → first run, no alert, matching Deequ's
     Warning-free first run)."""
@@ -199,60 +229,62 @@ class ComposableCheck(DataQualityCheck):
             raise ValueError(
                 "Anomaly checks need a metrics repository to compare against")
 
-    def get_alerts(self, label: str, df: DataFrame) -> list[DataQualityAlert]:
-        flat: list[tuple[Check, _Constraint]] = [
-            (c, k) for c in self.checks for k in c.constraints]
-        scalar = [(i, c, k) for i, (c, k) in enumerate(flat)
-                  if k.metric is not None]
-        grouped = [(i, c, k) for i, (c, k) in enumerate(flat)
-                   if k.metric is None]
-        values: dict[int, object] = {}
-        anomaly_values: dict[str, object] = {}
-        # ONE agg pass computes constraint metrics AND anomaly metrics
-        aggs = [k.metric.alias(f"m{i}") for i, _c, k in scalar]
-        aggs += [a.metric.alias(f"a{j}")
-                 for j, a in enumerate(self.anomaly_checks)]
-        if aggs:
-            row = df.agg(*aggs).collect()[0]
-            for i, _c, _k in scalar:
-                values[i] = row[f"m{i}"]
-            for j, a in enumerate(self.anomaly_checks):
-                anomaly_values[a.metric_name] = row[f"a{j}"]
-        for i, _c, k in grouped:
-            stats = (df.groupBy(*k.group_cols).count()
-                     .agg(F.count(F.when(F.col("count") == 1, 1))
-                          .alias("unique"),
-                          F.sum("count").alias("rows")).collect()[0])
-            rows = stats["rows"] or 0
-            values[i] = (stats["unique"] / rows) if rows else 1.0
-        alerts = []
-        for i, (check, k) in enumerate(flat):
-            value = values[i]
-            try:
-                ok = bool(k.assertion(value))
-            except Exception:
-                ok = False  # assertion crashed (e.g. None min) → failure
-            if not ok:
-                importance = check.level.value
-                alerts.append(DataQualityAlert(
-                    f"{importance.value} alert for label {label}: check "
-                    f"[{check.description}] constraint [{k.description}] "
-                    f"failed (value: {value!r})", importance))
-        # ONE timestamp for the whole evaluation: the trend comparison and
-        # the persisted rows must agree on the run's identity (previously
-        # each helper stamped its own utcnow(), so an unset dataset_ts
-        # gave the anomaly lookup and the save different timestamps).
-        # now(timezone.utc) — utcnow() is deprecated and naive-ambiguous;
-        # the repository normalizes to naive-UTC at its boundary.
-        from datetime import datetime, timezone
+    def _metrics(self) -> dict[str, object]:
+        """Description → metric for every constraint and anomaly metric.
+        One description names one metric: a repeated description must
+        repeat the same expression or frame function."""
+        metrics: dict[str, object] = {}
+        named = [(k.description, k.metric)
+                 for c in self.checks for k in c.constraints]
+        named += [(a.metric_name, a.metric) for a in self.anomaly_checks]
+        for name, metric in named:
+            prior = metrics.setdefault(name, metric)
+            if prior is not metric and str(prior) != str(metric):
+                raise ValueError(
+                    f"metric name collision: [{name}] names two different "
+                    f"metrics — give the constraints distinct names")
+        return metrics
 
+    def get_alerts(self, label: str, df: DataFrame) -> list[DataQualityAlert]:
+        metrics = self._metrics()
+        scalar = [n for n, m in metrics.items() if isinstance(m, Column)]
+        values: dict[str, object] = {}
+        if scalar:
+            row = df.agg(*[metrics[n].alias(f"m{i}")
+                           for i, n in enumerate(scalar)]).collect()[0]
+            values = {n: row[f"m{i}"] for i, n in enumerate(scalar)}
+        for name, metric in metrics.items():
+            if name not in values:
+                values[name] = metric(df)
+        alerts = []
+        for check in self.checks:
+            importance = check.level.value
+            for k in check.constraints:
+                value = values[k.description]
+                try:
+                    ok = bool(k.assertion(value))
+                except Exception:
+                    ok = False  # assertion crashed (e.g. None min) → failure
+                if not ok:
+                    alerts.append(DataQualityAlert(
+                        k.message(label, value) if k.message else
+                        f"{importance.value} alert for label {label}: check "
+                        f"[{check.description}] constraint "
+                        f"[{k.description}] failed (value: {value!r})",
+                        importance))
+        # one timestamp per evaluation: the trend lookup and the persisted
+        # rows share the run's identity; the repository normalizes it to
+        # naive UTC
         ts = self.dataset_ts or datetime.now(timezone.utc)
-        alerts += self._anomaly_alerts(label, anomaly_values, ts)
-        self._persist_metrics(label, flat, values, anomaly_values, ts)
+        alerts += self._anomaly_alerts(label, values, ts)
+        if self.repository is not None:
+            self.repository.save(label, {
+                n: float(v) for n, v in values.items()
+                if isinstance(v, (int, float)) and not isinstance(v, bool)},
+                ts, self.tags)
         return alerts
 
-    def _anomaly_alerts(self, label: str,
-                        anomaly_values: dict[str, object],
+    def _anomaly_alerts(self, label: str, values: dict[str, object],
                         ts) -> list[DataQualityAlert]:
         if not self.anomaly_checks or self.repository is None:
             return []
@@ -269,7 +301,7 @@ class ComposableCheck(DataQualityCheck):
                 label, names, ts).items()}
         alerts = []
         for a in self.anomaly_checks:
-            cur = anomaly_values.get(a.metric_name)
+            cur = values.get(a.metric_name)
             hist = [v for v in windows.get(a.metric_name, []) if v is not None]
             if cur is None or not hist:
                 continue  # first run, or metric not computable → no trend
@@ -285,41 +317,11 @@ class ComposableCheck(DataQualityCheck):
                     f"[{a.metric_name}] {reason}", importance))
         return alerts
 
-    def _persist_metrics(self, label: str, flat, values,
-                         anomaly_values: dict[str, object], ts) -> None:
-        if self.repository is None:
-            return
-        out: dict[str, float] = {}
-        for i, (_check, k) in enumerate(flat):
-            v = values.get(i)
-            if isinstance(v, (int, float)) and not isinstance(v, bool):
-                # Deequ keys metrics per ANALYZER, so two constraints with
-                # the same description are the same metric and must carry
-                # the same value (same df, same aggregate). A collision
-                # with DIFFERENT values means two distinct aggregates
-                # share a description (e.g. satisfies(p1, "x") and
-                # satisfies(p2, "x")) — refuse rather than let last write
-                # win silently.
-                prior = out.get(k.description)
-                if prior is not None and prior != float(v):
-                    raise ValueError(
-                        f"metric name collision: constraint "
-                        f"[{k.description}] appears with conflicting "
-                        f"values {prior!r} and {float(v)!r} — give the "
-                        f"constraints distinct names")
-                out[k.description] = float(v)
-        for name, v in anomaly_values.items():
-            if isinstance(v, (int, float)) and not isinstance(v, bool):
-                out[name] = float(v)
-        self.repository.save(label, out, ts, self.tags)
-
 
 def add_checks(flow, label: str, check: Check, *more: Check,
                handlers: Sequence[DataQualityAlertHandler] = ()):
     """``addDeequCheck`` equivalent (deequ/package.scala:63-76): attach
     one or more composable Checks to a label with the given handlers."""
-    from .core import add_data_quality_check
-
     return add_data_quality_check(
         flow, label, ComposableCheck([check, *more]), *handlers)
 
@@ -329,8 +331,6 @@ def add_anomaly_check(flow, label: str, anomaly: AnomalyCheck, repository,
                       handlers: Sequence[DataQualityAlertHandler] = ()):
     """Deequ ``addAnomalyCheck`` + ``useRepository`` + ``saveOrAppend``:
     attach a trend-delta check whose history lives in ``repository``."""
-    from .core import add_data_quality_check
-
     return add_data_quality_check(
         flow, label,
         ComposableCheck([], [anomaly], repository, dataset_ts, tags),

@@ -2,10 +2,12 @@
 
 Reference provenance: DataQualityAlertHandler.scala (importance levels,
 handler contract, failure-after-all-alerts semantics), DatasetCheck.scala
-(SimpleDatasetCheck / DatasetChecks), DataQualityMetadataExtension.scala
-:15-46 (merge checks per (label, handlers), cache the label, evaluate as
-an in-place transform), dataquality/package.scala:16-29
-(addDataQualityCheck builder).
+(the ``DataQualityCheck`` monoid: ``concat`` + ``getAlerts``),
+DataQualityMetadataExtension.scala:15-46 (merge checks per (label,
+handlers), cache the label, evaluate as an in-place transform),
+dataquality/package.scala:16-29 (addDataQualityCheck builder).  The
+library's one built-in check is ``checks.ComposableCheck``; any object
+with ``validate_check``/``concat``/``get_alerts`` can stand in for it.
 
 The check reads data the flow already materializes.  It counts as a reader
 of its label (``operators.cache.readers``), so a checked label with one
@@ -22,7 +24,7 @@ from __future__ import annotations
 import enum
 import logging
 from dataclasses import dataclass
-from typing import Callable, Optional, Sequence
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 
@@ -117,7 +119,8 @@ class CollectingAlertHandler(DataQualityAlertHandler):
 
 class DataQualityCheck:
     """A check knows how to merge with a peer (``concat``) and produce
-    alerts for a label's DataFrame."""
+    alerts for a label's DataFrame.  Checks on the same (label, handlers)
+    are merged with ``concat`` before the flow runs."""
 
     def validate_check(self) -> None:
         pass
@@ -127,34 +130,6 @@ class DataQualityCheck:
 
     def get_alerts(self, label: str, df: DataFrame) -> list[DataQualityAlert]:
         raise NotImplementedError
-
-
-class SimpleDatasetCheck:
-    """metric: DataFrame → DataFrame; alert: (metric frame, label) →
-    alerts (DatasetCheck.scala SimpleDatasetCheck)."""
-
-    def __init__(self, metric: Callable[[DataFrame], DataFrame],
-                 alert: Callable[[DataFrame, str], list[DataQualityAlert]]):
-        self.metric = metric
-        self.alert = alert
-
-    def get_alerts(self, label: str, df: DataFrame) -> list[DataQualityAlert]:
-        return list(self.alert(self.metric(df), label))
-
-
-class DatasetChecks(DataQualityCheck):
-    """Concatenation of simple checks, no cross-check optimisation."""
-
-    def __init__(self, checks: Sequence[SimpleDatasetCheck]):
-        self.checks = list(checks)
-
-    def concat(self, other: "DataQualityCheck") -> "DatasetChecks":
-        if not isinstance(other, DatasetChecks):
-            raise TypeError("Can only combine DatasetChecks with DatasetChecks")
-        return DatasetChecks(self.checks + other.checks)
-
-    def get_alerts(self, label: str, df: DataFrame) -> list[DataQualityAlert]:
-        return [a for c in self.checks for a in c.get_alerts(label, df)]
 
 
 @dataclass(frozen=True)

@@ -14,7 +14,10 @@ Reference provenance:
   per label a ``checks`` name list and per-check config under
   ``spark.waimak.dataquality.deequ.labels.<label>.<checkName>.``;
 * the four prefab check services (prefabchecks/*.scala) whose config
-  case classes map 1:1 onto the dataclasses below.
+  case classes map 1:1 onto the dataclasses below.  Every registered
+  builder returns a ``ComposableCheck``, so all checks declared for one
+  label merge into one evaluation: one aggregate pass plus one pass per
+  uniqueness or outlier metric.
 
 Idiomatic Python: explicit registries (decorator-populated dicts) play
 the ServiceLoader role — same lookup-by-key semantics, no classpath
@@ -155,7 +158,7 @@ _PREFAB_CHECK_BUILDERS: dict[str, Callable[[object, str], object]] = {}
 
 
 def register_prefab_check(check_name: str):
-    """Decorator: register a ``(context, conf_prefix) -> DatasetChecks``
+    """Decorator: register a ``(context, conf_prefix) -> ComposableCheck``
     builder under its reference ``checkName``."""
     def deco(fn):
         _PREFAB_CHECK_BUILDERS[check_name] = fn
@@ -329,14 +332,11 @@ class DataQualityConfigExtension(DataFlowConfigurationExtension):
 
     With ``metricsStoragePath`` set (DeequConfiguration.scala:21), a
     :class:`~waimak_spark.dataquality.metrics.StorageLayerMetricsRepository`
-    at that path is attached to every ComposableCheck-based check the
-    extension builds: their evaluated scalar metrics persist per run, and
-    the conf-driven ``anomalyCheck`` compares against that history (it
-    REQUIRES the path — the extension fails loudly otherwise).  The
-    ``DatasetChecks``-based prefabs (completeness/uniqueness/timestamp/
-    SQL) evaluate whole metric FRAMES, not scalar aggregates, so they
-    have nothing to persist — matching the reference, where the
-    repository likewise only feeds Deequ's analyzer metrics."""
+    at that path is attached to every check the extension builds: their
+    numeric metrics (``completeness(<col>)``, ``size``, ...) persist per
+    run, and the conf-driven ``anomalyCheck`` compares against that
+    history (it REQUIRES the path — the extension fails loudly
+    otherwise)."""
 
     extension_key = "deequ"
 
@@ -362,8 +362,6 @@ class DataQualityConfigExtension(DataFlowConfigurationExtension):
 
     def _checks_for_label(self, flow, context, label: str, alerters,
                           repo=None):
-        from .checks import ComposableCheck
-
         base = f"{DEEQU_CONFIG}labels.{label}"
         raw = context.spark.conf.get(f"{base}.checks", "")
         active = [c.strip() for c in raw.split(",") if c.strip()]
@@ -374,12 +372,10 @@ class DataQualityConfigExtension(DataFlowConfigurationExtension):
                 f"found: [{','.join(sorted(missing))}]")
         for name in active:
             check = _PREFAB_CHECK_BUILDERS[name](context, f"{base}.{name}.")
-            if isinstance(check, ComposableCheck) and check.repository is None:
-                if check.anomaly_checks and repo is None:
-                    raise DataFlowException(
-                        f"check [{name}] for label [{label}] needs a "
-                        f"metrics history — set "
-                        f"{DEEQU_CONFIG}metricsStoragePath")
-                check.repository = repo
+            check.repository = check.repository or repo
+            if check.anomaly_checks and check.repository is None:
+                raise DataFlowException(
+                    f"check [{name}] for label [{label}] needs a metrics "
+                    f"history — set {DEEQU_CONFIG}metricsStoragePath")
             flow = flow.add_data_quality_check(label, check, *alerters)
         return flow

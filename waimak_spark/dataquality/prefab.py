@@ -1,155 +1,184 @@
-"""Prefab data-quality checks as single DataFrame aggregates — the four
-checks the reference ships via Deequ (waimak-deequ/.../prefabchecks/*),
-re-expressed natively:
+"""Prefab data-quality checks — the four checks the reference ships via
+Deequ (waimak-deequ/.../prefabchecks/*) plus a robust outlier rate, each
+a :class:`~waimak_spark.dataquality.checks.ComposableCheck` of one
+``Check`` per threshold that is set (``ERROR`` for critical, ``WARNING``
+for warning):
 
-* completeness — ``avg(col is not null)`` per column, one aggregate row
-  for ALL columns (CompletenessCheck.scala);
+* completeness — ``completeness(<col>)`` per column
+  (CompletenessCheck.scala);
 * uniqueness — fraction of (columns)-combinations occurring exactly once
   (Deequ ``hasUniqueness`` semantics, UniquenessCheck.scala);
-* recent timestamp — any row with ``col >= now - N hours``
+* recent timestamp — count of rows with ``col >= now - N hours``
   (RecentTimestampCheck.scala);
 * generic SQL — every row satisfies a boolean SQL condition
-  (GenericSQLCheck.scala).
+  (GenericSQLCheck.scala);
+* outlier rate — fraction outside the median/MAD band, per group.
 
-Each check body runs ONE Spark job over the (cached) label.
+Completeness, recency and generic SQL are scalar aggregates, so they
+share the one ``df.agg`` pass with every other check on the label;
+uniqueness and the outlier rate run one pass each, whatever thresholds
+are set.  Zero rows pass every fraction; only the recency check alerts on
+an empty label.
 """
 
 from __future__ import annotations
 
 from datetime import datetime, timedelta
-from typing import Optional, Sequence
+from functools import partial
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .core import (
-    AlertImportance,
-    DataQualityAlert,
-    DatasetChecks,
-    SimpleDatasetCheck,
-)
+from .checks import Check, CheckLevel, ComposableCheck
+
+
+def _per_threshold(name: str, warning_threshold, critical_threshold,
+                   build: Callable[[Check, float], Check]) -> ComposableCheck:
+    """One Check per threshold that is set; ``build`` adds its
+    constraints."""
+    return ComposableCheck([
+        build(Check(level, f"{name} ({level.name.lower()})"), threshold)
+        for threshold, level in ((critical_threshold, CheckLevel.ERROR),
+                                 (warning_threshold, CheckLevel.WARNING))
+        if threshold is not None])
 
 
 def completeness_check(columns: Sequence[str],
                        warning_threshold: Optional[float] = None,
                        critical_threshold: Optional[float] = None
-                       ) -> DatasetChecks:
+                       ) -> ComposableCheck:
     """Alert when the non-null fraction of any column drops below the
     thresholds."""
-    cols = list(columns)
+    def build(check: Check, threshold: float) -> Check:
+        for c in columns:
+            check = check.has_completeness(
+                c, lambda v, t=threshold: v >= t,
+                lambda label, v, c=c, t=threshold: (
+                    f"Less than {t * 100}% of {c} values were complete on "
+                    f"label {label} (got {v * 100:.1f}%)."))
+        return check
 
-    def metric(df: DataFrame) -> DataFrame:
-        return df.agg(*[
-            F.avg(F.col(c).isNotNull().cast("double")).alias(c) for c in cols
-        ])
-
-    def alert(mdf: DataFrame, label: str):
-        row = mdf.collect()[0]
-        alerts = []
-        for threshold, importance in (
-                (critical_threshold, AlertImportance.CRITICAL),
-                (warning_threshold, AlertImportance.WARNING)):
-            if threshold is None:
-                continue
-            for c in cols:
-                completeness = row[c] if row[c] is not None else 0.0
-                if completeness < threshold:
-                    alerts.append(DataQualityAlert(
-                        f"Less than {threshold * 100}% of {c} values were "
-                        f"complete on label {label} "
-                        f"(got {completeness * 100:.1f}%).", importance))
-        return alerts
-
-    return DatasetChecks([SimpleDatasetCheck(metric, alert)])
+    return _per_threshold("completeness", warning_threshold,
+                          critical_threshold, build)
 
 
 def uniqueness_check(columns: Sequence[str],
                      warning_threshold: Optional[float] = 1.0,
                      critical_threshold: Optional[float] = None
-                     ) -> DatasetChecks:
+                     ) -> ComposableCheck:
     """Deequ ``hasUniqueness``: fraction of column-combinations that occur
     exactly once; defaults to warning when not fully unique."""
-    cols = list(columns)
-
-    def metric(df: DataFrame) -> DataFrame:
-        return (df.groupBy(*cols).count()
-                .agg(F.count("*").alias("combos"),
-                     F.count(F.when(F.col("count") == 1, 1)).alias("unique"),
-                     F.sum("count").alias("rows")))
-
-    def alert(mdf: DataFrame, label: str):
-        row = mdf.collect()[0]
-        rows = row["rows"] or 0
-        fraction = (row["unique"] / rows) if rows else 1.0
-        alerts = []
-        for threshold, importance in (
-                (critical_threshold, AlertImportance.CRITICAL),
-                (warning_threshold, AlertImportance.WARNING)):
-            if threshold is not None and fraction < threshold:
-                alerts.append(DataQualityAlert(
-                    f"{','.join(cols)} was not {threshold * 100}% unique on "
-                    f"label {label} (got {fraction * 100:.1f}%).", importance))
-        return alerts
-
-    return DatasetChecks([SimpleDatasetCheck(metric, alert)])
+    names = ",".join(columns)
+    return _per_threshold(
+        "uniqueness", warning_threshold, critical_threshold,
+        lambda check, t: check.has_uniqueness(
+            columns, lambda v: v >= t,
+            lambda label, v: (f"{names} was not {t * 100}% unique on label "
+                              f"{label} (got {v * 100:.1f}%).")))
 
 
 def recent_timestamp_check(column: str, hours_to_look_back: int = 6,
                            alert_level: str = "warning",
                            now_override: Optional[datetime] = None
-                           ) -> DatasetChecks:
+                           ) -> ComposableCheck:
     """Alert when no row's timestamp is within the look-back window —
-    flags unexpectedly stale data."""
-    importance = AlertImportance.of(
-        "critical" if alert_level == "critical" else "warning")
+    flags unexpectedly stale or empty data.  The window ends at Spark's
+    ``current_timestamp()`` when the check runs, independent of the
+    driver's time zone; ``now_override`` (a naive local datetime, like the
+    rows Spark builds from Python datetimes) fixes its end instead."""
     if alert_level not in ("warning", "critical"):
         raise ValueError(
             f"Invalid alert level {alert_level} for recentTimestampCheck "
             f"on column {column}")
-
-    def metric(df: DataFrame) -> DataFrame:
-        now = now_override or datetime.utcnow()
-        cutoff = now - timedelta(hours=hours_to_look_back)
-        return df.where(F.col(column) >= F.lit(cutoff)) \
-                 .agg(F.count("*").alias("recent"))
-
-    def alert(mdf: DataFrame, label: str):
-        if (mdf.collect()[0]["recent"] or 0) > 0:
-            return []
-        return [DataQualityAlert(
-            f"No new data in the last {hours_to_look_back} hours "
-            f"on label {label}.", importance)]
-
-    return DatasetChecks([SimpleDatasetCheck(metric, alert)])
+    cutoff = (F.lit(now_override - timedelta(hours=hours_to_look_back))
+              if now_override else
+              F.expr(f"current_timestamp() - INTERVAL "
+                     f"{int(hours_to_look_back)} HOURS"))
+    level = (CheckLevel.ERROR if alert_level == "critical"
+             else CheckLevel.WARNING)
+    return ComposableCheck([Check(level, "recent timestamp").add_constraint(
+        f"recentRows({column}, {hours_to_look_back}h"
+        f"{f', now={now_override.isoformat()}' if now_override else ''})",
+        F.count(F.when(F.col(column) >= cutoff, 1)), lambda n: n > 0,
+        lambda label, _n: (f"No new data in the last {hours_to_look_back} "
+                           f"hours on label {label}."))])
 
 
 def generic_sql_check(warning_checks: Sequence[str] = (),
-                      critical_checks: Sequence[str] = ()) -> DatasetChecks:
+                      critical_checks: Sequence[str] = ()
+                      ) -> ComposableCheck:
     """Every row must satisfy each boolean SQL condition (e.g.
-    ``"my_column > 5"``); one aggregate evaluates all conditions."""
-    warn, crit = list(warning_checks), list(critical_checks)
-    conds = [(c, AlertImportance.WARNING) for c in warn] + \
-            [(c, AlertImportance.CRITICAL) for c in crit]
-
-    def metric(df: DataFrame) -> DataFrame:
-        return df.agg(*[
-            F.avg(F.when(F.expr(cond), 1.0).otherwise(0.0)).alias(f"c{i}")
-            for i, (cond, _) in enumerate(conds)
-        ])
-
-    def alert(mdf: DataFrame, label: str):
-        row = mdf.collect()[0]
-        out = []
-        for i, (cond, importance) in enumerate(conds):
-            satisfied = row[f"c{i}"]
-            if satisfied is not None and satisfied < 1.0:
-                out.append(DataQualityAlert(
+    ``"my_column > 5"``)."""
+    def build(check: Check, conditions: Sequence[str]) -> Check:
+        for cond in conditions:
+            check = check.satisfies(
+                cond, cond, lambda v: v >= 1.0,
+                lambda label, v, cond=cond: (
                     f"generic sql constraint [{cond}] failed on label "
-                    f"{label} ({satisfied * 100:.1f}% of rows satisfied).",
-                    importance))
-        return out
+                    f"{label} ({v * 100:.1f}% of rows satisfied)."))
+        return check
 
-    return DatasetChecks([SimpleDatasetCheck(metric, alert)])
+    return _per_threshold("generic sql", list(warning_checks) or None,
+                          list(critical_checks) or None, build)
+
+
+def _outlier_rates(df: DataFrame, column: str, k: float,
+                   group_col: Optional[str], method: str,
+                   id_col: Optional[str], sketch_k: int) -> DataFrame:
+    """(group_col?, outlier_rate): the fraction of ``column`` outside
+    ``median ± k * 1.4826 * MAD``, one row per group (one row overall
+    without ``group_col``)."""
+    keys = [group_col] if group_col else []
+    if method == "exact":
+        # two exact full-sort percentiles
+        med = (df.groupBy(*keys)
+               .agg(F.expr(f"percentile({column}, 0.5)").alias("_med")))
+        with_med = df.join(F.broadcast(med), keys) if keys \
+            else df.crossJoin(F.broadcast(med))
+        bounds = (with_med.groupBy(*keys)
+                  .agg(F.expr(f"percentile(abs({column} - _med), 0.5)")
+                       .alias("_mad"),
+                       F.first("_med").alias("_med2")))
+    else:
+        # both percentiles over the bounded bottom-k sample: the only
+        # full-data work is the sample's map pass + salted bounded top-k
+        from ..functions.sketch import kmv_bottomk
+
+        gcol = group_col if group_col else "_g_all"
+        base = df if group_col else df.withColumn("_g_all", F.lit(0))
+        samp = kmv_bottomk(base, value_col=column, group_col=gcol,
+                           id_col=id_col, k=sketch_k)
+        med = (samp.groupBy("g")
+               .agg(F.expr("percentile(v, 0.5)").alias("_med")))
+        bounds = (samp.join(F.broadcast(med), "g")
+                  .groupBy("g")
+                  .agg(F.expr("percentile(abs(v - _med), 0.5)")
+                       .alias("_mad"),
+                       F.first("_med").alias("_med2")))
+        bounds = (bounds.withColumnRenamed("g", group_col) if group_col
+                  else bounds.drop("g"))
+    with_mad = df.join(F.broadcast(bounds), keys) if keys \
+        else df.crossJoin(F.broadcast(bounds))
+    lo = F.col("_med2") - k * 1.4826 * F.col("_mad")
+    hi = F.col("_med2") + k * 1.4826 * F.col("_mad")
+    return (with_mad.groupBy(*keys)
+            .agg(F.avg(((F.col(column) < lo) | (F.col(column) > hi))
+                       .cast("double")).alias("outlier_rate")))
+
+
+def _outlier_rate_by_group(df: DataFrame, **params) -> dict:
+    """{group (None without ``group_col``): outlier rate}; a group with
+    no rated value reads 0.0."""
+    group_col = params["group_col"]
+    return {(r[group_col] if group_col else None): r["outlier_rate"] or 0.0
+            for r in _outlier_rates(df, **params).collect()}
+
+
+def _worst(rates: dict) -> tuple:
+    """(group, rate) of the highest rate; ties go to the lowest group."""
+    return min(rates.items(),
+               key=lambda gr: (-gr[1], gr[0] is not None, gr[0]))
 
 
 def outlier_rate_check(column: str,
@@ -159,13 +188,16 @@ def outlier_rate_check(column: str,
                        group_col: Optional[str] = None,
                        method: str = "exact",
                        id_col: Optional[str] = None,
-                       sketch_k: int = 256) -> DatasetChecks:
+                       sketch_k: int = 256) -> ComposableCheck:
     """Robust outlier-rate check (beyond the reference's four prefabs):
     alert when the fraction of values outside ``median ± k * 1.4826 *
     MAD`` exceeds the thresholds — the classic robust z-score rule
     (Hampel; 1.4826 scales MAD to sigma under normality), immune to the
     outliers it measures, unlike a mean/stddev rule.  With ``group_col``
-    the rule evaluates per group and the alert names the worst group.
+    the rule evaluates per group and the alert names the worst group
+    (highest rate; ties to the lowest group).  The metric is a frame
+    function returning ``{group: rate}``, computed once per evaluation
+    whichever thresholds are set.
 
     ``method="exact"`` (default): one exact-median pass + one MAD pass +
     one rate pass over the (cached) label — each percentile is a full
@@ -188,69 +220,21 @@ def outlier_rate_check(column: str,
     if method == "kmv" and not id_col:
         raise ValueError("method='kmv' needs id_col — the KMV sample "
                          "selects rows by seeded hash of a numeric id")
-    keys = [group_col] if group_col else []
+    rates = partial(_outlier_rate_by_group, column=column, k=k,
+                    group_col=group_col, method=method, id_col=id_col,
+                    sketch_k=sketch_k)
+    name = (f"outlierRate({column}, k={k}"
+            f"{f', group={group_col}' if group_col else ''}"
+            f"{f', kmv={sketch_k}' if method == 'kmv' else ''})")
 
-    def _exact_bounds(df: DataFrame) -> DataFrame:
-        """(keys..., _med2, _mad) via two exact full-sort percentiles."""
-        med = (df.groupBy(*keys)
-               .agg(F.expr(f"percentile({column}, 0.5)").alias("_med")))
-        with_med = df.join(F.broadcast(med), keys) if keys \
-            else df.crossJoin(F.broadcast(med))
-        return (with_med.groupBy(*keys)
-                .agg(F.expr(f"percentile(abs({column} - _med), 0.5)")
-                     .alias("_mad"),
-                     F.first("_med").alias("_med2")))
+    def message(label: str, rates: dict, t: float) -> str:
+        group, rate = _worst(rates)
+        where = f" (group {group})" if group_col else ""
+        return (f"Outlier rate of {column} on label {label}{where} was "
+                f"{rate * 100:.2f}% (> {t * 100}% at k={k}).")
 
-    def _kmv_bounds(df: DataFrame) -> DataFrame:
-        """Same (keys..., _med2, _mad) shape, but both percentiles run
-        over the bounded bottom-k sample — the only full-data work is
-        the sample selection's map pass + salted bounded top-k."""
-        from ..functions.sketch import kmv_bottomk
-
-        gcol = group_col if group_col else "_g_all"
-        base = df if group_col else df.withColumn("_g_all", F.lit(0))
-        samp = kmv_bottomk(base, value_col=column, group_col=gcol,
-                           id_col=id_col, k=sketch_k)
-        med = (samp.groupBy("g")
-               .agg(F.expr("percentile(v, 0.5)").alias("_med")))
-        bounds = (samp.join(F.broadcast(med), "g")
-                  .groupBy("g")
-                  .agg(F.expr("percentile(abs(v - _med), 0.5)")
-                       .alias("_mad"),
-                       F.first("_med").alias("_med2")))
-        if group_col:
-            return bounds.withColumnRenamed("g", group_col)
-        return bounds.drop("g")
-
-    def metric(df: DataFrame) -> DataFrame:
-        bounds = _exact_bounds(df) if method == "exact" else _kmv_bounds(df)
-        with_mad = df.join(F.broadcast(bounds), keys) if keys \
-            else df.crossJoin(F.broadcast(bounds))
-        lo = F.col("_med2") - k * 1.4826 * F.col("_mad")
-        hi = F.col("_med2") + k * 1.4826 * F.col("_mad")
-        return (with_mad.groupBy(*keys)
-                .agg(F.avg(((F.col(column) < lo) | (F.col(column) > hi))
-                           .cast("double")).alias("outlier_rate"),
-                     F.count(column).alias("n")))
-
-    def alert(mdf: DataFrame, label: str):
-        rows = mdf.collect()
-        alerts = []
-        for threshold, importance in (
-                (critical_threshold, AlertImportance.CRITICAL),
-                (warning_threshold, AlertImportance.WARNING)):
-            if threshold is None:
-                continue
-            for row in rows:
-                rate = row["outlier_rate"] or 0.0
-                if rate > threshold:
-                    where = (f" (group {row[group_col]})"
-                             if group_col else "")
-                    alerts.append(DataQualityAlert(
-                        f"Outlier rate of {column} on label {label}"
-                        f"{where} was {rate * 100:.2f}% "
-                        f"(> {threshold * 100}% at k={k}).", importance))
-                    break  # one alert per severity, worst-first scan
-        return alerts
-
-    return DatasetChecks([SimpleDatasetCheck(metric, alert)])
+    return _per_threshold(
+        "outlier rate", warning_threshold, critical_threshold,
+        lambda check, t: check.add_constraint(
+            name, rates, lambda v: max(v.values(), default=0.0) <= t,
+            partial(message, t=t)))
