@@ -2,6 +2,7 @@
 (TestFSUtils.scala:20-126 mergeMoveFiles cases) plus the trash and
 exclusive-write primitives the commit/storage layers are built on."""
 
+import ast
 import os
 
 import pytest
@@ -100,3 +101,51 @@ class TestTrashAndExclusiveWrite:
         assert ops.write_string_exclusive(p, "first") is True
         assert ops.write_string_exclusive(p, "second") is False
         assert ops.read_string(p) == "first"
+
+
+def _jvm_walks(source: str) -> list[str]:
+    """``jvm.<package>`` attribute steps in ``source`` (``jvm`` or any
+    ``X._jvm``/``X.jvm``) outside ``filesystem._jvm_refs``, as
+    ``line: text``: each step is a py4j reflection round trip, and one
+    that names a package scans the classpath before it answers."""
+    tree = ast.parse(source)
+    skip = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef) and node.name == "_jvm_refs":
+            skip.update(range(node.lineno, node.end_lineno + 1))
+    found = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Attribute) or node.lineno in skip:
+            continue
+        base = node.value
+        base_name = (base.id if isinstance(base, ast.Name)
+                     else base.attr if isinstance(base, ast.Attribute)
+                     else None)
+        if base_name in ("jvm", "_jvm") and node.attr[:1].islower():
+            found.append(f"{node.lineno}: {ast.unparse(node)}")
+    return found
+
+
+def test_jvm_handles_come_from_the_one_table():
+    """The engine reaches JVM classes only through the per-gateway handle
+    table ``filesystem._jvm_refs``: no ``_jvm.<package>.`` walk elsewhere
+    in ``waimak_spark/``."""
+    import waimak_spark
+
+    root = os.path.dirname(waimak_spark.__file__)
+    walks = []
+    for folder, _, files in os.walk(root):
+        for name in sorted(files):
+            if name.endswith(".py"):
+                path = os.path.join(folder, name)
+                with open(path) as fh:
+                    walks += [f"{os.path.relpath(path, root)}:{w}"
+                              for w in _jvm_walks(fh.read())]
+    assert not walks, f"JVM package walks outside _jvm_refs: {walks}"
+
+
+def test_jvm_walk_guard_sees_a_walk():
+    src = ("def _jvm_refs(jvm):\n    return jvm.org.apache.hadoop.fs.Path\n"
+           "def f(spark):\n    return spark._jvm.java.lang.String\n"
+           "def g(self):\n    return self._jvm.PythonSQLUtils\n")
+    assert _jvm_walks(src) == ["4: spark._jvm.java"]

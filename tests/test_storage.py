@@ -2,7 +2,7 @@
 reference's TestAuditTableFile.scala / TestStorageActions.scala."""
 
 import json
-from datetime import datetime
+from datetime import date, datetime, timedelta, timezone
 from decimal import Decimal
 
 import pytest
@@ -804,3 +804,222 @@ class TestApplyChanges:
         assert "LeftAnti" in plan
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
+
+
+def _py4j_commands(fn):
+    """(fn(), [(command, answer)]) for every py4j command ``fn`` sends from
+    this thread, proxy releases skipped: py4j's finalizer thread sends
+    those (``m d``) whenever Python drops JVM references, so counting
+    them would charge a call for garbage other code left."""
+    import threading
+
+    import py4j.clientserver as cs
+    import py4j.java_gateway as jg
+    from py4j import protocol
+
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    me = threading.get_ident()
+    log = []
+    saved = [(cls, cls.send_command)
+             for cls in (cs.ClientServerConnection, jg.GatewayConnection)]
+
+    def patch(orig):
+        def send(self, command, *a, **kw):
+            answer = orig(self, command, *a, **kw)
+            if threading.get_ident() == me and not command.startswith(release):
+                log.append((command, answer))
+            return answer
+        return send
+
+    for cls, orig in saved:
+        cls.send_command = patch(orig)
+    try:
+        out = fn()
+    finally:
+        for cls, orig in saved:
+            cls.send_command = orig
+    return out, log
+
+
+def _package_lookups(log):
+    """Names of the ``jvm.<package>`` reflection steps in a command log."""
+    from py4j import protocol
+
+    lookup = (protocol.REFLECTION_COMMAND_NAME
+              + protocol.REFL_GET_UNKNOWN_SUB_COMMAND_NAME)
+    return [command.split("\n")[2] for command, answer in log
+            if command.startswith(lookup)
+            and answer == protocol.SUCCESS_PACKAGE]
+
+
+class TestRoundTrips:
+    """py4j commands per storage call on the calling thread.  Hadoop
+    ``Path``/``IOUtils`` handles come from the per-gateway table and the
+    range filter and snapshot window are one SQL fragment each, so a call
+    costs a fixed, small number of commands; measured on a two-region
+    table: open 48, snapshot(ts) 23, all_between 11, exists 3."""
+
+    CEILINGS = {"open_tables": 56, "snapshot": 28, "all_between": 14,
+                "exists": 3}
+
+    def _table(self, ops, spark):
+        t = create_table(ops, INFO)
+        t, _ = t.append(_b1(spark), "updated", T0)
+        t, _ = t.append(_b2(spark), "updated", T1)
+        return t
+
+    def test_calls_stay_under_their_ceilings(self, ops, spark):
+        t = self._table(ops, spark)
+        calls = {"open_tables": lambda: open_tables(ops, ["persons"]),
+                 "snapshot": lambda: t.snapshot(T1),
+                 "all_between": lambda: t.all_between(T0, T1),
+                 "exists": lambda: ops.fops.exists(t.table_path)}
+        for fn in calls.values():  # per-gateway and per-session lookups
+            fn()
+        counts = {name: len(_py4j_commands(fn)[1])
+                  for name, fn in calls.items()}
+        assert all(counts[name] <= cap
+                   for name, cap in self.CEILINGS.items()), counts
+
+    def test_no_call_walks_a_jvm_package(self, ops, spark):
+        from waimak_spark.filesystem import _jvm_refs
+
+        _jvm_refs(spark._jvm)
+
+        def cycle():
+            t = self._table(ops, spark)
+            t = open_tables(ops, ["persons"])[0]["persons"]
+            t.snapshot(T1)
+            t.snapshot_diff(T0, T1)
+            t.all_between(T0, T1)
+            t = t.compact(T2, small_region_row_threshold=10)
+            ops.fops.list_dirs(f"{ops.trash_folder}/persons")
+
+        _, log = _py4j_commands(cycle)
+        assert _package_lookups(log) == []
+
+
+class TestRangeBoundLiterals:
+    """``all_between`` renders its time bounds into one SQL predicate.  For
+    each bound type the rows and the scan's filters equal those of the
+    ``F.lit``-built predicate, including a driver time zone that is not the
+    session's and ``spark.sql.timestampType=TIMESTAMP_NTZ``; a bound the
+    fragment does not render keeps ``F.lit``."""
+
+    STAMPS = [datetime(2018, 1, 1, 9, 59, 59, 999999),
+              datetime(2018, 1, 1, 10), datetime(2018, 1, 1, 10, 0, 0, 1),
+              datetime(2018, 1, 1, 18), datetime(2018, 1, 2),
+              datetime(2018, 1, 2, 7, 59, 59), datetime(2018, 1, 2, 8)]
+
+    @staticmethod
+    def _reference(t, lo, hi):
+        df = t.ops.open_parquet(t.table_path, schema=t.schema).where(
+            F.col(STORE_TYPE_COLUMN).isin(HOT_PARTITION, COLD_PARTITION)
+            & F.col(STORE_REGION_COLUMN).isin(t.active_region_ids()))
+        if lo is not None:
+            df = df.where(F.col(DE_LAST_UPDATED_COLUMN) >= F.lit(lo))
+        if hi is not None:
+            df = df.where(F.col(DE_LAST_UPDATED_COLUMN) <= F.lit(hi))
+        return df
+
+    @staticmethod
+    def _scan_filters(df):
+        """The scan's partition, data and pushed filters, each as a sorted
+        list (they are ANDed) with attribute ids removed."""
+        import re
+
+        scan = df._jdf.queryExecution().executedPlan().collectLeaves().head()
+        return {k: sorted(re.sub(r"#\d+L?", "", getattr(scan, k)()
+                                 .mkString("\n")).split("\n"))
+                for k in ("partitionFilters", "dataFilters",
+                          "pushedDownFilters")}
+
+    def _assert_same(self, t, lo, hi):
+        got, want = t.all_between(lo, hi), self._reference(t, lo, hi)
+        assert self._scan_filters(got) == self._scan_filters(want)
+        rows = sorted(map(tuple, want.collect()))
+        assert sorted(map(tuple, got.collect())) == rows
+        return rows
+
+    def _stamped(self, ops, spark):
+        t = create_table(ops, INFO)
+        rows = [(i, f"n{i}", ts) for i, ts in enumerate(self.STAMPS)]
+        t, _ = t.append(_batch(spark, rows[:4]), "updated", T0)
+        t, _ = t.append(_batch(spark, rows[4:]), "updated", T1)
+        return t
+
+    @pytest.fixture()
+    def driver_tz(self):
+        import os
+        import time
+
+        saved = os.environ.get("TZ")
+
+        def set_tz(tz):
+            os.environ["TZ"] = tz
+            time.tzset()
+
+        yield set_tz
+        if saved is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+
+    @pytest.mark.parametrize("lo, hi", [
+        (datetime(2018, 1, 1, 2), datetime(2018, 1, 1, 10)),
+        (datetime(2018, 1, 1, 15, 30, tzinfo=timezone(timedelta(hours=5,
+                                                                 minutes=30))),
+         datetime(2018, 1, 2, 8, tzinfo=timezone.utc)),
+        (date(2018, 1, 1), date(2018, 1, 2)),
+        (datetime(1850, 1, 1), datetime(2018, 1, 1, 23, 59, 59, 999999)),
+        (None, datetime(2018, 1, 1, 10)),
+    ], ids=["naive", "aware", "date", "pre1901-keeps-lit", "upper-only"])
+    @pytest.mark.parametrize("ntz", [False, True], ids=["ltz", "ntz"])
+    def test_timestamp_bounds_match_lit(self, ops, spark, driver_tz, lo, hi,
+                                        ntz):
+        from waimak_spark.storage.audit import _sql_literal
+
+        t = self._stamped(ops, spark)
+        driver_tz("America/Los_Angeles")  # the session stays UTC
+        conf = "spark.sql.timestampType"
+        saved = spark.conf.get(conf)
+        spark.conf.set(conf, "TIMESTAMP_NTZ" if ntz else "TIMESTAMP_LTZ")
+        try:
+            rows = self._assert_same(t, lo, hi)
+        finally:
+            spark.conf.set(conf, saved)
+        assert 0 < len(rows) < len(self.STAMPS)
+        assert all((_sql_literal(b, ntz) is None) == (b.year < 1901)
+                   for b in (lo, hi) if b is not None)
+
+    @pytest.mark.parametrize("lo, hi", [
+        (1_514_800_800_000, 1_514_887_200_000),
+        (-2 ** 31, 2 ** 31 - 1),
+        (1.5148008e12, None),
+    ], ids=["bigint", "int", "float-keeps-lit"])
+    def test_epoch_long_bounds_match_lit(self, ops, spark, lo, hi):
+        from waimak_spark.storage.audit import _sql_literal
+
+        t = create_table(ops, INFO)
+        base = 1_514_800_800_000
+        t, _ = t.append(spark.createDataFrame(
+            [(i, "n", base + d) for i, d in enumerate(
+                (-1, 0, 1, 86_400_000, 86_400_001))],
+            "id int, name string, updated long"), "updated", T0)
+        self._assert_same(t, lo, hi)
+        assert (_sql_literal(lo, False) is None) == isinstance(lo, float)
+
+    def test_snapshot_with_keys_that_need_quoting(self, ops, spark):
+        keys = ["order id", "line-no", "we`ird"]
+        t = create_table(ops, AuditTableInfo("quoted", keys))
+        schema = ("`order id` int, `line-no` int, `we``ird` int, "
+                  "v string, updated timestamp")
+        t, _ = t.append(spark.createDataFrame(
+            [(1, 1, 1, "a", T0), (1, 2, 1, "b", T0)], schema), "updated", T0)
+        t, _ = t.append(spark.createDataFrame(
+            [(1, 1, 1, "a2", T1), (1, 2, 2, "c", T1)], schema), "updated", T1)
+        snap = t.snapshot(T2)
+        assert snap.columns[:4] == [*keys, "v"]
+        got = sorted(tuple(r)[:4] for r in snap.collect())
+        assert got == [(1, 1, 1, "a2"), (1, 2, 1, "b"), (1, 2, 2, "c")]

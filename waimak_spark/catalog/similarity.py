@@ -111,23 +111,6 @@ def ann_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("recall_at_k")))
 
 
-def _int8_recall_oracle() -> str:
-    k = 5
-    return f"""
-        with bf as ({S.brute_force_topk_sql(QUERY_IDS, k=k)}),
-        q8 as ({S.int8_topk_sql(QUERY_IDS, k=k)}),
-        m as (
-            select bf.query_id, count(*) as n
-            from bf join q8 using (query_id, neighbor_id)
-            group by bf.query_id
-        )
-        select q.query_id, round(coalesce(n, 0) / {k}.0, 4) as recall_at_k
-        from (select distinct query_id from bf) q
-        left join m using (query_id)
-    """
-
-
-
 # ---------------------------------------------------------------------------
 # "build once, probe many" stored IVF index
 # ---------------------------------------------------------------------------

@@ -10,6 +10,13 @@ At 100 TB note: directory rename is atomic on HDFS but O(n)-copy on S3;
 ``atomic_write`` is the hook where a manifest-based committer would slot in
 for object stores.
 
+Every JVM class, object and static method the engine calls comes from
+``_jvm_refs``, a handle table built once per py4j gateway: a ``jvm.a.b.C``
+walk pays one reflection round trip per step, and each step that names a
+package scans every jar on the classpath before it answers.  ``FileOps``
+builds each ``Path`` a call touches once.  A test fails if a
+``jvm.<package>`` walk appears anywhere else in the package.
+
 ``nullable`` is the schema a Parquet read of a folder reports for the frame
 that wrote it, so a re-read can pass it instead of inferring it.
 
@@ -73,9 +80,10 @@ def nullable(t: DataType) -> DataType:
 
 @functools.lru_cache(maxsize=None)
 def _jvm_refs(jvm) -> SimpleNamespace:
-    """The JVM classes, objects and static methods :func:`parquet_schema`
-    calls, looked up once per gateway: each package step of ``jvm.a.b.C``
-    and each static-method lookup is a round trip."""
+    """Every JVM class, object and static method the engine calls, looked
+    up once per gateway.  Each package step of ``jvm.a.b.C`` is a py4j
+    reflection round trip, and a step that names a package rather than a
+    class scans every jar on the classpath before it answers."""
     def module(pkg, name):
         return getattr(getattr(pkg, f"{name}$"), "MODULE$")
 
@@ -101,6 +109,13 @@ def _jvm_refs(jvm) -> SimpleNamespace:
         read_footer=parquet.ParquetFooterReader.readFooter,
         schema_from_footer=parquet.ParquetFileFormat.readSchemaFromFooter,
         converter=parquet.ParquetToSparkSchemaConverter,
+        read_utf8=jvm.org.apache.commons.io.IOUtils.toString,
+        ntz_preferred=(jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+                       .isTimestampNTZPreferred),
+        string_value_of=jvm.java.lang.String.valueOf,
+        load_class=jvm.java.lang.Class.forName,
+        properties=jvm.java.util.Properties,
+        connect=jvm.java.sql.DriverManager.getConnection,
     )
 
 
@@ -211,36 +226,36 @@ def read_parquet(spark: SparkSession, *paths: str,
 
 
 class FileOps:
-    """Thin wrapper over ``org.apache.hadoop.fs.FileSystem``."""
+    """Thin wrapper over ``org.apache.hadoop.fs.FileSystem``.  Each method
+    builds each ``Path`` it touches once, from the gateway's handle table."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self._jvm = spark._jvm
+        self._refs = _jvm_refs(spark._jvm)
         self._conf = spark._jsc.hadoopConfiguration()
 
-    def _path(self, p: str):
-        return self._jvm.org.apache.hadoop.fs.Path(p)
-
-    def _fs(self, p: str):
-        return self._path(p).getFileSystem(self._conf)
+    def _resolve(self, p: str):
+        """(the ``FileSystem`` holding ``p``, its ``Path``)."""
+        path = self._refs.path(p)
+        return path.getFileSystem(self._conf), path
 
     # -- basics ---------------------------------------------------------------
     def exists(self, p: str) -> bool:
-        return self._fs(p).exists(self._path(p))
+        fs, path = self._resolve(p)
+        return fs.exists(path)
 
     def mkdirs(self, p: str) -> bool:
-        return self._fs(p).mkdirs(self._path(p))
+        fs, path = self._resolve(p)
+        return fs.mkdirs(path)
 
     def delete(self, p: str, recursive: bool = True) -> bool:
-        fs = self._fs(p)
-        path = self._path(p)
+        fs, path = self._resolve(p)
         if not fs.exists(path):
             return False
         return fs.delete(path, recursive)
 
     def list_dirs(self, p: str) -> list[str]:
-        fs = self._fs(p)
-        path = self._path(p)
+        fs, path = self._resolve(p)
         if not fs.exists(path):
             return []
         return [
@@ -250,44 +265,43 @@ class FileOps:
         ]
 
     def list_files(self, p: str) -> list[str]:
-        fs = self._fs(p)
-        path = self._path(p)
+        fs, path = self._resolve(p)
         if not fs.exists(path):
             return []
         return [st.getPath().getName() for st in fs.listStatus(path) if st.isFile()]
 
     def glob(self, pattern: str) -> list[str]:
-        fs = self._fs(pattern)
-        statuses = fs.globStatus(self._path(pattern))
+        fs, path = self._resolve(pattern)
+        statuses = fs.globStatus(path)
         if statuses is None:
             return []
         return [st.getPath().toString() for st in statuses]
 
     def modification_time(self, p: str) -> int:
-        return self._fs(p).getFileStatus(self._path(p)).getModificationTime()
+        fs, path = self._resolve(p)
+        return fs.getFileStatus(path).getModificationTime()
 
     def total_size(self, p: str) -> int:
         """Total bytes under a path (files summed recursively)."""
-        fs = self._fs(p)
-        path = self._path(p)
+        fs, path = self._resolve(p)
         if not fs.exists(path):
             return 0
         return fs.getContentSummary(path).getLength()
 
     # -- atomic moves (FSUtils.scala:109-134 semantics) ------------------------
     def rename(self, src: str, dest: str) -> bool:
-        return self._fs(src).rename(self._path(src), self._path(dest))
+        fs, path = self._resolve(src)
+        return fs.rename(path, self._refs.path(dest))
 
     def move_overwrite_folder(self, src: str, dest: str) -> None:
         """Delete dest if present, ensure parent, then atomic rename."""
-        fs = self._fs(dest)
-        dpath = self._path(dest)
+        fs, dpath = self._resolve(dest)
         if fs.exists(dpath):
             fs.delete(dpath, True)
         parent = dpath.getParent()
         if parent is not None and not fs.exists(parent):
             fs.mkdirs(parent)
-        if not fs.rename(self._path(src), dpath):
+        if not fs.rename(self._refs.path(src), dpath):
             raise IOError(f"Failed to move [{src}] -> [{dest}]")
 
     def merge_move_files(self, src_dir: str, dest_dir: str,
@@ -299,29 +313,28 @@ class FileOps:
         only FILES move (directories are left behind), and a missing /
         non-directory source or a name collision in the destination is a
         loud error — not a silent no-op or a cryptic rename failure."""
-        sfs = self._fs(src_dir)
-        spath = self._path(src_dir)
+        sfs, spath = self._resolve(src_dir)
         if not sfs.exists(spath):
             raise IOError(f"Source folder [{src_dir}] does not exist")
         if not sfs.getFileStatus(spath).isDirectory():
             raise IOError(f"Source path [{src_dir}] is not a folder")
-        fs = self._fs(dest_dir)
-        if not fs.exists(self._path(dest_dir)):
-            fs.mkdirs(self._path(dest_dir))
+        fs, dpath = self._resolve(dest_dir)
+        if not fs.exists(dpath):
+            fs.mkdirs(dpath)
         for name in self.list_files(src_dir):
             if name_filter(name):
-                dest = self._path(f"{dest_dir}/{name}")
+                dest = self._refs.path(f"{dest_dir}/{name}")
                 if fs.exists(dest):
                     raise IOError(
                         f"File [{name}] already exists in destination "
                         f"[{dest_dir}]")
-                if not fs.rename(self._path(f"{src_dir}/{name}"), dest):
+                if not fs.rename(self._refs.path(f"{src_dir}/{name}"), dest):
                     raise IOError(f"Failed to move [{src_dir}/{name}] into [{dest_dir}]")
 
     # -- trash (FileStorageOps.scala:238-261 semantics) -------------------------
     def move_to_trash(self, p: str, trash_root: str, ts_ms: int | None = None) -> None:
         ts = ts_ms if ts_ms is not None else int(time.time() * 1000)
-        name = self._path(p).getName()
+        name = self._refs.path(p).getName()
         self.move_overwrite_folder(p, f"{trash_root}/{ts}_{name}")
 
     def purge_trash(self, trash_root: str, max_age_ms: int = 86_400_000) -> int:
@@ -341,8 +354,8 @@ class FileOps:
 
     # -- small sidecar files -----------------------------------------------------
     def write_string(self, p: str, content: str, overwrite: bool = True) -> None:
-        fs = self._fs(p)
-        out = fs.create(self._path(p), overwrite)
+        fs, path = self._resolve(p)
+        out = fs.create(path, overwrite)
         try:
             out.write(bytearray(content.encode("utf-8")))
         finally:
@@ -356,8 +369,7 @@ class FileOps:
         racing writer won. Unlike an exists()+rename pair this has no
         TOCTOU window and cannot silently replace the winner's file
         (RawLocalFileSystem's rename overwrites on POSIX)."""
-        fs = self._fs(p)
-        path = self._path(p)
+        fs, path = self._resolve(p)
         try:
             out = fs.create(path, False)
         except Exception as ex:
@@ -376,10 +388,9 @@ class FileOps:
         return True
 
     def read_string(self, p: str) -> str:
-        fs = self._fs(p)
-        stream = fs.open(self._path(p))
+        fs, path = self._resolve(p)
+        stream = fs.open(path)
         try:
-            ioutils = self._jvm.org.apache.commons.io.IOUtils
-            return ioutils.toString(stream, "UTF-8")
+            return self._refs.read_utf8(stream, "UTF-8")
         finally:
             stream.close()

@@ -1303,47 +1303,6 @@ def int8_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
             .select("query_id", "neighbor_id", "rank", "cosine_sim"))
 
 
-def int8_topk_sql(query_ids: list[int], k: int = 5, dims: int = 64) -> str:
-    ids = ", ".join(str(i) for i in query_ids)
-    return f"""
-        with base0 as (
-            select vec_id, embedding::DOUBLE[] as v from embeddings
-        ), scaled as (
-            select vec_id,
-                   list_max(list_transform(v, x -> abs(x)))
-                       / {float(Q8_LEVELS)} as scale, v
-            from base0
-        ), base as (
-            select vec_id,
-                   case when scale > 0
-                        then list_transform(v, x -> round(x / scale)::BIGINT)
-                        else list_transform(v, x -> 0::BIGINT) end as q
-            from scaled
-        ), withn as (
-            select vec_id, q,
-                   sqrt(list_dot_product(q, q)::DOUBLE) as qn
-            from base
-        ), queries as (
-            select vec_id as query_id, q as qq, qn as qqn from withn
-            where vec_id in ({ids})
-        ), scored as (
-            select query_id, vec_id as neighbor_id,
-                   round(list_dot_product(qq, q)::DOUBLE
-                         / (qqn * qn), 4) as cosine_sim
-            from withn cross join queries
-            where vec_id != query_id
-        )
-        select query_id, neighbor_id, rank, cosine_sim
-        from (
-            select *, row_number() over (partition by query_id
-                                         order by cosine_sim desc,
-                                                  neighbor_id asc) as rank
-            from scored
-        )
-        where rank <= {k}
-    """
-
-
 # ---------------------------------------------------------------------------
 # cluster exemplar selection (diversity curation)
 # ---------------------------------------------------------------------------

@@ -25,7 +25,7 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 from ..dataflow.exceptions import DataFlowException
-from ..filesystem import read_parquet
+from ..filesystem import _jvm_refs, read_parquet
 
 FORCE_RECREATE_TABLES = "spark.waimak.metastore.forceRecreateTables"
 FORCE_RECREATE_TABLES_DEFAULT = False
@@ -182,9 +182,7 @@ class ImpalaDBConnector(HadoopDBConnector):
         """Qualify against the FileSystem URI + working dir, as the
         reference does with ``Path.makeQualified`` — Impala requires
         absolute qualified locations (e.g. ``hdfs://nn/...``)."""
-        fops = self.context.file_ops
-        p = fops._path(path)
-        fs = fops._fs(path)
+        fs, p = self.context.file_ops._resolve(path)
         return p.makeQualified(fs.getUri(), fs.getWorkingDirectory()).toString()
 
     def create_table_from_parquet_ddl(self, table_name: str, path: str,
@@ -266,12 +264,12 @@ class ImpalaJDBCConnector(ImpalaDBConnector):
         if not self.secure_properties:
             return props
         spark = self.context.spark
-        jvm = spark._jvm
+        refs = _jvm_refs(spark._jvm)
         hconf = spark._jsc.hadoopConfiguration()
         for jceks_key, jdbc_key in self.secure_properties.items():
             cred = hconf.getPassword(jceks_key)
             if cred is not None:
-                props[jdbc_key] = jvm.java.lang.String.valueOf(cred)
+                props[jdbc_key] = refs.string_value_of(cred)
             elif hconf.get(CREDENTIAL_PROVIDER_PATH) is None:
                 raise DataFlowException(
                     f"Could not read secure parameter [{jceks_key}] as no "
@@ -284,13 +282,12 @@ class ImpalaJDBCConnector(ImpalaDBConnector):
         return props
 
     def _run_queries(self, ddls: Sequence[str]) -> None:
-        jvm = self.context.spark._jvm
-        jvm.java.lang.Class.forName(self.driver_name)
-        props = jvm.java.util.Properties()
+        refs = _jvm_refs(self.context.spark._jvm)
+        refs.load_class(self.driver_name)
+        props = refs.properties()
         for k, v in self._all_properties().items():
             props.setProperty(k, v)
-        conn = jvm.java.sql.DriverManager.getConnection(
-            self.jdbc_string, props)
+        conn = refs.connect(self.jdbc_string, props)
         try:
             stmt = conn.createStatement()
             for ddl in ddls:

@@ -5,7 +5,7 @@ Re-expresses the reference's ``AuditTableFile``
 (waimak-storage/.../AuditTableFile.scala:26-464) Spark-first:
 
 * layout ``<base>/<table>/de_store_type=hot|cold/de_store_region=rNNN/``
-  — Hive-style partition directories, so ``allBetween``'s ``.isin``
+  — Hive-style partition directories, so ``allBetween``'s ``IN``
   filters prune whole regions at the Parquet scan (no custom reader);
 * ``append`` stamps ``_de_last_updated`` and writes one new hot region
   (AuditTableFile.scala:56-70); the region's count and max
@@ -14,6 +14,13 @@ Re-expresses the reference's ``AuditTableFile``
   is one Spark job;
 * ``snapshot`` = partition-pruned scan → latest-per-PK window
   (AuditTableFile.scala:72-82);
+* each read is one Spark-SQL fragment per step, because every PySpark
+  Column call costs several py4j round trips (origin tracking) where a
+  parsed string costs one: ``all_between``'s filter is one predicate, the
+  partition ids plus the time bounds rendered as the literals ``F.lit``
+  would build (a bound it cannot render keeps ``F.lit``), and the
+  latest-per-PK window is one ``row_number() OVER (...)`` fragment, with
+  ``snapshot`` dropping the rank and ``_de_last_updated`` in one call;
 * ``compact`` merges all hot + small cold regions into one new cold
   region, sized by a pluggable compaction partitioner, with the replaced
   region folders moved to a trash bin (AuditTableFile.scala:99-210);
@@ -33,15 +40,17 @@ compare/order it, so both work unchanged on both engines.
 
 from __future__ import annotations
 
+import calendar
+import time
 from dataclasses import dataclass, field
-from datetime import datetime
+from datetime import date, datetime, timedelta
 from typing import Any, Callable, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Observation, Window as W
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..filesystem import nullable
+from ..filesystem import _jvm_refs, nullable
 from .file_ops import REGION_INFO_DIRECTORY, FileStorageOps
 
 STORE_TYPE_COLUMN = "de_store_type"
@@ -82,6 +91,50 @@ class AuditTableRegionInfo:
 
 # partitioner: (region DataFrame, total row count, total input bytes) -> n
 CompactionPartitioner = Callable[[DataFrame, int, int], int]
+
+_EPOCH = datetime(1970, 1, 1)
+#: years whose datetimes and dates render as SQL literals: Spark rebases a
+#: ``java.sql`` timestamp before 1900-01-01 UTC (its last calendar switch
+#: in any time zone), and the renderer writes four-digit years
+_LITERAL_YEARS = range(1901, 9999)
+
+
+def _sql_string(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_name(name: str) -> str:
+    """A column name as one backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_literal(v: Any, ntz_preferred: bool) -> Optional[str]:
+    """The Spark-SQL literal equal to ``F.lit(v)``, or None for a value it
+    does not render (the caller then uses ``F.lit``).  Datetimes convert
+    as PySpark's py4j converters do: a naive one is a TIMESTAMP_NTZ wall
+    clock when ``ntz_preferred`` (the session's
+    ``spark.sql.timestampType``), else an instant in the driver's local
+    time (``time.mktime``); an aware one is an instant
+    (``calendar.timegm``).  A date is the day ``java.sql.Date.valueOf``
+    names, and an int within a long is the same INT or BIGINT literal."""
+    if isinstance(v, date) and v.year not in _LITERAL_YEARS:
+        return None
+    if isinstance(v, datetime):
+        if v.tzinfo is None and ntz_preferred:
+            kind, zone = "TIMESTAMP_NTZ", ""
+            seconds = calendar.timegm(v.utctimetuple())
+        else:
+            kind, zone = "TIMESTAMP_LTZ", "Z"
+            seconds = (calendar.timegm(v.utctimetuple()) if v.tzinfo
+                       else time.mktime(v.timetuple()))
+        at = _EPOCH + timedelta(seconds=int(seconds),
+                                microseconds=v.microsecond)
+        return f"{kind} '{at:%Y-%m-%d %H:%M:%S.%f}{zone}'"
+    if isinstance(v, date):
+        return f"DATE '{v.isoformat()}'"
+    if type(v) is int and -2 ** 63 <= v < 2 ** 63:
+        return str(v)
+    return None
 
 
 def _observe_region_stats(df: DataFrame
@@ -231,6 +284,8 @@ class AuditTableFile:
         One scan of the table root; the ``de_store_type``/``de_store_region``
         filters sit on partition columns, so Catalyst prunes non-active
         region directories before any IO (AuditTableFile.scala:133-142).
+        The filter is one SQL predicate; a bound :func:`_sql_literal` does
+        not render is added as an ``F.lit`` comparison.
         """
         ids = self.active_region_ids()
         if not ids:
@@ -238,23 +293,40 @@ class AuditTableFile:
         df = self.ops.open_parquet(self.table_path, schema=self.schema)
         if df is None:
             return None
-        df = df.where(
-            F.col(STORE_TYPE_COLUMN).isin(HOT_PARTITION, COLD_PARTITION)
-            & F.col(STORE_REGION_COLUMN).isin(ids)
-        )
-        if from_ts is not None:
-            df = df.where(F.col(DE_LAST_UPDATED_COLUMN) >= F.lit(from_ts))
-        if to_ts is not None:
-            df = df.where(F.col(DE_LAST_UPDATED_COLUMN) <= F.lit(to_ts))
+        regions = ", ".join(map(_sql_string, ids))
+        where = [f"{STORE_TYPE_COLUMN} IN ('{HOT_PARTITION}', "
+                 f"'{COLD_PARTITION}')",
+                 f"{STORE_REGION_COLUMN} IN ({regions})"]
+        unrendered = []
+        # PySpark's own converter asks the JVM the same question per value
+        ntz_preferred = any(isinstance(b, datetime) and b.tzinfo is None
+                            for b in (from_ts, to_ts)) and \
+            _jvm_refs(self.ops.spark._jvm).ntz_preferred()
+        for op, bound in ((">=", from_ts), ("<=", to_ts)):
+            if bound is not None:
+                literal = _sql_literal(bound, ntz_preferred)
+                if literal is None:
+                    unrendered.append((op, bound))
+                else:
+                    where.append(f"{DE_LAST_UPDATED_COLUMN} {op} {literal}")
+        df = df.where(" AND ".join(where))
+        for op, bound in unrendered:
+            lu = F.col(DE_LAST_UPDATED_COLUMN)
+            df = df.where(lu >= F.lit(bound) if op == ">=" else lu <= F.lit(bound))
         return df
 
+    def _latest(self, df: DataFrame) -> DataFrame:
+        """The latest record per primary key, still carrying its
+        ``_rowNum`` (always 1): the canonical row_number-over-desc-timestamp
+        idiom (AuditTableFile.scala:78-82) as one SQL window fragment."""
+        keys = ", ".join(map(_sql_name, self.table_info.primary_keys))
+        rank = F.expr(f"row_number() OVER (PARTITION BY {keys} "
+                      f"ORDER BY {DE_LAST_UPDATED_COLUMN} DESC)")
+        return df.withColumn("_rowNum", rank).where("_rowNum = 1")
+
     def deduplicate(self, df: DataFrame) -> DataFrame:
-        """Latest record per primary key: the canonical
-        row_number-over-desc-timestamp idiom (AuditTableFile.scala:78-82)."""
-        w = W.partitionBy(*[F.col(c) for c in self.table_info.primary_keys]) \
-             .orderBy(F.col(DE_LAST_UPDATED_COLUMN).desc())
-        return (df.withColumn("_rowNum", F.row_number().over(w))
-                .where(F.col("_rowNum") == 1).drop("_rowNum"))
+        """Latest record per primary key (AuditTableFile.scala:78-82)."""
+        return self._latest(df).drop("_rowNum")
 
     def snapshot(self, ts: Optional[Any] = None) -> Optional[DataFrame]:
         """Deduplicated state of the table as of ``ts``
@@ -262,7 +334,7 @@ class AuditTableFile:
         df = self.all_between(None, ts)
         if df is None:
             return None
-        return self.deduplicate(df).drop(DE_LAST_UPDATED_COLUMN)
+        return self._latest(df).drop("_rowNum", DE_LAST_UPDATED_COLUMN)
 
     def snapshot_diff(self, from_ts: Optional[Any],
                       to_ts: Optional[Any]) -> Optional[DataFrame]:
