@@ -80,22 +80,6 @@ class TestMergeMoveFiles:
 
 
 class TestTrashAndExclusiveWrite:
-    def test_move_to_trash_and_purge_by_age(self, ops, tmp_path):
-        victim = tmp_path / "victim"
-        _mkfiles(str(victim), ["a"])
-        trash = str(tmp_path / ".trash")
-        ops.move_to_trash(str(victim), trash, ts_ms=1_000)  # ancient
-        assert not victim.exists()
-        kept = tmp_path / "kept"
-        _mkfiles(str(kept), ["b"])
-        import time
-
-        ops.move_to_trash(str(kept), trash,
-                          ts_ms=int(time.time() * 1000))  # fresh
-        assert ops.purge_trash(trash, max_age_ms=86_400_000) == 1
-        names = os.listdir(trash)
-        assert len(names) == 1 and names[0].endswith("_kept")
-
     def test_write_string_exclusive_single_winner(self, ops, tmp_path):
         p = str(tmp_path / "guard" / "lock.json")
         assert ops.write_string_exclusive(p, "first") is True

@@ -62,25 +62,26 @@ class TestRepositoryRoundTrip:
         assert rows[("completeness(name)", T2)] == 0.8
         assert hist.count() == 4
 
-    def test_previous_values_picks_latest_before_ts(self, spark, tmp_path):
+    def test_previous_window_picks_latest_before_ts(self, spark, tmp_path):
         repo = _repo(spark, tmp_path)
         repo.save("items", {"size": 2.0}, T1)
         repo.save("items", {"size": 5.0}, T2)
-        assert repo.previous_values("items", ["size"], T2) == {"size": 2.0}
+        assert repo.previous_window("items", ["size"], T2, 1) == {
+            "size": [2.0]}
         # nothing strictly before T1
-        assert repo.previous_values("items", ["size"], T1) == {}
+        assert repo.previous_window("items", ["size"], T1, 1) == {}
 
     def test_empty_repository_loads_none(self, spark, tmp_path):
         repo = _repo(spark, tmp_path)
         assert repo.load() is None
-        assert repo.previous_values("items", ["size"], T2) == {}
+        assert repo.previous_window("items", ["size"], T2, 1) == {}
 
     def test_history_is_per_label(self, spark, tmp_path):
         repo = _repo(spark, tmp_path)
         repo.save("a", {"size": 2.0}, T1)
         repo.save("b", {"size": 99.0}, T1)
-        assert repo.previous_values("a", ["size"], T2) == {"size": 2.0}
-        assert repo.previous_values("b", ["size"], T2) == {"size": 99.0}
+        assert repo.previous_window("a", ["size"], T2, 1) == {"size": [2.0]}
+        assert repo.previous_window("b", ["size"], T2, 1) == {"size": [99.0]}
 
 
 class TestAnomalyDetection:
@@ -209,9 +210,9 @@ class TestIdempotentSave:
         repo.save("items", {"size": 2.0}, aware_t1)
         repo.save("items", {"size": 2.0}, T1)  # same instant, naive
         assert repo.load().count() == 1
-        assert repo.previous_values("items", ["size"],
-                                    T2.replace(tzinfo=timezone.utc)) == {
-            "size": 2.0}
+        assert repo.previous_window("items", ["size"],
+                                    T2.replace(tzinfo=timezone.utc), 1) == {
+            "size": [2.0]}
 
     def test_conflicting_metric_names_raise(self, spark, tmp_path):
         repo = _repo(spark, tmp_path)
@@ -287,15 +288,15 @@ class TestWindowStrategy:
         from waimak_spark.dataquality import BatchNormalStrategy
 
         s = BatchNormalStrategy(window_size=5, min_history=3)
-        assert s.detect_window([100.0, 100.0], 500.0) is None  # too short
-        assert s.detect_window([100.0, 100.0, 100.0], 500.0) is not None
+        assert s.detect([100.0, 100.0], 500.0) is None  # too short
+        assert s.detect([100.0, 100.0, 100.0], 500.0) is not None
 
     def test_batch_normal_zero_variance_history(self):
         from waimak_spark.dataquality import BatchNormalStrategy
 
         s = BatchNormalStrategy(window_size=4, min_history=3)
-        assert s.detect_window([5.0, 5.0, 5.0], 5.0) is None
-        assert s.detect_window([5.0, 5.0, 5.0], 5.1) is not None
+        assert s.detect([5.0, 5.0, 5.0], 5.0) is None
+        assert s.detect([5.0, 5.0, 5.0], 5.1) is not None
 
 
 class TestCatalogDqMarker:
@@ -321,19 +322,19 @@ class TestStrategies:
     def test_absolute_change_bounds(self):
         s = AbsoluteChangeStrategy(max_rate_decrease=-2.0,
                                    max_rate_increase=2.0)
-        assert s.detect(2.0, 5.0) is not None       # +3 > 2
-        assert s.detect(5.0, 2.0) is not None       # -3 < -2
-        assert s.detect(2.0, 3.0) is None
-        assert s.detect(3.0, 2.0) is None
+        assert s.detect([2.0], 5.0) is not None       # +3 > 2
+        assert s.detect([5.0], 2.0) is not None       # -3 < -2
+        assert s.detect([2.0], 3.0) is None
+        assert s.detect([3.0], 2.0) is None
 
     def test_relative_rate_bounds(self):
         s = RelativeRateOfChangeStrategy(max_rate_decrease=0.5,
                                          max_rate_increase=2.0)
-        assert s.detect(2.0, 5.0) is not None       # 2.5x
-        assert s.detect(5.0, 2.0) is not None       # 0.4x
-        assert s.detect(2.0, 3.0) is None
-        assert s.detect(0.0, 0.0) is None
-        assert s.detect(0.0, 1.0) is not None       # undefined rate
+        assert s.detect([2.0], 5.0) is not None       # 2.5x
+        assert s.detect([5.0], 2.0) is not None       # 0.4x
+        assert s.detect([2.0], 3.0) is None
+        assert s.detect([0.0], 0.0) is None
+        assert s.detect([0.0], 1.0) is not None       # undefined rate
 
 
 class TestSuccessMetricsJson:
@@ -357,3 +358,57 @@ class TestSuccessMetricsJson:
         repo.save("items", {"size": 2.0, "mean(x)": 1.5}, T1)
         out = json.loads(repo.success_metrics_json(["mean(x)"]))
         assert len(out) == 1 and out[0]["name"] == "mean(x)"
+
+
+class TestOneHistoryRead:
+    def test_evaluation_opens_the_metrics_table_once(self, spark, tmp_path,
+                                                     monkeypatch):
+        """A repository-backed evaluation reads the history and appends
+        this run's metrics through one table handle."""
+        from waimak_spark.storage import audit
+
+        opens = []
+        real = audit.open_tables
+
+        def counting(*a, **kw):
+            opens.append(a[1])
+            return real(*a, **kw)
+
+        monkeypatch.setattr(audit, "open_tables", counting)
+        repo = _repo(spark, tmp_path)
+        df = spark.createDataFrame(TODAY, "id int, name string")
+        for ts in (T1, T2):
+            opens.clear()
+            ComposableCheck(
+                [Check(CheckLevel.WARNING, "basics")
+                 .has_size(lambda n: n >= 1)],
+                [_anomaly()], repo, ts).get_alerts("items", df)
+            assert opens == [["metrics"]]
+        assert repo.load().count() == 2
+
+    def test_one_read_serves_point_and_window_strategies(self, spark,
+                                                         tmp_path):
+        """The history is read as deep as the largest window: the point
+        strategy compares with the newest prior value, the window
+        strategy with its last ``window_size`` values."""
+        from datetime import timedelta
+
+        from waimak_spark.dataquality import BatchNormalStrategy
+
+        repo = _repo(spark, tmp_path)
+        for i, (size, total) in enumerate(
+                ((10.0, 15.0), (10.0, 100.0), (10.0, 100.0), (4.0, 100.0))):
+            repo.save("items", {"size": size, "sum(id)": total},
+                      T1 + timedelta(days=i))
+        name, agg = size_metric()
+        check = ComposableCheck([], [
+            AnomalyCheck(name, agg, AbsoluteChangeStrategy(
+                max_rate_decrease=-2.0)),
+            AnomalyCheck("sum(id)", "sum(id)", BatchNormalStrategy(
+                window_size=3, min_history=3))],
+            repo, T1 + timedelta(days=9))
+        df = spark.createDataFrame(TODAY, "id int, name string")
+        alerts = [a.alert_message for a in check.get_alerts("items", df)]
+        assert alerts == [
+            "Warning anomaly for label items: metric [sum(id)] value 15 < "
+            "mean 100 - 3·stddev 0 over last 3 runs"]

@@ -368,3 +368,35 @@ def test_materialize_reread_costs_the_same_on_a_fresh_thread(spark,
     rts_fresh = _round_trips(spark, on_fresh_thread)
     assert [d.schema for d in kept] == [want] * 6
     assert abs(rts_fresh - rts_main) <= 2, (rts_main, rts_fresh)
+
+
+class TestParquetMaterializer:
+    """``cache_registry.parquet_materializer`` writes and re-reads as
+    ``operators.cache.materialize`` does, and its cleanup goes through the
+    Hadoop ``FileSystem``."""
+
+    def test_reread_infers_no_schema(self, spark, tmp_path):
+        from waimak_spark.functions.cache_registry import (
+            parquet_materializer,
+            release_tracked,
+        )
+
+        df = spark.range(6).selectExpr("id", "concat('v', id) as s")
+        got = []
+        assert dqm._jobs(spark, lambda: got.append(parquet_materializer(
+            str(tmp_path / "m"))(df))) == 1  # the write
+        assert got[0].schema == nullable(df.schema)
+        assert sorted(got[0].collect()) == sorted(df.collect())
+        release_tracked()
+
+    def test_release_deletes_a_uri_path(self, spark, tmp_path):
+        from waimak_spark.functions.cache_registry import (
+            parquet_materializer,
+            release_tracked,
+        )
+
+        local = tmp_path / "m"
+        out = parquet_materializer(f"file://{local}")(spark.range(3))
+        assert out.count() == 3 and local.is_dir()
+        release_tracked()
+        assert not local.exists()

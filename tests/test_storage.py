@@ -978,7 +978,7 @@ class TestRangeBoundLiterals:
     @pytest.mark.parametrize("ntz", [False, True], ids=["ltz", "ntz"])
     def test_timestamp_bounds_match_lit(self, ops, spark, driver_tz, lo, hi,
                                         ntz):
-        from waimak_spark.storage.audit import _sql_literal
+        from waimak_spark.sql_text import _sql_literal
 
         t = self._stamped(ops, spark)
         driver_tz("America/Los_Angeles")  # the session stays UTC
@@ -999,7 +999,7 @@ class TestRangeBoundLiterals:
         (1.5148008e12, None),
     ], ids=["bigint", "int", "float-keeps-lit"])
     def test_epoch_long_bounds_match_lit(self, ops, spark, lo, hi):
-        from waimak_spark.storage.audit import _sql_literal
+        from waimak_spark.sql_text import _sql_literal
 
         t = create_table(ops, INFO)
         base = 1_514_800_800_000

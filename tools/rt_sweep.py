@@ -1,9 +1,17 @@
-"""Deterministic py4j round-trip sweep: counts driver->JVM commands paid
-by each catalog entry's CONSTRUCTION (fn(spark, sf_dir) up to returning
-its DataFrame — including any driver-side collect jobs the operator's
-loop runs).  Counting calls is load-independent, so the sweep is a
-protocol-grade before/after instrument for construction-tax work even on
-a busy host (unlike wall-clock).
+"""py4j round-trip sweep: counts driver->JVM commands paid by each
+catalog entry's CONSTRUCTION (fn(spark, sf_dir) up to returning its
+DataFrame — including any driver-side collect jobs the operator's loop
+runs).
+
+The count is NOT deterministic.  The counter sees every command sent
+from any thread, including py4j's proxy releases (``m d``), which its
+finalizer thread sends asynchronously whenever Python drops JVM
+references.  How many of those land inside an entry's window depends on
+garbage collection timing and host load, so two sweeps of unchanged code
+can differ by thousands.  For a stable per-call count, skip the releases
+and count only the calling thread (``tests/test_storage.py::
+_py4j_commands``), after settling the finalizer queue
+(``tests/test_parquet_schema.py::_settle``).
 
 Usage: python tools/rt_sweep.py [entry ...]   (default: whole catalog)
 Prints one JSON line per entry {"entry", "rts"} and a total.

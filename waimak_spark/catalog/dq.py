@@ -115,7 +115,7 @@ TREND_ORACLE = f"""
 # ---------------------------------------------------------------------------
 #
 # Six runs are persisted through the ComposableCheck machinery with a
-# BatchNormalStrategy anomaly check attached (so the detect_window code
+# BatchNormalStrategy anomaly check attached (so the window strategy code
 # path executes during the build): runs 0-4 are near-identical slices of
 # ``orders`` (o_orderkey % 1000 < 500+i — stable size, stable mean), run 5
 # is the full table (~2× size jump).  The entry then answers, per metric

@@ -7,8 +7,9 @@ WITHOUT the Deequ dependency, on one check model: Deequ-style ``Check``
 chains bundled in a ``ComposableCheck`` (``checks.py``).  The prefab
 checks (completeness, uniqueness, recency, generic SQL, outlier rate) and
 the conf-declared checks are such chains, so any checks on a label merge:
-their scalar metrics share one aggregate job over the cached label, and
-uniqueness/outlier metrics run one pass each.
+their scalar metrics, each a Spark-SQL aggregate string, run as one
+``selectExpr`` job over the cached label, and the uniqueness/outlier
+frame functions run one pass each.
 """
 
 from .core import (

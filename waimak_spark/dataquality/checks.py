@@ -11,19 +11,22 @@ Warning, mirroring DeequCheck.getAlertImportance); a
 ``DataQualityCheck`` that plugs into ``add_data_quality_check`` /
 ``DataQualityMetadataExtension``.
 
-A constraint's metric is one of two kinds:
+A metric is one of two kinds:
 
-* a scalar aggregate ``Column`` (size, completeness, min/max/mean/sum,
+* a Spark-SQL aggregate string (size, completeness, min/max/mean/sum,
   satisfies and pattern fractions, approx distinct, a recency count):
-  every one across ALL bundled checks is computed in ONE ``df.agg`` pass
-  over the cached label;
+  every one across ALL bundled checks is computed in ONE
+  ``df.selectExpr`` job over the cached label;
 * a frame function ``DataFrame -> value`` that runs its own pass (the
   grouped uniqueness fraction, the outlier rate's bounds-then-rate
   pass — the same two-phase shape Deequ uses).
 
-A metric is keyed by its description: each distinct one is computed once
-per evaluation, and the metrics repository stores it under that name.
-Constraint assertions run driver-side on the computed values.
+Column names in the built-in metrics resolve as ``F.col`` resolves them
+(``sql_text._sql_name``).  A metric is keyed by its description: each
+distinct one is computed once per evaluation, and the metrics repository
+stores it under that name.  Constraint assertions run driver-side on the
+computed values.  An anomaly check hands its strategy the metric's stored
+history, oldest first, read once per evaluation.
 """
 
 from __future__ import annotations
@@ -34,9 +37,10 @@ from datetime import datetime, timezone
 from functools import partial
 from typing import Callable, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sql_text import _sql_name, _sql_string
 from .core import (
     AlertImportance,
     DataQualityAlert,
@@ -51,19 +55,47 @@ class CheckLevel(enum.Enum):
     WARNING = AlertImportance.WARNING
 
 
+def _metric(metric):
+    """``metric`` if it is an SQL aggregate string or a frame function."""
+    if isinstance(metric, str) or callable(metric):
+        return metric
+    raise TypeError(
+        f"a metric is a Spark-SQL aggregate string such as "
+        f"\"avg(`price`)\" or a frame function DataFrame -> value, not "
+        f"{type(metric).__name__}")
+
+
 @dataclass(frozen=True)
 class _Constraint:
     description: str
-    #: scalar aggregate Column, or a frame function DataFrame -> value
+    #: Spark-SQL aggregate string, or a frame function DataFrame -> value
     metric: object
     assertion: Callable[[object], bool]
     #: (label, value) -> alert text; None gives the generic text
     message: Optional[Callable[[str, object], str]] = None
 
 
-def _fraction(indicator: Column) -> Column:
-    """Mean of a 0/1 indicator; 1.0 on zero rows."""
-    return F.coalesce(F.avg(indicator), F.lit(1.0))
+def _fraction(condition: str) -> str:
+    """Fraction of rows where ``condition`` holds; 1.0 on zero rows."""
+    return (f"coalesce(avg(CASE WHEN {condition} THEN 1.0D ELSE 0.0D END), "
+            f"1.0D)")
+
+
+#: Deequ analyzer name -> Spark SQL aggregate over one column
+_COLUMN_AGGREGATES = {"min": "min", "max": "max", "mean": "avg", "sum": "sum",
+                      "approxCountDistinct": "approx_count_distinct"}
+
+
+def _column_metric(kind: str, column: str) -> "tuple[str, str]":
+    """(name, aggregate) of the Deequ analyzer ``kind`` over ``column``,
+    e.g. ``("mean(x)", "avg(`x`)")``."""
+    aggregate = _COLUMN_AGGREGATES[kind]
+    return f"{kind}({column})", f"{aggregate}({_sql_name(column)})"
+
+
+def size_metric() -> "tuple[str, str]":
+    """Deequ ``Size()``: (name, aggregate) for row count."""
+    return "size", "count(1)"
 
 
 def _uniqueness(columns: tuple[str, ...], df: DataFrame) -> float:
@@ -94,16 +126,16 @@ class Check:
                        assertion: Callable,
                        message: Optional[Callable[[str, object], str]] = None
                        ) -> "Check":
-        """Any constraint: ``metric`` is a scalar aggregate Column or a
+        """Any constraint: ``metric`` is a Spark-SQL aggregate string or a
         frame function ``DataFrame -> value``; ``description`` names the
         metric; ``message(label, value)`` replaces the generic alert
         text."""
         return Check(self.level, self.description, self.constraints + [
-            _Constraint(description, metric, assertion, message)])
+            _Constraint(description, _metric(metric), assertion, message)])
 
     # -- constraint builders (Deequ Check.* equivalents) ----------------------
     def has_size(self, assertion: Callable[[int], bool]) -> "Check":
-        return self.add_constraint("size", F.count(F.lit(1)), assertion)
+        return self.add_constraint(*size_metric(), assertion)
 
     def is_complete(self, column: str) -> "Check":
         return self.has_completeness(column, lambda v: v == 1.0)
@@ -113,41 +145,40 @@ class Check:
                          message=None) -> "Check":
         return self.add_constraint(
             f"completeness({column})",
-            _fraction(F.col(column).isNotNull().cast("double")),
+            _fraction(f"{_sql_name(column)} IS NOT NULL"),
             assertion, message)
 
     def has_min(self, column: str, assertion) -> "Check":
-        return self.add_constraint(f"min({column})", F.min(column), assertion)
+        return self.add_constraint(*_column_metric("min", column), assertion)
 
     def has_max(self, column: str, assertion) -> "Check":
-        return self.add_constraint(f"max({column})", F.max(column), assertion)
+        return self.add_constraint(*_column_metric("max", column), assertion)
 
     def has_mean(self, column: str, assertion) -> "Check":
-        return self.add_constraint(f"mean({column})", F.avg(column), assertion)
+        return self.add_constraint(*_column_metric("mean", column), assertion)
 
     def has_sum(self, column: str, assertion) -> "Check":
-        return self.add_constraint(f"sum({column})", F.sum(column), assertion)
+        return self.add_constraint(*_column_metric("sum", column), assertion)
 
     def has_approx_count_distinct(self, column: str, assertion) -> "Check":
-        return self.add_constraint(f"approxCountDistinct({column})",
-                                   F.approx_count_distinct(column), assertion)
+        return self.add_constraint(
+            *_column_metric("approxCountDistinct", column), assertion)
 
     def satisfies(self, predicate: str, name: str,
                   assertion: Callable[[float], bool] = lambda v: v == 1.0,
                   message=None) -> "Check":
         """Fraction of rows satisfying a SQL predicate (Deequ
         ``satisfies``); default assertion requires every row."""
-        return self.add_constraint(
-            f"satisfies({name})",
-            _fraction(F.when(F.expr(predicate), 1.0).otherwise(0.0)),
-            assertion, message)
+        return self.add_constraint(f"satisfies({name})",
+                                   _fraction(f"({predicate})"),
+                                   assertion, message)
 
     def has_pattern(self, column: str, regex: str,
                     assertion: Callable[[float], bool] = lambda v: v == 1.0
                     ) -> "Check":
         return self.add_constraint(
             f"pattern({column}, {regex})",
-            _fraction(F.when(F.col(column).rlike(regex), 1.0).otherwise(0.0)),
+            _fraction(f"{_sql_name(column)} RLIKE {_sql_string(regex)}"),
             assertion)
 
     def is_unique(self, *columns: str) -> "Check":
@@ -165,22 +196,19 @@ class Check:
 
 @dataclass(frozen=True)
 class AnomalyCheck:
-    """A trend-delta check: compute ``metric`` (a scalar aggregate) on the
-    current run, compare against the latest value stored in the metrics
-    repository, alert when the strategy flags the change — Deequ's
-    ``addAnomalyCheck(strategy, analyzer)`` equivalent
+    """A trend check: compute ``metric`` on the current run, hand it with
+    the metric's stored history to ``strategy``, alert when the strategy
+    flags it — Deequ's ``addAnomalyCheck(strategy, analyzer)`` equivalent
     (TestStorageLayerMetricsRepository.scala's AbsoluteChangeStrategy-over-
     Size scenario).  ``metric_name`` keys the history lookup."""
 
     metric_name: str
-    metric: object  # Column — scalar aggregate expression
+    metric: object  # Spark-SQL aggregate string or frame function
     strategy: object  # AnomalyStrategy
     level: CheckLevel = CheckLevel.WARNING
 
-
-def size_metric() -> "tuple[str, object]":
-    """Deequ ``Size()``: (name, aggregate) for row count."""
-    return "size", F.count(F.lit(1))
+    def __post_init__(self):
+        _metric(self.metric)
 
 
 class ComposableCheck(DataQualityCheck):
@@ -191,10 +219,10 @@ class ComposableCheck(DataQualityCheck):
     With a ``repository`` attached (Deequ ``useRepository`` +
     ``saveOrAppendResult``): every numeric metric — constraint metrics,
     prefab metrics and anomaly metrics — is persisted after evaluation
-    under its description, and each
-    :class:`AnomalyCheck` compares against the repository's latest prior
-    value (no previous value → first run, no alert, matching Deequ's
-    Warning-free first run)."""
+    under its description, and each :class:`AnomalyCheck`'s strategy
+    gets the metric's prior values, oldest first, from one history read
+    as deep as the largest ``window_size`` (no prior value → first run,
+    no alert, matching Deequ's Warning-free first run)."""
 
     def __init__(self, checks: Sequence[Check] = (),
                  anomaly_checks: Sequence[AnomalyCheck] = (),
@@ -247,15 +275,11 @@ class ComposableCheck(DataQualityCheck):
 
     def get_alerts(self, label: str, df: DataFrame) -> list[DataQualityAlert]:
         metrics = self._metrics()
-        scalar = [n for n, m in metrics.items() if isinstance(m, Column)]
-        values: dict[str, object] = {}
-        if scalar:
-            row = df.agg(*[metrics[n].alias(f"m{i}")
-                           for i, n in enumerate(scalar)]).collect()[0]
-            values = {n: row[f"m{i}"] for i, n in enumerate(scalar)}
-        for name, metric in metrics.items():
-            if name not in values:
-                values[name] = metric(df)
+        scalar = [n for n, m in metrics.items() if isinstance(m, str)]
+        values = dict(zip(scalar, df.selectExpr(
+            *[metrics[n] for n in scalar]).collect()[0])) if scalar else {}
+        values.update((n, m(df)) for n, m in metrics.items()
+                      if not isinstance(m, str))
         alerts = []
         for check in self.checks:
             importance = check.level.value
@@ -272,44 +296,31 @@ class ComposableCheck(DataQualityCheck):
                         f"[{check.description}] constraint "
                         f"[{k.description}] failed (value: {value!r})",
                         importance))
-        # one timestamp per evaluation: the trend lookup and the persisted
-        # rows share the run's identity; the repository normalizes it to
-        # naive UTC
-        ts = self.dataset_ts or datetime.now(timezone.utc)
-        alerts += self._anomaly_alerts(label, values, ts)
         if self.repository is not None:
-            self.repository.save(label, {
-                n: float(v) for n, v in values.items()
-                if isinstance(v, (int, float)) and not isinstance(v, bool)},
-                ts, self.tags)
+            # one timestamp per evaluation: the history read and the
+            # persisted rows share the run's identity; the repository
+            # normalizes it to naive UTC
+            history = self.repository.record(
+                label, {n: float(v) for n, v in values.items()
+                        if isinstance(v, (int, float))
+                        and not isinstance(v, bool)},
+                self.dataset_ts or datetime.now(timezone.utc), self.tags,
+                [a.metric_name for a in self.anomaly_checks],
+                max((a.strategy.window_size for a in self.anomaly_checks),
+                    default=0))
+            alerts += self._anomaly_alerts(label, values, history)
         return alerts
 
     def _anomaly_alerts(self, label: str, values: dict[str, object],
-                        ts) -> list[DataQualityAlert]:
-        if not self.anomaly_checks or self.repository is None:
-            return []
-        # window-based strategies (detect_window + window_size) need the
-        # last N values; point strategies only the latest one
-        max_window = max((getattr(a.strategy, "window_size", 1)
-                          for a in self.anomaly_checks), default=1)
-        names = [a.metric_name for a in self.anomaly_checks]
-        if max_window > 1:
-            windows = self.repository.previous_window(
-                label, names, ts, max_window)
-        else:
-            windows = {k: [v] for k, v in self.repository.previous_values(
-                label, names, ts).items()}
+                        history: dict[str, list[float]]
+                        ) -> list[DataQualityAlert]:
         alerts = []
         for a in self.anomaly_checks:
             cur = values.get(a.metric_name)
-            hist = [v for v in windows.get(a.metric_name, []) if v is not None]
+            hist = [v for v in history.get(a.metric_name, []) if v is not None]
             if cur is None or not hist:
                 continue  # first run, or metric not computable → no trend
-            if hasattr(a.strategy, "detect_window"):
-                w = getattr(a.strategy, "window_size", len(hist))
-                reason = a.strategy.detect_window(hist[-w:], float(cur))
-            else:
-                reason = a.strategy.detect(float(hist[-1]), float(cur))
+            reason = a.strategy.detect(hist, float(cur))
             if reason is not None:
                 importance = a.level.value
                 alerts.append(DataQualityAlert(

@@ -66,7 +66,7 @@ def register_alert_handler(key: str):
 
 
 @dataclass
-class _ExceptionAlertConfig:
+class _AlertOnConfig:
     alertOn: list[str] = field(default_factory=list)
 
 
@@ -74,21 +74,16 @@ class _ExceptionAlertConfig:
 def _exception_handler(context) -> DataQualityAlertHandler:
     from .core import ExceptionQualityAlert
 
-    conf = parse_config(_ExceptionAlertConfig, context,
+    conf = parse_config(_AlertOnConfig, context,
                         f"{DATAQUALITY_ALERTERS}.exception.")
     return ExceptionQualityAlert(_alert_on(conf.alertOn))
-
-
-@dataclass
-class _LogAlertConfig:
-    alertOn: list[str] = field(default_factory=list)
 
 
 @register_alert_handler("log")
 def _log_handler(context) -> DataQualityAlertHandler:
     from .core import LoggingQualityAlert
 
-    conf = parse_config(_LogAlertConfig, context,
+    conf = parse_config(_AlertOnConfig, context,
                         f"{DATAQUALITY_ALERTERS}.log.")
     return LoggingQualityAlert(_alert_on(conf.alertOn))
 
@@ -233,9 +228,6 @@ class _AnomalyCheckConfig:
     datasetTimestamp: Optional[str] = None
 
 
-_ANOMALY_METRICS = {"size", "mean", "sum", "min", "max"}
-
-
 @register_prefab_check("anomalyCheck")
 def _anomaly_check(context, prefix: str):
     """Conf-driven trend/window anomaly monitoring (round 6): Deequ's
@@ -248,9 +240,8 @@ def _anomaly_check(context, prefix: str):
     the extension fails loudly without it."""
     from datetime import datetime
 
-    from pyspark.sql import functions as F
-
-    from .checks import AnomalyCheck, CheckLevel, ComposableCheck, size_metric
+    from .checks import (AnomalyCheck, CheckLevel, ComposableCheck,
+                         _column_metric, size_metric)
     from .metrics import (
         AbsoluteChangeStrategy,
         BatchNormalStrategy,
@@ -258,23 +249,15 @@ def _anomaly_check(context, prefix: str):
     )
 
     c = parse_config(_AnomalyCheckConfig, context, prefix)
+    kind, _, col = c.metric.partition(":")
     if c.metric == "size":
         name, agg = size_metric()
-    elif ":" in c.metric:
-        kind, col = c.metric.split(":", 1)
-        aggs = {"mean": F.avg, "sum": F.sum, "min": F.min, "max": F.max}
-        # validate against the aggs that take a column — 'size:<col>' is in
-        # _ANOMALY_METRICS but must hit the friendly error, not a KeyError
-        if kind not in aggs or not col:
-            raise DataFlowException(
-                f"{prefix}metric [{c.metric}] not understood — use 'size' "
-                f"or '<agg>:<column>' with agg in {sorted(aggs)}")
-        name = f"{kind}({col})"
-        agg = aggs[kind](col)
+    elif kind in ("mean", "sum", "min", "max") and col:
+        name, agg = _column_metric(kind, col)
     else:
         raise DataFlowException(
             f"{prefix}metric [{c.metric}] not understood — use 'size' or "
-            f"'<agg>:<column>'")
+            f"'<agg>:<column>' with agg in ['max', 'mean', 'min', 'sum']")
     if c.strategy == "absoluteChange":
         strategy = AbsoluteChangeStrategy(c.maxRateDecrease,
                                           c.maxRateIncrease)

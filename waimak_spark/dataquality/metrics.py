@@ -1,4 +1,4 @@
-"""Metrics repository + anomaly (trend-delta) detection — the reference's
+"""Metrics repository + anomaly (trend) detection — the reference's
 ``StorageLayerMetricsRepository`` re-expressed on this package's storage
 layer.
 
@@ -15,10 +15,14 @@ via ``allBetween(None, None)``) and TestStorageLayerMetricsRepository.scala
 
 Spark-first shape: one metric row per (label, metric) per run, stored as a
 normal audit-table region (staged write → atomic move, partition-pruned
-history reads).  History loads are a single scan of the metrics table —
-tiny by construction (a handful of rows per pipeline run), so the anomaly
-comparison collects only the per-metric latest-previous values, never data
-rows.
+history reads).  An evaluation opens the table once (:meth:`record`): one
+scan collects the metrics' prior values and the keys this run already
+stored, then one append writes the rest.  Its filters are Spark-SQL
+strings.
+
+Every strategy is ``detect(history, current)``: ``history`` holds the
+metric's prior values oldest to newest — the series shape Deequ's
+strategies take — and ``window_size`` says how many of them it reads.
 """
 
 from __future__ import annotations
@@ -27,11 +31,11 @@ from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.types import (DoubleType, StringType, StructField,
                                StructType, TimestampType)
 
+from ..sql_text import _lit, _sql_string
 from ..storage import AuditTableInfo, FileStorageOps
 from ..storage.audit import get_or_create_tables
 
@@ -51,7 +55,7 @@ def _normalize_ts(ts: datetime) -> datetime:
     datetimes are converted to UTC and stored NAIVE (matching
     TimestampType's session-UTC convention here), so a caller mixing
     aware and naive timestamps can't misorder the strictly-before
-    comparison in :meth:`previous_values`."""
+    comparison in :meth:`StorageLayerMetricsRepository.record`."""
     if ts.tzinfo is not None:
         return ts.astimezone(timezone.utc).replace(tzinfo=None)
     return ts
@@ -60,7 +64,7 @@ def _normalize_ts(ts: datetime) -> datetime:
 class StorageLayerMetricsRepository:
     """Persist per-check metric rows to an audit table and load them back.
 
-    The table is created on first ``save`` with primary keys
+    The table is created on first use with primary keys
     ``(tags, label, metric_name)`` and ``retain_history=True`` — every run
     keeps its row (the reference keeps full history the same way;
     StorageLayerMetricsRepository.scala:24 uses PK ``tags`` +
@@ -79,48 +83,77 @@ class StorageLayerMetricsRepository:
         return get_or_create_tables(
             self.ops, [self.table_name], lambda _n: info)[0]
 
-    def save(self, label: str, metrics: dict[str, float],
-             dataset_ts: datetime, tags: str = "") -> None:
-        """Append one region holding this run's metric rows, stamped with
-        ``dataset_ts`` as the audit ``_de_last_updated`` (the reference
-        writes ``dataSetDateTS`` the same way, :33-35).
+    def record(self, label: str, metrics: dict[str, float],
+               dataset_ts: datetime, tags: str = "",
+               names: Sequence[str] = (), depth: int = 0
+               ) -> dict[str, list[float]]:
+        """Append this run's ``metrics`` and return the last ``depth``
+        values of each metric in ``names`` stored strictly BEFORE
+        ``dataset_ts``, oldest to newest — one table open, one scan.
 
-        Idempotent per ``(tags, label, metric_name, dataset_ts)``: rows
-        whose exact key already exists in the history are skipped, so a
-        retried evaluation (second alert handler, re-validation of the
-        same run) cannot append duplicate history rows and silently shift
-        anomaly baselines."""
-        if not metrics:
-            return
+        The rows are stamped with ``dataset_ts`` as the audit
+        ``_de_last_updated`` (the reference writes ``dataSetDateTS`` the
+        same way, :33-35).  Idempotent per ``(tags, label, metric_name,
+        dataset_ts)``: a metric whose exact key is already stored is
+        skipped, so a retried evaluation (second alert handler,
+        re-validation of the same run) cannot append duplicate history
+        rows and silently shift anomaly baselines."""
+        names = list(names) if depth > 0 else []
+        if not metrics and not names:
+            return {}
         dataset_ts = _normalize_ts(dataset_ts)
-        hist = self.load()
+        at = _lit(dataset_ts)
+        table = self._table()
+        hist = table.all_between(None, None)
+        prior: dict[str, list[float]] = {}
         if hist is not None:
-            existing = {
-                r["metric_name"]
-                for r in (hist.where((F.col("tags") == tags)
-                                     & (F.col("label") == label)
-                                     & (F.col("dataset_ts")
-                                        == F.lit(dataset_ts)))
-                          .select("metric_name").collect())
-            }
-            metrics = {k: v for k, v in metrics.items() if k not in existing}
-            if not metrics:
-                return
-        rows = [Row(tags=tags, label=label, metric_name=k,
+            wanted = f"tags = {_sql_string(tags)} AND dataset_ts = {at}"
+            if names:
+                listed = ", ".join(map(_sql_string, names))
+                wanted += (f" OR metric_name IN ({listed}) "
+                           f"AND dataset_ts < {at}")
+            rows = (hist.where(f"label = {_sql_string(label)} AND "
+                               f"({wanted})")
+                .selectExpr("metric_name", "metric_value",
+                            f"dataset_ts = {at} AS stored",
+                            f"row_number() OVER (PARTITION BY metric_name, "
+                            f"dataset_ts = {at} ORDER BY dataset_ts DESC) "
+                            f"AS rn")
+                .where(f"stored OR rn <= {int(depth)}").collect())
+            stored = {r["metric_name"] for r in rows if r["stored"]}
+            metrics = {k: v for k, v in metrics.items() if k not in stored}
+            for r in sorted(rows, key=lambda r: (r["metric_name"], -r["rn"])):
+                if not r["stored"]:
+                    prior.setdefault(r["metric_name"], []).append(
+                        r["metric_value"])
+        if metrics:
+            table.append(self.spark.createDataFrame([
+                Row(tags=tags, label=label, metric_name=k,
                     metric_value=(None if v is None else float(v)),
                     dataset_ts=dataset_ts)
-                for k, v in sorted(metrics.items())]
-        df = self.spark.createDataFrame(rows, METRIC_SCHEMA)
-        self._table().append(df, "dataset_ts")
+                for k, v in sorted(metrics.items())], METRIC_SCHEMA),
+                "dataset_ts")
+        return prior
+
+    def save(self, label: str, metrics: dict[str, float],
+             dataset_ts: datetime, tags: str = "") -> None:
+        """Append one region holding this run's metric rows
+        (:meth:`record` with no history read)."""
+        self.record(label, metrics, dataset_ts, tags)
+
+    def previous_window(self, label: str, metric_names: Sequence[str],
+                        before_ts: datetime, n: int
+                        ) -> dict[str, list[float]]:
+        """Last ``n`` stored values per metric strictly BEFORE
+        ``before_ts``, oldest→newest (:meth:`record` with nothing to
+        append)."""
+        return self.record(label, {}, before_ts, names=metric_names, depth=n)
 
     def load(self) -> Optional[DataFrame]:
         """Full metric history (``allBetween(None, None)``, :40-46), or
         None when nothing was ever saved."""
         df = self._table().all_between(None, None)
-        if df is None:
-            return None
-        return df.select("tags", "label", "metric_name", "metric_value",
-                         "dataset_ts")
+        return None if df is None else df.select(*METRIC_SCHEMA.fieldNames())
 
     def success_metrics_json(self, for_metrics: Optional[Sequence[str]]
                              = None) -> str:
@@ -135,7 +168,8 @@ class StorageLayerMetricsRepository:
         if hist is None:
             return "[]"
         if for_metrics:
-            hist = hist.where(F.col("metric_name").isin(list(for_metrics)))
+            names = ", ".join(map(_sql_string, for_metrics))
+            hist = hist.where(f"metric_name IN ({names})")
         rows = hist.select("metric_name", "label", "metric_value",
                            "dataset_ts").collect()
         rows.sort(key=lambda r: (r["dataset_ts"], r["metric_name"]),
@@ -148,37 +182,6 @@ class StorageLayerMetricsRepository:
              "value": r["metric_value"]}
             for r in rows])
 
-    def previous_values(self, label: str, metric_names: Sequence[str],
-                        before_ts: datetime) -> dict[str, float]:
-        """Latest stored value per metric strictly BEFORE ``before_ts`` —
-        the comparison point for trend-delta alerting.  One pruned scan +
-        tiny grouped collect (rows here are one-per-metric-per-run)."""
-        win = self.previous_window(label, metric_names, before_ts, 1)
-        return {k: vs[-1] for k, vs in win.items() if vs}
-
-    def previous_window(self, label: str, metric_names: Sequence[str],
-                        before_ts: datetime, n: int
-                        ) -> dict[str, list[float]]:
-        """Last ``n`` stored values per metric strictly BEFORE
-        ``before_ts``, oldest→newest — the history a window-based anomaly
-        strategy (mean ± k·stddev over recent runs) compares against."""
-        hist = self.load()
-        if hist is None or not metric_names or n < 1:
-            return {}
-        rows = (hist.where((F.col("label") == label)
-                           & F.col("metric_name").isin(list(metric_names))
-                           & (F.col("dataset_ts")
-                              < F.lit(_normalize_ts(before_ts))))
-                .withColumn("_rn", F.row_number().over(
-                    Window.partitionBy("metric_name")
-                    .orderBy(F.col("dataset_ts").desc())))
-                .where(F.col("_rn") <= n)
-                .select("metric_name", "metric_value", "_rn").collect())
-        out: dict[str, list[float]] = {}
-        for r in sorted(rows, key=lambda r: (r["metric_name"], -r["_rn"])):
-            out.setdefault(r["metric_name"], []).append(r["metric_value"])
-        return out
-
 
 # ---------------------------------------------------------------------------
 # anomaly strategies (Deequ's anomalydetection.* equivalents)
@@ -186,24 +189,31 @@ class StorageLayerMetricsRepository:
 
 
 class AnomalyStrategy:
-    """Compare the current metric value to the latest previous one and
-    return a human-readable reason when anomalous, else None."""
+    """Compare the current metric value to the metric's history (prior
+    values, oldest to newest) and return a human-readable reason when
+    anomalous, else None.  ``window_size`` is how many prior values the
+    strategy reads; the check reads the history that deep."""
 
-    def detect(self, previous: float, current: float) -> Optional[str]:
+    window_size: int = 1
+
+    def detect(self, history: Sequence[float],
+               current: float) -> Optional[str]:
         raise NotImplementedError
 
 
 @dataclass(frozen=True)
 class AbsoluteChangeStrategy(AnomalyStrategy):
     """Anomaly when ``current - previous`` leaves
-    ``[max_rate_decrease, max_rate_increase]`` (Deequ
-    AbsoluteChangeStrategy; the reference test uses
-    ``maxRateIncrease=2.0`` over Size and a 2→5 jump trips it)."""
+    ``[max_rate_decrease, max_rate_increase]``, ``previous`` being the
+    newest prior value (Deequ AbsoluteChangeStrategy; the reference test
+    uses ``maxRateIncrease=2.0`` over Size and a 2→5 jump trips it)."""
 
     max_rate_decrease: Optional[float] = None
     max_rate_increase: Optional[float] = None
 
-    def detect(self, previous: float, current: float) -> Optional[str]:
+    def detect(self, history: Sequence[float],
+               current: float) -> Optional[str]:
+        previous = history[-1]
         change = current - previous
         if (self.max_rate_increase is not None
                 and change > self.max_rate_increase):
@@ -221,14 +231,17 @@ class AbsoluteChangeStrategy(AnomalyStrategy):
 @dataclass(frozen=True)
 class RelativeRateOfChangeStrategy(AnomalyStrategy):
     """Anomaly when ``current / previous`` leaves
-    ``[max_rate_decrease, max_rate_increase]`` (Deequ
-    RelativeRateOfChangeStrategy).  A zero previous value with a non-zero
-    current one is always anomalous (rate undefined)."""
+    ``[max_rate_decrease, max_rate_increase]``, ``previous`` being the
+    newest prior value (Deequ RelativeRateOfChangeStrategy).  A zero
+    previous value with a non-zero current one is always anomalous (rate
+    undefined)."""
 
     max_rate_decrease: Optional[float] = None
     max_rate_increase: Optional[float] = None
 
-    def detect(self, previous: float, current: float) -> Optional[str]:
+    def detect(self, history: Sequence[float],
+               current: float) -> Optional[str]:
+        previous = history[-1]
         if previous == 0:
             return (None if current == 0 else
                     f"rate undefined: prev 0, now {current:g}")
@@ -250,8 +263,8 @@ class RelativeRateOfChangeStrategy(AnomalyStrategy):
 class BatchNormalStrategy(AnomalyStrategy):
     """Window-based anomaly detection (Deequ BatchNormalStrategy): the
     current value is compared against ``mean ± factor·stddev`` of the last
-    ``window_size`` stored values.  Needs at least ``min_history`` prior
-    values before it starts alerting (a 1-2 run history has a meaningless
+    ``window_size`` prior values.  Needs at least ``min_history`` of them
+    before it starts alerting (a 1-2 run history has a meaningless
     stddev — Deequ likewise requires enough batches in the interval).
 
     Sample stddev (n-1 denominator); a zero-variance history alerts on
@@ -262,12 +275,10 @@ class BatchNormalStrategy(AnomalyStrategy):
     window_size: int = 10
     min_history: int = 3
 
-    def detect(self, previous: float, current: float) -> Optional[str]:
-        return self.detect_window([previous], current)
-
-    def detect_window(self, history: Sequence[float],
-                      current: float) -> Optional[str]:
-        vals = [float(v) for v in history if v is not None]
+    def detect(self, history: Sequence[float],
+               current: float) -> Optional[str]:
+        vals = [float(v) for v in history[-self.window_size:]
+                if v is not None]
         if len(vals) < self.min_history:
             return None
         mean = sum(vals) / len(vals)

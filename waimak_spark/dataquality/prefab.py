@@ -14,11 +14,11 @@ for warning):
   (GenericSQLCheck.scala);
 * outlier rate — fraction outside the median/MAD band, per group.
 
-Completeness, recency and generic SQL are scalar aggregates, so they
-share the one ``df.agg`` pass with every other check on the label;
-uniqueness and the outlier rate run one pass each, whatever thresholds
-are set.  Zero rows pass every fraction; only the recency check alerts on
-an empty label.
+Completeness, recency and generic SQL metrics are Spark-SQL aggregate
+strings, so they share the one ``selectExpr`` job with every other check
+on the label; uniqueness and the outlier rate are frame functions that
+run one pass each, whatever thresholds are set.  Zero rows pass every
+fraction; only the recency check alerts on an empty label.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sql_text import _lit, _sql_name
 from .checks import Check, CheckLevel, ComposableCheck
 
 
@@ -86,21 +87,23 @@ def recent_timestamp_check(column: str, hours_to_look_back: int = 6,
     flags unexpectedly stale or empty data.  The window ends at Spark's
     ``current_timestamp()`` when the check runs, independent of the
     driver's time zone; ``now_override`` (a naive local datetime, like the
-    rows Spark builds from Python datetimes) fixes its end instead."""
+    rows Spark builds from Python datetimes) fixes its end instead, as
+    the literal ``F.lit`` builds; one with no SQL literal form (a year
+    outside 1901-9998) is a ``ValueError``."""
     if alert_level not in ("warning", "critical"):
         raise ValueError(
             f"Invalid alert level {alert_level} for recentTimestampCheck "
             f"on column {column}")
-    cutoff = (F.lit(now_override - timedelta(hours=hours_to_look_back))
-              if now_override else
-              F.expr(f"current_timestamp() - INTERVAL "
-                     f"{int(hours_to_look_back)} HOURS"))
+    cutoff = (_lit(now_override - timedelta(hours=hours_to_look_back))
+              if now_override else f"current_timestamp() - INTERVAL "
+              f"{int(hours_to_look_back)} HOURS")
     level = (CheckLevel.ERROR if alert_level == "critical"
              else CheckLevel.WARNING)
     return ComposableCheck([Check(level, "recent timestamp").add_constraint(
         f"recentRows({column}, {hours_to_look_back}h"
         f"{f', now={now_override.isoformat()}' if now_override else ''})",
-        F.count(F.when(F.col(column) >= cutoff, 1)), lambda n: n > 0,
+        f"count(CASE WHEN {_sql_name(column)} >= {cutoff} THEN 1 END)",
+        lambda n: n > 0,
         lambda label, _n: (f"No new data in the last {hours_to_look_back} "
                            f"hours on label {label}."))])
 

@@ -4,7 +4,8 @@ gateway) so the same code path works on local FS, HDFS, and S3A.
 Re-expresses the reference's FSUtils / FileStorageOps primitives
 (waimak-core/.../filesystem/FSUtils.scala:109-134,
 waimak-storage/.../FileStorageOps.scala:221-313): staged writes, atomic
-folder moves, merge-moves of part files, trash with aged purge, globs.
+folder moves, merge-moves of part files, globs.  The trash bin and its
+aged purge are ``storage.file_ops.FileStorageOps``'s.
 
 At 100 TB note: directory rename is atomic on HDFS but O(n)-copy on S3;
 ``atomic_write`` is the hook where a manifest-based committer would slot in
@@ -49,7 +50,6 @@ from __future__ import annotations
 
 import functools
 import json
-import time
 import weakref
 from types import SimpleNamespace
 from typing import Iterable
@@ -277,10 +277,6 @@ class FileOps:
             return []
         return [st.getPath().toString() for st in statuses]
 
-    def modification_time(self, p: str) -> int:
-        fs, path = self._resolve(p)
-        return fs.getFileStatus(path).getModificationTime()
-
     def total_size(self, p: str) -> int:
         """Total bytes under a path (files summed recursively)."""
         fs, path = self._resolve(p)
@@ -330,27 +326,6 @@ class FileOps:
                         f"[{dest_dir}]")
                 if not fs.rename(self._refs.path(f"{src_dir}/{name}"), dest):
                     raise IOError(f"Failed to move [{src_dir}/{name}] into [{dest_dir}]")
-
-    # -- trash (FileStorageOps.scala:238-261 semantics) -------------------------
-    def move_to_trash(self, p: str, trash_root: str, ts_ms: int | None = None) -> None:
-        ts = ts_ms if ts_ms is not None else int(time.time() * 1000)
-        name = self._refs.path(p).getName()
-        self.move_overwrite_folder(p, f"{trash_root}/{ts}_{name}")
-
-    def purge_trash(self, trash_root: str, max_age_ms: int = 86_400_000) -> int:
-        """Delete trash entries older than max_age_ms; returns count purged."""
-        now = int(time.time() * 1000)
-        purged = 0
-        for name in self.list_dirs(trash_root):
-            ts_part = name.split("_", 1)[0]
-            try:
-                ts = int(ts_part)
-            except ValueError:
-                continue
-            if now - ts > max_age_ms:
-                self.delete(f"{trash_root}/{name}", recursive=True)
-                purged += 1
-        return purged
 
     # -- small sidecar files -----------------------------------------------------
     def write_string(self, p: str, content: str, overwrite: bool = True) -> None:

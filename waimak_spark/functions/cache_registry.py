@@ -20,6 +20,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
+from ..filesystem import FileOps, nullable, read_parquet
+
 _LIVE: list[DataFrame] = []
 _CALLBACKS: list[Callable[[], None]] = []
 
@@ -41,16 +43,17 @@ def parquet_materializer(path: str,
     the materialization survives executor loss.  This is the 100 TB-robust
     choice for a frame reused many times (e.g. k-means' (id, v) projection
     reused n_iters+1 times); ``tracked_persist`` (MEMORY_AND_DISK blocks)
-    is the lower-latency default at gate/test scale.  With ``cleanup``
-    the written files are removed at ``release_tracked()``."""
+    is the lower-latency default at gate/test scale.  The re-read is
+    given the written schema, so it launches no inference job.  With
+    ``cleanup`` the written files are deleted through the Hadoop
+    ``FileSystem`` at ``release_tracked()``, so any path URI works."""
 
     def materialize(df: DataFrame) -> DataFrame:
         df.write.mode("overwrite").parquet(path)
+        spark = df.sparkSession
         if cleanup:
-            import shutil
-
-            track_release(lambda: shutil.rmtree(path, ignore_errors=True))
-        return df.sparkSession.read.parquet(path)
+            track_release(lambda: FileOps(spark).delete(path))
+        return read_parquet(spark, path, schema=nullable(df.schema))
 
     return materialize
 

@@ -40,17 +40,16 @@ compare/order it, so both work unchanged on both engines.
 
 from __future__ import annotations
 
-import calendar
-import time
 from dataclasses import dataclass, field
-from datetime import date, datetime, timedelta
+from datetime import datetime
 from typing import Any, Callable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..filesystem import _jvm_refs, nullable
+from ..filesystem import nullable
+from ..sql_text import _lit, _sql_name, _sql_string
 from .file_ops import REGION_INFO_DIRECTORY, FileStorageOps
 
 STORE_TYPE_COLUMN = "de_store_type"
@@ -91,50 +90,6 @@ class AuditTableRegionInfo:
 
 # partitioner: (region DataFrame, total row count, total input bytes) -> n
 CompactionPartitioner = Callable[[DataFrame, int, int], int]
-
-_EPOCH = datetime(1970, 1, 1)
-#: years whose datetimes and dates render as SQL literals: Spark rebases a
-#: ``java.sql`` timestamp before 1900-01-01 UTC (its last calendar switch
-#: in any time zone), and the renderer writes four-digit years
-_LITERAL_YEARS = range(1901, 9999)
-
-
-def _sql_string(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _sql_name(name: str) -> str:
-    """A column name as one backtick-quoted SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_literal(v: Any, ntz_preferred: bool) -> Optional[str]:
-    """The Spark-SQL literal equal to ``F.lit(v)``, or None for a value it
-    does not render (the caller then uses ``F.lit``).  Datetimes convert
-    as PySpark's py4j converters do: a naive one is a TIMESTAMP_NTZ wall
-    clock when ``ntz_preferred`` (the session's
-    ``spark.sql.timestampType``), else an instant in the driver's local
-    time (``time.mktime``); an aware one is an instant
-    (``calendar.timegm``).  A date is the day ``java.sql.Date.valueOf``
-    names, and an int within a long is the same INT or BIGINT literal."""
-    if isinstance(v, date) and v.year not in _LITERAL_YEARS:
-        return None
-    if isinstance(v, datetime):
-        if v.tzinfo is None and ntz_preferred:
-            kind, zone = "TIMESTAMP_NTZ", ""
-            seconds = calendar.timegm(v.utctimetuple())
-        else:
-            kind, zone = "TIMESTAMP_LTZ", "Z"
-            seconds = (calendar.timegm(v.utctimetuple()) if v.tzinfo
-                       else time.mktime(v.timetuple()))
-        at = _EPOCH + timedelta(seconds=int(seconds),
-                                microseconds=v.microsecond)
-        return f"{kind} '{at:%Y-%m-%d %H:%M:%S.%f}{zone}'"
-    if isinstance(v, date):
-        return f"DATE '{v.isoformat()}'"
-    if type(v) is int and -2 ** 63 <= v < 2 ** 63:
-        return str(v)
-    return None
 
 
 def _observe_region_stats(df: DataFrame
@@ -284,8 +239,8 @@ class AuditTableFile:
         One scan of the table root; the ``de_store_type``/``de_store_region``
         filters sit on partition columns, so Catalyst prunes non-active
         region directories before any IO (AuditTableFile.scala:133-142).
-        The filter is one SQL predicate; a bound :func:`_sql_literal` does
-        not render is added as an ``F.lit`` comparison.
+        The filter is one SQL predicate; a bound :func:`_lit` does not
+        render is added as an ``F.lit`` comparison.
         """
         ids = self.active_region_ids()
         if not ids:
@@ -298,17 +253,12 @@ class AuditTableFile:
                  f"'{COLD_PARTITION}')",
                  f"{STORE_REGION_COLUMN} IN ({regions})"]
         unrendered = []
-        # PySpark's own converter asks the JVM the same question per value
-        ntz_preferred = any(isinstance(b, datetime) and b.tzinfo is None
-                            for b in (from_ts, to_ts)) and \
-            _jvm_refs(self.ops.spark._jvm).ntz_preferred()
         for op, bound in ((">=", from_ts), ("<=", to_ts)):
             if bound is not None:
-                literal = _sql_literal(bound, ntz_preferred)
-                if literal is None:
+                try:
+                    where.append(f"{DE_LAST_UPDATED_COLUMN} {op} {_lit(bound)}")
+                except ValueError:
                     unrendered.append((op, bound))
-                else:
-                    where.append(f"{DE_LAST_UPDATED_COLUMN} {op} {literal}")
         df = df.where(" AND ".join(where))
         for op, bound in unrendered:
             lu = F.col(DE_LAST_UPDATED_COLUMN)
@@ -318,7 +268,8 @@ class AuditTableFile:
     def _latest(self, df: DataFrame) -> DataFrame:
         """The latest record per primary key, still carrying its
         ``_rowNum`` (always 1): the canonical row_number-over-desc-timestamp
-        idiom (AuditTableFile.scala:78-82) as one SQL window fragment."""
+        idiom (AuditTableFile.scala:78-82) as one SQL window fragment.
+        Each key resolves as ``F.col(key)`` does."""
         keys = ", ".join(map(_sql_name, self.table_info.primary_keys))
         rank = F.expr(f"row_number() OVER (PARTITION BY {keys} "
                       f"ORDER BY {DE_LAST_UPDATED_COLUMN} DESC)")
